@@ -41,10 +41,24 @@ class Catalog(val warehouse: String,
 
   /** Global id allocator (reference: `_databases.id` serial column). */
   private def nextId(): Long = synchronized {
-    val cur = if (Files.exists(idsFile)) Files.readString(idsFile).trim.toLong else 0L
-    val next = cur + 1
-    Files.writeString(idsFile, next.toString)
+    val next = readCounter(idsFile) + 1
+    writeCounter(idsFile, next)
     next
+  }
+
+  // Counter files (`_ids`, `_serial/<columnId>`) are replaced, never
+  // rewritten in place: the value goes to a dot-prefixed sibling temp file
+  // which is then ATOMIC_MOVEd over the counter, as [[writeManifest]] does.
+  // A crash mid-write leaves only a stray temp file — the counter keeps its
+  // last committed value instead of reading back empty (which would fail
+  // every later INSERT) or losing its value (which would reissue keys).
+  private def readCounter(f: Path): Long =
+    if (Files.exists(f)) Files.readString(f).trim.toLong else 0L
+
+  private def writeCounter(f: Path, value: Long): Unit = {
+    val tmp = f.resolveSibling(s".${f.getFileName}-${java.util.UUID.randomUUID()}")
+    Files.writeString(tmp, value.toString)
+    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** `Files.list` streams hold a directory fd until closed; every listing
@@ -351,10 +365,8 @@ class Catalog(val warehouse: String,
   private def serialFile(db: String, schema: String, table: String, columnId: Int): Path =
     tablePath(db, schema, table).resolve("_serial").resolve(columnId.toString)
 
-  def peekSerial(db: String, schema: String, table: String, columnId: Int): Long = synchronized {
-    val f = serialFile(db, schema, table, columnId)
-    if (Files.exists(f)) Files.readString(f).trim.toLong else 0L
-  }
+  def peekSerial(db: String, schema: String, table: String, columnId: Int): Long =
+    synchronized { readCounter(serialFile(db, schema, table, columnId)) }
 
   /** Reserves `n` values; returns the first reserved value (last+1).
     * Overflow-checked against the column type's ceiling
@@ -366,17 +378,17 @@ class Catalog(val warehouse: String,
       throw SqlError.unexpected(
         s"column ${column.name} has type ${column.typeKind.name}, is not a serial column type")
     val f = serialFile(db, schema, table, column.id)
-    val cur = if (Files.exists(f)) Files.readString(f).trim.toLong else 0L
+    val cur = readCounter(f)
     val last = cur + n
     if (last > column.typeKind.serialMax)
       throw SqlError.unexpected(s"column ${column.name} overflow")
-    Files.writeString(f, last.toString)
+    writeCounter(f, last)
     cur + 1
   }
 
   /** Test hook: force the counter (e.g. near the type ceiling). */
   def setSerial(db: String, schema: String, table: String, columnId: Int, value: Long): Unit =
-    synchronized { Files.writeString(serialFile(db, schema, table, columnId), value.toString) }
+    synchronized { writeCounter(serialFile(db, schema, table, columnId), value) }
 
   // ---------- staging (statement-atomic append) ----------
 

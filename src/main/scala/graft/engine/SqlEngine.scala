@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Connection metadata (reference: SqlContext at src/sql/context.rs —
   * database/user from the PG connection, port 0 when unconnected). */
@@ -34,6 +35,45 @@ object SqlEngine {
     * threshold — /root/reference/src/tablet/service.rs:393-399 — rather
     * than waiting for an operator). ≤0 disables. */
   val defaultAutoCompactAfterParts: Int = 64
+
+  /** The per-row loop of an INSERT candidate: the row count and, per
+    * `checkIdx` position, the number of NULLs (NOT NULL violations). Runs
+    * over each partition's InternalRows on the distributed path and over
+    * the collected Rows on the driver-resident one. */
+  private[engine] def rowStats[R](it: Iterator[R], checkIdx: Array[Int],
+      isNull: (R, Int) => Boolean): (Long, Array[Long]) = {
+    var c = 0L
+    val nulls = new Array[Long](checkIdx.length)
+    while (it.hasNext) {
+      val row = it.next()
+      var j = 0
+      while (j < checkIdx.length) {
+        if (isNull(row, checkIdx(j))) nulls(j) += 1L
+        j += 1
+      }
+      c += 1L
+    }
+    (c, nulls)
+  }
+
+  /** A unique-key tuple compared as Spark's grouping and join keys are:
+    * floating values normalized (-0.0 is 0.0, every NaN is one NaN — as
+    * bits, since `==` never equates NaNs), binary by content. */
+  private[engine] def keyOf(r: Row, idx: Seq[Int]): Seq[Any] = idx.map { i =>
+    r.get(i) match {
+      case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+      case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+      case v => v
+    }
+  }
+
+  /** A serial id as the column's external value type. */
+  private[engine] def serialValue(kind: ColumnTypeKind, id: Long): Any = kind match {
+    case ColumnTypeKind.Int16Kind => id.toShort
+    case ColumnTypeKind.Int32Kind => id.toInt
+    case _ => id
+  }
 }
 
 /** The PG-semantics statement engine: `execute(sql)` returns a DataFrame.
@@ -89,8 +129,9 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     case Query(q) => query(q)
   }
 
+  /** A LocalRelation: fetching it runs no Spark job. */
   private def toDf(rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
 
   /** reference: name.resolve(default_catalog, "public") (src/sql/traits.rs:80-83). */
   private def resolve(name: Seq[String]): (String, String, String) = name match {
@@ -1221,8 +1262,11 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
         val data = readTable(db, schema, table)
         val pk: Seq[org.apache.spark.sql.Column] = desc.indices.find(_.isPrimary)
           .map(_.columnIds.map(id => col(desc.column(id).name))).getOrElse(Seq.empty)
+        // merging down needs no shuffle, nor does clustering into ONE file:
+        // a single sorted partition is already the range-partitioned form
         val compacted =
-          if (pk.isEmpty) data.coalesce(target) // merging down needs no shuffle
+          if (pk.isEmpty) data.coalesce(target)
+          else if (target == 1) data.coalesce(1).sortWithinPartitions(pk: _*)
           else data.repartitionByRange(target, pk: _*).sortWithinPartitions(pk: _*)
         compacted.write.mode("overwrite").parquet(staging.toString)
         catalog.replaceData(db, schema, table, staging)
@@ -1328,6 +1372,20 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   // src/sql/client.rs:247-313): validate target columns, fill NULLs for
   // missing nullable columns, assign serial values from the table counter,
   // enforce unique indexes, append atomically, return a 1-row `count`.
+  //
+  // Where the checks run follows the shape of the optimized candidate
+  // (`source.select(preCols)`); no option picks it:
+  //  - a LocalRelation — VALUES, and Project/Filter/Limit over it, which
+  //    Spark folds — already holds its rows on the driver. Counting, the
+  //    NOT NULL and narrowing checks and in-batch uniqueness run there with
+  //    no job, and the rows are written as one part: 1 job. A UNIQUE index
+  //    not covered by fresh serials adds, on a non-empty table, one
+  //    filtered scan for the candidate keys: 2 jobs.
+  //  - any other plan (INSERT … SELECT over tables) stays distributed: a
+  //    persisted candidate, one fused count/NOT NULL pass, a groupBy and a
+  //    semi-join per UNIQUE index, and a parallel write.
+  // Both share the serial reservation, the error order, and the locked
+  // check/stage/commit/auto-compaction window ([[publish]]).
 
   private def insert(ins: Insert): DataFrame = {
     val (db, schema, table) = resolve(ins.table)
@@ -1361,7 +1419,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     // integral narrowing guard: a wider source must round-trip through the
     // target type value-for-value — out-of-range values raise (the
     // reference's MismatchColumnType) instead of wrapping under non-ANSI
-    // cast. One aggregate pass, only when a narrowing column exists.
+    // cast. Only when a narrowing column exists: one aggregate pass, or,
+    // over a driver-resident source, a projection Spark folds (no job).
     val narrowing = provided.filter { tgt =>
       val c = desc.findColumn(tgt).get
       val (_, srcType) = byTarget(tgt)
@@ -1371,20 +1430,25 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       }
     }
     if (narrowing.nonEmpty) {
-      val checks = narrowing.map { tgt =>
+      val lossy = narrowing.map { tgt =>
         val c = desc.findColumn(tgt).get
         val (srcName, srcType) = byTarget(tgt)
         val sc = source.col(s"`$srcName`")
         // try_cast: out-of-range becomes NULL (instead of an ANSI cast
         // error mid-check), which then fails the null-safe round-trip
-        sum(when(sc.try_cast(c.typeKind.sparkType).cast(srcType) <=> sc, 0L).otherwise(1L))
+        when(sc.try_cast(c.typeKind.sparkType).cast(srcType) <=> sc, 0L).otherwise(1L)
       }
-      val r = source.agg(checks.head, checks.tail: _*).head()
-      narrowing.zipWithIndex.foreach { case (tgt, i) =>
-        if (!r.isNullAt(i) && r.getLong(i) > 0) {
-          val c = desc.findColumn(tgt).get
-          throw SqlError.mismatchColumnType(table, c.name, c.typeKind.name, byTarget(tgt)._2.simpleString)
+      val failed: Seq[Boolean] =
+        if (isDriverResident(source)) {
+          val rows = source.select(lossy: _*).collect()
+          lossy.indices.map(i => rows.exists(_.getLong(i) > 0))
+        } else {
+          val r = source.agg(sum(lossy.head), lossy.tail.map(sum): _*).head()
+          lossy.indices.map(i => !r.isNullAt(i) && r.getLong(i) > 0)
         }
+      narrowing.zip(failed).find(_._2).foreach { case (tgt, _) =>
+        val c = desc.findColumn(tgt).get
+        throw SqlError.mismatchColumnType(table, c.name, c.typeKind.name, byTarget(tgt)._2.simpleString)
       }
     }
 
@@ -1400,6 +1464,120 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       else throw SqlError.missingColumn(c.name)
     }
     val pre = source.select(preCols: _*)
+    val notNullable = desc.columns.filter(c => !c.nullable && provided.contains(c.name))
+    val w = InsertWork(db, schema, table, desc, missingSerials, notNullable,
+      notNullable.map(c => pre.columns.indexOf(c.name)).toArray)
+    // the distributed path persists a FRESH candidate: the shape probe has
+    // already optimized `pre`, and a plan optimized before persist() would
+    // neither fill nor read the cache
+    val n = if (isDriverResident(pre)) insertLocal(w, pre)
+      else insertDistributed(w, source.select(preCols: _*))
+    toDf(Seq(Row(n)), StructType(Seq(StructField("count", LongType, false))))
+  }
+
+  /** What both insert paths need besides the candidate itself. `checkIdx`
+    * holds the candidate positions of the NOT NULL columns the statement
+    * provides. */
+  private final case class InsertWork(db: String, schema: String, table: String,
+      desc: TableDescriptor, missingSerials: Seq[ColumnDescriptor],
+      notNullable: Seq[ColumnDescriptor], checkIdx: Array[Int]) {
+    def freshSerialIds: Set[Int] = missingSerials.map(_.id).toSet
+  }
+
+  /** Does the optimized plan hold its rows on the driver? Spark folds
+    * VALUES, and Project/Filter/Limit over it, into one LocalRelation;
+    * collecting it runs no job. */
+  private def isDriverResident(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Serial reservation, shared by both paths: contiguous ids from the
+    * table counter (reference increments per row; we reserve the whole
+    * range — same observable ids, one counter write), overflow-checked.
+    * The counters advance BEFORE the NOT NULL validation can fail — id
+    * gaps on failed inserts, same as the reference. Returns each missing
+    * serial column's first id. */
+  private def reserveSerials(w: InsertWork, n: Long): Map[Int, Long] =
+    w.missingSerials.map(c => c.id -> catalog.reserveSerial(w.db, w.schema, w.table, c, n)).toMap
+
+  /** NOT NULL validation on the provided data, from the violation counts
+    * of [[SqlEngine.rowStats]]. */
+  private def requireNotNull(w: InsertWork, nullCounts: Array[Long]): Unit =
+    w.notNullable.zipWithIndex.foreach { case (c, j) =>
+      if (nullCounts(j) > 0) throw SqlError.notNullableColumn(w.table, c.name)
+    }
+
+  /** The driver-resident path: every check runs over the collected rows,
+    * and the only jobs are the write and, when needed, one existing-keys
+    * scan. */
+  private def insertLocal(w: InsertWork, pre: DataFrame): Long = {
+    val rows = pre.collect() // a LocalRelation: no job
+    val (n, nullCounts) = SqlEngine.rowStats[Row](rows.iterator, w.checkIdx, _.isNullAt(_))
+    val starts = reserveSerials(w, n)
+    requireNotNull(w, nullCounts)
+
+    val fields = w.desc.columns.map { c =>
+      if (starts.contains(c.id)) StructField(c.name, c.typeKind.sparkType, nullable = false)
+      else pre.schema(c.name)
+    }
+    val srcIdx = w.desc.columns.map(c => if (starts.contains(c.id)) -1 else pre.columns.indexOf(c.name))
+    val out: Array[Row] = rows.zipWithIndex.map { case (r, i) =>
+      Row.fromSeq(w.desc.columns.zip(srcIdx).map {
+        case (c, -1) => SqlEngine.serialValue(c.typeKind, starts(c.id) + i)
+        case (_, j) => r.get(j)
+      })
+    }
+    val cand = spark.createDataFrame(out.toSeq.asJava, StructType(fields))
+
+    publish(w, cand.coalesce(1)) {
+      if (n > 0) {
+        lazy val tableEmpty = catalog.tableIsEmpty(w.db, w.schema, w.table)
+        enforceUnique(w,
+          inBatchDup = (keys, nullsDistinct) => {
+            val idx = keys.map(cand.columns.indexOf(_))
+            val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+            out.exists { r =>
+              val k = SqlEngine.keyOf(r, idx)
+              !(nullsDistinct && k.contains(null)) && !seen.add(k)
+            }
+          },
+          existingConflict = (keys, nullsDistinct) =>
+            !tableEmpty && existingKeyHit(w, out, cand.columns, keys, nullsDistinct))
+      }
+    }
+    n
+  }
+
+  /** One job: scan the table for the candidate keys — `isin` per column
+    * (an equality disjunction for floating columns, where SQL equality
+    * folds -0.0/0.0 and NaN but a value set would not) — and match the few
+    * rows that come back exactly on the driver. Not `limit(1)`/`isEmpty`:
+    * `executeTake` scales up and runs several jobs on a miss, and a miss
+    * is the common case. */
+  private def existingKeyHit(w: InsertWork, out: Array[Row], columns: Array[String],
+      keys: Seq[String], nullsDistinct: Boolean): Boolean = {
+    val idx = keys.map(columns.indexOf(_))
+    val cands = out.filter(r => !nullsDistinct || idx.forall(!r.isNullAt(_)))
+    if (cands.isEmpty) return false
+    val existing = readTable(w.db, w.schema, w.table)
+    val member = keys.zip(idx).map { case (k, i) =>
+      val c = existing(k)
+      val values = cands.iterator.map(_.get(i)).filter(_ != null).toSeq.distinct
+      val in = w.desc.findColumn(k).get.typeKind match {
+        case _ if values.isEmpty => lit(false)
+        case ColumnTypeKind.Float32Kind | ColumnTypeKind.Float64Kind =>
+          values.map(v => c === lit(v)).reduce(_ || _)
+        case _ => c.isin(values: _*)
+      }
+      if (!nullsDistinct && cands.exists(_.isNullAt(i))) in || c.isNull else in
+    }
+    val wanted = cands.iterator.map(SqlEngine.keyOf(_, idx)).toSet
+    existing.filter(member.reduce(_ && _)).select(keys.map(existing(_)): _*).collect()
+      .exists(h => wanted.contains(SqlEngine.keyOf(h, keys.indices)))
+  }
+
+  /** The distributed path (INSERT … SELECT over tables). */
+  private def insertDistributed(w: InsertWork, pre: DataFrame): Long = {
     pre.persist()
     try {
       // ONE fused pass over the cached candidate yields the row count
@@ -1412,38 +1590,21 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       // partition layout is identical (Dataset.rdd IS toRdd plus that
       // conversion), so the offsets line up with the serial projection
       // below.
-      val notNullable = desc.columns.filter(c => !c.nullable && provided.contains(c.name))
-      val checkIdx: Array[Int] = notNullable.map(c => pre.columns.indexOf(c.name)).toArray
+      val checkIdx = w.checkIdx
       val stats: Array[(Long, Array[Long])] = pre.queryExecution.toRdd.mapPartitions({ it =>
-        var c = 0L
-        val nulls = new Array[Long](checkIdx.length)
-        while (it.hasNext) {
-          val row = it.next()
-          var j = 0
-          while (j < checkIdx.length) {
-            if (row.isNullAt(checkIdx(j))) nulls(j) += 1L
-            j += 1
-          }
-          c += 1L
-        }
-        Iterator.single((c, nulls))
+        Iterator.single(SqlEngine.rowStats[org.apache.spark.sql.catalyst.InternalRow](
+          it, checkIdx, _.isNullAt(_)))
       }, preservesPartitioning = true).collect()
       val partCounts = stats.map(_._1)
-      val nullCounts = checkIdx.indices.map(j => stats.iterator.map(_._2(j)).sum)
+      val n = partCounts.sum
+      val nullCounts = checkIdx.indices.map(j => stats.iterator.map(_._2(j)).sum).toArray
 
-      // serial assignment: contiguous ids from the table counter in input
-      // order (reference increments per row; we reserve the whole range —
-      // same observable ids, one counter write); the counter advances
-      // BEFORE the NOT NULL validation below can fail — id gaps on
-      // failed inserts, same as the reference.
-      val (cand: DataFrame, n: Long) = if (missingSerials.isEmpty) (pre, partCounts.sum) else {
+      val starts = reserveSerials(w, n)
+      val cand: DataFrame = if (starts.isEmpty) pre else {
         // id values are produced by a codegen'd stateful expression
         // INSIDE a projection — the insert never leaves Tungsten (no RDD
         // round-trip, no external Rows)
-        val total = partCounts.sum
         val offsets = partCounts.scanLeft(0L)(_ + _)
-        val starts: Map[Int, Long] = missingSerials
-          .map(c => c.id -> catalog.reserveSerial(db, schema, table, c, total)).toMap
         // each invocation registers UNIQUELY-named temp functions (and
         // drops them once the plan is analyzed): a shared name would
         // cross-wire offsets between CONCURRENT inserts into the same
@@ -1451,7 +1612,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
         val reg = spark.sessionState.functionRegistry
         val token = java.util.UUID.randomUUID().toString.replace("-", "")
         val registered = Seq.newBuilder[String]
-        val outCols: Seq[org.apache.spark.sql.Column] = desc.columns.map { c =>
+        val outCols: Seq[org.apache.spark.sql.Column] = w.desc.columns.map { c =>
           starts.get(c.id) match {
             case Some(start) =>
               val fname = s"graft_serial_${c.id}_$token"
@@ -1467,65 +1628,81 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
         val out = pre.select(outCols: _*)
         registered.result().foreach(f =>
           reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-        (out, total)
+        out
       }
+      requireNotNull(w, nullCounts)
 
-      // NOT NULL validation on the provided data (counted in the fused
-      // pass above)
-      notNullable.zipWithIndex.foreach { case (c, j) =>
-        if (nullCounts(j) > 0) throw SqlError.notNullableColumn(table, c.name)
-      }
-
-      // unique enforcement + staged append under the table write lock:
-      // the check and the publish must be atomic with respect to other
-      // inserts into the same table (statement atomicity; the reference
-      // gets the same from its transactional commit + atomic Increment,
-      // src/sql/client.rs:276-306). Indexes whose keys are covered by
-      // freshly-assigned serial columns are unique by construction.
-      catalog.withTableWriteLock(db, schema, table) {
-        if (n > 0)
-          enforceUnique(desc, cand, db, schema, table,
-            freshSerialIds = missingSerials.map(_.id).toSet)
-
-        // atomic append: stage then move
-        val staging = catalog.newStagingDir(db, schema, table)
-        try {
-          cand.write.mode("overwrite").parquet(staging.toString)
-          catalog.commitStaged(db, schema, table, staging)
-        } catch {
-          case e: Throwable =>
-            try catalog.discardStaged(staging) catch { case _: Throwable => }
-            throw e
-        }
-
-        // opportunistic compaction at commit (reference: the tablet
-        // compacts once accumulated log messages pass a threshold,
-        // src/tablet/service.rs:393-399): a many-small-INSERT workload
-        // self-heals instead of accumulating one part per statement
-        // until someone calls compactTable. Runs on the committing
-        // thread inside the SAME write window (the table monitor is
-        // reentrant), so it serializes with concurrent inserts exactly
-        // like the insert itself; readers keep their planned snapshots
-        // (compaction republishes the manifest, old parts stay until
-        // vacuum). Amortized cost: every ~Nth INSERT pays one rewrite.
-        //
-        // The trigger counts parts ABOVE the table's compacted target
-        // (ceil(bytes / 128MB)), not absolute parts: a table whose
-        // compacted form already holds >= threshold files would otherwise
-        // re-trigger on EVERY insert once it passes ~threshold*128MB —
-        // each one a full-table rewrite, O(n^2) write amplification.
-        if (autoCompactAfterParts > 0) {
-          val (nFiles, bytes) = catalog.dataFileStats(db, schema, table)
-          val compactedTarget =
-            math.max(1, math.ceil(bytes.toDouble / autoCompactTargetFileBytes).toInt)
-          if (nFiles - compactedTarget >= autoCompactAfterParts)
-            compactTable(db, schema, table, autoCompactTargetFileBytes)
+      publish(w, cand) {
+        if (n > 0) {
+          // fast path: a freshly-created/truncated table has nothing to
+          // conflict with — skip the existing-rows join entirely (the
+          // bulk-load case)
+          lazy val tableEmpty = catalog.tableIsEmpty(w.db, w.schema, w.table)
+          lazy val existing = readTable(w.db, w.schema, w.table)
+          enforceUnique(w,
+            // Spark's groupBy treats NULLs as equal, which is exactly
+            // NULLS NOT DISTINCT; for NULLS DISTINCT drop rows with any
+            // NULL key first (each NULL is unique by definition)
+            inBatchDup = (keys, nullsDistinct) =>
+              !(if (nullsDistinct) cand.filter(keys.map(col(_).isNotNull).reduce(_ && _)) else cand)
+                .groupBy(keys.map(col): _*).count().filter(col("count") > 1).isEmpty,
+            existingConflict = (keys, nullsDistinct) => !tableEmpty && {
+              val cond = keys.map { k =>
+                if (nullsDistinct) cand(k) === existing(k) else cand(k) <=> existing(k)
+              }.reduce(_ && _)
+              !cand.join(existing, cond, "left_semi").isEmpty
+            })
         }
       }
-
-      toDf(Seq(Row(n)), StructType(Seq(StructField("count", LongType, false))))
+      n
     } finally pre.unpersist()
   }
+
+  /** The write window both insert paths share. Unique enforcement
+    * (`check`) and the staged append run under the table write lock: the
+    * check and the publish must be atomic with respect to other inserts
+    * into the same table (statement atomicity; the reference gets the
+    * same from its transactional commit + atomic Increment,
+    * src/sql/client.rs:276-306). */
+  private def publish(w: InsertWork, cand: DataFrame)(check: => Unit): Unit =
+    catalog.withTableWriteLock(w.db, w.schema, w.table) {
+      check
+
+      // atomic append: stage then move
+      val staging = catalog.newStagingDir(w.db, w.schema, w.table)
+      try {
+        cand.write.mode("overwrite").parquet(staging.toString)
+        catalog.commitStaged(w.db, w.schema, w.table, staging)
+      } catch {
+        case e: Throwable =>
+          try catalog.discardStaged(staging) catch { case _: Throwable => }
+          throw e
+      }
+
+      // opportunistic compaction at commit (reference: the tablet
+      // compacts once accumulated log messages pass a threshold,
+      // src/tablet/service.rs:393-399): a many-small-INSERT workload
+      // self-heals instead of accumulating one part per statement
+      // until someone calls compactTable. Runs on the committing
+      // thread inside the SAME write window (the table monitor is
+      // reentrant), so it serializes with concurrent inserts exactly
+      // like the insert itself; readers keep their planned snapshots
+      // (compaction republishes the manifest, old parts stay until
+      // vacuum). Amortized cost: every ~Nth INSERT pays one rewrite.
+      //
+      // The trigger counts parts ABOVE the table's compacted target
+      // (ceil(bytes / 128MB)), not absolute parts: a table whose
+      // compacted form already holds >= threshold files would otherwise
+      // re-trigger on EVERY insert once it passes ~threshold*128MB —
+      // each one a full-table rewrite, O(n^2) write amplification.
+      if (autoCompactAfterParts > 0) {
+        val (nFiles, bytes) = catalog.dataFileStats(w.db, w.schema, w.table)
+        val compactedTarget =
+          math.max(1, math.ceil(bytes.toDouble / autoCompactTargetFileBytes).toInt)
+        if (nFiles - compactedTarget >= autoCompactAfterParts)
+          compactTable(w.db, w.schema, w.table, autoCompactTargetFileBytes)
+      }
+    }
 
   /** Integer targets take only INTEGRAL sources (a fractional source would
     * silently truncate under non-ANSI cast; the reference raises
@@ -1571,46 +1748,26 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     case _ => None
   }
 
-  /** Unique-index enforcement (SURVEY §7: groupBy within batch + join
-    * against existing rows; NULLS NOT DISTINCT uses null-safe equality,
-    * realizing the reference's key-encoding semantics at src/sql/row.rs:97-106).
-    * At scale both checks are shuffle/broadcast joins on the key — no
-    * driver-side collection.
+  /** Unique-index enforcement (SURVEY §7: within the batch + against
+    * existing rows; NULLS NOT DISTINCT treats NULL keys as equal, realizing
+    * the reference's key-encoding semantics at src/sql/row.rs:97-106). The
+    * two checks come from the insert path: driver-side over driver-resident
+    * rows, shuffle/semi-join plans otherwise. Each index is checked in
+    * descriptor order, within the batch first, so both paths report the
+    * same index.
     */
-  private def enforceUnique(
-      desc: TableDescriptor, cand: DataFrame,
-      db: String, schema: String, table: String,
-      freshSerialIds: Set[Int]): Unit = {
-    val uniqueIdx = desc.indices.filter(_.isUnique)
-    if (uniqueIdx.isEmpty) return
-    // fast path: a freshly-created/truncated table has nothing to conflict
-    // with — skip the existing-rows join entirely (the bulk-load case)
-    val tableEmpty = catalog.tableIsEmpty(db, schema, table)
-    lazy val existing = readTable(db, schema, table)
-    uniqueIdx.foreach { idx =>
-      val keys = idx.columnIds.map(desc.column(_).name)
-      val nullsDistinct = idx.kind != IndexKind.UniqueNullsNotDistinct
+  private def enforceUnique(w: InsertWork,
+      inBatchDup: (Seq[String], Boolean) => Boolean,
+      existingConflict: (Seq[String], Boolean) => Boolean): Unit =
+    w.desc.indices.filter(_.isUnique).foreach { idx =>
       // fresh serial values are distinct within the batch AND greater than
       // every previously-issued value, so an index keyed on them alone
-      // cannot conflict — no data pass needed
-      if (!idx.columnIds.forall(freshSerialIds.contains)) {
-        // within-batch duplicates: Spark's groupBy treats NULLs as equal,
-        // which is exactly NULLS NOT DISTINCT; for NULLS DISTINCT drop rows
-        // with any NULL key first (each NULL is unique by definition)
-        val inBatch =
-          (if (nullsDistinct) cand.filter(keys.map(col(_).isNotNull).reduce(_ && _)) else cand)
-            .groupBy(keys.map(col): _*).count().filter(col("count") > 1)
-        if (!inBatch.isEmpty)
-          throw SqlError.uniqueKeyAlreadyExists(table, idx.name)
-        // against existing rows
-        if (!tableEmpty) {
-          val cond = keys.map { k =>
-            if (nullsDistinct) cand(k) === existing(k) else cand(k) <=> existing(k)
-          }.reduce(_ && _)
-          if (!cand.join(existing, cond, "left_semi").isEmpty)
-            throw SqlError.uniqueKeyAlreadyExists(table, idx.name)
-        }
+      // cannot conflict — no check needed
+      if (!idx.columnIds.forall(w.freshSerialIds.contains)) {
+        val keys = idx.columnIds.map(w.desc.column(_).name)
+        val nullsDistinct = idx.kind != IndexKind.UniqueNullsNotDistinct
+        if (inBatchDup(keys, nullsDistinct) || existingConflict(keys, nullsDistinct))
+          throw SqlError.uniqueKeyAlreadyExists(w.table, idx.name)
       }
     }
-  }
 }
