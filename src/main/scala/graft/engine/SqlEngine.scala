@@ -1,8 +1,19 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.util.Locale
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftPlanBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.AliasIdentifier
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute,
+  UnresolvedFunction, UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal, NamedExpression,
+  SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project, SubqueryAlias,
+  UnresolvedWith}
+import org.apache.spark.sql.execution.command.ExplainCommand
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Connection metadata (reference: SqlContext at src/sql/context.rs —
@@ -10,21 +21,6 @@ import scala.jdk.CollectionConverters._
 final case class SqlContext(database: String, user: String, port: Int = 0)
 
 object SqlEngine {
-  /** Plain SQL keywords the bare-identifier scan's FIRST pass never probes
-    * as table names — not a validator, purely a per-token catalog-stat
-    * saver. PG treats most of these as non-reserved identifiers, so a
-    * resolution miss retries once WITH keyword probing (see
-    * [[SqlEngine.planRelational]]) — a table named `first` stays
-    * queryable. */
-  private[engine] val sqlKeywords: Set[String] = Set(
-    "select", "from", "where", "and", "or", "not", "as", "on", "join", "inner", "left",
-    "right", "full", "outer", "cross", "group", "by", "order", "having", "limit", "offset",
-    "union", "all", "distinct", "case", "when", "then", "else", "end", "with", "in",
-    "exists", "between", "like", "ilike", "is", "null", "true", "false", "asc", "desc",
-    "nulls", "first", "last", "cast", "over", "partition", "rows", "range", "unbounded",
-    "preceding", "following", "current", "row", "values", "insert", "into", "explain",
-    "escape", "interval", "using", "semi", "anti")
-
   /** Default [[SqlEngine.vacuumTable]] grace window — the catalog's
     * snapshot-safe default ([[Catalog.defaultVacuumRetentionMs]]). */
   val defaultVacuumRetentionMs: Long = Catalog.defaultVacuumRetentionMs
@@ -86,14 +82,16 @@ object SqlEngine {
   *
   * Tables are parquet-backed managed tables; a query resolves each table at
   * planning time to the parquet files then present, which is the observable
-  * equivalent of the reference's snapshot reads (SURVEY §1.5).
+  * equivalent of the reference's snapshot reads (SURVEY §1.5). Queries and
+  * INSERT sources are resolved on Spark's parse tree (see [[plan]]): the
+  * engine registers no temp views or functions in the SparkSession, and the
+  * session values come from this engine's [[SqlContext]], so engines that
+  * share a session stay isolated.
   */
 final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: SqlContext,
     val autoCompactAfterParts: Int = SqlEngine.defaultAutoCompactAfterParts,
     val autoCompactTargetFileBytes: Long = 128L << 20) {
   import SqlParser._
-
-  registerSessionFunctions()
 
   def execute(sql: String): DataFrame = SqlParser.parse(sql) match {
     case CreateDatabase(name, ine) =>
@@ -105,8 +103,6 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     case DropTable(name, ie) =>
       val (db, schema, table) = resolve(name)
       catalog.dropTable(db, schema, table, ie)
-      spark.catalog.dropTempView(table)
-      spark.catalog.dropTempView(xdbView(db, schema, table))
       spark.emptyDataFrame
     case ins: Insert => insert(ins)
     case CopyNoOp() =>
@@ -126,7 +122,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
         StructType(Seq(
           StructField("column", StringType, false), StructField("type", StringType, false),
           StructField("nullable", BooleanType, false), StructField("serial", BooleanType, false))))
-    case Query(q) => query(q)
+    case Query(q) => plan(q)
   }
 
   /** A LocalRelation: fetching it runs no Spark job. */
@@ -144,12 +140,17 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   /** Scans the table's MANIFEST snapshot: the file list is resolved here,
     * at planning time, so the plan stays consistent even if a compaction
     * republishes the table before the query runs (SURVEY §1.5). */
-  def readTable(db: String, schema: String, table: String): DataFrame = {
-    val d = catalog.getTable(db, schema, table)
-    val paths = catalog.livePartPaths(db, schema, table)
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], d.toStructType)
-    else spark.read.schema(d.toStructType).parquet(paths: _*)
+  def readTable(db: String, schema: String, table: String): DataFrame =
+    scanParts(db, schema, table)(catalog.livePartPaths(db, schema, table))
+
+  /** The table's rows in the given part files; no parts is an empty
+    * relation of the table's schema. */
+  private def scanParts(db: String, schema: String, table: String)(
+      paths: => Seq[String]): DataFrame = {
+    val st = catalog.getTable(db, schema, table).toStructType
+    val p = paths
+    if (p.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
+    else spark.read.schema(st).parquet(p: _*)
   }
 
   /** TIME TRAVEL: the table as of snapshot `version` (0 = empty at
@@ -158,13 +159,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * fixed timestamp (src/kv.rs:331-431; version chains read newest ≤ ts,
     * src/tablet/memory.rs:73-81). Readable until [[vacuumTable]] reclaims
     * the snapshot's superseded files. */
-  def readTableAt(db: String, schema: String, table: String, version: Long): DataFrame = {
-    val d = catalog.getTable(db, schema, table)
-    val paths = catalog.partPathsAt(db, schema, table, version)
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], d.toStructType)
-    else spark.read.schema(d.toStructType).parquet(paths: _*)
-  }
+  def readTableAt(db: String, schema: String, table: String, version: Long): DataFrame =
+    scanParts(db, schema, table)(catalog.partPathsAt(db, schema, table, version))
 
   /** CHANGE FEED: the rows INSERTed in the version interval (`fromV`,
     * `toV`] — an incremental consumer (e.g. [[graft.operators.Dedup]]'s
@@ -174,13 +170,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * a full snapshot (same contract as a table format's incremental
     * read across a rewrite). */
   def readTableChanges(db: String, schema: String, table: String,
-      fromV: Long, toV: Long): DataFrame = {
-    val d = catalog.getTable(db, schema, table)
-    val paths = catalog.partPathsAddedBetween(db, schema, table, fromV, toV)
-    if (paths.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], d.toStructType)
-    else spark.read.schema(d.toStructType).parquet(paths: _*)
-  }
+      fromV: Long, toV: Long): DataFrame =
+    scanParts(db, schema, table)(catalog.partPathsAddedBetween(db, schema, table, fromV, toV))
 
   /** Change-feed consumption that SURVIVES compaction — the documented
     * recovery path of [[readTableChanges]] as code. Fast path: the
@@ -209,380 +200,462 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
 
   // ---------- query path ----------
 
-  /** Registers ONLY the statement's referenced tables as temp views (the
-    * reference's per-statement descriptor fetch: visit_relations at
-    * src/sql/traits.rs:68-78 feeding src/sql/mod.rs:60-75 — it never
-    * touches descriptors the statement doesn't name), rewrites PG session
-    * functions, and hands the text to Spark SQL. Driver-side work is
-    * O(statement), not O(catalog): a 1000-table catalog costs a query
-    * exactly what its own tables cost. */
-  private def query(sql: String): DataFrame =
-    planRelational(sql, rewriteSessionFunctions)
+  /** Plans relational text — a query, or an INSERT's source — as
+    * `spark.sql` does (Spark's parser, then `Dataset.ofRows`, so commands
+    * and eager analysis behave the same), with one [[Binder]] pass over
+    * the parse tree in between. The reference binds on its AST the same
+    * way: it collects the relations a statement names (`visit_relations`,
+    * src/sql/traits.rs:68-78) and fetches only their descriptors
+    * (src/sql/mod.rs:60-75), so a query costs what its own tables cost,
+    * not the catalog. Nothing is registered in the shared SparkSession:
+    * engines on one session never see each other's tables or session
+    * values. Spark's resolution failures map to the reference's
+    * TableNotExists; other analysis errors (a column typo, a GROUP BY
+    * mismatch) propagate raw. */
+  private def plan(sql: String): DataFrame =
+    try GraftPlanBridge.sql(spark, sql)(new Binder().bind(_, Set.empty))
+    catch {
+      case e: AnalysisException if isResolutionFailure(e) =>
+        throw SqlError(SqlError.TableNotExists, e.getMessage)
+    }
 
-  private def isResolutionFailure(e: org.apache.spark.sql.AnalysisException): Boolean =
+  private def isResolutionFailure(e: AnalysisException): Boolean =
     e.getCondition != null && Seq("TABLE_OR_VIEW_NOT_FOUND", "CATALOG_NOT_FOUND",
       "SCHEMA_NOT_FOUND", "REQUIRES_SINGLE_PART_NAMESPACE").exists(e.getCondition.startsWith)
 
-  /** The ONE resolve-register-run path for relational text (queries and
-    * INSERT sources): resolve referenced tables, register their snapshot
-    * views, hand the rewritten text to Spark SQL.
-    *
-    * The first pass never probes keyword tokens as table names (a
-    * per-token catalog-stat saver); PG's sqlparser accepts NON-RESERVED
-    * keywords as identifiers (/root/reference/src/sql/postgresql/mod.rs:119-121
-    * delegates to PostgreSqlDialect), so `CREATE TABLE first ...` is legal
-    * and `SELECT * FROM first` must resolve. On a resolution miss we retry
-    * ONCE probing keyword tokens too — the retry costs only the error
-    * path, never the hot path. Spark's resolution failures map to the
-    * reference's error shape: a qualified name whose database/schema
-    * doesn't exist in OUR catalog passes through unrewritten and surfaces
-    * as Spark's catalog/namespace error — same user-visible condition as a
-    * missing table. */
-  private def planRelational(sql: String, rewrite: String => String): DataFrame = {
-    def register(probeKeywords: Boolean): (String, Seq[TableRef]) = {
-      val (rewritten, refs, infoSchema) = resolveTables(sql, probeKeywords)
-      // on a PARTIAL registration failure, keyword views registered before
-      // the failing one must not linger: a later statement's first pass
-      // would resolve against their pinned-at-registration snapshot (the
-      // same staleness the post-run drop in `run` prevents)
-      val registered = Seq.newBuilder[TableRef]
-      try {
-        refs.filterNot(_.tvf).foreach { r =>
-          readTable(r.db, r.schema, r.table).createOrReplaceTempView(r.view)
-          registered += r
+  private def lower(s: String): String = s.toLowerCase(Locale.ROOT)
+
+  /** One statement's resolution pass over Spark's unresolved parse tree,
+    * subquery plans included. It replaces
+    *  - a relation that names a managed table with the table's snapshot
+    *    scan. A bare name resolves in the connected database (the last
+    *    sorted schema holding it wins); `schema.t` and `db.schema.t` as
+    *    written. A CTE name stays unresolved inside its WITH, and names
+    *    the catalog does not hold (user temp views, 4-part `graft.*`
+    *    plugin names, missing tables) are left for Spark;
+    *  - `information_schema.{tables,columns}` with the catalog's rows;
+    *  - a `graft_*` table function with its operator's plan;
+    *  - a PG session function with its value from this engine's
+    *    [[SqlContext]]; a bare select-list item keeps the PG column name.
+    * Per statement each distinct name is probed once (one `tableExists`
+    * per schema it could live in) and each table is read at one
+    * snapshot, so a self-join reads one snapshot. */
+  private final class Binder {
+    private val located = mutable.HashMap.empty[Seq[String], Option[(String, String, String)]]
+    private val scans = mutable.HashMap.empty[(String, String, String), LogicalPlan]
+    private lazy val schemas: Seq[String] =
+      try catalog.listSchemas(ctx.database)
+      catch { case e: SqlError if e.kind == SqlError.DatabaseNotExists => Seq.empty }
+
+    def bind(plan: LogicalPlan, ctes: Set[String]): LogicalPlan = plan match {
+      case w: UnresolvedWith =>
+        val names = w.cteRelations.map(r => lower(r._1))
+        w.copy(child = bind(w.child, ctes ++ names),
+          cteRelations = w.cteRelations.zipWithIndex.map { case ((n, q, d), i) =>
+            // a definition sees the ones before it (WITH RECURSIVE: and itself)
+            val seen = names.take(if (w.allowRecursion) i + 1 else i)
+            (n, bind(q, ctes ++ seen).asInstanceOf[SubqueryAlias], d)
+          })
+      case u: UnresolvedRelation => relation(u.multipartIdentifier.map(lower), ctes).getOrElse(u)
+      case f: UnresolvedTableValuedFunction if isTableFunction(f.name) =>
+        val fn = lower(f.name.head)
+        SubqueryAlias(fn, tableFunction(fn, f.functionArgs).queryExecution.analyzed)
+      case e: ExplainCommand => e.copy(logicalPlan = bind(e.logicalPlan, ctes))
+      case p =>
+        (p.mapChildren(bind(_, ctes)) match {
+          case q: Project => q.copy(projectList = q.projectList.map(selectItem))
+          case a: Aggregate => a.copy(aggregateExpressions = a.aggregateExpressions.map(selectItem))
+          case q => q
+        }).transformExpressions {
+          case s: SubqueryExpression => s.withNewPlan(bind(s.plan, ctes))
+          case SessionCall(n) => Literal(sessionValues(n))
         }
-        // inside the guard: an information_schema failure after keyword
-        // views registered must not leak them either
-        if (infoSchema) registerInformationSchema()
-      } catch {
-        case e: Throwable =>
-          (registered.result().filter(r => SqlEngine.sqlKeywords(r.view)) ++ refs.filter(_.tvf))
-            .foreach(r => try spark.catalog.dropTempView(r.view) catch { case _: Throwable => })
-          throw e
-      }
-      (rewritten, refs)
     }
-    // keyword-named temp views must NOT outlive the statement: a LATER
-    // statement's first pass (which never probes keywords) would resolve
-    // Spark-side against the lingering view — whose file list was pinned at
-    // registration — without ever reaching our resolver. That serves stale
-    // rows after an INSERT and dangling paths after compact+vacuum.
-    // Dropping them forces every statement referencing a keyword-named
-    // table back through a fresh registration (via the retry, or via the
-    // dotted-chain path that resolves `public.first` on the first pass).
-    // Non-keyword views are refreshed per statement by
-    // createOrReplaceTempView, so persisting is harmless for them.
-    // spark.sql analyzes eagerly — the returned DataFrame's plan already
-    // holds the resolved file scan, so dropping the view right after is
-    // safe even if the caller executes later.
-    def run(rewritten: String, refs: Seq[TableRef]): DataFrame =
-      try spark.sql(rewrite(rewritten))
-      finally refs.filter(r => SqlEngine.sqlKeywords(r.view) || r.tvf)
-        .foreach(r => spark.catalog.dropTempView(r.view))
-    try {
-      val (rewritten, refs) = register(probeKeywords = false)
-      run(rewritten, refs)
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException if isResolutionFailure(e) =>
-        // retry ONCE probing keyword tokens as table names. Registration is
-        // a separate step so a registration failure (e.g. a name Spark's
-        // view parser rejects) maps back to the ORIGINAL resolution miss in
-        // the reference's error shape, while a genuine analysis error in
-        // the query itself (column typo, GROUP BY mismatch) propagates raw
-        // — exactly as it does for non-keyword tables.
-        val (rewritten, refs) =
-          try register(probeKeywords = true)
-          catch {
-            case _: org.apache.spark.sql.AnalysisException =>
-              throw SqlError(SqlError.TableNotExists, e.getMessage)
-          }
-        try run(rewritten, refs)
-        catch {
-          case e2: org.apache.spark.sql.AnalysisException if isResolutionFailure(e2) =>
-            throw SqlError(SqlError.TableNotExists, e2.getMessage)
-        }
+
+    private def selectItem(e: NamedExpression): NamedExpression = e match {
+      case SessionCall(n) => Alias(Literal(sessionValues(n)), n)()
+      case UnresolvedAlias(SessionCall(n), _) => Alias(Literal(sessionValues(n)), n)()
+      case e => e
+    }
+
+    private def relation(name: Seq[String], ctes: Set[String]): Option[LogicalPlan] = name match {
+      case Seq(t) if ctes(t) => None
+      case Seq("information_schema", n) => informationSchema(n)
+      case Seq(d, "information_schema", n) if d == ctx.database => informationSchema(n)
+      case _ => locate(name).map(scan)
+    }
+
+    private def locate(name: Seq[String]): Option[(String, String, String)] =
+      located.getOrElseUpdate(name, name match {
+        case Seq(t) =>
+          schemas.filter(catalog.tableExists(ctx.database, _, t)).lastOption.map((ctx.database, _, t))
+        case Seq(_, _) | Seq(_, _, _) =>
+          val (d, s, t) = resolve(name)
+          if (catalog.tableExists(d, s, t)) Some((d, s, t)) else None
+        case _ => None
+      })
+
+    private def scan(loc: (String, String, String)): LogicalPlan = scans.getOrElseUpdate(loc, {
+      val (d, s, t) = loc
+      SubqueryAlias(AliasIdentifier(t, Seq(d, s)), readTable(d, s, t).queryExecution.analyzed)
+    })
+
+    /** A table function's table argument. Unlike a relation, a bare name
+      * the catalog does not hold means `public.t`, so reading it raises
+      * TableNotExists. */
+    def argTable(name: Seq[String]): (String, String, String) = name.map(lower) match {
+      case n @ Seq(t) => locate(n).getOrElse((ctx.database, "public", t))
+      case n => resolve(n)
+    }
+
+    def tableFunction(fn: String, args: Seq[Expression]): DataFrame = {
+      val a = new TvfArgs(fn, args, this)
+      val df = tableFunctions(fn)(a)
+      a.requireAllRead()
+      df
     }
   }
 
-  /** The `information_schema` relations the engine exposes (the reference
-    * enables DataFusion's information_schema, src/sql/mod.rs:82). Backed by
-    * temp views refreshed per query from the catalog. */
-  private val infoSchemaTables = Set("tables", "columns")
+  /** A PG session function in the parse tree, by its lower-cased name: a
+    * bare word (`current_user`, `user`) or a call with no arguments. A
+    * qualified name (`t.user`) is a column. */
+  private object SessionCall {
+    def unapply(e: Expression): Option[String] = (e match {
+      case UnresolvedAttribute(Seq(n)) => Some(n)
+      case f: UnresolvedFunction if f.nameParts.length == 1 && f.arguments.isEmpty =>
+        Some(f.nameParts.head)
+      case _ => None
+    }).map(lower).filter(sessionValues.contains)
+  }
 
-  private def registerInformationSchema(): Unit = {
+  /** The `information_schema` relations the engine exposes (the reference
+    * enables DataFusion's information_schema, src/sql/mod.rs:82), read
+    * from the catalog when a statement names them. */
+  private def informationSchema(name: String): Option[LogicalPlan] = {
     val db = ctx.database
-    val tableRows = Seq.newBuilder[Row]
-    val columnRows = Seq.newBuilder[Row]
-    if (catalog.databaseExists(db)) {
-      for (schema <- catalog.listSchemas(db); t <- catalog.listTables(db, schema)) {
-        tableRows += Row(db, schema, t, "BASE TABLE")
-        catalog.getTable(db, schema, t).columns.zipWithIndex.foreach { case (c, i) =>
-          columnRows += Row(db, schema, t, c.name, i + 1, null,
-            if (c.nullable) "YES" else "NO", c.typeKind.name)
-        }
-      }
+    def tables = for {
+      s <- if (catalog.databaseExists(db)) catalog.listSchemas(db) else Seq.empty
+      t <- catalog.listTables(db, s)
+    } yield (s, t)
+    def str(n: String) = StructField(n, StringType, nullable = false)
+    val key = Seq("table_catalog", "table_schema", "table_name").map(str)
+    val df = name match {
+      case "tables" =>
+        Some(toDf(tables.map { case (s, t) => Row(db, s, t, "BASE TABLE") },
+          StructType(key :+ str("table_type"))))
+      case "columns" =>
+        Some(toDf(tables.flatMap { case (s, t) =>
+          catalog.getTable(db, s, t).columns.zipWithIndex.map { case (c, i) =>
+            Row(db, s, t, c.name, i + 1, null, if (c.nullable) "YES" else "NO", c.typeKind.name)
+          }
+        }, StructType(key ++ Seq(str("column_name"),
+          StructField("ordinal_position", IntegerType, nullable = false),
+          StructField("column_default", StringType, nullable = true),
+          str("is_nullable"), str("data_type")))))
+      case _ => None
     }
-    toDf(tableRows.result(), StructType(Seq(
-      StructField("table_catalog", StringType, false),
-      StructField("table_schema", StringType, false),
-      StructField("table_name", StringType, false),
-      StructField("table_type", StringType, false))))
-      .createOrReplaceTempView("graft_information_schema_tables")
-    toDf(columnRows.result(), StructType(Seq(
-      StructField("table_catalog", StringType, false),
-      StructField("table_schema", StringType, false),
-      StructField("table_name", StringType, false),
-      StructField("column_name", StringType, false),
-      StructField("ordinal_position", IntegerType, false),
-      StructField("column_default", StringType, true),
-      StructField("is_nullable", StringType, false),
-      StructField("data_type", StringType, false))))
-      .createOrReplaceTempView("graft_information_schema_columns")
+    df.map(d => SubqueryAlias(AliasIdentifier(name, Seq("information_schema")),
+      d.queryExecution.analyzed))
+  }
+
+  private def isTableFunction(name: Seq[String]): Boolean =
+    name.length == 1 && tableFunctions.contains(lower(name.head))
+
+  /** A `graft_*` call's arguments as the parse tree holds them. A
+    * relation is an identifier (a managed table) or a nested `graft_*`
+    * call; a `'string'` literal is a view name, a path or a pattern; a
+    * number literal is a number. Each kind is indexed on its own, in call
+    * order, and a binding reads the shape it takes; a name with two
+    * shapes picks one from the counts. A relation or string the binding
+    * never reads, or an argument of any other kind, raises: a call never
+    * silently drops what it was given. Omitted numbers take the
+    * operator's defaults. */
+  private final class TvfArgs(fn: String, args: Seq[Expression], binder: Binder) {
+    private val rels = args.filter {
+      case _: UnresolvedAttribute => true
+      case f: UnresolvedFunction => isTableFunction(f.nameParts)
+      case _ => false
+    }
+    private val strs = args.collect { case Literal(s: UTF8String, _: StringType) => s.toString }
+    private val nums = args.collect {
+      case Literal(d: Decimal, _) => d.toDouble
+      case Literal(n: Number, _: NumericType) => n.doubleValue
+    }
+    if (rels.size + strs.size + nums.size < args.size)
+      throw SqlError.invalid(s"$fn takes relations, 'string' literals and numbers")
+    private val relDfs = mutable.HashMap.empty[Int, DataFrame]
+    private var relsRead = 0
+    private var strsRead = 0
+
+    def relCount: Int = rels.size
+    def strCount: Int = strs.size
+    def rel(i: Int): DataFrame = relDfs.getOrElseUpdate(i, relArg(i) match {
+      case UnresolvedAttribute(name) => val (d, s, t) = binder.argTable(name); readTable(d, s, t)
+      case f: UnresolvedFunction => binder.tableFunction(lower(f.nameParts.head), f.arguments)
+    })
+    /** The table itself, for the functions bound to its identity rather
+      * than its current snapshot. */
+    def table(i: Int): (String, String, String) = relArg(i) match {
+      case UnresolvedAttribute(name) => binder.argTable(name)
+      case _ => throw SqlError.invalid(s"$fn takes a table name as argument ${i + 1}")
+    }
+    private def relArg(i: Int): Expression = {
+      relsRead = relsRead max (i + 1)
+      rels.lift(i).getOrElse(throw SqlError.invalid(s"$fn takes ${i + 1} relation(s)"))
+    }
+    def str(i: Int): String = strOr(i, throw SqlError.invalid(s"$fn takes ${i + 1} 'string' argument(s)"))
+    def strOr(i: Int, default: => String): String = {
+      strsRead = strsRead max (i + 1)
+      strs.lift(i).getOrElse(default)
+    }
+    def strings: Seq[String] = { strsRead = strs.size; strs }
+    /** A session temp view named by a string: the escape hatch for
+      * embedding-typed inputs, which managed tables cannot hold. */
+    def view(i: Int): DataFrame = spark.table(str(i))
+    def num(i: Int, default: Double): Double = nums.lift(i).getOrElse(default)
+    def int(i: Int, default: Int): Int = nums.lift(i).fold(default)(_.toInt)
+    def long(i: Int, default: => Long): Long = nums.lift(i).fold(default)(_.toLong)
+    def numbers: Seq[Double] = nums
+    def requireAllRead(): Unit =
+      if (relsRead < rels.size || strsRead < strs.size)
+        throw SqlError.invalid(s"$fn: unexpected argument")
   }
 
   /** SQL-TEXT entry to the LLM-data operator suite: `SELECT * FROM
     * graft_dedup_exact(docs)` runs [[graft.operators.Dedup.exactDedup]]
     * over the managed table `docs` — composable with every relational
-    * construct (joins, CTEs, aliases) since the call site resolves to a
-    * plain relation. The reference's only user surface is SQL text
+    * construct (joins, CTEs, aliases, nesting) since the call resolves to
+    * a plain relation. The reference's only user surface is SQL text
     * (/root/reference/src/sql/mod.rs:48-156); without these the d/s/t/p
-    * operators would be unreachable from a SQL prompt. Trailing NUMERIC
-    * literal arguments map positionally onto the operator's tuning
-    * parameters; omitted ones take the operator's own defaults. */
-  private val tableFunctions: Map[String, (DataFrame, Seq[Double]) => DataFrame] = {
-    import graft.operators.{Dedup, Packing, Selection, TextAnalysis}
-    Map(
-      // NOTE: no graft_semdedup/graft_kmeans here — managed tables carry
-      // only the reference's 8 scalar types (no arrays), so an
-      // embedding-typed relation can never arrive via THIS seam; they
-      // enter through [[viewFunctions]] (a registered temp view named by
-      // a string argument) instead.
-      "graft_tfidf" -> ((t, a) =>
-        TextAnalysis.tfidfTerms(t, a.headOption.map(_.toInt).getOrElse(3))),
-      "graft_repetition" -> ((t, a) =>
-        TextAnalysis.repetitionStats(t, a.headOption.getOrElse(0.65),
-          a.lift(1).getOrElse(0.1))),
-      "graft_lm_score" -> ((t, _) => TextAnalysis.lmScore(t)),
-      "graft_classifier_score" -> ((t, a) => {
-        val dim = a.headOption.map(_.toInt).getOrElse(4096)
-        TextAnalysis.classifierScore(t,
-          TextAnalysis.seedWeights(t.sparkSession, dim), dim)
-      }),
-      "graft_pack_spans" -> ((t, a) =>
-        Packing.packedSpans(t, a.headOption.map(_.toInt).getOrElse(128))),
-      "graft_dedup_exact" -> ((t, _) => Dedup.exactDedup(t)),
-      "graft_minhash_pairs" -> ((t, a) =>
-        Dedup.minhashPairs(t, a.headOption.getOrElse(0.35))),
-      "graft_simhash_pairs" -> ((t, a) =>
-        Dedup.simhashPairs(t, a.headOption.map(_.toInt).getOrElse(3))),
-      "graft_simhash128_pairs" -> ((t, a) =>
-        Dedup.simhashPairs128(t, a.headOption.map(_.toInt).getOrElse(3))),
-      "graft_jaccard_pairs" -> ((t, a) =>
-        Dedup.exactJaccardPairs(Dedup.postingIndex(t), a.headOption.getOrElse(0.5))),
-      "graft_passage_stats" -> ((t, a) =>
-        Dedup.passageStats(t, a.headOption.map(_.toInt).getOrElse(8))),
-      "graft_lang_id" -> ((t, _) => TextAnalysis.langId(t)),
-      "graft_quality" -> ((t, _) => TextAnalysis.qualityFeatures(t)),
-      "graft_token_counts" -> ((t, _) => TextAnalysis.tokenCounts(t)),
-      "graft_fingerprints" -> ((t, a) =>
-        TextAnalysis.fingerprints(t, a.headOption.map(_.toInt).getOrElse(16))),
-      "graft_pack_sequences" -> ((t, a) =>
-        Packing.packSequences(t, a.headOption.map(_.toInt).getOrElse(128))),
-      "graft_shard_pack" -> ((t, a) =>
-        Packing.shardPack(t, a.headOption.map(_.toInt).getOrElse(8))),
-      "graft_temperature_mix" -> ((t, a) =>
-        Packing.temperatureMix(t, a.headOption.getOrElse(0.5),
-          a.lift(1).getOrElse(0.5))),
-      "graft_token_budget" -> ((t, a) =>
-        Selection.selectTokenBudget(t, a.headOption.map(_.toLong).getOrElse(1000000L))),
-      "graft_curriculum" -> ((t, a) =>
-        Selection.curriculumOrder(t, a.headOption.map(_.toInt).getOrElse(4))),
-      "graft_cap_per_source" -> ((t, a) =>
-        Selection.capPerSource(t, a.headOption.map(_.toInt).getOrElse(1000))),
-      "graft_stratified_split" -> ((t, a) =>
-        Selection.stratifiedSplit(t, if (a.nonEmpty) a else Seq(0.8, 0.1, 0.1))),
-      "graft_boilerplate" -> ((t, a) =>
-        TextAnalysis.boilerplatePhrases(t, a.headOption.map(_.toInt).getOrElse(3),
-          a.lift(1).getOrElse(0.05))),
-      "graft_heuristic_filter" -> ((t, a) =>
-        TextAnalysis.heuristicFilter(t,
-          minWords = a.headOption.map(_.toLong).getOrElse(50L),
-          maxWords = a.lift(1).map(_.toLong).getOrElse(100000L),
-          minStopHits = a.lift(2).map(_.toInt).getOrElse(2))),
-      "graft_weighted_sample" -> ((t, a) =>
-        Selection.weightedSample(t, a.headOption.map(_.toInt).getOrElse(1000))),
-      "graft_epoch_shuffle" -> ((t, a) =>
-        Selection.epochShuffle(t, a.headOption.map(_.toInt).getOrElse(0),
-          a.lift(1).map(_.toInt).getOrElse(8))),
-      "graft_passage_scrub" -> ((t, a) =>
-        Dedup.passageScrub(t, a.headOption.map(_.toInt).getOrElse(8))),
-      "graft_vocabulary" -> ((t, a) =>
-        TextAnalysis.vocabulary(t, a.headOption.map(_.toInt).getOrElse(30))),
+    * operators would be unreachable from a SQL prompt. Each binding reads
+    * its arguments through [[TvfArgs]]. */
+  private val tableFunctions: Map[String, TvfArgs => DataFrame] = {
+    import graft.operators.{Curation, Dedup, Multimodal, Packing, Selection, Similarity, TextAnalysis}
+    /** A trained (rank, a, b) merge table's pairs. The collect is
+      * sanctioned only because merge tables are k-row artifacts; the cap
+      * makes a corpus-sized relation fail loudly instead of OOMing the
+      * driver. */
+    def merges(fn: String, rel: DataFrame): Seq[(String, String)] = {
+      val cap = 65536
+      val rows = rel.orderBy(col("rank")).limit(cap + 1).collect()
+      if (rows.length > cap)
+        throw SqlError.invalid(s"$fn merge relation exceeds $cap rows — " +
+          "pass the trained (rank, a, b) merge table, not a corpus")
+      rows.map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq
+    }
+    /** The first k vectors of an embedding relation: the bounded,
+      * deterministic seed collect of the s06/s09 convention. */
+    def seeds(rel: DataFrame, k: Int): Array[Array[Double]] =
+      rel.orderBy(col("vec_id")).limit(k).select(col("embedding").cast("array<double>"))
+        .collect().map(_.getSeq[Double](0).toArray)
+    def asQueries(rel: DataFrame): DataFrame =
+      rel.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    import spark.implicits._
+    Map[String, TvfArgs => DataFrame](
+      // ---- one relation, numeric tuning (managed tables carry only the
+      // reference's 8 scalar types, so embedding-typed operators enter
+      // through views below)
+      "graft_tfidf" -> (a => TextAnalysis.tfidfTerms(a.rel(0), a.int(0, 3))),
+      "graft_repetition" -> (a =>
+        TextAnalysis.repetitionStats(a.rel(0), a.num(0, 0.65), a.num(1, 0.1))),
+      "graft_lm_score" -> (a => TextAnalysis.lmScore(a.rel(0))),
+      "graft_classifier_score" -> { a =>
+        val t = a.rel(0)
+        val dim = a.int(0, 4096)
+        TextAnalysis.classifierScore(t, TextAnalysis.seedWeights(t.sparkSession, dim), dim)
+      },
+      "graft_pack_spans" -> (a => Packing.packedSpans(a.rel(0), a.int(0, 128))),
+      "graft_dedup_exact" -> (a => Dedup.exactDedup(a.rel(0))),
+      "graft_minhash_pairs" -> (a => Dedup.minhashPairs(a.rel(0), a.num(0, 0.35))),
+      "graft_simhash_pairs" -> (a => Dedup.simhashPairs(a.rel(0), a.int(0, 3))),
+      "graft_simhash128_pairs" -> (a => Dedup.simhashPairs128(a.rel(0), a.int(0, 3))),
+      "graft_jaccard_pairs" -> (a =>
+        Dedup.exactJaccardPairs(Dedup.postingIndex(a.rel(0)), a.num(0, 0.5))),
+      "graft_passage_stats" -> (a => Dedup.passageStats(a.rel(0), a.int(0, 8))),
+      "graft_lang_id" -> (a => TextAnalysis.langId(a.rel(0))),
+      "graft_quality" -> (a => TextAnalysis.qualityFeatures(a.rel(0))),
+      "graft_token_counts" -> (a => TextAnalysis.tokenCounts(a.rel(0))),
+      "graft_fingerprints" -> (a => TextAnalysis.fingerprints(a.rel(0), a.int(0, 16))),
+      "graft_pack_sequences" -> (a => Packing.packSequences(a.rel(0), a.int(0, 128))),
+      "graft_shard_pack" -> (a => Packing.shardPack(a.rel(0), a.int(0, 8))),
+      "graft_temperature_mix" -> (a =>
+        Packing.temperatureMix(a.rel(0), a.num(0, 0.5), a.num(1, 0.5))),
+      "graft_token_budget" -> (a => Selection.selectTokenBudget(a.rel(0), a.long(0, 1000000L))),
+      "graft_curriculum" -> (a => Selection.curriculumOrder(a.rel(0), a.int(0, 4))),
+      "graft_cap_per_source" -> (a => Selection.capPerSource(a.rel(0), a.int(0, 1000))),
+      "graft_stratified_split" -> (a => Selection.stratifiedSplit(a.rel(0),
+        if (a.numbers.nonEmpty) a.numbers else Seq(0.8, 0.1, 0.1))),
+      "graft_boilerplate" -> (a =>
+        TextAnalysis.boilerplatePhrases(a.rel(0), a.int(0, 3), a.num(1, 0.05))),
+      "graft_heuristic_filter" -> (a => TextAnalysis.heuristicFilter(a.rel(0),
+        minWords = a.long(0, 50L), maxWords = a.long(1, 100000L), minStopHits = a.int(2, 2))),
+      "graft_weighted_sample" -> (a => Selection.weightedSample(a.rel(0), a.int(0, 1000))),
+      "graft_epoch_shuffle" -> (a => Selection.epochShuffle(a.rel(0), a.int(0, 0), a.int(1, 8))),
+      "graft_passage_scrub" -> (a => Dedup.passageScrub(a.rel(0), a.int(0, 8))),
+      "graft_vocabulary" -> (a => TextAnalysis.vocabulary(a.rel(0), a.int(0, 30))),
       // per-order distinct ratios + gram-distribution entropy — the
       // before/after dashboard of every dedup/selection pass
-      "graft_corpus_diversity" -> ((t, a) =>
-        TextAnalysis.corpusDiversity(t, a.headOption.map(_.toInt).getOrElse(3))),
-      "graft_bpe_merges" -> ((t, a) =>
-        TextAnalysis.bpeMerges(t, a.headOption.map(_.toInt).getOrElse(8))),
+      "graft_corpus_diversity" -> (a => TextAnalysis.corpusDiversity(a.rel(0), a.int(0, 3))),
+      "graft_bpe_merges" -> (a => TextAnalysis.bpeMerges(a.rel(0), a.int(0, 8))),
       // production-depth spelling: capped-census driver-side trainer —
       // graft_bpe_train(relation, merges [, vocabCap]); rounds run in
       // memory over the bounded census, so real tokenizer depths are a
       // single corpus pass rather than k scheduled jobs
-      "graft_bpe_train" -> ((t, a) =>
-        TextAnalysis.bpeMergesDriver(t, a.headOption.map(_.toInt).getOrElse(256),
-          a.lift(1).map(_.toInt).getOrElse(65536))),
-      // train-then-encode convenience: k merges learned from the relation
-      // itself, then per-doc tokenizer stats under them
-      "graft_bpe_encode" -> ((t, a) => {
-        val k = a.headOption.map(_.toInt).getOrElse(8)
-        val table = TextAnalysis.bpeMerges(t, k).orderBy(col("rank"))
-          .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-        TextAnalysis.bpeEncode(t, table)
-      }),
-      // train-then-tokenize: the token STREAM (doc_id, word_idx, tok_idx,
-      // token) under k merges learned from the relation itself (driver
-      // trainer — production depths are a single census pass)
-      "graft_bpe_tokens" -> ((t, a) => {
-        val k = a.headOption.map(_.toInt).getOrElse(8)
+      "graft_bpe_train" -> (a =>
+        TextAnalysis.bpeMergesDriver(a.rel(0), a.int(0, 256), a.int(1, 65536))),
+      // graft_bpe_encode(corpus[, k]) trains k merges on the corpus
+      // itself, then reports per-doc tokenizer stats under them;
+      // graft_bpe_encode(corpus, merges) applies a LEARNED (rank, a, b)
+      // merge table to a different corpus — a tokenizer trained on A
+      // encodes B, from pure SQL
+      "graft_bpe_encode" -> { a =>
+        val t = a.rel(0)
+        if (a.relCount > 1) TextAnalysis.bpeEncode(t, merges("graft_bpe_encode", a.rel(1)))
+        else TextAnalysis.bpeEncode(t, TextAnalysis.bpeMerges(t, a.int(0, 8)).orderBy(col("rank"))
+          .collect().map(r => (r.getString(1), r.getString(2))).toSeq)
+      },
+      // the token STREAM (doc_id, word_idx, tok_idx, token): under k
+      // merges learned from the relation itself (driver trainer), or
+      // under a trained merge table given as the second relation
+      "graft_bpe_tokens" -> { a =>
+        val t = a.rel(0)
         TextAnalysis.bpeTokens(t,
-          TextAnalysis.bpeTrainDriver(t, k).map(m => (m._2, m._3)))
-      }),
-      // the id-stream capstone: tokens mapped through the induced
-      // vocabulary (alphabet + merges, dense GPT-2-style ids)
-      "graft_bpe_ids" -> ((t, a) => {
-        val k = a.headOption.map(_.toInt).getOrElse(8)
-        val tok = TextAnalysis.bpeTrainTokenizer(t, k)
-        TextAnalysis.bpeTokenIds(t, tok.merges, tok.alphabet)
-      }),
+          if (a.relCount > 1) merges("graft_bpe_tokens", a.rel(1))
+          else TextAnalysis.bpeTrainDriver(t, a.int(0, 8)).map(m => (m._2, m._3)))
+      },
+      // the id stream: tokens mapped through the induced vocabulary
+      // (alphabet + merges, dense GPT-2-style ids). graft_bpe_ids(corpus
+      // [, k]) trains on its own input, where every token is in-vocab;
+      // graft_bpe_ids(corpusB, trainCorpusA[, k]) is the deployment shape
+      // — a FROZEN tokenizer trained on A meets new data, and tokens
+      // outside A's alphabet map to the explicit UNK id = |vocab|
+      "graft_bpe_ids" -> { a =>
+        val t = a.rel(0)
+        if (a.relCount > 1) {
+          val train = a.rel(1)
+          val tok = TextAnalysis.bpeTrainTokenizer(train, a.int(0, 8))
+          TextAnalysis.bpeTokenIdsAgainst(t, train, tok.merges, tok.alphabet)
+        } else {
+          val tok = TextAnalysis.bpeTrainTokenizer(t, a.int(0, 8))
+          TextAnalysis.bpeTokenIds(t, tok.merges, tok.alphabet)
+        }
+      },
       // the vocabulary artifact itself: (token_id, token)
-      "graft_bpe_vocab" -> ((t, a) => {
-        val k = a.headOption.map(_.toInt).getOrElse(8)
-        val tok = TextAnalysis.bpeTrainTokenizer(t, k)
+      "graft_bpe_vocab" -> { a =>
+        val t = a.rel(0)
+        val tok = TextAnalysis.bpeTrainTokenizer(t, a.int(0, 8))
         TextAnalysis.bpeVocab(t, tok.merges, tok.alphabet)
-      }),
-      // the MATERIALIZED packed tape: train k merges, tokenize to ids,
-      // pack onto budget-token sequences — (seq, seq_pos, doc_id,
-      // token_id), the loader-facing artifact; args (budget, merges)
-      "graft_pack_ids" -> ((t, a) => {
-        val tok = TextAnalysis.bpeTrainTokenizer(t,
-          a.lift(1).map(_.toInt).getOrElse(8))
-        graft.operators.Packing.packTokenIds(t, tok.merges,
-          a.headOption.map(_.toInt).getOrElse(128), tok.alphabet)
-      }),
-      "graft_hashed_embedding" -> ((t, a) =>
-        graft.operators.Similarity.hashedEmbedding(t,
-          a.headOption.map(_.toInt).getOrElse(16))),
+      },
+      // the MATERIALIZED packed tape (seq, seq_pos, doc_id, token_id), the
+      // loader-facing artifact; args (budget, merges). With a second
+      // relation the ids (and UNK = |vocab|) come from a tokenizer
+      // trained on it, the tape layout from the first relation's counts
+      "graft_pack_ids" -> { a =>
+        val t = a.rel(0)
+        val train = if (a.relCount > 1) a.rel(1) else t
+        val tok = TextAnalysis.bpeTrainTokenizer(train, a.int(1, 8))
+        if (a.relCount > 1)
+          Packing.packTokenIdsAgainst(t, train, tok.merges, a.int(0, 128), tok.alphabet)
+        else Packing.packTokenIds(t, tok.merges, a.int(0, 128), tok.alphabet)
+      },
+      "graft_hashed_embedding" -> (a => Similarity.hashedEmbedding(a.rel(0), a.int(0, 16))),
       // media tables carry payloads as bytea — the one reference type the
       // multimodal family needs (frame content returns as bytea too)
-      "graft_sample_frames" -> ((t, a) =>
-        graft.operators.Multimodal.sampleFrames(t,
-          a.headOption.map(_.toInt).getOrElse(4096), a.lift(1).map(_.toInt).getOrElse(1))),
-      "graft_media_dedup" -> ((t, _) => graft.operators.Multimodal.mediaDedup(t)),
+      "graft_sample_frames" -> (a =>
+        Multimodal.sampleFrames(a.rel(0), a.int(0, 4096), a.int(1, 1))),
+      "graft_media_dedup" -> (a => Multimodal.mediaDedup(a.rel(0))),
       // pair-list output is quadratic on clustered feature spaces — the
       // operator's candidate-pair circuit breaker refuses past the cap
       // (optional 2nd arg) with a pointer to graft_media_semdedup, the
       // keep/drop deliverable for large corpora
-      "graft_media_neardup" -> ((t, a) =>
-        graft.operators.Multimodal.mediaNearDupPairs(t, a.headOption.getOrElse(0.99),
-          maxCandidatePairs = a.lift(1).map(_.toLong).getOrElse(10000000L))),
-      "graft_media_semdedup" -> ((t, a) =>
-        graft.operators.Multimodal.mediaSemDedup(t, a.headOption.getOrElse(0.99),
-          a.lift(1).map(_.toInt).getOrElse(0))),
-      "graft_ppl_tiers" -> ((t, _) => TextAnalysis.pplTiers(t)),
-      "graft_chunk_windows" -> ((t, a) =>
-        Packing.chunkWindows(t, a.headOption.map(_.toInt).getOrElse(64),
-          a.lift(1).map(_.toInt).getOrElse(32))),
+      "graft_media_neardup" -> (a => Multimodal.mediaNearDupPairs(a.rel(0), a.num(0, 0.99),
+        maxCandidatePairs = a.long(1, 10000000L))),
+      "graft_media_semdedup" -> (a =>
+        Multimodal.mediaSemDedup(a.rel(0), a.num(0, 0.99), a.int(1, 0))),
+      "graft_ppl_tiers" -> (a => TextAnalysis.pplTiers(a.rel(0))),
+      "graft_chunk_windows" -> (a => Packing.chunkWindows(a.rel(0), a.int(0, 64), a.int(1, 32))),
       // source diagnostics build their pair graph from the relation
       // itself (doc_id, text, source all present on documents-shaped
       // tables); arg 1 is the Jaccard floor
-      "graft_dup_report" -> ((t, a) =>
-        Dedup.dupReport(t, Dedup.exactJaccardPairs(
-          Dedup.postingIndex(t), a.headOption.getOrElse(0.4)))),
-      "graft_cross_source" -> ((t, a) =>
-        Dedup.crossSourceOverlap(t, Dedup.exactJaccardPairs(
-          Dedup.postingIndex(t), a.headOption.getOrElse(0.4)))),
+      "graft_dup_report" -> { a =>
+        val t = a.rel(0)
+        Dedup.dupReport(t, Dedup.exactJaccardPairs(Dedup.postingIndex(t), a.num(0, 0.4)))
+      },
+      "graft_cross_source" -> { a =>
+        val t = a.rel(0)
+        Dedup.crossSourceOverlap(t, Dedup.exactJaccardPairs(Dedup.postingIndex(t), a.num(0, 0.4)))
+      },
       // args: (simFloor, candidate jaccard floor, maxLev)
-      "graft_edit_pairs" -> ((t, a) =>
-        Dedup.editNearDupPairs(t,
-          Dedup.exactJaccardPairs(Dedup.postingIndex(t), a.lift(1).getOrElse(0.2)),
-          simFloor = a.headOption.getOrElse(0.8),
-          maxLev = a.lift(2).map(_.toInt).getOrElse(128))),
-      "graft_corpus_card" -> ((t, _) => graft.operators.Curation.corpusCard(t)),
-      "graft_mixture_weights" -> ((t, a) =>
-        Packing.mixtureWeights(t, a.headOption.getOrElse(0.5),
-          a.lift(1).map(_.toLong).getOrElse(100000L))),
-      "graft_mixture_capped" -> ((t, a) =>
-        Packing.mixtureWeightsCapped(t, a.headOption.getOrElse(0.5),
-          a.lift(1).map(_.toLong).getOrElse(100000L),
-          a.lift(2).getOrElse(2.0))),
+      "graft_edit_pairs" -> { a =>
+        val t = a.rel(0)
+        Dedup.editNearDupPairs(t, Dedup.exactJaccardPairs(Dedup.postingIndex(t), a.num(1, 0.2)),
+          simFloor = a.num(0, 0.8), maxLev = a.int(2, 128))
+      },
+      "graft_corpus_card" -> (a => Curation.corpusCard(a.rel(0))),
+      "graft_mixture_weights" -> (a =>
+        Packing.mixtureWeights(a.rel(0), a.num(0, 0.5), a.long(1, 100000L))),
+      "graft_mixture_capped" -> (a => Packing.mixtureWeightsCapped(a.rel(0), a.num(0, 0.5),
+        a.long(1, 100000L), a.num(2, 2.0))),
       // over any (id, cell, score) relation — cells from labels, sources,
       // or a quantizer registered upstream
-      "graft_diverse_topk" -> ((t, a) =>
-        Selection.diverseTopK(t, a.headOption.map(_.toInt).getOrElse(100))),
-      "graft_containment" -> ((t, a) =>
-        Dedup.containmentPairs(Dedup.postingIndex(t),
-          a.headOption.getOrElse(0.8))),
+      "graft_diverse_topk" -> (a => Selection.diverseTopK(a.rel(0), a.int(0, 100))),
+      "graft_containment" -> (a =>
+        Dedup.containmentPairs(Dedup.postingIndex(a.rel(0)), a.num(0, 0.8))),
       // winnowed-fingerprint near-dup pairs; args (k, w, minShared, dfCap)
-      "graft_winnow_pairs" -> ((t, a) =>
-        Dedup.winnowedPairs(t,
-          a.headOption.map(_.toInt).getOrElse(4),
-          a.lift(1).map(_.toInt).getOrElse(4),
-          a.lift(2).map(_.toInt).getOrElse(2),
-          a.lift(3).map(_.toInt).getOrElse(64))),
+      // and an optional gram hash: 'sha2' (oracle-replayable, the
+      // default) or 'xxhash64' (the 100 TB default)
+      "graft_winnow_pairs" -> (a => Dedup.winnowedPairs(a.rel(0),
+        a.int(0, 4), a.int(1, 4), a.int(2, 2), a.int(3, 64), a.strOr(0, "sha2"))),
       // the df-capped winnow fingerprint INDEX itself (doc_id, fp) — the
       // persistable admission artifact: materialize it once (INSERT INTO
       // idx SELECT * FROM graft_winnow_index(history, ...)) and every
       // later graft_winnow_admit(inc, idx, ...) call probes the stored
       // scalars with NO history rescan. args (k, w, dfCap) — note: no
       // minShared (that is an admission-time knob, not an index property)
-      "graft_winnow_index" -> ((t, a) =>
-        Dedup.winnowedIndex(t,
-          a.headOption.map(_.toInt).getOrElse(4),
-          a.lift(1).map(_.toInt).getOrElse(4),
-          a.lift(2).map(_.toInt).getOrElse(64))),
-      "graft_span_stats" -> ((t, a) =>
-        Dedup.spanStats(t, a.headOption.map(_.toInt).getOrElse(8),
-          a.lift(1).getOrElse(0.3))),
-      // default PII battery; the ('name', 'regex') pair spelling lives in
-      // stringTableFunctions under the same name
-      "graft_pattern_audit" -> ((t, _) => TextAnalysis.patternAudit(t)),
+      "graft_winnow_index" -> (a =>
+        Dedup.winnowedIndex(a.rel(0), a.int(0, 4), a.int(1, 4), a.int(2, 64))),
+      "graft_span_stats" -> (a => Dedup.spanStats(a.rel(0), a.int(0, 8), a.num(1, 0.3))),
+      // the default PII battery, or a custom one as ('name', 'regex') pairs
+      "graft_pattern_audit" -> { a =>
+        val t = a.rel(0)
+        if (a.strCount == 0) TextAnalysis.patternAudit(t)
+        else {
+          val ss = a.strings
+          require(ss.length % 2 == 0, "graft_pattern_audit takes ('name', 'regex') string pairs")
+          TextAnalysis.patternAudit(t, ss.grouped(2).map(p => p(0) -> p(1)).toSeq)
+        }
+      },
       // the s10 capstone behind one call: hash-embed -> sqrt(n)-scaled
       // quantizer -> cell-scoped semantic prune; args (dim, tau, cells).
       // Returns the KEPT (doc_id, cell) rows — scalar columns only, so
       // the result composes with every relational construct. The real-
       // encoder path keeps the graft_semdedup('view') escape hatch.
-      "graft_text_semdedup" -> ((t, a) => {
-        import graft.operators.Similarity
-        val dim = a.headOption.map(_.toInt).getOrElse(16)
-        val tau = a.lift(1).getOrElse(0.95)
-        val vecs = Similarity.hashedEmbeddingVec(t, dim).localCheckpoint()
-        Dedup.semDedup(
-          Similarity.quantizedCells(vecs, a.lift(2).map(_.toInt).getOrElse(0)), tau)
+      "graft_text_semdedup" -> { a =>
+        val vecs = Similarity.hashedEmbeddingVec(a.rel(0), a.int(0, 16)).localCheckpoint()
+        Dedup.semDedup(Similarity.quantizedCells(vecs, a.int(2, 0)), a.num(1, 0.95))
           .select(col("vec_id").as("doc_id"), col("cell"))
-      }))
-  }
-
-  /** Two-relation operator entry points: `fn(left_table, right_table[,
-    * num ...])`. These are the operators whose semantics NEED a second
-    * relation — a query/benchmark/index side — and were previously
-    * DataFrame-API-only: BM25 retrieval (corpus, query terms),
-    * decontamination (corpus, benchmark), incremental dedup admission
-    * (increment, persisted digest index). */
-  private val twoTableFunctions: Map[String, (DataFrame, DataFrame, Seq[Double]) => DataFrame] = {
-    import graft.operators.{Curation, Dedup, TextAnalysis}
-    Map(
-      "graft_bm25" -> ((corpus, terms, a) =>
-        TextAnalysis.bm25TopK(corpus, terms, a.headOption.map(_.toInt).getOrElse(10))),
-      "graft_decontaminate" -> ((corpus, bench, a) =>
-        Curation.contamination(corpus, bench, a.headOption.map(_.toInt).getOrElse(3))),
-      "graft_admit" -> ((inc, idx, _) => Dedup.incrementalAdmit(inc, idx)),
+      },
+      // ---- string tuning: the pattern arrives as data ('' unescaped)
+      "graft_redact" -> (a => TextAnalysis.redact(a.rel(0), a.str(0), a.strOr(1, "[redacted]"))),
+      // z-order layout needs COLUMN NAMES (id, dim a, dim b) — the one
+      // operator whose tuning is identifiers, not values
+      "graft_zorder" -> { a =>
+        val t = a.rel(0)
+        require(a.strings.length == 3, "graft_zorder(t, 'id', 'a', 'b'[, rowsPerFile[, buckets]])")
+        Packing.zorderFiles(t, a.str(0), a.str(1), a.str(2), a.long(0, 1024L), a.int(1, 1024))
+      },
+      // ---- two relations: the operators whose semantics NEED a query,
+      // benchmark, index or target side
+      "graft_bm25" -> (a => TextAnalysis.bm25TopK(a.rel(0), a.rel(1), a.int(0, 10))),
+      "graft_decontaminate" -> (a => Curation.contamination(a.rel(0), a.rel(1), a.int(0, 3))),
+      "graft_admit" -> (a => Dedup.incrementalAdmit(a.rel(0), a.rel(1))),
       // winnow-level admission; args (k, w, minShared, dfCap). The second
       // relation dispatches on SHAPE: a (doc_id, fp) relation — the
       // graft_winnow_index artifact, typically a managed table — is
       // probed AS the index (no rebuild job in the probe plan); anything
       // else is the HISTORY corpus and the df-capped index builds in-call
-      // (the round-12 spelling, kept for one-shot use)
-      "graft_winnow_admit" -> ((inc, second, a) => {
+      "graft_winnow_admit" -> { a =>
+        val (inc, second) = (a.rel(0), a.rel(1))
         // shape dispatch must be unambiguous: an fp column NEXT TO a
         // text column means the caller passed a corpus that happens to
         // carry fingerprints — probing those longs as the index would
@@ -595,179 +668,49 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
               "or the raw history corpus, not a corpus with a leftover fp column")
         val idx =
           if (cols.contains("fp")) second
-          else Dedup.winnowedIndex(second,
-            a.headOption.map(_.toInt).getOrElse(4),
-            a.lift(1).map(_.toInt).getOrElse(4),
-            a.lift(3).map(_.toInt).getOrElse(64))
-        Dedup.winnowAdmit(inc, idx,
-          a.headOption.map(_.toInt).getOrElse(4),
-          a.lift(1).map(_.toInt).getOrElse(4),
-          a.lift(2).map(_.toInt).getOrElse(2))
-      }),
-      "graft_contamination_frac" -> ((corpus, bench, a) =>
-        Curation.contaminationScore(corpus, bench, a.headOption.getOrElse(0.2))),
+          else Dedup.winnowedIndex(second, a.int(0, 4), a.int(1, 4), a.int(3, 64))
+        Dedup.winnowAdmit(inc, idx, a.int(0, 4), a.int(1, 4), a.int(2, 2))
+      },
+      "graft_contamination_frac" -> (a =>
+        Curation.contaminationScore(a.rel(0), a.rel(1), a.num(0, 0.2))),
       // DSIR importance selection: the corpus docs whose hashed-unigram
       // distribution best matches the target relation; args (k, buckets)
-      "graft_dsir_select" -> ((corpus, target, a) =>
-        graft.operators.Selection.dsirSelect(corpus, target,
-          a.headOption.map(_.toInt).getOrElse(100),
-          a.lift(1).map(_.toInt).getOrElse(256))),
+      "graft_dsir_select" -> (a =>
+        Selection.dsirSelect(a.rel(0), a.rel(1), a.int(0, 100), a.int(1, 256))),
       // the un-truncated sibling: every corpus doc's importance score —
       // feed a threshold, a weighted sampler, or a mixture solver; args
       // (buckets)
-      "graft_dsir_score" -> ((corpus, target, a) =>
-        graft.operators.Selection.dsirScores(corpus, target,
-          a.headOption.map(_.toInt).getOrElse(256))),
+      "graft_dsir_score" -> (a => Selection.dsirScores(a.rel(0), a.rel(1), a.int(0, 256))),
       // embedding-level decontamination (hashed-embedding cosine >= tau);
       // args: (dim, tau)
-      "graft_semantic_decontam" -> ((corpus, bench, a) =>
-        Curation.semanticContamination(corpus, bench,
-          a.headOption.map(_.toInt).getOrElse(16), a.lift(1).getOrElse(0.95))),
+      "graft_semantic_decontam" -> (a => Curation.semanticContamination(a.rel(0), a.rel(1),
+        a.int(0, 16), a.num(1, 0.95))),
       // dataset-version drift: per doc_id added/removed/changed/unchanged
-      "graft_corpus_diff" -> ((oldC, newC, _) => Curation.corpusDiff(oldC, newC)),
-      // apply a LEARNED merge table (rank, a, b) to a DIFFERENT corpus —
-      // tokenizer trained on A encodes B. The one-table spelling (in
-      // tableFunctions) retrains on its own input; this one makes the
-      // trained artifact portable from pure SQL. The merge relation is a
-      // bounded k-row artifact, so the ordered collect is the sanctioned
-      // seed-collect shape.
-      "graft_bpe_encode" -> ((corpus, merges, _) => {
-        // the collect is sanctioned ONLY because merge tables are k-row
-        // artifacts — bound it so a corpus-sized relation fails loudly
-        // instead of OOMing the driver
-        val cap = 65536
-        val rows = merges.orderBy(col("rank")).limit(cap + 1).collect()
-        if (rows.length > cap)
-          throw SqlError.invalid(
-            s"graft_bpe_encode merge relation exceeds $cap rows — " +
-              "pass the trained (rank, a, b) merge table, not a corpus")
-        TextAnalysis.bpeEncode(corpus,
-          rows.map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq)
-      }),
-      // the token-stream sibling: a trained (rank, a, b) merge table
-      // tokenizes a DIFFERENT corpus (same bounded-artifact collect
-      // discipline and cap as graft_bpe_encode)
-      "graft_bpe_tokens" -> ((corpus, merges, _) => {
-        val cap = 65536
-        val rows = merges.orderBy(col("rank")).limit(cap + 1).collect()
-        if (rows.length > cap)
-          throw SqlError.invalid(
-            s"graft_bpe_tokens merge relation exceeds $cap rows — " +
-              "pass the trained (rank, a, b) merge table, not a corpus")
-        TextAnalysis.bpeTokens(corpus,
-          rows.map(r => (r.getAs[String]("a"), r.getAs[String]("b"))).toSeq)
-      }),
-      // FOREIGN-corpus id stream: graft_bpe_ids(corpusB, trainCorpusA
-      // [, k]) — train k merges on A (capped-census driver trainer),
-      // induce A's vocabulary, tokenize B, and map out-of-vocabulary
-      // tokens (characters outside A's alphabet) to the explicit UNK id
-      // = |vocab|. The one-table spelling (tableFunctions) trains on its
-      // own input, where every token is in-vocab by construction; this
-      // one is the deployment shape — a FROZEN tokenizer meeting new
-      // data keeps the stream total instead of silently dropping tokens.
-      "graft_bpe_ids" -> ((corpus, trainCorpus, a) => {
-        val k = a.headOption.map(_.toInt).getOrElse(8)
-        val tok = TextAnalysis.bpeTrainTokenizer(trainCorpus, k)
-        TextAnalysis.bpeTokenIdsAgainst(corpus, trainCorpus, tok.merges, tok.alphabet)
-      }),
-      // the packed tape under a FROZEN tokenizer:
-      // graft_pack_ids(corpusB, trainCorpusA[, budget[, merges]]) —
-      // ids (and UNK = |vocab|) from A, tape layout from B's own counts
-      "graft_pack_ids" -> ((corpus, trainCorpus, a) => {
-        val budget = a.headOption.map(_.toInt).getOrElse(128)
-        val k = a.lift(1).map(_.toInt).getOrElse(8)
-        val tok = TextAnalysis.bpeTrainTokenizer(trainCorpus, k)
-        graft.operators.Packing.packTokenIdsAgainst(corpus, trainCorpus,
-          tok.merges, budget, tok.alphabet)
-      }))
-  }
-
-  /** Operators whose tuning parameters are STRINGS, entered as trailing
-    * quoted literals: `fn(table, 'str'[, 'str' ...][, num ...])`. The
-    * tokenizer unescapes `''` per PG rules, so patterns containing
-    * quotes arrive as plain data. */
-  private val stringTableFunctions: Map[String, (DataFrame, Seq[String], Seq[Double]) => DataFrame] =
-    Map(
-      "graft_redact" -> ((t, ss, _) =>
-        graft.operators.TextAnalysis.redact(t, ss.head, ss.lift(1).getOrElse("[redacted]"))),
-      // winnowed near-dup pairs with an explicit gram hash: 'sha2'
-      // (oracle-replayable) or 'xxhash64' (the 100 TB default); numeric
-      // args as in the plain spelling (k, w, minShared, dfCap)
-      "graft_winnow_pairs" -> ((t, ss, a) =>
-        graft.operators.Dedup.winnowedPairs(t,
-          a.headOption.map(_.toInt).getOrElse(4),
-          a.lift(1).map(_.toInt).getOrElse(4),
-          a.lift(2).map(_.toInt).getOrElse(2),
-          a.lift(3).map(_.toInt).getOrElse(64),
-          ss.headOption.getOrElse("sha2"))),
-      // custom battery as ('name', 'regex') pairs; no strings → the
-      // default-battery entry in tableFunctions handles the call
-      "graft_pattern_audit" -> ((t, ss, _) => {
-        require(ss.nonEmpty && ss.length % 2 == 0,
-          "graft_pattern_audit takes ('name', 'regex') string pairs")
-        graft.operators.TextAnalysis.patternAudit(t,
-          ss.grouped(2).map(p => p(0) -> p(1)).toSeq)
-      }),
-      // z-order layout needs COLUMN NAMES (id, dim a, dim b) — the one
-      // operator whose tuning is identifiers, not values
-      "graft_zorder" -> ((t, ss, a) => {
-        require(ss.length == 3,
-          "graft_zorder(t, 'id', 'a', 'b'[, rowsPerFile[, buckets]])")
-        graft.operators.Packing.zorderFiles(t, ss(0), ss(1), ss(2),
-          a.headOption.map(_.toLong).getOrElse(1024L),
-          a.lift(1).map(_.toInt).getOrElse(1024))
-      }))
-
-  /** Registered-relation ESCAPE HATCH: operators whose input needs an
-    * embedding ARRAY column, which managed tables (restricted to the
-    * reference's 8 scalar types — descriptor parity) can never host.
-    * `fn('view_name'[, num ...])` resolves a SESSION TEMP VIEW by name,
-    * so a user registers an embedding-typed DataFrame once and reaches
-    * SemDeDup / k-means from pure SQL with the exact semantics of the
-    * DataFrame API. Seed/quantizer setup mirrors the s06/d10 bindings
-    * (deterministic, bounded k-row driver collect). */
-  private val viewFunctions: Map[String, (DataFrame, Seq[Double]) => DataFrame] = {
-    import graft.operators.{Dedup, Similarity}
-    Map(
-      "graft_semdedup" -> ((rel, a) => {
-        val tau = a.headOption.getOrElse(0.8)
-        val cells = a.lift(1).map(_.toInt).getOrElse(16)
+      "graft_corpus_diff" -> (a => Curation.corpusDiff(a.rel(0), a.rel(1))),
+      // ---- a session temp view named by a string: operators whose input
+      // needs an embedding ARRAY column, which managed tables (restricted
+      // to the reference's 8 scalar types) can never host. A user
+      // registers an embedding-typed DataFrame once and reaches SemDeDup /
+      // k-means from pure SQL with the DataFrame API's exact semantics.
+      "graft_semdedup" -> { a =>
+        val rel = a.view(0)
         Dedup.semDedup(
-          Similarity.assignCells(rel, Similarity.trainQuantizer(rel, cells)), tau)
-      }),
-      "graft_kmeans" -> ((rel, a) => {
-        val k = a.headOption.map(_.toInt).getOrElse(8)
-        val iters = a.lift(1).map(_.toInt).getOrElse(2)
-        val seeds = rel.orderBy(col("vec_id")).limit(k)
-          .select(col("embedding").cast("array<double>"))
-          .collect().map(_.getSeq[Double](0).toArray)
-        Similarity.lloydAssign(rel, seeds, iters)
-      }),
+          Similarity.assignCells(rel, Similarity.trainQuantizer(rel, a.int(1, 16))), a.num(0, 0.8))
+      },
+      "graft_kmeans" -> { a =>
+        val rel = a.view(0)
+        Similarity.lloydAssign(rel, seeds(rel, a.int(0, 8)), a.int(1, 2))
+      },
       // the s10/m06 gate quantizer from SQL: sha-fold seeded cells
       // (deterministic, oracle-replayable — see Similarity.seededCells)
-      "graft_seeded_cells" -> ((rel, a) =>
-        Similarity.seededCells(rel, a.headOption.map(_.toInt).getOrElse(0))),
+      "graft_seeded_cells" -> (a => Similarity.seededCells(a.view(0), a.int(0, 0))),
       // seeded SemDeDup: the fully deterministic keep/drop spelling
-      "graft_semdedup_seeded" -> ((rel, a) => {
-        val tau = a.headOption.getOrElse(0.8)
-        val cells = a.lift(1).map(_.toInt).getOrElse(0)
-        Dedup.semDedup(Similarity.seededCells(rel, cells), tau)
-      }))
-  }
-
-  /** TWO-view escape hatch — embedding-typed operators that need a second
-    * relation: `graft_embed_admit('inc_view', 'hist_view'[, tau[, k]])`
-    * admits the increment view against the history view's cell index.
-    * Centroids derive from the first k history vectors (bounded k·dim
-    * collect, the s06/s09 convention), so the call is deterministic. */
-  private val viewPairFunctions: Map[String, (DataFrame, DataFrame, Seq[Double]) => DataFrame] =
-    Map(
+      "graft_semdedup_seeded" -> (a =>
+        Dedup.semDedup(Similarity.seededCells(a.view(0), a.int(1, 0)), a.num(0, 0.8))),
       // k-NN label propagation: both views are (vec_id, embedding[, label])
       // — the labeled side needs `label`, the query side is renamed here
-      "graft_knn_label" -> ((labeled, queries, a) =>
-        graft.operators.Similarity.knnLabel(labeled,
-          queries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-          a.headOption.map(_.toInt).getOrElse(5))),
+      "graft_knn_label" -> (a =>
+        Similarity.knnLabel(a.view(0), asQueries(a.view(1)), a.int(0, 5))),
       // product-quantization ANN: both views are (vec_id, embedding);
       // the quantizer trains on the base view (bounded deterministic
       // sample), codes scan narrow, ADC tables broadcast with the
@@ -776,457 +719,126 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       // query_id is a self-pair); pass 0 when the two views use
       // INDEPENDENT id spaces, or an id-sharing true neighbor is
       // silently dropped
-      "graft_pq_topk" -> ((pqBase, pqQueries, a) => {
-        import graft.operators.Similarity
-        Similarity.pqTopK(pqBase,
-          pqQueries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-          Similarity.pqTrain(pqBase,
-            a.lift(1).map(_.toInt).getOrElse(16), a.lift(2).map(_.toInt).getOrElse(64)),
-          a.headOption.map(_.toInt).getOrElse(10),
-          excludeSelf = a.lift(3).forall(_ != 0.0))
-      }),
+      "graft_pq_topk" -> { a =>
+        val base = a.view(0)
+        Similarity.pqTopK(base, asQueries(a.view(1)),
+          Similarity.pqTrain(base, a.int(1, 16), a.int(2, 64)), a.int(0, 10),
+          excludeSelf = a.num(3, 1.0) != 0.0)
+      },
       // two-stage PQ: ADC shortlist -> exact cosine re-rank of the
       // shortlist only. args: (k, shortlist, m, k_per_subspace,
       // excludeSelf) — see graft_pq_topk for the excludeSelf contract
-      "graft_pq_rerank" -> ((pqBase, pqQueries, a) => {
-        import graft.operators.Similarity
-        Similarity.pqTopKReranked(pqBase,
-          pqQueries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-          Similarity.pqTrain(pqBase,
-            a.lift(2).map(_.toInt).getOrElse(16), a.lift(3).map(_.toInt).getOrElse(64)),
-          a.headOption.map(_.toInt).getOrElse(10),
-          a.lift(1).map(_.toInt).getOrElse(0),
-          excludeSelf = a.lift(4).forall(_ != 0.0))
-      }),
+      "graft_pq_rerank" -> { a =>
+        val base = a.view(0)
+        Similarity.pqTopKReranked(base, asQueries(a.view(1)),
+          Similarity.pqTrain(base, a.int(2, 16), a.int(3, 64)), a.int(0, 10), a.int(1, 0),
+          excludeSelf = a.num(4, 1.0) != 0.0)
+      },
       // IVF-ADC: coarse cells + PQ over residuals, probed per query.
       // args: (k, nprobe, cells, m, k_per_subspace, excludeSelf) — see
       // graft_pq_topk for the excludeSelf contract
-      "graft_ivfpq_topk" -> ((pqBase, pqQueries, a) => {
-        import graft.operators.Similarity
-        val (km, pq) = Similarity.ivfPqTrain(pqBase,
-          a.lift(2).map(_.toInt).getOrElse(16),
-          a.lift(3).map(_.toInt).getOrElse(16),
-          a.lift(4).map(_.toInt).getOrElse(64))
-        Similarity.ivfPqTopK(pqBase,
-          pqQueries.select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-          km, pq,
-          a.headOption.map(_.toInt).getOrElse(10),
-          a.lift(1).map(_.toInt).getOrElse(4),
-          excludeSelf = a.lift(5).forall(_ != 0.0))
-      }),
-      "graft_embed_admit" -> ((inc, hist, a) => {
-        val tau = a.headOption.getOrElse(0.9)
-        val k = a.lift(1).map(_.toInt).getOrElse(8)
-        val seeds = hist.orderBy(col("vec_id")).limit(k)
-          .select(col("embedding").cast("array<double>"))
-          .collect().map(_.getSeq[Double](0).toArray)
-        graft.operators.Similarity.incrementalEmbedAdmit(
-          inc, graft.operators.Similarity.cellIndex(hist, seeds), seeds, tau)
-      }))
-
-  /** PERSISTED-ARTIFACT deployment spellings: both leading args are
-    * STRING literals — one names a session temp view (the embedding-typed
-    * escape hatch, viewFunctions' convention), the other a filesystem
-    * path holding the index artifact set. These close the deployment gap
-    * the view-pair ANN TVFs leave open (those retrain in-call):
-    * `graft_ivfpq_build` trains + encodes + persists ONCE, and every
-    * later `graft_ivfpq_query` — any session, any statement — answers
-    * from the stored codes/centroid/PQ artifacts with no training and no
-    * base-corpus access. */
-  private val stringPairFunctions: Map[String, (String, String, Seq[Double]) => DataFrame] =
-    Map(
+      "graft_ivfpq_topk" -> { a =>
+        val base = a.view(0)
+        val (km, pq) = Similarity.ivfPqTrain(base, a.int(2, 16), a.int(3, 16), a.int(4, 64))
+        Similarity.ivfPqTopK(base, asQueries(a.view(1)), km, pq, a.int(0, 10), a.int(1, 4),
+          excludeSelf = a.num(5, 1.0) != 0.0)
+      },
+      // graft_embed_admit('inc_view', 'hist_view'[, tau[, k]]) admits the
+      // increment against the history view's cell index; centroids are
+      // the first k history vectors, so the call is deterministic
+      "graft_embed_admit" -> { a =>
+        val (inc, hist) = (a.view(0), a.view(1))
+        val s = seeds(hist, a.int(1, 8))
+        Similarity.incrementalEmbedAdmit(inc, Similarity.cellIndex(hist, s), s, a.num(0, 0.9))
+      },
+      // ---- PERSISTED artifacts: one string names a session view, the
+      // other a filesystem path holding the index artifact set. These
+      // close the deployment gap the view-pair ANN functions leave open
+      // (those retrain in-call): graft_ivfpq_build trains + encodes +
+      // persists ONCE, and every later graft_ivfpq_query — any session,
+      // any statement — answers from the stored artifacts with no
+      // training and no base-corpus access.
       // graft_ivfpq_build('base_view', 'path'[, cells[, m[, k_per_subspace]]])
-      // -> one-row build report (n_vectors, cells, m, k_per_subspace);
-      // the artifact write is EAGER (an index build is a statement-level
-      // side effect, like INSERT)
-      "graft_ivfpq_build" -> ((viewName, path, a) =>
-        graft.operators.Similarity.writeIvfPqIndex(spark.table(viewName), path,
-          a.headOption.map(_.toInt).getOrElse(16),
-          a.lift(1).map(_.toInt).getOrElse(16),
-          a.lift(2).map(_.toInt).getOrElse(64))),
+      // -> one-row build report; the artifact write is EAGER (an index
+      // build is a statement-level side effect, like INSERT)
+      "graft_ivfpq_build" -> (a => Similarity.writeIvfPqIndex(a.view(0), a.str(1),
+        a.int(0, 16), a.int(1, 16), a.int(2, 64))),
       // graft_ivfpq_query('path', 'queries_view'[, k[, nprobe[, excludeSelf]]])
       // -> (query_id, vec_id, dist, rank); probed cells become a STATIC
-      // partition filter on the codes scan (plan-locked). excludeSelf
-      // defaults 1 — the corpus-ANN convention (see graft_pq_topk)
-      "graft_ivfpq_query" -> ((path, queriesView, a) =>
-        graft.operators.Similarity.ivfPqQueryIndex(
-          spark.table(queriesView)
-            .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-          path,
-          a.headOption.map(_.toInt).getOrElse(10),
-          a.lift(1).map(_.toInt).getOrElse(4),
-          excludeSelf = a.lift(2).forall(_ != 0.0))),
+      // partition filter on the codes scan (plan-locked)
+      "graft_ivfpq_query" -> (a => Similarity.ivfPqQueryIndex(asQueries(a.view(1)), a.str(0),
+        a.int(0, 10), a.int(1, 4), excludeSelf = a.num(2, 1.0) != 0.0)),
       // graft_ivfpq_append('increment_view', 'path') -> (n_appended,
-      // n_total): index MAINTENANCE — encode the increment with the
-      // STORED centroids/PQ (no retraining) and append to the
-      // cell-partitioned code files; admission composes upstream
-      // (graft_embed_admit)
-      "graft_ivfpq_append" -> ((viewName, path, _) =>
-        graft.operators.Similarity.appendIvfPqIndex(spark.table(viewName), path)),
-      // the admission family's artifact flow (the view-pair
-      // graft_embed_admit rebuilds the cell index from the history view
-      // per call — these persist it once):
+      // n_total): encode the increment with the STORED centroids/PQ (no
+      // retraining) and append to the cell-partitioned code files
+      "graft_ivfpq_append" -> (a => Similarity.appendIvfPqIndex(a.view(0), a.str(1))),
+      // the admission family's artifact flow (graft_embed_admit rebuilds
+      // the cell index per call — these persist it once):
       // graft_embed_build('hist_view', 'path'[, k]) -> (n_vectors, cells)
-      "graft_embed_build" -> ((viewName, path, a) =>
-        graft.operators.Similarity.writeEmbedIndex(spark.table(viewName), path,
-          a.headOption.map(_.toInt).getOrElse(8))),
+      "graft_embed_build" -> (a => Similarity.writeEmbedIndex(a.view(0), a.str(1), a.int(0, 8))),
       // graft_embed_admit_index('path', 'inc_view'[, tau]) — probes only
       // the increment's cells' files, never the history corpus
-      "graft_embed_admit_index" -> ((path, incView, a) =>
-        graft.operators.Similarity.embedAdmitFromIndex(spark.table(incView), path,
-          a.headOption.getOrElse(0.9))),
-      // graft_embed_admit_append('path', 'inc_view'[, tau]) — the full
-      // ingest loop: admit AND write the admitted vectors back into the
-      // stored cell index, so the next batch's clones of these
-      // admissions reject with no rebuild (single-writer maintenance,
-      // the graft_ivfpq_append posture)
-      "graft_embed_admit_append" -> ((path, incView, a) =>
-        graft.operators.Similarity.embedAdmitAppend(spark.table(incView), path,
-          a.headOption.getOrElse(0.9))))
-
-  /** Single-PATH maintenance functions — the one string literal is a
-    * filesystem path to a persisted artifact set, not a relation:
-    * `graft_embed_compact('path')` compacts the admission index's
-    * `cells/` to one file per cell (each admit-append batch lands one
-    * file per touched cell; probes and reports pay footer enumeration
-    * linear in the append count — the AppendScale 100×-files leg).
-    * Compaction is SELECTIVE (r17): only fragmented cells are
-    * rewritten, single-file cells byte-carry into the new generation,
-    * and an unfragmented index no-ops — steady-cadence maintenance
-    * cost follows the fragmented-cell volume, not the corpus. One
-    * prior generation is retained: maintenance cadence must exceed
-    * query lifetime (compactCellDir's retention contract). */
-  private val pathFunctions: Map[String, (String, Seq[Double]) => DataFrame] =
-    Map(
-      "graft_embed_compact" -> ((path, _) =>
-        graft.operators.Similarity.compactEmbedIndex(spark, path)),
-      // the codes-side twin: graft_ivfpq_append fragments codes/ the
-      // same one-file-per-append-per-cell way
-      "graft_ivfpq_compact" -> ((path, _) =>
-        graft.operators.Similarity.compactIvfPqIndex(spark, path)),
+      "graft_embed_admit_index" -> (a =>
+        Similarity.embedAdmitFromIndex(a.view(1), a.str(0), a.num(0, 0.9))),
+      // graft_embed_admit_append('path', 'inc_view'[, tau]) — admit AND
+      // write the admitted vectors back into the stored cell index, so
+      // the next batch's clones reject with no rebuild (single-writer
+      // maintenance, the graft_ivfpq_append posture)
+      "graft_embed_admit_append" -> (a =>
+        Similarity.embedAdmitAppend(a.view(1), a.str(0), a.num(0, 0.9))),
+      // ---- one path: maintenance of a persisted artifact set.
+      // graft_embed_compact('path') compacts the admission index's cells/
+      // to one file per cell (each admit-append lands one file per
+      // touched cell). Compaction is SELECTIVE: only fragmented cells are
+      // rewritten, single-file cells byte-carry into the new generation,
+      // and an unfragmented index no-ops. One prior generation is
+      // retained: maintenance cadence must exceed query lifetime
+      "graft_embed_compact" -> (a => Similarity.compactEmbedIndex(spark, a.str(0))),
+      // the codes-side twin: graft_ivfpq_append fragments codes/ the same way
+      "graft_ivfpq_compact" -> (a => Similarity.compactIvfPqIndex(spark, a.str(0))),
       // stale-lock recovery: a crashed maintainer's stamped `_lock` is
       // removed by an EXPLICIT operator decision — returns (unlocked,
       // holder) so the takeover is audited, never a silent timeout
-      "graft_maintenance_unlock" -> ((path, _) =>
-        graft.operators.Similarity.maintenanceUnlock(spark, path)))
-
-  /** Table functions over the table IDENTITY rather than its current
-    * snapshot — the time-travel reads: `graft_at_version(t, v)` is the
-    * table as of snapshot v; `graft_at_time(t, millis)` resolves the
-    * newest version published ≤ millis (the reference's MVCC read rule,
-    * src/tablet/memory.rs:73-81). */
-  private val snapshotFunctions: Map[String, ((String, String, String), Seq[Double]) => DataFrame] =
-    Map(
-      "graft_at_version" -> { case ((db, schema, table), a) =>
-        readTableAt(db, schema, table,
-          a.headOption.map(_.toLong).getOrElse(catalog.currentVersion(db, schema, table)))
+      "graft_maintenance_unlock" -> (a => Similarity.maintenanceUnlock(spark, a.str(0))),
+      // ---- the table IDENTITY rather than its current snapshot: the
+      // time-travel reads. graft_at_version(t, v) is the table as of
+      // snapshot v; graft_at_time(t, millis) the newest version published
+      // <= millis (the reference's MVCC read rule,
+      // src/tablet/memory.rs:73-81)
+      "graft_at_version" -> { a =>
+        val (d, s, t) = a.table(0)
+        readTableAt(d, s, t, a.long(0, catalog.currentVersion(d, s, t)))
       },
-      "graft_at_time" -> { case ((db, schema, table), a) =>
-        val millis = a.headOption.map(_.toLong).getOrElse(System.currentTimeMillis())
-        readTableAt(db, schema, table, catalog.versionAsOf(db, schema, table, millis))
+      "graft_at_time" -> { a =>
+        val (d, s, t) = a.table(0)
+        readTableAt(d, s, t, catalog.versionAsOf(d, s, t, a.long(0, System.currentTimeMillis())))
       },
-      "graft_changes" -> { case ((db, schema, table), a) =>
-        val from = a.headOption.map(_.toLong).getOrElse(0L)
-        val to = a.lift(1).map(_.toLong)
-          .getOrElse(catalog.currentVersion(db, schema, table))
-        readTableChanges(db, schema, table, from, to)
+      "graft_changes" -> { a =>
+        val (d, s, t) = a.table(0)
+        readTableChanges(d, s, t, a.long(0, 0L), a.long(1, catalog.currentVersion(d, s, t)))
       },
-      "graft_versions" -> { case ((db, schema, table), _) =>
-        import spark.implicits._
-        catalog.versionHistory(db, schema, table)
-          .toDF("version", "publish_millis", "n_parts")
+      "graft_versions" -> { a =>
+        val (d, s, t) = a.table(0)
+        catalog.versionHistory(d, s, t).toDF("version", "publish_millis", "n_parts")
       },
       // TABLE maintenance from pure SQL — the managed-table twins of the
-      // index TVFs (graft_ivfpq_compact/graft_embed_compact): the side
-      // effect runs EAGERLY at statement resolution, the statement-level
-      // convention of every maintenance TVF (graft_ivfpq_build's doc).
-      // graft_table_compact(t[, target_file_bytes]) merges the one-file-
-      // per-INSERT parts into ~target-size files (PK-clustered when a
-      // primary key exists — see compactTable) and publishes one new
-      // version; returns (files_before, files_after).
-      "graft_table_compact" -> { case ((db, schema, table), a) =>
-        import spark.implicits._
-        val (before, after) = compactTable(db, schema, table,
-          a.headOption.map(_.toLong).getOrElse(128L << 20))
-        Seq((before, after)).toDF("files_before", "files_after")
+      // index functions: the side effect runs EAGERLY at statement
+      // resolution. graft_table_compact(t[, target_file_bytes]) merges
+      // the one-file-per-INSERT parts into ~target-size files
+      // (PK-clustered, see compactTable) and publishes one new version;
+      // returns (files_before, files_after)
+      "graft_table_compact" -> { a =>
+        val (d, s, t) = a.table(0)
+        Seq(compactTable(d, s, t, a.long(0, 128L << 20))).toDF("files_before", "files_after")
       },
       // graft_table_vacuum(t[, retention_ms]) reclaims parts superseded
-      // longer than the retention window (default keeps in-flight
-      // readers safe; 0 forces immediate reclamation) — returns the
-      // reclaimed-file count. Expired snapshots then fail LOUDLY as
-      // vacuumed (never silently empty).
-      "graft_table_vacuum" -> { case ((db, schema, table), a) =>
-        import spark.implicits._
-        val n = vacuumTable(db, schema, table,
-          a.headOption.map(_.toLong).getOrElse(SqlEngine.defaultVacuumRetentionMs))
-        Seq(n).toDF("reclaimed")
+      // longer than the retention window (0 forces immediate
+      // reclamation); returns the reclaimed-file count. Expired snapshots
+      // then fail LOUDLY as vacuumed (never silently empty)
+      "graft_table_vacuum" -> { a =>
+        val (d, s, t) = a.table(0)
+        Seq(vacuumTable(d, s, t, a.long(0, SqlEngine.defaultVacuumRetentionMs))).toDF("reclaimed")
       })
-
-  /** One referenced table resolved to the temp view that hosts it. */
-  private[engine] final case class TableRef(db: String, schema: String, table: String,
-      view: String, tvf: Boolean = false)
-
-  /** View name hosting a cross-database reference (`db.schema.t` with
-    * `db != ctx.database`). Part LENGTHS are encoded so the name is
-    * injective — identifiers may contain '_', and a plain underscore join
-    * would let two distinct (db, schema, table) triples collide on one
-    * view and silently serve each other's data. */
-  private def xdbView(db: String, schema: String, table: String): String =
-    s"graft_xdb_${db.length}_${schema.length}_${db}_${schema}_$table"
-
-  /** Resolves the statement's table references — the reference collects
-    * them from the AST (`visit_relations`, src/sql/traits.rs:68-78) and
-    * fetches descriptors for JUST those (src/sql/mod.rs:60-75); we walk the
-    * token stream. PG queries may qualify tables (`public.t`,
-    * `db.public.t`); Spark temp views are single-part, so dotted runs that
-    * resolve in OUR catalog (or to `information_schema.*`) collapse to
-    * their hosting view name — same-database names to the bare table,
-    * cross-database names to a db-prefixed view — and anything that
-    * doesn't resolve (e.g. alias.column) passes through. Bare identifiers
-    * that name a table of the connected database are collected for
-    * registration (last sorted schema wins, matching the previous
-    * register-all ordering). Returns (rewritten SQL, referenced tables,
-    * information_schema referenced?). */
-  private[engine] def resolveTables(
-      sql: String, probeKeywords: Boolean = false): (String, Seq[TableRef], Boolean) = {
-    val spans = SqlParser.tokenizeWithSpans(sql)
-    def word(i: Int): Option[String] = spans.lift(i).map(_.tok).collect { case Word(w) => w }
-    def dot(i: Int): Boolean = spans.lift(i).map(_.tok).contains(Sym("."))
-    val refs = scala.collection.mutable.LinkedHashMap.empty[String, TableRef]
-    var infoSchema = false
-    lazy val schemas: Seq[String] =
-      if (catalog.databaseExists(ctx.database)) catalog.listSchemas(ctx.database) else Seq.empty
-    def addRef(db: String, schema: String, table: String, view: String): Unit =
-      refs.getOrElseUpdate(view, TableRef(db, schema, table, view))
-    // per-statement memo: repeated identifiers cost one catalog probe
-    val hostingSchema = scala.collection.mutable.HashMap.empty[String, Option[String]]
-    def hostOf(name: String): Option[String] =
-      hostingSchema.getOrElseUpdate(name, {
-        // last sorted schema wins, matching the previous register-all order
-        val hosting = schemas.filter(s => catalog.tableExists(ctx.database, s, name))
-        if (hosting.isEmpty) None else Some(hosting.max)
-      })
-    // `fn(input[, input][, 'str' ...][, num ...])` at position i
-    // (spans(i)=fn, spans(i+1)="(") becomes a temp view holding the
-    // operator plan; returns (view, splice end, next token index). An
-    // INPUT is a dotted table chain resolved against the snapshot, or —
-    // one level of composition, recursing through this same splice — a
-    // nested TVF call (`graft_dedup_exact(graft_heuristic_filter(t))`),
-    // except for snapshot functions, whose semantics bind to the table
-    // IDENTITY and need a real table. View functions instead take a
-    // quoted SESSION TEMP VIEW name (the embedding-typed escape hatch).
-    // A shape mismatch returns None and the call passes through to
-    // Spark, which reports the unresolved function — never a silent
-    // rewrite.
-    def spliceTableFunction(i: Int, fn: String): Option[(String, Int, Int)] = {
-      def strTok(ix: Int): Option[String] =
-        spans.lift(ix).map(_.tok).collect { case Str(s) => s }
-      def isTvf(w: String): Boolean =
-        tableFunctions.contains(w) || stringTableFunctions.contains(w) ||
-          snapshotFunctions.contains(w) || twoTableFunctions.contains(w) ||
-          viewFunctions.contains(w) || viewPairFunctions.contains(w) ||
-          stringPairFunctions.contains(w) || pathFunctions.contains(w)
-      var j = i + 2
-      // Tbl = dotted chain; Nested = inner TVF's result view; ViewName =
-      // user temp view named by a string literal (viewFunctions only)
-      sealed trait In
-      final case class Tbl(parts: Vector[String]) extends In
-      final case class Nested(view: String) extends In
-      final case class ViewName(name: String) extends In
-      def parseInput(): Option[In] = word(j) match {
-        case Some(w) if isTvf(w) && spans.lift(j + 1).exists(_.tok == Sym("(")) =>
-          if (snapshotFunctions.contains(fn)) None
-          else spliceTableFunction(j, w).map { case (v, _, nextI) => j = nextI; Nested(v) }
-        case Some(w) =>
-          val parts = Vector.newBuilder[String]
-          parts += w; j += 1
-          while (dot(j) && word(j + 1).isDefined) { parts += word(j + 1).get; j += 2 }
-          Some(Tbl(parts.result()))
-        case None => None
-      }
-      val first: In =
-        if (viewFunctions.contains(fn) || viewPairFunctions.contains(fn) ||
-          stringPairFunctions.contains(fn) || pathFunctions.contains(fn)) strTok(j) match {
-          case Some(v) => j += 1; ViewName(v)
-          case None => return None
-        } else parseInput() match {
-          case Some(in) => in
-          case None => return None
-        }
-      // two-relation functions take a second input before any literal args.
-      // A name in BOTH maps (graft_bpe_encode: train-then-encode vs
-      // apply-a-learned-table) dispatches on the second argument's SHAPE —
-      // a relation selects the two-table form, a numeric literal falls
-      // back to the one-table form's trailing args.
-      var second: Option[In] = None
-      if (twoTableFunctions.contains(fn)) {
-        if (spans.lift(j).exists(_.tok == Sym(","))) {
-          val beforeSecond = j
-          j += 1
-          second = parseInput()
-          if (second.isEmpty) {
-            if (!tableFunctions.contains(fn)) return None
-            j = beforeSecond
-          }
-        } else if (!tableFunctions.contains(fn)) return None
-      } else if (viewPairFunctions.contains(fn) || stringPairFunctions.contains(fn)) {
-        if (spans.lift(j).exists(_.tok == Sym(",")) && strTok(j + 1).isDefined) {
-          second = Some(ViewName(strTok(j + 1).get)); j += 2
-        } else return None
-      }
-      val args = Vector.newBuilder[Double]
-      val strArgs = Vector.newBuilder[String]
-      var bad = false
-      while (!bad && spans.lift(j).exists(_.tok == Sym(","))) {
-        spans.lift(j + 1).map(_.tok) match {
-          case Some(Num(v)) => args += v.toDouble; j += 2
-          case Some(Str(s)) => strArgs += s; j += 2
-          case _ => bad = true
-        }
-      }
-      if (bad || !spans.lift(j).exists(_.tok == Sym(")"))) return None
-      val as = args.result()
-      val ss = strArgs.result()
-      // string args belong ONLY to functions declared to take them; a
-      // name in BOTH maps dispatches on whether strings were given
-      // (graft_pattern_audit: default battery vs custom pairs); a
-      // string-only function with no strings has no default to fall to
-      // (there is no default redaction pattern)
-      if (stringTableFunctions.contains(fn)) {
-        if (ss.isEmpty && !tableFunctions.contains(fn)) return None
-      } else if (ss.nonEmpty) return None
-      def locate(p: Vector[String]): (String, String, String) = p match {
-        case Seq(t) => (ctx.database, hostOf(t).getOrElse("public"), t)
-        case p => resolve(p)
-      }
-      // injective name: EVERY variable-length part is length-prefixed
-      // (identifiers may contain '_' and digits, so un-prefixed parts make
-      // distinct (table1, table2) pairs collide on one view name — and the
-      // second createOrReplaceTempView would silently serve the wrong rows)
-      def enc(p: (String, String, String)): String =
-        s"${p._1.length}_${p._2.length}_${p._3.length}_${p._1}_${p._2}_${p._3}"
-      // args encode by VALUE (IEEE-754 bit pattern in hex, count-prefixed;
-      // strings by SHA-256 of their UTF-8 bytes — fixed-length, identifier-
-      // safe, collisions negligible): a 32-bit hashCode over an unbounded
-      // arg space has collisions, and a collision here silently serves one
-      // call's rows to the other
-      def encStr(s: String): String =
-        java.security.MessageDigest.getInstance("SHA-256")
-          .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .map(b => f"$b%02x").mkString
-      def encIn(in: In): String = in match {
-        case Tbl(p) => enc(locate(p))
-        case Nested(v) => s"n${v.length}_$v"
-        case ViewName(v) if v.matches("[A-Za-z0-9_]+") => s"v${v.length}_$v"
-        // stringPairFunctions take filesystem PATHS — '/', '.', '-' would
-        // otherwise land in the generated temp-view name and break it
-        case ViewName(v) => s"h${encStr(v)}"
-      }
-      def relOf(in: In): DataFrame = in match {
-        case Tbl(p) => val (d, s2, t) = locate(p); readTable(d, s2, t)
-        // user view / inner TVF view: resolved eagerly here, while it is
-        // guaranteed registered (the statement-scoped drop runs later)
-        case Nested(v) => spark.table(v)
-        case ViewName(v) => spark.table(v)
-      }
-      val view = s"graft_tvf_${fn}_${encIn(first)}_" +
-        second.map(p => s"${encIn(p)}_").getOrElse("") +
-        s"a${as.length}_" +
-        as.map(v => java.lang.Long.toHexString(java.lang.Double.doubleToLongBits(v)))
-          .mkString("_") +
-        (if (ss.isEmpty) "" else s"_s${ss.length}_" + ss.map(encStr).mkString("_"))
-      val result = (first, second) match {
-        // raw strings, NOT resolved as relations — the function body
-        // interprets which is the view and which the artifact path
-        case (ViewName(a1), Some(ViewName(a2))) if stringPairFunctions.contains(fn) =>
-          stringPairFunctions(fn)(a1, a2, as)
-        case (_, Some(s2)) if viewPairFunctions.contains(fn) =>
-          viewPairFunctions(fn)(relOf(first), relOf(s2), as)
-        case (_, Some(s2)) => twoTableFunctions(fn)(relOf(first), relOf(s2), as)
-        case (Tbl(p), None) if snapshotFunctions.contains(fn) =>
-          snapshotFunctions(fn)(locate(p), as)
-        case (ViewName(a1), None) if pathFunctions.contains(fn) =>
-          pathFunctions(fn)(a1, as)
-        case (ViewName(_), None) => viewFunctions(fn)(relOf(first), as)
-        case (in, None) if stringTableFunctions.contains(fn) && ss.nonEmpty =>
-          stringTableFunctions(fn)(relOf(in), ss, as)
-        case (in, None) => tableFunctions(fn)(relOf(in), as)
-      }
-      result.createOrReplaceTempView(view)
-      refs.getOrElseUpdate(view, first match {
-        case Tbl(p) =>
-          val (d, s2, t) = locate(p)
-          TableRef(d, s2, t, view, tvf = true)
-        // nested/view inputs have no backing managed table; the ref only
-        // drives the statement-scoped view drop
-        case _ => TableRef(ctx.database, "public", view, view, tvf = true)
-      })
-      Some((view, spans(j).end, j + 1))
-    }
-    val out = new StringBuilder
-    var copied = 0
-    var i = 0
-    while (i < spans.length) {
-      // a word preceded by '.' is the TAIL of a longer dotted chain (e.g.
-      // `spark_catalog.db.schema.t`): never rewrite mid-chain — mangling
-      // `b.c` out of `a.b.c.d` corrupts the outer reference
-      val prevIsDot = i > 0 && spans(i - 1).tok == Sym(".")
-      (word(i), dot(i + 1), word(i + 2)) match {
-        case (Some(a), true, Some(b)) if !prevIsDot =>
-          val threePart = dot(i + 3) && word(i + 4).isDefined
-          lazy val c = word(i + 4).get
-          val resolved: Option[(String, Int)] =
-            if (threePart && a == ctx.database && b == "information_schema" &&
-              infoSchemaTables(c)) {
-              infoSchema = true
-              Some(("graft_information_schema_" + c, spans(i + 4).end))
-            } else if (a == "information_schema" && infoSchemaTables(b)) {
-              infoSchema = true
-              Some(("graft_information_schema_" + b, spans(i + 2).end))
-            } else if (threePart && catalog.databaseExists(a) && catalog.tableExists(a, b, c)) {
-              val view = if (a == ctx.database) c else xdbView(a, b, c)
-              addRef(a, b, c, view)
-              Some((view, spans(i + 4).end))
-            } else if (catalog.databaseExists(ctx.database) && catalog.tableExists(ctx.database, a, b)) {
-              addRef(ctx.database, a, b, b)
-              Some((b, spans(i + 2).end))
-            } else None
-          resolved match {
-            case Some((view, endPos)) =>
-              out.append(sql.substring(copied, spans(i).start)).append(view)
-              copied = endPos
-              i += (if (threePart && endPos == spans(i + 4).end) 5 else 3)
-            case None => i += 1
-          }
-        case (Some(a), _, _) =>
-          // bare identifier: a table reference candidate unless it sits in
-          // a qualified position (x.a — skipped via prevIsDot), is a
-          // function call, or is a plain SQL keyword. A call whose name is
-          // an LLM-operator table function rewrites to its result view.
-          val nextParen = spans.lift(i + 1).exists(_.tok == Sym("("))
-          val tvf =
-            if (!prevIsDot && nextParen &&
-              (tableFunctions.contains(a) || snapshotFunctions.contains(a) ||
-                twoTableFunctions.contains(a) || stringTableFunctions.contains(a) ||
-                viewFunctions.contains(a) || viewPairFunctions.contains(a) ||
-                stringPairFunctions.contains(a) || pathFunctions.contains(a)))
-              spliceTableFunction(i, a)
-            else None
-          tvf match {
-            case Some((view, endPos, nextI)) =>
-              out.append(sql.substring(copied, spans(i).start)).append(view)
-              copied = endPos
-              i = nextI
-            case None =>
-              if (!prevIsDot && !nextParen && (probeKeywords || !SqlEngine.sqlKeywords(a)))
-                hostOf(a).foreach(schema => addRef(ctx.database, schema, a, a))
-              i += 1
-          }
-        case _ => i += 1
-      }
-    }
-    out.append(sql.substring(copied))
-    (out.toString, refs.values.toSeq, infoSchema)
   }
 
   // ---------- maintenance ----------
@@ -1292,80 +904,18 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     }
 
   // ---------- session functions (reference A7) ----------
-  // current_catalog / current_database / current_schema / current_user /
-  // current_role / inet_client_port, values bound to the connection context
-  // (reference: src/sql/postgresql/functions/mod.rs:31-193). Spark's parser
-  // special-cases some of these names, so the engine rewrites them to
-  // graft_-prefixed session UDFs and re-aliases to the PG column name.
 
-  private def registerSessionFunctions(): Unit = {
-    val db = ctx.database
-    val user = ctx.user
-    val port = ctx.port
-    spark.udf.register("graft_current_catalog", () => db)
-    spark.udf.register("graft_current_database", () => db)
-    spark.udf.register("graft_current_schema", () => "public")
-    spark.udf.register("graft_current_user", () => user)
-    spark.udf.register("graft_inet_client_port", () => port)
-  }
-
-  private val sessionFns: Map[String, String] = Map(
-    "current_catalog" -> "graft_current_catalog",
-    "current_database" -> "graft_current_database",
-    "current_schema" -> "graft_current_schema",
-    "current_user" -> "graft_current_user",
-    "current_role" -> "graft_current_user",
-    "session_user" -> "graft_current_user",
-    // bare `user` aliases current_user (reference:
-    // src/sql/postgresql/functions/mod.rs:125)
-    "user" -> "graft_current_user",
-    "inet_client_port" -> "graft_inet_client_port")
-
-  /** Splices replacements into the ORIGINAL text — string escapes,
-    * comments, and whitespace pass through untouched. Session-function
-    * tokens are replaced at ANY expression depth (Spark has same-named
-    * builtins bound to the OS/Spark user, so missing one here silently
-    * returns a WRONG value, not an error); tokens preceded by `AS` or `.`
-    * are alias/qualified positions, not function references, and pass
-    * through. The PG-visible column alias is added only at depth 0 in a
-    * bare select-list position. */
-  private[engine] def rewriteSessionFunctions(sql: String): String = {
-    val spans = SqlParser.tokenizeWithSpans(sql)
-    val out = new StringBuilder
-    var copied = 0
-    var depth = 0
-    var i = 0
-    while (i < spans.length) {
-      val prev = if (i == 0) None else Some(spans(i - 1).tok)
-      spans(i).tok match {
-        case Word(w) if sessionFns.contains(w) &&
-          !prev.contains(Word("as")) && !prev.contains(Sym(".")) =>
-          out.append(sql.substring(copied, spans(i).start))
-          // swallow optional ()
-          var j = i + 1
-          var endPos = spans(i).end
-          if (spans.lift(j).map(_.tok).contains(Sym("(")) &&
-            spans.lift(j + 1).map(_.tok).contains(Sym(")"))) {
-            endPos = spans(j + 1).end
-            j += 2
-          }
-          // alias to the PG-visible name when in a bare select-list position
-          val aliased = depth == 0 && (spans.lift(j).map(_.tok) match {
-            case None | Some(Sym(",")) | Some(Word("from")) => true
-            case _ => false
-          })
-          out.append(sessionFns(w)).append("()")
-          if (aliased) out.append(" as `").append(w).append("`")
-          copied = endPos
-          i = j
-        case Sym("(") => depth += 1; i += 1
-        case Sym(")") => depth = math.max(0, depth - 1); i += 1
-        case _ => i += 1
-      }
-    }
-    out.append(sql.substring(copied))
-    out.toString
-  }
+  /** PG session functions and their values, bound to this engine's
+    * connection (reference: src/sql/postgresql/functions/mod.rs:31-193;
+    * bare `user` aliases current_user at :125). Spark has same-named
+    * builtins bound to the OS/Spark user, so the [[Binder]] replaces each
+    * call, at any expression depth, with a literal. */
+  private val sessionValues: Map[String, Any] = Map(
+    "current_catalog" -> ctx.database, "current_database" -> ctx.database,
+    "current_schema" -> "public",
+    "current_user" -> ctx.user, "current_role" -> ctx.user, "session_user" -> ctx.user,
+    "user" -> ctx.user,
+    "inet_client_port" -> ctx.port)
 
   // ---------- insert path ----------
   // Parity with InsertExec + prefill (reference: src/sql/plan/insert.rs:55-247,
@@ -1391,11 +941,10 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     val (db, schema, table) = resolve(ins.table)
     val desc = catalog.getTable(db, schema, table)
 
-    // source: VALUES/SELECT planned by Spark SQL through the SAME
-    // resolve-register-run path as queries — non-public schemas,
-    // cross-database, information_schema, and keyword-named sources all
-    // behave identically here (a VALUES source registers nothing).
-    val source = planRelational(ins.restSql, identity)
+    // source: VALUES/SELECT planned through the SAME path as queries —
+    // non-public schemas, cross-database, information_schema, table
+    // functions and session functions behave identically here
+    val source = plan(ins.restSql)
 
     val provided: Seq[String] = ins.columns.getOrElse(desc.columns.map(_.name))
     if (provided.distinct.length != provided.length)

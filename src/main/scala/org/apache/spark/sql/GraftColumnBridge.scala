@@ -19,3 +19,19 @@ object GraftColumnBridge {
     * convert statically; no session interaction). */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }
+
+/** The engine's bridge from SQL text to a DataFrame: `spark.sql(text)`
+  * with a rewrite of the unresolved parse tree before analysis. Like
+  * `spark.sql` it parses with the session's parser and builds the
+  * DataFrame with `Dataset.ofRows`, with the session active, so commands
+  * execute and analysis runs eagerly exactly as they do there. Lives in
+  * the spark.sql package only to reach the package-private factory.
+  */
+object GraftPlanBridge {
+  def sql(spark: SparkSession, text: String)(
+      rewrite: catalyst.plans.logical.LogicalPlan => catalyst.plans.logical.LogicalPlan): DataFrame = {
+    val session = classic.ClassicConversions.castToImpl(spark)
+    session.withActive(
+      classic.Dataset.ofRows(session, rewrite(session.sessionState.sqlParser.parsePlan(text))))
+  }
+}

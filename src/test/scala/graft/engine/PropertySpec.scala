@@ -96,27 +96,6 @@ class PropertySpec extends AnyFunSuite {
     check(p, "descriptor json")
   }
 
-  test("tokenizer is stable under re-rendering (session-function rewrite)") {
-    // a rewrite with no session tokens must preserve the token stream
-    val genTok: Gen[String] = Gen.oneOf(
-      genIdent, Gen.choose(0, 99999).map(_.toString),
-      Gen.const("'it''s'"), Gen.const("\"Quoted Id\""),
-      Gen.oneOf("select", "from", "where", "and", "(", ")", ",", "=", "<=", "<>", "||", "*", "."))
-    val p = Prop.forAll(Gen.listOfN(12, genTok)) { toks =>
-      val sql = toks.mkString(" ")
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
-      val eng = new SqlEngine(
-        spark, new Catalog(java.nio.file.Files.createTempDirectory("p-wh").toString),
-        SqlContext("db1", "u"))
-      val once = eng.rewriteSessionFunctions(sql)
-      val twice = eng.rewriteSessionFunctions(once)
-      SqlParser.tokenize(once) == SqlParser.tokenize(sql) &&
-        SqlParser.tokenize(twice) == SqlParser.tokenize(once)
-    }
-    check(p, "tokenizer stability")
-  }
-
   test("statement splitting is comment-blind: interleaved comments never change the token stream") {
     val genStmtTok: Gen[String] = Gen.oneOf(
       genIdent, Gen.choose(0, 9999).map(_.toString),
@@ -133,27 +112,54 @@ class PropertySpec extends AnyFunSuite {
     check(p, "comment-blind splitting")
   }
 
-  test("resolveTables is byte-identity on statements referencing no catalog table") {
-    // the resolver splices the ORIGINAL text around resolutions; with no
-    // resolvable reference it must return the input verbatim — whitespace,
-    // comments, casing, dotted alias chains and all
+  test("queries naming no managed table plan exactly as spark.sql plans them") {
+    // the engine's parse-tree pass must leave every other name to Spark:
+    // on such a statement engine.execute and spark.sql return the same
+    // schema and rows, or both fail with the same exception class
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
     val eng = new SqlEngine(
-      spark, new Catalog(java.nio.file.Files.createTempDirectory("p-resolve").toString),
+      spark, new Catalog(java.nio.file.Files.createTempDirectory("p-plan").toString),
       SqlContext("db1", "u"))
     eng.execute("CREATE DATABASE db1")
-    eng.execute("CREATE TABLE ztable99x (a int PRIMARY KEY)") // 9 chars — never generated
-    val genTok: Gen[String] = Gen.oneOf(
-      genIdent, Gen.choose(0, 99999).map(_.toString),
-      Gen.const("'str; lit'"), Gen.const("-- cmt\n"), Gen.const("/* c */"),
-      Gen.oneOf("select", "from", "where", "join", "on", "(", ")", ",", ".", "=", "*"))
-    val p = Prop.forAll(Gen.listOfN(14, genTok)) { toks =>
-      val sql = toks.mkString(" ")
-      val (rewritten, refs, infoSchema) = eng.resolveTables(sql)
-      rewritten == sql && refs.isEmpty && !infoSchema
+    eng.execute("CREATE TABLE ztable99x (a int PRIMARY KEY)") // never generated
+    spark.sql("SELECT * FROM VALUES (1, 'p', 2.5), (2, 'q', NULL), (4, 'p', 0.5) AS t(a, b, c)")
+      .createOrReplaceTempView("pview")
+    val genCol = Gen.oneOf("a", "b", "c", "nosuchcol")
+    val genLit = Gen.oneOf(Gen.choose(-50, 50).map(_.toString),
+      Gen.oneOf("'x'", "'it''s'", "NULL", "1.5", "true"))
+    val genExpr: Gen[String] = Gen.oneOf(genCol, genLit,
+      for { x <- genCol; op <- Gen.oneOf("+", "*", "-", "||", "=", "<"); y <- Gen.oneOf(genCol, genLit) }
+        yield s"$x $op $y",
+      genCol.map(c => s"upper(cast($c AS string))"), genCol.map(c => s"coalesce($c, 0)"))
+    val genSource = Gen.oneOf("pview", "(SELECT * FROM pview WHERE a > 1) s",
+      "(VALUES (1, 'p', 2.5), (2, 'q', NULL), (3, 'p', 0.5)) AS v(a, b, c)")
+    val genSql: Gen[String] = for {
+      e1 <- genExpr; e2 <- genExpr; src <- genSource
+      sql <- Gen.oneOf(
+        s"SELECT $e1 AS x, $e2 AS y FROM $src",
+        s"SELECT $e1, $e2 FROM $src ORDER BY 1",
+        s"SELECT b, count(*) AS n, sum(a) AS s FROM $src GROUP BY b HAVING count(*) > 0",
+        s"WITH w AS (SELECT * FROM $src) SELECT $e1 AS x FROM w WHERE $e2",
+        s"SELECT $e1 AS x FROM $src WHERE a IN (SELECT a FROM pview WHERE $e2)",
+        s"SELECT ($e1) AS x, EXISTS (SELECT 1 FROM $src) AS e",
+        s"SELECT $e1 FROM FROM $src",
+        s"EXPLAIN SELECT $e1 FROM $src")
+    } yield sql
+    def outcome(run: String => org.apache.spark.sql.DataFrame, sql: String) =
+      // EXPLAIN text carries expression ids, which differ per analysis
+      scala.util.Try { val df = run(sql)
+        (df.schema, df.collect().map(_.toString.replaceAll("#\\d+", "#")).sorted.toSeq) }
+        .toEither.left.map(_.getClass)
+    val p = Prop.forAll(genSql) { sql =>
+      SqlParser.parse(sql).isInstanceOf[SqlParser.Query] ==> {
+        val viaEngine = outcome(eng.execute, sql)
+        val viaSpark = outcome(spark.sql, sql)
+        (viaEngine == viaSpark) :| s"$sql: engine $viaEngine, spark.sql $viaSpark"
+      }
     }
-    check(p, "resolveTables identity")
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(60), p)
+    assert(res.passed, s"plan-level identity: $res")
   }
 
   test("narrowing guard: bigint into int raises exactly when the value can't round-trip") {

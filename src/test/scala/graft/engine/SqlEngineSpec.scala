@@ -633,8 +633,18 @@ class SqlEngineSpec extends AnyFunSuite {
   test("keyword sweep: every resolver keyword round-trips as a table name or fails cleanly") {
     val e = freshEngine()
     e.execute("CREATE DATABASE test1")
+    // the keyword list the text resolver kept (its first pass never
+    // probed these as table names), kept verbatim as the sweep's input
+    val sqlKeywords: Set[String] = Set(
+      "select", "from", "where", "and", "or", "not", "as", "on", "join", "inner", "left",
+      "right", "full", "outer", "cross", "group", "by", "order", "having", "limit", "offset",
+      "union", "all", "distinct", "case", "when", "then", "else", "end", "with", "in",
+      "exists", "between", "like", "ilike", "is", "null", "true", "false", "asc", "desc",
+      "nulls", "first", "last", "cast", "over", "partition", "rows", "range", "unbounded",
+      "preceding", "following", "current", "row", "values", "insert", "into", "explain",
+      "escape", "interval", "using", "semi", "anti")
     val outcomes = scala.collection.mutable.Map.empty[String, String]
-    for (kw <- SqlEngine.sqlKeywords.toSeq.sorted) {
+    for (kw <- sqlKeywords.toSeq.sorted) {
       outcomes(kw) =
         try {
           e.execute(s"CREATE TABLE $kw (id int PRIMARY KEY, v int)")
@@ -672,8 +682,8 @@ class SqlEngineSpec extends AnyFunSuite {
     // turns queryable names into errors must fail loudly
     val roundtrips = outcomes.count(_._2 == "roundtrip")
     assert(outcomes("first") == "roundtrip", s"`first` regressed: ${outcomes("first")}")
-    assert(roundtrips >= SqlEngine.sqlKeywords.size / 2,
-      s"only $roundtrips/${SqlEngine.sqlKeywords.size} keywords round-trip: $outcomes")
+    assert(roundtrips >= sqlKeywords.size / 2,
+      s"only $roundtrips/${sqlKeywords.size} keywords round-trip: $outcomes")
   }
 
   test("concurrent compact+vacuum cycles lose no graveyard entries and never delete live parts") {

@@ -1126,24 +1126,6 @@ class PlanQualitySpec extends AnyFunSuite {
     }
   }
 
-  test("salted join distributes a hot key and matches the plain join") {
-    val events = Tables.load(spark, dir, "events")
-    // manufacture skew: all rows collapsed onto user 0 for half the data
-    val skewed = events.withColumn("user_id",
-      when(col("event_id") % 2 === 0, lit(0L)).otherwise(col("user_id")))
-      .select("user_id", "event_id", "value")
-    val dim = events.select(col("user_id")).distinct()
-      .withColumn("segment", concat(lit("seg_"), col("user_id") % 4))
-    val plain = skewed.join(dim, "user_id")
-    val salted = SkewSalting.saltedJoin(skewed, dim, "user_id", 8)
-    assert(salted.count() == plain.count())
-    assert(salted.agg(round(sum(col("value")), 2)).head().getDouble(0) ==
-      plain.agg(round(sum(col("value")), 2)).head().getDouble(0))
-    // the salted join key includes the salt column
-    val p = salted.queryExecution.explainString(FormattedMode)
-    assert(p.contains("_salt"))
-  }
-
   test("r18 kernelized paths: no interpreted lambda (CodegenFallback HOF) in any hot plan") {
     // The r17/r18 kernels (CodePoints, GramHashes, WindowMins, BandBits,
     // SliceXxBands, AdjacentPairs, NgramJoin, BigramStructs, CountIn,
