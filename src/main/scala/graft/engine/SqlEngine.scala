@@ -144,7 +144,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     scanParts(db, schema, table)(catalog.livePartPaths(db, schema, table))
 
   /** The table's rows in the given part files; no parts is an empty
-    * relation of the table's schema. */
+    * relation of the table's schema. `paths` is read after the
+    * descriptor, so a missing table raises TableNotExists. */
   private def scanParts(db: String, schema: String, table: String)(
       paths: => Seq[String]): DataFrame = {
     val st = catalog.getTable(db, schema, table).toStructType
@@ -388,7 +389,6 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     private var strsRead = 0
 
     def relCount: Int = rels.size
-    def strCount: Int = strs.size
     def rel(i: Int): DataFrame = relDfs.getOrElseUpdate(i, relArg(i) match {
       case UnresolvedAttribute(name) => val (d, s, t) = binder.argTable(name); readTable(d, s, t)
       case f: UnresolvedFunction => binder.tableFunction(lower(f.nameParts.head), f.arguments)
@@ -426,7 +426,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * over the managed table `docs` — composable with every relational
     * construct (joins, CTEs, aliases, nesting) since the call resolves to
     * a plain relation. The reference's only user surface is SQL text
-    * (/root/reference/src/sql/mod.rs:48-156); without these the d/s/t/p
+    * (reference src/sql/mod.rs:48-156); without these the d/s/t/p
     * operators would be unreachable from a SQL prompt. Each binding reads
     * its arguments through [[TvfArgs]]. */
   private val tableFunctions: Map[String, TvfArgs => DataFrame] = {
@@ -618,9 +618,9 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       // the default PII battery, or a custom one as ('name', 'regex') pairs
       "graft_pattern_audit" -> { a =>
         val t = a.rel(0)
-        if (a.strCount == 0) TextAnalysis.patternAudit(t)
+        val ss = a.strings
+        if (ss.isEmpty) TextAnalysis.patternAudit(t)
         else {
-          val ss = a.strings
           require(ss.length % 2 == 0, "graft_pattern_audit takes ('name', 'regex') string pairs")
           TextAnalysis.patternAudit(t, ss.grouped(2).map(p => p(0) -> p(1)).toSeq)
         }
