@@ -214,11 +214,14 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * TableNotExists; other analysis errors (a column typo, a GROUP BY
     * mismatch) propagate raw. */
   private def plan(sql: String): DataFrame =
-    try GraftPlanBridge.sql(spark, sql)(new Binder().bind(_, Set.empty))
+    try GraftPlanBridge.sql(spark, sql)(bind)
     catch {
       case e: AnalysisException if isResolutionFailure(e) =>
         throw SqlError(SqlError.TableNotExists, e.getMessage)
     }
+
+  /** One [[Binder]] pass over an unresolved parse tree, as [[plan]] runs it. */
+  private[engine] def bind(parsed: LogicalPlan): LogicalPlan = new Binder().bind(parsed, Set.empty)
 
   private def isResolutionFailure(e: AnalysisException): Boolean =
     e.getCondition != null && Seq("TABLE_OR_VIEW_NOT_FOUND", "CATALOG_NOT_FOUND",

@@ -31,7 +31,10 @@ object GraftPlanBridge {
   def sql(spark: SparkSession, text: String)(
       rewrite: catalyst.plans.logical.LogicalPlan => catalyst.plans.logical.LogicalPlan): DataFrame = {
     val session = classic.ClassicConversions.castToImpl(spark)
-    session.withActive(
-      classic.Dataset.ofRows(session, rewrite(session.sessionState.sqlParser.parsePlan(text))))
+    session.withActive(classic.Dataset.ofRows(session, rewrite(parse(spark, text))))
   }
+
+  /** The unresolved parse tree the session's parser gives for `text`. */
+  def parse(spark: SparkSession, text: String): catalyst.plans.logical.LogicalPlan =
+    classic.ClassicConversions.castToImpl(spark).sessionState.sqlParser.parsePlan(text)
 }

@@ -1,5 +1,8 @@
 package graft.engine
 
+import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
@@ -43,6 +46,17 @@ class PropertySpec extends AnyFunSuite {
     Gen.listOfN(s.length, Gen.oneOf(true, false)).map { flips =>
       s.zip(flips).map { case (c, up) => if (up) c.toUpper else c }.mkString
     }
+
+  /** An engine connected to a fresh warehouse's `db1`, on the shared local session. */
+  private def engineIn(prefix: String): (SparkSession, SqlEngine) = {
+    val spark = SparkSession.builder()
+      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    val eng = new SqlEngine(
+      spark, new Catalog(java.nio.file.Files.createTempDirectory(prefix).toString),
+      SqlContext("db1", "u"))
+    eng.execute("CREATE DATABASE db1")
+    (spark, eng)
+  }
 
   // --- properties -------------------------------------------------------
 
@@ -96,6 +110,46 @@ class PropertySpec extends AnyFunSuite {
     check(p, "descriptor json")
   }
 
+  test("tokenizer is stable under re-rendering (session-function rewrite)") {
+    // session functions are bound on the parse tree: a statement naming
+    // none keeps its tree, a bound tree holds no session call, so binding
+    // it again changes nothing, and the text still classifies as a query
+    val (spark, eng) = engineIn("p-session")
+    val sessionNames = Set("current_catalog", "current_database", "current_schema",
+      "current_user", "current_role", "session_user", "user", "inet_client_port")
+    val genItem: Gen[String] = Gen.oneOf(
+      genIdent, genIdent.map(c => s"t.$c"), Gen.const("t.user"),
+      Gen.choose(0, 99999).map(_.toString), Gen.const("'it''s'"),
+      genIdent.map(c => s"upper($c)"),
+      Gen.oneOf("user", "current_user", "session_user", "current_role", "current_catalog",
+        "current_database()", "current_schema()", "inet_client_port()").flatMap(randomizeCase))
+    val genSql: Gen[String] = for {
+      items <- Gen.listOfN(3, genItem); cond <- genItem; src <- genIdent
+      list = items.mkString(", ")
+      sql <- Gen.oneOf(
+        s"SELECT $list",
+        s"SELECT $list FROM $src t",
+        s"SELECT $list FROM $src t WHERE $cond = ${items.head}",
+        s"SELECT ${items.head} AS x FROM (SELECT $list FROM $src t) t",
+        s"SELECT ${items.head} FROM $src t WHERE EXISTS (SELECT ${items(1)} FROM $src t WHERE $cond IS NULL)")
+    } yield sql
+    def sessionCalls(plan: LogicalPlan): Int =
+      plan.collectWithSubqueries { case p => p.expressions }.flatten.map(_.collect {
+        case UnresolvedAttribute(Seq(n)) if sessionNames(n.toLowerCase) => n
+        case f: UnresolvedFunction if f.nameParts.length == 1 && f.arguments.isEmpty &&
+          sessionNames(f.nameParts.head.toLowerCase) => f.nameParts.head
+      }.size).sum
+    val p = Prop.forAll(genSql) { sql =>
+      val parsed = GraftPlanBridge.parse(spark, sql)
+      val once = eng.bind(parsed)
+      val twice = eng.bind(once)
+      SqlParser.parse(sql).isInstanceOf[SqlParser.Query] &&
+        (sessionCalls(parsed) > 0 || once == parsed) &&
+        sessionCalls(once) == 0 && twice == once
+    }
+    check(p, "session-function binding stability")
+  }
+
   test("statement splitting is comment-blind: interleaved comments never change the token stream") {
     val genStmtTok: Gen[String] = Gen.oneOf(
       genIdent, Gen.choose(0, 9999).map(_.toString),
@@ -110,6 +164,44 @@ class PropertySpec extends AnyFunSuite {
         SqlParser.tokenize(SqlParser.singleStatement(plain))
     }
     check(p, "comment-blind splitting")
+  }
+
+  test("resolveTables is byte-identity on statements referencing no catalog table") {
+    // the parse-tree resolver replaces only relations the catalog holds;
+    // with none named it must return the parse tree as it was, whatever
+    // the spacing, comments, casing, dotted column chains, CTEs shadowing
+    // a managed table, or names in other schemas and databases
+    val (spark, eng) = engineIn("p-resolve")
+    eng.execute("CREATE TABLE ztable99x (a int PRIMARY KEY)") // 9 chars — never generated
+    val managed = "SELECT a FROM ztable99x"
+    assert(eng.bind(GraftPlanBridge.parse(spark, managed)) != GraftPlanBridge.parse(spark, managed),
+      "the resolver binds a managed table")
+    val genName: Gen[String] = Gen.oneOf(
+      genIdent, genIdent.map(t => s"public.$t"), Gen.zip(genIdent, genIdent).map { case (s, t) => s"$s.$t" },
+      Gen.const("nosuch.ztable99x"), Gen.const("db2.public.ztable99x"))
+    val genCol: Gen[String] = Gen.oneOf(genIdent,
+      Gen.zip(genIdent, genIdent).map { case (a, b) => s"$a.$b" },
+      Gen.zip(genIdent, genIdent, genIdent).map { case (a, b, c) => s"$a.$b.$c" })
+    val genSpace: Gen[String] = Gen.oneOf(" ", "  ", "\n", " -- cmt\n", " /* c */ ")
+    val genSql: Gen[String] = for {
+      n1 <- genName; n2 <- genName; c1 <- genCol; c2 <- genCol; a1 <- genIdent; a2 <- genIdent
+      sql <- Gen.oneOf(
+        s"SELECT $c1 , $c2 FROM $n1 $a1",
+        s"SELECT $a1.$c1 FROM $n1 $a1 JOIN $n2 $a2 ON $a1.$c1 = $a2.$c2",
+        s"WITH ztable99x AS ( SELECT $c1 FROM $n1 ) SELECT * FROM ztable99x WHERE $c2 > 5",
+        s"SELECT * FROM $n1 WHERE $c1 IN ( SELECT $c2 FROM $n2 )",
+        s"SELECT count(*) FROM ( SELECT $c1 FROM $n1 ) $a1 GROUP BY $c2")
+      cased <- randomizeCase(sql)
+      words = cased.split(' ').toList
+      spaces <- Gen.listOfN(words.size - 1, genSpace)
+    } yield words.head + words.tail.zip(spaces).map { case (w, sp) => sp + w }.mkString
+    val p = Prop.forAll(genSql) { sql =>
+      scala.util.Try(GraftPlanBridge.parse(spark, sql)).toOption.isDefined ==> {
+        val parsed = GraftPlanBridge.parse(spark, sql)
+        (eng.bind(parsed) == parsed) :| sql
+      }
+    }
+    check(p, "resolveTables identity")
   }
 
   test("queries naming no managed table plan exactly as spark.sql plans them") {
