@@ -84,10 +84,9 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    // ERROR, not WARN: repeated per-query UDF registration emits a WARN
-    // per function ("replaced a previously registered function") that
-    // floods the harness's bounded output tail around the one JSON line
-    // that matters.
+    // ERROR, not WARN: per-query Spark WARNs (e.g. WindowExec's
+    // single-partition warning) flood the harness's bounded output tail
+    // around the one JSON line that matters.
     spark.sparkContext.setLogLevel("ERROR")
 
     def runOnce(name: String): Double = {

@@ -1157,30 +1157,13 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
         // INSIDE a projection — the insert never leaves Tungsten (no RDD
         // round-trip, no external Rows)
         val offsets = partCounts.scanLeft(0L)(_ + _)
-        // each invocation registers UNIQUELY-named temp functions (and
-        // drops them once the plan is analyzed): a shared name would
-        // cross-wire offsets between CONCURRENT inserts into the same
-        // table
-        val reg = spark.sessionState.functionRegistry
-        val token = java.util.UUID.randomUUID().toString.replace("-", "")
-        val registered = Seq.newBuilder[String]
-        val outCols: Seq[org.apache.spark.sql.Column] = w.desc.columns.map { c =>
+        pre.select(w.desc.columns.map { c =>
           starts.get(c.id) match {
-            case Some(start) =>
-              val fname = s"graft_serial_${c.id}_$token"
-              reg.createOrReplaceTempFunction(fname,
-                _ => graft.functions.PartitionOffsetId(offsets.map(_ + start)), "built-in")
-              registered += fname
-              expr(s"$fname()").cast(c.typeKind.sparkType).as(c.name)
+            case Some(start) => graft.functions.partitionOffsetId(offsets.map(_ + start))
+              .cast(c.typeKind.sparkType).as(c.name)
             case None => col(c.name)
           }
-        }
-        // Dataset construction analyzes the plan, so the resolved
-        // expression instances are already bound — safe to unregister
-        val out = pre.select(outCols: _*)
-        registered.result().foreach(f =>
-          reg.dropFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(f)))
-        out
+        }: _*)
       }
       requireNotNull(w, nullCounts)
 

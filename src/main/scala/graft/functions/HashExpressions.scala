@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -936,43 +935,4 @@ case class CountAlphaTokens(child: Expression) extends UnaryExpression {
     defineCodeGen(ctx, ev, c => s"graft.functions.HashOps.countAlphaTokens($c)")
   override protected def withNewChildInternal(c: Expression): CountAlphaTokens = copy(child = c)
   override def prettyName: String = "count_alpha_tokens"
-}
-
-/** Registers the sketch expressions as SQL functions on a session, so
-  * operators can use them inside `expr(...)` / `spark.sql(...)` and they
-  * compose with higher-order functions. */
-object GraftFunctions {
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(v: Int, IntegerType) => v
-    case other => throw new IllegalArgumentException(s"$what must be an int literal, got $other")
-  }
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // idempotent: every operator entry point calls this, and re-replacing
-    // emits a Spark WARN per function per call — skip when our set is
-    // already in the session (replace stays the path if any is missing)
-    if (reg.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("drop_chunks"))) return
-    reg.createOrReplaceTempFunction(
-      "minhash_sig", exprs => MinHashSig(exprs.head, intLit(exprs(1), "k")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes(exprs.head, intLit(exprs(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_pairs", exprs => ShinglePairs(exprs.head, intLit(exprs(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "chunk_hashes", exprs => ChunkHashes(exprs.head, intLit(exprs(1), "w")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "span_hashes", exprs => SpanHashes(exprs.head, intLit(exprs(1), "w")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash128", exprs => SimHash128(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "hyperplane_sig", exprs => HyperplaneSig(exprs.head, intLit(exprs(1), "bits")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "rolling_fingerprint", exprs => RollingFingerprint(exprs.head, intLit(exprs(1), "w")), "built-in")
-    reg.createOrReplaceTempFunction(
-      "drop_chunks",
-      exprs => DropChunks(exprs.head, exprs(1), intLit(exprs(2), "w")), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
@@ -288,20 +287,4 @@ case class VecScale(child: Expression, factor: Float) extends UnaryExpression {
       defineCodeGen(ctx, ev, v => s"graft.functions.VectorOps.vecScaleD($v, ${factor.toDouble})")
   override protected def withNewChildInternal(c: Expression): VecScale = copy(child = c)
   override def prettyName: String = "vec_scale"
-}
-
-object VectorFunctions {
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // idempotent — see GraftFunctions.register
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim")))
-      reg.createOrReplaceTempFunction(
-        "cosine_sim", exprs => CosineSim(exprs.head, exprs(1)), "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("nearest_centroid")))
-      reg.createOrReplaceTempFunction(
-        "nearest_centroid", exprs => NearestCentroid(exprs.head, exprs(1)), "built-in")
-    if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier("l2_norm")))
-      reg.createOrReplaceTempFunction(
-        "l2_norm", exprs => L2Norm(exprs.head), "built-in")
-  }
 }

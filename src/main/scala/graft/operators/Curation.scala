@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
+import graft.functions.{cosineSim, countIn}
 import org.apache.spark.sql.functions._
 
 /** Capstone: the full training-data curation pass composed as ONE lazy
@@ -42,10 +42,7 @@ object Curation {
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("quality",
         least(col("n_tokens") / 50.0, lit(1.0)) * 0.5 +
-          org.apache.spark.sql.GraftColumnBridge.column(
-            graft.functions.CountIn(
-              org.apache.spark.sql.GraftColumnBridge.expression(col("toks")), stopList))
-            .cast("double") / col("n_tokens") * 0.5)
+          countIn(col("toks"), stopList).cast("double") / col("n_tokens") * 0.5)
       .filter(col("n_tokens") >= 5 && col("quality") >= 0.2)
     val exactKeep = scored
       .groupBy(sha2(col("text"), 256).as("digest"))
@@ -133,13 +130,12 @@ object Curation {
   def semanticContamination(corpus: org.apache.spark.sql.DataFrame,
       benchmark: org.apache.spark.sql.DataFrame, dim: Int = 16,
       tau: Double = 0.95): org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val cv = Similarity.hashedEmbeddingVec(corpus, dim)
       .select(col("vec_id").as("doc_id"), col("embedding").as("d_emb"))
     val bv = Similarity.hashedEmbeddingVec(benchmark, dim)
       .select(col("vec_id").as("bench_id"), col("embedding").as("b_emb"))
     cv.crossJoin(broadcast(bv))
-      .withColumn("raw", expr("cosine_sim(d_emb, b_emb)"))
+      .withColumn("raw", cosineSim(col("d_emb"), col("b_emb")))
       .filter(!isnan(col("raw")) && col("raw") >= tau)
       .select(col("doc_id"), col("bench_id"),
         OracleRound.stableRound(col("raw"), 4).as("sim"))
@@ -346,7 +342,6 @@ object Curation {
           "FROM scored WHERE doc_id IN (SELECT doc_id FROM keep) " +
           "AND doc_id NOT IN (SELECT id FROM drops) ORDER BY doc_id"),
       (s, dir) => {
-        GraftFunctions.register(s)
         curate(
           Tables.load(s, dir, "documents").select(col("doc_id"), col("text")),
           Dedup.exactJaccardPairs(s, dir, 0.5))

@@ -1,7 +1,9 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.{GraftFunctions, VectorFunctions}
+import graft.functions.{agreeCount, bandBits, chunkHashes, cosineSim, dropChunks, gramHashes,
+  hyperplaneSig, minhashSig, shingleHashes, simhash128, simhash64, sliceXxBands, spanHashes,
+  vecScale, windowMins}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,19 +35,6 @@ import org.apache.spark.sql.functions._
 object Dedup {
 
   import OracleRound.{stableRound, stableRoundSql}
-  import org.apache.spark.sql.{Column, GraftColumnBridge => B}
-
-  /** posexplode-able LSH band arrays as CODEGEN kernels (guide §4): the
-    * transform(sequence, shiftright/xxhash64-slice) spellings are
-    * CodegenFallback, which exiled every banding Generate from
-    * whole-stage codegen — the same interpreted-eval defect class as the
-    * r17 t20 stall. Value parity with the SQL spellings is pinned in
-    * KernelParitySpec; the d02/d03/d05/d09/d18 oracles replay the values
-    * end-to-end. */
-  private[operators] def bandBitsCol(c: Column, bands: Int, width: Int): Column =
-    B.column(graft.functions.BandBits(B.expression(c), bands, width))
-  private def sliceXxBandsCol(c: Column, groups: Int, width: Int): Column =
-    B.column(graft.functions.SliceXxBands(B.expression(c), groups, width))
 
   /** Tokenizes and shingles a `(doc_id, text)` corpus: 64-bit hashes of
     * word n-grams, computed in one pass by a custom expression — shingle
@@ -53,10 +42,9 @@ object Dedup {
     * inverted-index shuffle move 8 bytes per shingle regardless of text
     * size. */
   def shingled(corpus: DataFrame, n: Int = 3): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     corpus
       .withColumn("toks", split(lower(col("text")), "\\s+"))
-      .withColumn("shingles", expr(s"shingle_hashes(toks, $n)"))
+      .withColumn("shingles", shingleHashes(col("toks"), n))
   }
 
   /** Exact dedup: smallest doc_id per distinct content. The grouping key
@@ -98,9 +86,7 @@ object Dedup {
   /** SimHash sketches of a `(doc_id, text)` corpus: one codegen'd pass,
     * 8 bytes per doc. */
   def simSketch(corpus: DataFrame): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    corpus.select(col("doc_id"),
-      expr("simhash64(split(lower(text), '\\\\s+'))").as("sim"))
+    corpus.select(col("doc_id"), simhash64(split(lower(col("text")), "\\s+")).as("sim"))
   }
 
   /** The persisted NEAR-dup index unit: DISTINCT 4×16-bit band rows over
@@ -124,7 +110,7 @@ object Dedup {
     * is a property of the sketch alone. */
   def docBandRows(sketched: DataFrame): DataFrame =
     sketched.select(col("doc_id"), col("sim"),
-      posexplode(bandBitsCol(col("sim"), 4, 16))
+      posexplode(bandBits(col("sim"), 4, 16))
         .as(Seq("band", "bucket")))
       .select(col("band").cast("bigint").as("band"), col("bucket"), col("sim"), col("doc_id"))
 
@@ -132,7 +118,7 @@ object Dedup {
     * with band 0..3 over 16-bit chunks. */
   private def bandSims(sims: DataFrame): DataFrame =
     sims.select(col("sim"),
-      posexplode(bandBitsCol(col("sim"), 4, 16))
+      posexplode(bandBits(col("sim"), 4, 16))
         .as(Seq("band", "bucket")))
       .select(col("band").cast("bigint").as("band"), col("bucket"), col("sim"))
 
@@ -241,7 +227,7 @@ object Dedup {
     // reclaim the blocks when the plan is no longer referenced —
     // persist() would pin them for the session lifetime
     val d = shingled(corpus)
-      .withColumn("sig", expr("minhash_sig(shingles, 64)"))
+      .withColumn("sig", minhashSig(col("shingles"), 64))
       .select(col("doc_id"), col("sig"))
       .localCheckpoint()
     // ADAPTIVE banding level (see CorpusStats): on a clone-heavy corpus,
@@ -288,7 +274,7 @@ object Dedup {
     // measured ~+40% on the whole operator in per-doc mode.
     val bands = grouped.select(
       col("sid"),
-      posexplode(sliceXxBandsCol(col("sig"), 16, 4))
+      posexplode(sliceXxBands(col("sig"), 16, 4))
         .as(Seq("band", "bh")))
     // the candidate set is small, so a plain distinct() on the (sid, sid)
     // pair key is cheaper than carrying lowest-band comparisons through
@@ -303,9 +289,7 @@ object Dedup {
       .join(grouped.select(col("sid").as("sid_b"), col("sig").as("sig_b")), "sid_b")
       .select(col("sid_a"), col("sid_b"),
         stableRound(
-          B.column(graft.functions.AgreeCount(
-            B.expression(col("sig_a")), B.expression(col("sig_b"))))
-            .cast("double") / 64.0, 4).as("est_jaccard"))
+          agreeCount(col("sig_a"), col("sig_b")).cast("double") / 64.0, 4).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
     val cross = sigPairs
       .join(dk.select(col("doc_id").as("da"), col("sid").as("sid_a")), "sid_a")
@@ -338,7 +322,7 @@ object Dedup {
   def simhashPairs(corpus: DataFrame, maxHamming: Int = 3,
       distinctRatio: Option[Double] = None): DataFrame = {
     val d = shingled(corpus)
-      .withColumn("sim", expr("simhash64(toks)"))
+      .withColumn("sim", simhash64(col("toks")))
       .select(col("doc_id"), col("sim"))
       .localCheckpoint() // one signature pass feeds sims + both expansion sides
     val cloneHeavy =
@@ -354,7 +338,7 @@ object Dedup {
           d.select(col("doc_id").as("sid"), col("sim"), lit(1L).as("cnt")))
     val bands = grouped.select(
       col("sid"), col("sim"),
-      posexplode(bandBitsCol(col("sim"), 4, 16))
+      posexplode(bandBits(col("sim"), 4, 16))
         .as(Seq("band", "bucket")))
     val simPairs = bands.as("a")
       .join(bands.as("b"),
@@ -409,7 +393,7 @@ object Dedup {
   def simhashPairs128(corpus: DataFrame, maxHamming: Int = 3,
       distinctRatio: Option[Double] = None): DataFrame = {
     val d = shingled(corpus)
-      .withColumn("s2", expr("simhash128(toks)"))
+      .withColumn("s2", simhash128(col("toks")))
       .select(col("doc_id"), col("s2").getItem(0).as("hi"), col("s2").getItem(1).as("lo"))
       .localCheckpoint() // one sketch pass feeds bands + both expansion sides
     val cloneHeavy =
@@ -544,14 +528,12 @@ object Dedup {
     * cosine is never computed at group level). */
   def embeddingPairs(vectors: DataFrame, topN: Int = 20,
       distinctRatio: Option[Double] = None): DataFrame = {
-    GraftFunctions.register(vectors.sparkSession)
-    VectorFunctions.register(vectors.sparkSession)
     // checkpoint SIGNATURES only (16 bytes/row): one hyperplane pass
     // feeds the distinct + both expansion sides, while the exact-cosine
     // lookups below re-scan the (columnar, pruned) vector source instead
     // of pinning a copy of the embedding column
     val sigs = vectors
-      .select(col("vec_id"), expr("hyperplane_sig(embedding, 60)").as("sig"))
+      .select(col("vec_id"), hyperplaneSig(col("embedding"), 60).as("sig"))
       .localCheckpoint()
     // adaptive banding level (see minhashPairs): grouped = one row per
     // banding unit (distinct signature, or vector), dk = vec_id → unit.
@@ -575,7 +557,7 @@ object Dedup {
           sigs.select(col("vec_id").as("sid"), col("sig"), lit(1L).as("cnt")))
     val bands = grouped.select(
       col("sid"), col("sig"),
-      posexplode(bandBitsCol(col("sig"), 5, 12))
+      posexplode(bandBits(col("sig"), 5, 12))
         .as(Seq("band", "bucket")))
     val sigPairs = bands.as("a")
       .join(bands.as("b"),
@@ -596,7 +578,7 @@ object Dedup {
     val ea = vectors.select(col("vec_id").as("id_a"), col("embedding").as("a_emb"))
     val eb = vectors.select(col("vec_id").as("id_b"), col("embedding").as("b_emb"))
     cand.join(ea, "id_a").join(eb, "id_b")
-      .withColumn("cos_sim", stableRound(expr("cosine_sim(a_emb, b_emb)"), 4))
+      .withColumn("cos_sim", stableRound(cosineSim(col("a_emb"), col("b_emb")), 4))
       .select(col("id_a"), col("id_b"), col("cos_sim"))
       .orderBy(col("cos_sim").desc, col("id_a"), col("id_b"))
       .limit(topN)
@@ -621,7 +603,7 @@ object Dedup {
     * [[embeddingPairs]], where candidates are few and the fetch join
     * wins). Cell population is bounded by the quantizer's k, which scales
     * with the corpus (SemDeDup's published runs keep cells ~1e4 rows at
-    * billions of docs); stored cell-partitioned (plans.IvfCellLayout) the
+    * billions of docs); stored cell-partitioned (Similarity.writeEmbedIndex) the
     * join co-locates and the exchange disappears. The drop list is ids
     * only, and the final anti-join carries 8-byte keys. */
   def semDedup(assigned: DataFrame, tau: Double): DataFrame = {
@@ -631,7 +613,7 @@ object Dedup {
     // the id-pair alternative (shuffle pairs, then fetch-join BOTH
     // endpoints' vectors back — ≥2× volume again, plus two more joins).
     // On a stored corpus the exchange disappears entirely when the base is
-    // partitioned by cell on disk (plans.IvfCellLayout) — that layout, not
+    // partitioned by cell on disk (Similarity.writeEmbedIndex) — that layout, not
     // this operator, is the 100 TB deployment shape.
     //
     // The pair stage runs over DISTINCT embeddings (the d09/s09
@@ -644,13 +626,12 @@ object Dedup {
     // BEFORE the all-pairs join, and a clone-heavy corpus pays for its
     // distinct vectors, not its rows (measured: the 10× clone scaler's
     // 3.3–3.5× slope drops to ~linear).
-    VectorFunctions.register(assigned.sparkSession)
     val grp = assigned.groupBy(col("cell"), col("embedding"))
       .agg(min(col("vec_id")).as("gid"))
     val a = grp.select(col("cell"), col("gid").as("id_a"), col("embedding").as("a_emb"))
     val b = grp.select(col("cell"), col("gid").as("id_b"), col("embedding").as("b_emb"))
     val dropG = a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b") && expr("cosine_sim(a_emb, b_emb)") > tau)
+      .filter(col("id_a") < col("id_b") && cosineSim(col("a_emb"), col("b_emb")) > tau)
       .select(col("id_b").as("gid")).distinct()
     val keptIds = grp.select(col("gid")).join(dropG, Seq("gid"), "left_anti")
       .select(col("gid").as("vec_id"))
@@ -672,13 +653,12 @@ object Dedup {
     * p ≈ n²/2⁶⁵ corpus-wide, the family-wide convention (see
     * [[minhashPairs]]); exact content dedup stays on sha2-256 (d01). */
   def passageStats(corpus: DataFrame, width: Int = 8): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     // one-pass codegen'd kernel (ChunkHashes): the built-in spelling
     // (transform(sequence)+slice+concat_ws+hash) re-inlines the tokenizer
     // per element after project collapse and evaluates interpreted —
     // measured 5x the whole-operator wall clock
     val ch = corpus
-      .withColumn("chunks", expr(s"chunk_hashes(split(lower(text), '\\\\s+'), $width)"))
+      .withColumn("chunks", chunkHashes(split(lower(col("text")), "\\s+"), width))
       .select(col("doc_id"), size(col("chunks")).cast("bigint").as("n_chunks"), col("chunks"))
     val occ = ch.select(col("doc_id"), explode(col("chunks")).as("ph"))
     // "≥2 distinct docs" ⇔ min(doc_id) ≠ max(doc_id): one plain two-phase
@@ -718,9 +698,8 @@ object Dedup {
     * thresholds the RAW integer-ratio double (identical in both engines),
     * never the rounded display value. */
   def spanStats(corpus: DataFrame, width: Int = 8, tau: Double = 0.3): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val sp = corpus
-      .withColumn("spans", expr(s"span_hashes(split(lower(text), '\\\\s+'), $width)"))
+      .withColumn("spans", spanHashes(split(lower(col("text")), "\\s+"), width))
       .select(col("doc_id"), size(col("spans")).cast("bigint").as("n_spans"), col("spans"))
     val occ = sp.select(col("doc_id"), explode(col("spans")).as("sh"))
     val shared = occ.groupBy(col("sh"))
@@ -763,10 +742,9 @@ object Dedup {
     * see [[passageStats]]); the DuckDB oracle replays passages as
     * strings, so a hash match also certifies zero collisions. */
   def passageScrub(corpus: DataFrame, width: Int = 8): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val ch = corpus
       .withColumn("toks", split(lower(col("text")), "\\s+"))
-      .withColumn("chunks", expr(s"chunk_hashes(toks, $width)"))
+      .withColumn("chunks", chunkHashes(col("toks"), width))
     val occ = ch.select(col("doc_id"), posexplode(col("chunks")).as(Seq("idx", "ph")))
     // first occurrence per duplicated hash; singletons (cnt = 1) never
     // re-enter the join
@@ -783,7 +761,7 @@ object Dedup {
       .select(col("doc_id"),
         size(col("chunks")).cast("bigint").as("n_chunks"),
         size(col("rm")).cast("bigint").as("n_removed"),
-        expr(s"drop_chunks(toks, rm, $width)").as("text_clean"))
+        dropChunks(col("toks"), col("rm"), width).as("text_clean"))
   }
 
   /** Connected components over an undirected `(id_a, id_b)` pair graph,
@@ -1264,12 +1242,10 @@ object Dedup {
     // §4; OPTIMIZATION_r17.md "t20 stall"). Values are bit-identical
     // (HashOps.sha32/xx64 replay the sha2-hex-prefix / xxhash64 chains;
     // the d19-d22 oracles gate that end-to-end).
-    import org.apache.spark.sql.{GraftColumnBridge => B}
     corpus
       .select(col("doc_id"),
         split(translate(lower(col("text")), "\u001f", " "), "\\s+").as("tk"))
-      .withColumn("fp", explode(B.column(graft.functions.WindowMins(
-        graft.functions.GramHashes(B.expression(col("tk")), k, hash == "sha2"), w))))
+      .withColumn("fp", explode(windowMins(gramHashes(col("tk"), k, hash == "sha2"), w)))
       .select(col("doc_id"), col("fp")).distinct()
   }
 
@@ -1419,11 +1395,10 @@ object Dedup {
           "SELECT id_a, id_b, CAST(1 AS INT) AS sketch_near_ok, " +
           "CAST(1 AS INT) AS band_complete_ok FROM pairs ORDER BY id_a, id_b"),
       (s, dir) => {
-        GraftFunctions.register(s)
         val docs = corpus(s, dir)
         val sketches = docs
           .withColumn("toks", split(lower(col("text")), "\\s+"))
-          .withColumn("sim", expr("simhash64(toks)"))
+          .withColumn("sim", simhash64(col("toks")))
           .select(col("doc_id"), col("sim"))
         val found = simhashPairs(docs, 3, Some(docRatio(s, dir)))
           .select(col("id_a"), col("id_b"), lit(1).as("f"))
@@ -1628,8 +1603,7 @@ object Dedup {
         val emb = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
         val clones = emb.filter(col("vec_id") < 8)
           .select((col("vec_id") + 1000000L).as("vec_id"),
-            B.column(graft.functions.VecScale(B.expression(col("embedding")), 2.0f))
-              .as("embedding"))
+            vecScale(col("embedding"), 2.0f).as("embedding"))
         embeddingPairs(emb.unionByName(clones), 8,
           Some(CorpusStats.cachedHeadDistinctRatio(s, dir, "embeddings", "embedding")))
           .orderBy(col("id_a"))
@@ -1753,11 +1727,10 @@ object Dedup {
           "SELECT id_a, id_b, CAST(1 AS INT) AS sketch_near_ok, " +
           "CAST(1 AS INT) AS band_complete_ok FROM pairs ORDER BY id_a, id_b"),
       (s, dir) => {
-        GraftFunctions.register(s)
         val docs = corpus(s, dir)
         val sketches = docs
           .withColumn("toks", split(lower(col("text")), "\\s+"))
-          .withColumn("s2", expr("simhash128(toks)"))
+          .withColumn("s2", simhash128(col("toks")))
           .select(col("doc_id"), col("s2").getItem(0).as("hi"), col("s2").getItem(1).as("lo"))
         val found = simhashPairs128(docs, 3, Some(docRatio(s, dir)))
           .select(col("id_a"), col("id_b"), lit(1).as("f"))

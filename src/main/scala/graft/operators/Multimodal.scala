@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.{bandBits, cosineSim, hyperplaneSig, l2Norm, vecDiv}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  import org.apache.spark.sql.{Column, GraftColumnBridge => B}
 
   /** Unit-normalized feature vectors off the decoded histogram — shared
     * by [[mediaNearDupPairs]] and [[mediaSemDedup]]. Every step is a
@@ -31,11 +31,9 @@ object Multimodal {
   private def unitFeatures(decoded: DataFrame, idCol: String): DataFrame =
     decoded
       .select(col("doc_id"), col("histogram").cast("array<double>").as("hraw"))
-      .withColumn("nrm", B.column(graft.functions.L2Norm(B.expression(col("hraw")))))
+      .withColumn("nrm", l2Norm(col("hraw")))
       .filter(col("nrm") > 0) // empty payloads have no features to compare
-      .withColumn("embedding",
-        B.column(graft.functions.VecDiv(
-          B.expression(col("hraw")), B.expression(col("nrm")))))
+      .withColumn("embedding", vecDiv(col("hraw"), col("nrm")))
       .select(col("doc_id").as(idCol), col("embedding"))
 
   final case class Media(doc_id: Long, format: String, payload: Array[Byte])
@@ -415,9 +413,6 @@ object Multimodal {
   def mediaNearDupPairs(media: DataFrame, tau: Double = 0.99,
       codec: MediaCodec = DeterministicFakeCodec,
       maxCandidatePairs: Long = 10000000L): DataFrame = {
-    val s = media.sparkSession
-    graft.functions.GraftFunctions.register(s)
-    graft.functions.VectorFunctions.register(s)
     import OracleRound.stableRound
     val v = unitFeatures(decodeFeatures(media, codec), "doc_id")
     val grp = v.groupBy(col("embedding"))
@@ -426,9 +421,9 @@ object Multimodal {
     val members = v.join(grp.select(col("embedding"), col("gid")), Seq("embedding"))
       .select(col("gid"), col("doc_id"))
     val banded = grp
-      .withColumn("sig", expr("hyperplane_sig(embedding, 32)"))
+      .withColumn("sig", hyperplaneSig(col("embedding"), 32))
       .select(col("gid"), col("embedding"), col("sig"),
-        posexplode(B.column(graft.functions.BandBits(B.expression(col("sig")), 8, 4)))
+        posexplode(bandBits(col("sig"), 8, 4))
           .as(Seq("band", "bucket")))
     // CIRCUIT BREAKER for the documented quadratic degeneration on
     // clustered feature spaces (all vectors one direction → few hot
@@ -468,7 +463,7 @@ object Multimodal {
       .filter(expr(firstMatch))
       .select(col("a.gid").as("id_a"), col("b.gid").as("id_b"),
         col("a.embedding").as("q_emb"), col("b.embedding").as("b_emb"))
-      .withColumn("raw", expr("cosine_sim(q_emb, b_emb)"))
+      .withColumn("raw", cosineSim(col("q_emb"), col("b_emb")))
       .filter(col("raw") >= tau)
       .select(col("id_a"), col("id_b"), stableRound(col("raw"), 4).as("sim"))
     val cross = repPairs

@@ -475,12 +475,9 @@ object Packing {
     val bounds =
       if (cuts.isEmpty) Array.empty[Long]
       else z.stat.approxQuantile("zval", cuts, 0.01).map(_.toLong).distinct.sorted
-    // constructed DIRECTLY (the expression closes over THIS run's
-    // boundary array) — a fixed registry name would cross-wire two
-    // concurrent layouts on one session
-    val bk = z.withColumn("bucket",
-      org.apache.spark.sql.GraftColumnBridge.column(graft.functions.RangeBucket(
-        org.apache.spark.sql.GraftColumnBridge.expression(col("zval")), bounds)))
+    // the expression closes over THIS run's boundary array, so two
+    // concurrent layouts on one session cannot cross-wire
+    val bk = z.withColumn("bucket", graft.functions.rangeBucket(col("zval"), bounds))
     val totals = bk.groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
     val exclusive = Window.orderBy(col("bucket"))
       .rowsBetween(Window.unboundedPreceding, -1)

@@ -487,11 +487,10 @@ object Selection {
           "SELECT id, cell, " + OracleRound.stableRoundSql("score", 4) + " AS score, " +
           "cell_rank, pick_rank FROM p WHERE pick_rank <= 100 ORDER BY pick_rank"),
       (s, dir) => {
-        graft.functions.VectorFunctions.register(s)
         diverseTopK(
           Tables.load(s, dir, "embeddings").select(
             col("vec_id").as("id"), col("label").cast("bigint").as("cell"),
-            expr("l2_norm(embedding)").as("score")), 100)
+            graft.functions.l2Norm(col("embedding")).as("score")), 100)
           .select(col("id"), col("cell"),
             OracleRound.stableRound(col("score"), 4).as("score"),
             col("cell_rank"), col("pick_rank"))

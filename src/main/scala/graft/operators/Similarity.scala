@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.{GraftFunctions, VectorFunctions}
+import graft.functions.{bandBits, cosineSim, denseFromMap, hyperplaneSig, l2Norm, l2SqDist,
+  nearestCentroid, pqAdc, pqDistTable, pqEncode, vecScale, vecSub}
 import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -21,8 +22,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale paths: hyperplane-LSH bucketing (candidates from an equi-join on
   * (band, bucket) — the full cross product never materializes) and IVF
-  * (learned coarse quantizer, nprobe-cell probe, exact re-rank; see also
-  * plans.IvfCellLayout for the partitioned-on-disk version).
+  * (learned coarse quantizer, nprobe-cell probe, exact re-rank; see
+  * [[writeIvfPqIndex]] for the cell-partitioned on-disk version).
   *
   * Every driver-visible query is oracle-gated: s01 is bit-exact vs
   * DuckDB's list_cosine_similarity; s02/s03 emit per-index planted-clone
@@ -33,17 +34,14 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   import OracleRound.stableRound
-  import org.apache.spark.sql.{Column, GraftColumnBridge => B}
-
-  // custom codegen'd kernel: sequential double accumulation, bit-identical
-  // to the aggregate(zip_with(...)) spelling and to DuckDB's
-  // list_cosine_similarity, minus the per-element lambda interpretation
-  private val cos = "cosine_sim(q_emb, b_emb)"
 
   private def rankTopK(cand: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id")).orderBy(col("raw_cos").desc, col("vec_id"))
     cand
-      .withColumn("raw_cos", expr(cos))
+      // codegen'd kernel: sequential double accumulation, bit-identical
+      // to the aggregate(zip_with(...)) spelling and to DuckDB's
+      // list_cosine_similarity, minus the per-element lambda interpretation
+      .withColumn("raw_cos", cosineSim(col("q_emb"), col("b_emb")))
       // cosine is consumed here: project the embeddings away so the
       // per-query window exchange carries 3 scalars per candidate, not
       // two vectors. A zero-norm side yields NaN cosine, and Spark
@@ -59,7 +57,6 @@ object Similarity {
   /** Exact cosine top-k per query: broadcast the query side, rank per
     * query. Columns: query_id, vec_id, raw_cos, rank. */
   def bruteForceTopK(base: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.register(base.sparkSession)
     rankTopK(
       base.select(col("vec_id"), col("embedding").as("b_emb"))
         .join(broadcast(queries), col("vec_id") =!= col("query_id")), k)
@@ -69,12 +66,10 @@ object Similarity {
     * of 4 bits; candidates are (band, bucket) collisions, re-ranked
     * exactly. */
   def lshTopK(base: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    GraftFunctions.register(base.sparkSession)
-    VectorFunctions.register(base.sparkSession)
     def banded(df: DataFrame, id: String, emb: String): DataFrame =
-      df.withColumn("sig", expr(s"hyperplane_sig($emb, 32)"))
+      df.withColumn("sig", hyperplaneSig(col(emb), 32))
         .select(col(id), col(emb), col("sig"),
-          posexplode(B.column(graft.functions.BandBits(B.expression(col("sig")), 8, 4)))
+          posexplode(bandBits(col("sig"), 8, 4))
             .as(Seq("band", "bucket")))
     val bb = banded(base.select(col("vec_id"), col("embedding")), "vec_id", "embedding")
     val qb = banded(queries, "query_id", "q_emb")
@@ -197,12 +192,11 @@ object Similarity {
     * (‖a‖²+‖b‖²−2ab), which rounds differently in ulps and can flip
     * near-equidistant assignments against every other consumer. */
   def assignCells(base: DataFrame, model: KMeansModel): DataFrame = {
-    VectorFunctions.register(base.sparkSession)
     val cents = model.clusterCenters.map(_.toArray.toSeq).toSeq // k×dim metadata
     // the kernel reads float arrays natively (its `floats` flag) — no
     // per-row widened copy
     base.select(col("vec_id"), col("embedding"),
-      call_function("nearest_centroid", col("embedding"), typedLit(cents)).as("cell"))
+      nearestCentroid(col("embedding"), typedLit(cents)).as("cell"))
   }
 
   /** IVF top-k: assign base vectors to their nearest centroid (the
@@ -211,19 +205,18 @@ object Similarity {
     * shape (equi-join on a coarse key, then re-rank). */
   def ivfTopK(base: DataFrame, queries: DataFrame, model: KMeansModel,
       k: Int, nprobe: Int = 4): DataFrame = {
-    VectorFunctions.register(base.sparkSession)
     val assigned = assignCells(base, model)
     // centroid table is model metadata (16 rows) — broadcast by size
     val centroids = centroidTable(base.sparkSession, model)
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("cell"))
     val probes = queries.crossJoin(broadcast(centroids))
-      .withColumn("dist", l2SqDistCol(col("q_emb"), col("centroid")))
+      .withColumn("dist", l2SqDist(col("q_emb"), col("centroid")))
       .withColumn("probe_rank", row_number().over(wProbe))
       .filter(col("probe_rank") <= nprobe)
       .select(col("query_id"), col("q_emb"), col("cell"))
     // candidates = base vectors in probed cells (at scale: the base table
     // is PARTITIONED BY cell on disk, so a probe reads nprobe/k of it —
-    // plans.IvfCellLayout)
+    // the writeIvfPqIndex layout)
     rankTopK(
       probes.join(assigned, Seq("cell"))
         .filter(col("vec_id") =!= col("query_id"))
@@ -324,39 +317,16 @@ object Similarity {
     * only. */
   def pqTopK(base: DataFrame, queries: DataFrame, model: PqModel, k: Int,
       excludeSelf: Boolean = true): DataFrame = {
-    val codes = base.select(col("vec_id"), pqEncodeCol(col("embedding"), model).as("codes"))
-    val qt = queries.select(col("query_id"), pqTableCol(col("q_emb"), model).as("qtab"))
+    val codes = base.select(col("vec_id"), pqEncode(col("embedding"), model.cents, model.m, model.k, model.sub).as("codes"))
+    val qt = queries.select(col("query_id"), pqDistTable(col("q_emb"), model.cents, model.m, model.k, model.sub).as("qtab"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("vec_id"))
     (if (excludeSelf) codes.join(broadcast(qt), col("vec_id") =!= col("query_id"))
      else codes.crossJoin(broadcast(qt)))
-      .withColumn("dist", pqAdcCol(col("codes"), col("qtab"), model))
+      .withColumn("dist", pqAdc(col("codes"), col("qtab"), model.k))
       .select(col("query_id"), col("vec_id"), col("dist"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
   }
-
-  // The PQ kernels are constructed DIRECTLY (expression closes over this
-  // model's centroids) rather than bound through the session's shared
-  // function registry under fixed names: two threads building plans on
-  // one SparkSession could interleave register/analyze and silently bind
-  // the wrong model's centroids (the SQL-text TVFs route through these
-  // same constructors, so they inherit the fix).
-
-  /** Codegen kernels for the centroid algebra (guide §4): bit-identical
-    * to the aggregate/zip_with HOF spellings they replace (sequential
-    * double accumulation in index order; see VectorOps scaladoc), minus
-    * the per-element interpreted lambda. */
-  private[graft] def l2SqDistCol(a: Column, b: Column): Column =
-    B.column(graft.functions.L2SqDist(B.expression(a), B.expression(b)))
-  private[graft] def vecSubCol(a: Column, b: Column): Column =
-    B.column(graft.functions.VecSub(B.expression(a), B.expression(b)))
-
-  private def pqEncodeCol(v: Column, pq: PqModel): Column =
-    B.column(graft.functions.PqEncode(B.expression(v), pq.cents, pq.m, pq.k, pq.sub))
-  private def pqTableCol(v: Column, pq: PqModel): Column =
-    B.column(graft.functions.PqDistTable(B.expression(v), pq.cents, pq.m, pq.k, pq.sub))
-  private def pqAdcCol(codes: Column, qtab: Column, pq: PqModel): Column =
-    B.column(graft.functions.PqAdc(B.expression(codes), B.expression(qtab), pq.k))
 
   /** The coarse-centroid relation of a trained k-means model — model
     * metadata (k rows), always broadcast. */
@@ -373,7 +343,7 @@ object Similarity {
     assignCells(base, km)
       .join(broadcast(centroidTable(base.sparkSession, km)), Seq("cell"))
       .select(col("vec_id"),
-        vecSubCol(col("embedding"), col("centroid")).as("embedding"))
+        vecSub(col("embedding"), col("centroid")).as("embedding"))
 
   /** IVF-ADC top-k (Jégou/Douze/Schmid TPAMI 2011, the IVFADC system —
     * the canonical billion-vector index): a coarse quantizer routes each
@@ -387,7 +357,7 @@ object Similarity {
     *
     * Scale shape: the code relation is built by a narrow projection
     * through two broadcasts (centroids = model metadata); at deployment
-    * scale it is PARTITIONED BY cell on disk (plans.IvfCellLayout), so
+    * scale it is PARTITIONED BY cell on disk ([[writeIvfPqIndex]]), so
     * a probe reads nprobe/k of the corpus. The probe side broadcasts
     * (query_id, cell, table) — bounded queries × nprobe rows; no float
     * vector ever crosses a shuffle. */
@@ -405,8 +375,8 @@ object Similarity {
     assignCells(base, km)
       .join(broadcast(centroids), Seq("cell"))
       .select(col("cell"), col("vec_id"),
-        vecSubCol(col("embedding"), col("centroid")).as("resid"))
-      .select(col("cell"), col("vec_id"), pqEncodeCol(col("resid"), pq).as("codes"))
+        vecSub(col("embedding"), col("centroid")).as("resid"))
+      .select(col("cell"), col("vec_id"), pqEncode(col("resid"), pq.cents, pq.m, pq.k, pq.sub).as("codes"))
   }
 
   def ivfPqTopK(base: DataFrame, queries: DataFrame, km: KMeansModel, pq: PqModel,
@@ -431,7 +401,7 @@ object Similarity {
       nprobe: Int): DataFrame = {
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("cdist"), col("cell"))
     queries.crossJoin(broadcast(centroids))
-      .withColumn("cdist", l2SqDistCol(col("q_emb"), col("centroid")))
+      .withColumn("cdist", l2SqDist(col("q_emb"), col("centroid")))
       .select(col("query_id"), col("cell"), col("cdist"))
       .withColumn("probe_rank", row_number().over(wProbe))
       .filter(col("probe_rank") <= nprobe)
@@ -448,12 +418,12 @@ object Similarity {
       .join(broadcast(queries), Seq("query_id"))
       .join(broadcast(centroids), Seq("cell"))
       .select(col("query_id"), col("cell"),
-        vecSubCol(col("q_emb"), col("centroid")).as("qres"))
-      .select(col("query_id"), col("cell"), pqTableCol(col("qres"), pq).as("qtab"))
+        vecSub(col("q_emb"), col("centroid")).as("qres"))
+      .select(col("query_id"), col("cell"), pqDistTable(col("qres"), pq.cents, pq.m, pq.k, pq.sub).as("qtab"))
     val w = Window.partitionBy(col("query_id")).orderBy(col("dist"), col("vec_id"))
     codes.join(broadcast(probes), Seq("cell"))
       .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true))
-      .withColumn("dist", pqAdcCol(col("codes"), col("qtab"), pq))
+      .withColumn("dist", pqAdc(col("codes"), col("qtab"), pq.k))
       .select(col("query_id"), col("vec_id"), col("dist"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -628,7 +598,6 @@ object Similarity {
 
   private def appendIvfPqIndexUnlocked(increment: DataFrame, path: String): DataFrame = {
     val s = increment.sparkSession
-    VectorFunctions.register(s)
     val (_, cents, pq) = readIvfPqArtifacts(s, path)
     val centroids = cents.localCheckpoint() // k×dim metadata; two consumers
     val centArr = centroids.orderBy(col("cell")).collect()
@@ -638,11 +607,11 @@ object Similarity {
     // footer diff would mis-report under a concurrent or partial append)
     val encoded = increment
       .withColumn("cell",
-        call_function("nearest_centroid", col("embedding"), typedLit(centArr)))
+        nearestCentroid(col("embedding"), typedLit(centArr)))
       .join(broadcast(centroids), Seq("cell"))
       .select(col("cell"), col("vec_id"),
-        vecSubCol(col("embedding"), col("centroid")).as("resid"))
-      .select(col("cell"), col("vec_id"), pqEncodeCol(col("resid"), pq).as("codes"))
+        vecSub(col("embedding"), col("centroid")).as("resid"))
+      .select(col("cell"), col("vec_id"), pqEncode(col("resid"), pq.cents, pq.m, pq.k, pq.sub).as("codes"))
       .localCheckpoint(false) // lazy: the count below materializes it
     val nAppended = encoded.count()
     // appends land in the CURRENT generation (post-compaction layouts
@@ -688,7 +657,6 @@ object Similarity {
     * pass. Returns the s01 shape (query_id, vec_id, raw_cos, rank). */
   def pqTopKReranked(base: DataFrame, queries: DataFrame, model: PqModel, k: Int,
       shortlist: Int = 0, excludeSelf: Boolean = true): DataFrame = {
-    VectorFunctions.register(base.sparkSession) // rankTopK's cosine kernel
     val sl = if (shortlist > 0) shortlist else 4 * k
     require(sl >= k, s"shortlist $sl must be >= k=$k")
     val shortIds = pqTopK(base, queries, model, sl, excludeSelf)
@@ -729,7 +697,6 @@ object Similarity {
     * Returns (vec_id, cluster) after `iters` assignment passes. */
   def lloydAssign(base: DataFrame, seeds: Array[Array[Double]], iters: Int): DataFrame = {
     require(seeds.nonEmpty && iters >= 1, "need seeds and at least one iteration")
-    VectorFunctions.register(base.sparkSession)
     // iterated runs re-evaluate the base projection once per iteration
     // (component aggregate + next assignment both consume it): pin
     // (vec_id, embedding) ONCE so every pass scans a materialized
@@ -742,8 +709,7 @@ object Similarity {
       else base.select(col("vec_id"), col("embedding"))
     def assign(cents: Array[Array[Double]]): DataFrame =
       pts.withColumn("cluster",
-        call_function("nearest_centroid",
-          col("embedding"), typedLit(cents.map(_.toSeq).toSeq)))
+        nearestCentroid(col("embedding"), typedLit(cents.map(_.toSeq).toSeq)))
     var centroids = seeds
     var assigned = assign(centroids)
     var it = 1
@@ -782,8 +748,7 @@ object Similarity {
     * back), so the whole operator is two linear passes with no shuffle of
     * vectors and a bit-exact DuckDB replay. */
   def embeddingHygiene(base: DataFrame, sigmas: Double = 3.0): DataFrame = {
-    VectorFunctions.register(base.sparkSession)
-    val nv = base.select(col("vec_id"), expr("l2_norm(embedding)").as("norm"))
+    val nv = base.select(col("vec_id"), l2Norm(col("embedding")).as("norm"))
     // corpus stats over FINITE norms only: a NaN norm would cast to NULL
     // decimal (silently biasing the mean low while still counted in n)
     // and an infinite one breaks the decimal cast outright — degenerate
@@ -826,20 +791,18 @@ object Similarity {
     * distinct vectors, not its rows). The probe joins ON THE CELL KEY,
     * so each distinct embedding crosses the wire once per side (the
     * documented [[Dedup.semDedup]] exemption — under the
-    * cell-partitioned index layout, plans.IvfCellLayout, the index side
+    * cell-partitioned index layout of [[writeEmbedIndex]], the index side
     * co-locates and only the increment's cells are even read).
     * Cell-locality is the IVF approximation this family accepts: a
     * τ-pair split across two cells is missed exactly as an IVF probe
     * with nprobe=1 would miss it — identical clones always co-assign. */
   def incrementalEmbedAdmit(increment: DataFrame, index: DataFrame,
       centroids: Array[Array[Double]], tau: Double): DataFrame = {
-    VectorFunctions.register(increment.sparkSession)
     // one assignment pass feeds the probe, the survivor set, and the
     // in-increment clustering
     val inc = increment.select(col("vec_id"), col("embedding"))
       .withColumn("cell",
-        call_function("nearest_centroid",
-          col("embedding"), typedLit(centroids.map(_.toSeq).toSeq)))
+        nearestCentroid(col("embedding"), typedLit(centroids.map(_.toSeq).toSeq)))
       .localCheckpoint()
     admitAssigned(inc, index, tau)
   }
@@ -868,14 +831,14 @@ object Similarity {
       .agg(min(col("vec_id")).as("gid"))
     val rejected = grp
       .join(index.select(col("cell"), col("embedding").as("h_emb")).distinct(), Seq("cell"))
-      .filter(expr(s"cosine_sim(embedding, h_emb) > $tau"))
+      .filter(cosineSim(col("embedding"), col("h_emb")) > tau)
       .select(col("gid")).distinct()
     val surv0 = grp.join(rejected, Seq("gid"), "left_anti")
     val surv = if (pinSurvivors) surv0.localCheckpoint(false) else surv0
     val a = surv.select(col("cell"), col("gid").as("id_a"), col("embedding").as("a_emb"))
     val b = surv.select(col("cell"), col("gid").as("id_b"), col("embedding").as("b_emb"))
     val pairs = a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b") && expr(s"cosine_sim(a_emb, b_emb) > $tau"))
+      .filter(col("id_a") < col("id_b") && cosineSim(col("a_emb"), col("b_emb")) > tau)
       .select(col("id_a"), col("id_b"))
     val nonReps = Dedup.connectedComponents(pairs)
       .select(col("doc_id").as("gid"))
@@ -950,7 +913,6 @@ object Similarity {
   def embedAdmitFromIndex(increment: DataFrame, path: String,
       tau: Double = 0.9): DataFrame = {
     val s = increment.sparkSession
-    VectorFunctions.register(s)
     val seeds = s.read.parquet(s"$path/centroids").orderBy(col("cell"))
       .collect().map(_.getSeq[Double](1).toArray)
     // assign cells ONCE and pin: the pinned increment feeds both the
@@ -979,7 +941,6 @@ object Similarity {
       tau: Double = 0.9): DataFrame =
     withMaintenanceLock(increment.sparkSession, path, "embed-admit-append") {
       val s = increment.sparkSession
-      VectorFunctions.register(s)
       // resolved once; the probe read and the write-back hit the SAME
       // generation (the lock excludes a concurrent compaction flip)
       val cellsDir = currentIndexDirStr(s, path, "cells")
@@ -1231,11 +1192,9 @@ object Similarity {
   /** Cell assignment of a base relation under explicit centroids — builds
     * the persisted index side [[incrementalEmbedAdmit]] probes. */
   def cellIndex(base: DataFrame, centroids: Array[Array[Double]]): DataFrame = {
-    VectorFunctions.register(base.sparkSession)
     base.select(col("vec_id"), col("embedding"))
       .withColumn("cell",
-        call_function("nearest_centroid",
-          col("embedding"), typedLit(centroids.map(_.toSeq).toSeq)))
+        nearestCentroid(col("embedding"), typedLit(centroids.map(_.toSeq).toSeq)))
   }
 
   /** Feature-HASHED document embedding — the text→vector bridge that
@@ -1284,8 +1243,7 @@ object Similarity {
       .groupBy(col("doc_id"))
       .agg(map_from_entries(collect_list(struct(col("bucket"), col("weight")))).as("m"))
       .select(col("doc_id").as("vec_id"),
-        B.column(graft.functions.DenseFromMap(B.expression(col("m")), dim))
-          .as("embedding"))
+        denseFromMap(col("m"), dim).as("embedding"))
 
   /** HARD-NEGATIVE mining for contrastive/embedding training: for each
     * labeled query vector, the top-k most-cosine-similar base vectors
@@ -1303,7 +1261,6 @@ object Similarity {
     * cell-probed candidates and keep the same label filter + re-rank —
     * the mining semantics are unchanged. */
   def hardNegatives(base: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.register(base.sparkSession)
     rankTopK(
       base.select(col("vec_id"), col("label"), col("embedding").as("b_emb"))
         .join(broadcast(queries),
@@ -1334,7 +1291,6 @@ object Similarity {
     // spaces — no self-join exclusion here (bruteForceTopK's
     // vec_id =!= query_id guard would silently drop a labeled vector that
     // happens to share an id with a query, skewing that query's vote)
-    VectorFunctions.register(lab.sparkSession)
     val topk = rankTopK(
       lab.select(col("vec_id"), col("embedding").as("b_emb"))
         .crossJoin(broadcast(queries)), k)
@@ -1651,12 +1607,10 @@ object Similarity {
         val b = base(s, dir)
         val scaled = b.filter(col("vec_id") === 0)
           .select((col("vec_id") + 1000000L).as("vec_id"),
-            B.column(graft.functions.VecScale(B.expression(col("embedding")), 100.0f))
-              .as("embedding"))
+            vecScale(col("embedding"), 100.0f).as("embedding"))
         val zeroed = b.filter(col("vec_id") === 1)
           .select((col("vec_id") + 1000001L).as("vec_id"),
-            B.column(graft.functions.VecScale(B.expression(col("embedding")), 0.0f))
-              .as("embedding"))
+            vecScale(col("embedding"), 0.0f).as("embedding"))
         embeddingHygiene(b.unionByName(scaled).unionByName(zeroed))
           .select(col("vec_id"), OracleRound.stableRound(col("norm"), 4).as("norm"),
             col("is_outlier"), col("degenerate"))

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.functions.GraftFunctions
+import graft.functions.{adjacentPairs, bigramStructs, codePoints, countAlphaTokens, countIn,
+  countPresent, mergeAll, ngramJoin, rollingFingerprint, shinglePairs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,17 +20,6 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   import OracleRound.{stableRound, stableRoundSql}
-  import org.apache.spark.sql.{GraftColumnBridge => B}
-
-  /** Codegen n-gram/bigram kernels (guide §4) — value-identical to the
-    * transform(sequence, ...) HOF spellings they replace (pinned in
-    * KernelParitySpec); the HOF spellings are CodegenFallback and exiled
-    * their Generate stages from whole-stage codegen (the r17 t20 stall
-    * class). */
-  private def ngramJoinCol(tk: Column, n: Int): Column =
-    B.column(graft.functions.NgramJoin(B.expression(tk), n))
-  private def bigramStructsCol(tk: Column): Column =
-    B.column(graft.functions.BigramStructs(B.expression(tk)))
 
   private val stopwords: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of", "to", "a", "in", "is", "that", "it", "for"),
@@ -42,7 +32,7 @@ object TextAnalysis {
   // spelling (CodegenFallback — interpreted per token) with one codegen
   // call, value parity pinned in KernelParitySpec
   private def hitCount(lang: String): Column =
-    B.column(graft.functions.CountIn(B.expression(col("toks")), stopwords(lang)))
+    countIn(col("toks"), stopwords(lang))
 
   /** Language prediction per document: stopword hit counts per candidate
     * language, highest wins (deterministic priority tie-break), zero hits
@@ -68,7 +58,7 @@ object TextAnalysis {
       .withColumn("toks", split(col("text"), " "))
       .withColumn("n_tokens_i", size(col("toks")))
       .withColumn("n_stop",
-        B.column(graft.functions.CountIn(B.expression(col("toks")), stopwords("en"))))
+        countIn(col("toks"), stopwords("en")))
       .select(
         col("doc_id"),
         length(col("text")).cast("bigint").as("n_chars"),
@@ -137,11 +127,9 @@ object TextAnalysis {
         (length(col("nt")) - length(replace(col("nt"), lit("#"), lit("")))).cast("bigint") +
           expr("CAST((length(nt) - length(replace(nt, '...', ''))) AS BIGINT) div 3"))
       .withColumn("n_alpha",
-        B.column(graft.functions.CountAlphaTokens(B.expression(col("toks"))))
-          .cast("bigint"))
+        countAlphaTokens(col("toks")).cast("bigint"))
       .withColumn("stop_hits",
-        B.column(graft.functions.CountPresent(B.expression(col("toks")), stopWords))
-          .cast("bigint"))
+        countPresent(col("toks"), stopWords).cast("bigint"))
       .withColumn("f_words", col("n_words") >= minWords && col("n_words") <= maxWords)
       .withColumn("f_mean_len",
         col("mean_len_raw") >= minMeanLen && col("mean_len_raw") <= maxMeanLen)
@@ -254,13 +242,12 @@ object TextAnalysis {
     * pairing is exact; df on hashes equals df on phrases modulo 64-bit
     * collisions. */
   def boilerplatePhrases(corpus: DataFrame, n: Int = 3, minDfRatio: Double = 0.05): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val pairs = corpus.select(col("doc_id"),
       // U+001F is the kernel's token separator: normalize it to a token
       // boundary up front so no token can contain it — phrase recovery and
       // the hash stream stay unambiguous
-      explode(expr(
-        s"shingle_pairs(split(lower(translate(text, '\u001f', ' ')), '\\\\s+'), $n)")).as("p"))
+      explode(shinglePairs(
+        split(lower(translate(col("text"), "\u001f", " ")), "\\s+"), n)).as("p"))
     val dfh = pairs.select(col("p.h").as("h"))
       .groupBy(col("h")).agg(count(lit(1)).as("df"))
     val ndocs = corpus.agg(count(lit(1)).as("n_docs"))
@@ -331,9 +318,7 @@ object TextAnalysis {
     // the CASE/transform/struct SQL spelling it replaces (the HOF
     // spelling was CodegenFallback — the r17 t20 interpreted-Generate
     // class; parity pinned in KernelParitySpec)
-    def weightedPairs(c: Column, w: Column): Column =
-      B.column(graft.functions.AdjacentPairs(
-        B.expression(c), B.expression(w.cast("bigint"))))
+    def weightedPairs(c: Column, w: Column): Column = adjacentPairs(c, w.cast("bigint"))
 
     def pairCountsOf(df: DataFrame, pairs: Column): DataFrame = df
       .select(explode(pairs).as("p"))
@@ -422,11 +407,9 @@ object TextAnalysis {
         batch.zipWithIndex.foreach { case ((a, b, f), i) => out += ((r + i, a, b, f)) }
         // the final batch needs no application — nothing reads it
         if (r + batch.length - 1 < merges) {
-          import org.apache.spark.sql.{GraftColumnBridge => B}
-          // expression constructed DIRECTLY (closes over the batch) —
-          // a fixed registry name would cross-wire concurrent trainers
-          val applied = B.column(graft.functions.MergeAll(
-            B.expression(col("syms")), batch.map(t => (t._1, t._2)).toSeq))
+          // the expression closes over this batch, so concurrent
+          // trainers cannot see each other's merges
+          val applied = mergeAll(col("syms"), batch.map(t => (t._1, t._2)).toSeq)
           val staged = cur
             .withColumn("merged", applied)
             .localCheckpoint(false) // narrow full-vocab rewrite, no exchange
@@ -455,20 +438,8 @@ object TextAnalysis {
     * mirrored in the oracle's census CTE — so the DuckDB list_reduce
     * replay can never confuse a data byte for its accumulator joint. */
   private def bpeWordCensus(corpus: DataFrame): DataFrame = bpeWordFreqs(corpus)
-    .withColumn("syms", codePointsCol(col("word")))
+    .withColumn("syms", codePoints(col("word")))
     .select(col("freq"), col("syms"))
-
-  /** The per-code-point symbol split as a CODEGEN-ABLE kernel column —
-    * value-identical to `transform(sequence(1, length(word)), i ->
-    * substring(word, i, 1))`, but that higher-order-function spelling is
-    * CodegenFallback, which exiled every BPE Generate/Project stage from
-    * whole-stage codegen (guide §4; the interpreted ExplodeBase.eval
-    * path measured 3-20x slower with 45-100 s JIT-pathological stalls on
-    * the r17 full board — OPTIMIZATION_r17.md "t20 stall"). */
-  private def codePointsCol(c: Column): Column = {
-    import org.apache.spark.sql.{GraftColumnBridge => B}
-    B.column(graft.functions.CodePoints(B.expression(c)))
-  }
 
   /** PRODUCTION-DEPTH BPE training: the capped-census driver-side
     * trainer. [[bpeMerges]] runs every round as Spark jobs — the right
@@ -666,7 +637,7 @@ object TextAnalysis {
     val perN = (1 to maxN).map { n =>
       val grams =
         if (n == 1) toks.select(explode(col("tk")).as("g"))
-        else toks.select(explode(ngramJoinCol(col("tk"), n)).as("g"))
+        else toks.select(explode(ngramJoin(col("tk"), n)).as("g"))
       grams.groupBy(col("g")).agg(count(lit(1)).as("c"))
         .agg(sum(col("c")).as("total_ngrams"),
           count(lit(1)).as("distinct_ngrams"),
@@ -743,13 +714,9 @@ object TextAnalysis {
     * merge table is constructor data (k entries, driver-held — the
     * bounded artifact [[bpeMerges]] produces). */
   def bpeEncode(corpus: DataFrame, mergeTable: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.{GraftColumnBridge => B}
-    // constructed DIRECTLY (the expression closes over THIS merge table):
-    // a fixed registry name would let two concurrent encodes on one
-    // session bind each other's tables mid-analysis
-    val applied = B.column(graft.functions.MergeAll(
-      B.expression(codePointsCol(col("word"))),
-      mergeTable))
+    // the expression closes over THIS merge table, so two concurrent
+    // encodes on one session cannot bind each other's tables
+    val applied = mergeAll(codePoints(col("word")), mergeTable)
     corpus
       .select(col("doc_id"),
         // the same 0x1F-to-space normalization as the census (the two
@@ -777,11 +744,8 @@ object TextAnalysis {
     * narrow too: NO shuffle anywhere (ordering is the composite
     * (doc_id, word_idx, tok_idx) key, not a window). */
   def bpeTokens(corpus: DataFrame, mergeTable: Seq[(String, String)]): DataFrame = {
-    import org.apache.spark.sql.{GraftColumnBridge => B}
-    // constructed DIRECTLY (closes over THIS merge table) — see bpeEncode
-    val applied = B.column(graft.functions.MergeAll(
-      B.expression(codePointsCol(col("word"))),
-      mergeTable))
+    // closes over THIS merge table — see bpeEncode
+    val applied = mergeAll(codePoints(col("word")), mergeTable)
     corpus
       .select(col("doc_id"),
         posexplode(bpeSplitCol)
@@ -828,7 +792,7 @@ object TextAnalysis {
       corpus
         .select(explode(bpeSplitCol).as("word"))
         .filter(col("word") =!= "")
-        .select(explode(codePointsCol(col("word"))).as("c"))
+        .select(explode(codePoints(col("word"))).as("c"))
         .distinct().orderBy(col("c")).collect().map(_.getString(0)).toSeq
     }
     val seen = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -1196,7 +1160,7 @@ object TextAnalysis {
       (lit(1.0) - expr("size(array_distinct(toks))").cast("double") / col("n")).as("dup_r"))
     val top = t.filter(col("n") >= 2)
       .select(col("doc_id"),
-        explode(ngramJoinCol(col("toks"), 2))
+        explode(ngramJoin(col("toks"), 2))
           .as("bg"))
       .groupBy(col("doc_id"), col("bg")).agg(count(lit(1)).as("c"))
       .groupBy(col("doc_id"))
@@ -1248,7 +1212,7 @@ object TextAnalysis {
         .withColumn("n", size(col("toks")))
       val bgS = t.filter(col("n") >= 2)
         .select(col("doc_id"),
-          explode(bigramStructsCol(col("toks")))
+          explode(bigramStructs(col("toks")))
             .as("p"))
         .select(col("doc_id"), col("p.w1").as("w1"), col("p.bg").as("bg"))
       val c1 = bgS.groupBy(col("w1")).agg(count(lit(1)).as("c1"))
@@ -1292,7 +1256,7 @@ object TextAnalysis {
       .withColumn("n", size(col("toks")))
     val bg = t.filter(col("n") >= 2)
       .select(col("dig"), col("mult"),
-        explode(bigramStructsCol(col("toks")))
+        explode(bigramStructs(col("toks")))
           .as("p"))
       .select(col("dig"), col("mult"), col("p.w1").as("w1"), col("p.bg").as("bg"))
     // reduce to per-(text, bigram) multiplicities FIRST: the
@@ -1354,8 +1318,7 @@ object TextAnalysis {
     * expression); docs sharing a fingerprint are byte-near-identical
     * candidates. */
   def fingerprints(corpus: DataFrame, window: Int = 16): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    corpus.select(col("doc_id"), expr(s"rolling_fingerprint(text, $window)").as("fingerprint"))
+    corpus.select(col("doc_id"), rollingFingerprint(col("text"), window).as("fingerprint"))
   }
 
   /** MODEL-BASED quality scoring — the hashed-linear-classifier stage
@@ -1506,7 +1469,6 @@ object TextAnalysis {
           "CAST(1 AS INT) AS suffix_stable_ok, CAST(1 AS INT) AS collision_bounded_ok " +
           "FROM documents"),
       (s, dir) => {
-        GraftFunctions.register(s)
         val d = docs(s, dir).select(col("doc_id"), col("text"))
         val fp = fingerprints(d).withColumnRenamed("fingerprint", "fp")
         val cloneFp = fingerprints(
@@ -1514,7 +1476,7 @@ object TextAnalysis {
           .select((col("doc_id") - 1000000L).as("doc_id"),
             col("fingerprint").as("fp_clone"))
         val sufFp = d.select(col("doc_id"),
-          expr("rolling_fingerprint(concat(text, ' appended tail marker'), 16)").as("fp_suf"))
+          rollingFingerprint(concat(col("text"), lit(" appended tail marker")), 16).as("fp_suf"))
         val joined = fp.join(cloneFp, "doc_id").join(sufFp, "doc_id")
         // digests-only shuffle rule: the fp-keyed self-join exchange
         // carries (doc_id, fp, 32-byte sha2 digest) — never raw text;

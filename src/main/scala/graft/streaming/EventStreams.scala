@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.{shinglePairs, simhash64}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -293,9 +294,8 @@ object EventStreams {
   def nearDedupDocuments(docs: DataFrame, maxSketchesPerBucket: Int = 4096,
       stateTtl: Option[String] = None): Dataset[SketchedDoc] = {
     import docs.sparkSession.implicits._
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sketched = docs
-      .withColumn("sim", expr("simhash64(split(lower(text), '\\\\s+'))"))
+      .withColumn("sim", simhash64(split(lower(col("text")), "\\s+")))
       .select(col("doc_id"), col("sim"), expr("sim & 65535").as("bucket"))
       .as[SketchedDoc]
     val timeout =
@@ -589,7 +589,6 @@ object EventStreams {
       k: Int, latenessUs: Long = 10L * 60 * 1000 * 1000): Dataset[PhraseCount] = {
     require(n > 0 && windowUs > 0 && capacity > 0 && k > 0)
     import docs.sparkSession.implicits._
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // the WATERMARKED ts column must survive into the stateful op (see
     // sessionizeClosing) — event-time timeout requires it
     val hits = docs
@@ -597,8 +596,8 @@ object EventStreams {
       .select(
         col("ts"),
         expr(s"unix_micros(window(ts, '$windowUs microseconds').start)").as("window_start_us"),
-        explode(expr(
-          s"shingle_pairs(split(lower(translate(text, '\u001f', ' ')), '\\\\s+'), $n)")).as("p"))
+        explode(shinglePairs(
+          split(lower(translate(col("text"), "\u001f", " ")), "\\s+"), n)).as("p"))
       .select(col("ts"), col("window_start_us"),
         translate(col("p.t"), "\u001f", " ").as("phrase"))
       .as[(java.sql.Timestamp, Long, String)]

@@ -16,7 +16,7 @@ import org.apache.spark.mllib.linalg.Vectors
   * Supported surface of the returned model: `clusterCenters` and
   * `transform` (both read only the center array — transform works
   * because the default featuresCol/predictionCol params plus the mllib
-  * parent are all it touches; plans.IvfCellLayout relies on it).
+  * parent are all it touches).
   * NOT supported: anything `fit` would have populated — `summary`,
   * `trainingCost` — the bridge never sets them; a consumer reaching for
   * them gets the upstream "No training summary available" failure. */

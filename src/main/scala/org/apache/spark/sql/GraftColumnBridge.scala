@@ -2,14 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** The sanctioned bridge between graft's custom Catalyst expressions and
-  * the public Column API. Constructing the Column DIRECTLY — instead of
-  * binding model state through the session's shared function registry —
-  * keeps concurrent plan-building on one SparkSession race-free: each
-  * expression closes over ITS model's centroids, so no named registry
-  * slot can be re-pointed by another thread mid-analysis. Lives in the
-  * spark.sql package only to reach the package-private
-  * [[org.apache.spark.sql.classic.ExpressionUtils]] converters.
+/** The bridge between graft's custom Catalyst expressions and the public
+  * Column API; the typed constructors in `graft.functions` build every
+  * kernel Column through it. Constructing the Column directly, with no
+  * named slot in the session's function registry, keeps concurrent
+  * plan-building on one SparkSession race-free: each expression closes
+  * over ITS model's state. Lives in the spark.sql package only to reach
+  * the package-private [[org.apache.spark.sql.classic.ExpressionUtils]]
+  * converters.
   */
 object GraftColumnBridge {
   /** Wrap a Catalyst expression as a Column. */

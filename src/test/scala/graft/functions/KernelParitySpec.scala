@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{GraftColumnBridge => B, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,7 +30,7 @@ class KernelParitySpec extends AnyFunSuite {
       "hello", "a", "naïve", "emoji😀mid", "😀",
       "x" * 40, "ünïcode", "é́combining")
     val rows = words.toDF("word").select(
-      B.column(CodePoints(B.expression(col("word")))).as("k"),
+      codePoints(col("word")).as("k"),
       expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))").as("s"),
       col("word")).collect()
     rows.foreach { r =>
@@ -38,7 +38,7 @@ class KernelParitySpec extends AnyFunSuite {
         s"code_points mismatch on '${r.getString(2)}'")
     }
     val empty = Seq("").toDF("word")
-      .select(B.column(CodePoints(B.expression(col("word")))).as("k")).head()
+      .select(codePoints(col("word")).as("k")).head()
     assert(empty.getSeq[String](0).isEmpty, "code_points('') must be empty")
   }
 
@@ -51,7 +51,7 @@ class KernelParitySpec extends AnyFunSuite {
     for ((bands, width) <- Seq((4, 16), (5, 12), (8, 4))) {
       val mask = (1L << width) - 1
       val rows = sigs.toDF("sig").select(
-        B.column(graft.functions.BandBits(B.expression(col("sig")), bands, width)).as("k"),
+        bandBits(col("sig"), bands, width).as("k"),
         expr(s"transform(sequence(0, ${bands - 1}), b -> shiftright(sig, b*$width) & $mask)")
           .as("s"),
         col("sig")).collect()
@@ -65,7 +65,7 @@ class KernelParitySpec extends AnyFunSuite {
   test("slice_xx_bands replays xxhash64(slice(sig, b*w+1, w)) bit-for-bit") {
     val sig = (1 to 64).map(i => i * 0x9e3779b97f4a7c15L + i).toArray
     val rows = Seq(Tuple1(sig)).toDF("sig").select(
-      B.column(graft.functions.SliceXxBands(B.expression(col("sig")), 16, 4)).as("k"),
+      sliceXxBands(col("sig"), 16, 4).as("k"),
       expr("transform(sequence(0, 15), b -> xxhash64(slice(sig, b*4+1, 4)))").as("s"))
       .collect()
     rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
@@ -76,8 +76,7 @@ class KernelParitySpec extends AnyFunSuite {
       (Seq("a", "b", "c"), 7L), (Seq("x"), 3L), (Seq[String](), 1L),
       (Seq("😀", "b", "😀", "b"), -5L), (Seq("dup", "dup"), 2L))
     val rows = data.toDF("syms", "freq").select(
-      B.column(graft.functions.AdjacentPairs(
-        B.expression(col("syms")), B.expression(col("freq").cast("bigint")))).as("k"),
+      adjacentPairs(col("syms"), col("freq").cast("bigint")).as("k"),
       expr("CASE WHEN size(syms) < 2 THEN array() " +
         "ELSE transform(sequence(1, size(syms) - 1), " +
         "i -> struct(element_at(syms, i) AS a, element_at(syms, i + 1) AS b, " +
@@ -91,7 +90,7 @@ class KernelParitySpec extends AnyFunSuite {
       Seq[String](), Seq("😀", "x", "😀"))
     for (n <- Seq(2, 3)) {
       val rows = toksData.toDF("tk").select(
-        B.column(graft.functions.NgramJoin(B.expression(col("tk")), n)).as("k"),
+        ngramJoin(col("tk"), n).as("k"),
         expr(s"CASE WHEN size(tk) < $n THEN array() " +
           s"ELSE transform(sequence(1, size(tk) - ${n - 1}), " +
           s"i -> concat_ws(' ', slice(tk, i, $n))) END").as("s")).collect()
@@ -99,7 +98,7 @@ class KernelParitySpec extends AnyFunSuite {
         s"ngram_join mismatch n=$n"))
     }
     val rows2 = toksData.toDF("toks").filter(size(col("toks")) >= 2).select(
-      B.column(graft.functions.BigramStructs(B.expression(col("toks")))).as("k"),
+      bigramStructs(col("toks")).as("k"),
       expr("transform(sequence(0, size(toks) - 2), " +
         "i -> struct(toks[i] AS w1, concat(toks[i], ' ', toks[i + 1]) AS bg))").as("s"))
       .collect()
@@ -112,7 +111,7 @@ class KernelParitySpec extends AnyFunSuite {
       (Seq(1L, 2L, 3L, 4L), Seq(1L, 9L, 3L, 8L)),
       (Seq(5L, 5L), Seq(5L, 5L)), (Seq(0L), Seq(1L)))
     sigPairs.toDF("a", "b").select(
-      B.column(graft.functions.AgreeCount(B.expression(col("a")), B.expression(col("b")))).as("k"),
+      agreeCount(col("a"), col("b")).as("k"),
       expr("aggregate(zip_with(a, b, (x, y) -> IF(x = y, 1, 0)), 0, (acc, v) -> acc + v)")
         .as("s")).collect()
       .foreach(r => assert(r.getInt(0) == r.getInt(1)))
@@ -126,11 +125,11 @@ class KernelParitySpec extends AnyFunSuite {
       val df0 = vecs.toDF("a", "b")
       val df = if (floatLeft) df0.withColumn("a", col("a").cast("array<float>")) else df0
       df.select(
-        B.column(graft.functions.L2SqDist(B.expression(col("a")), B.expression(col("b")))).as("kd"),
+        l2SqDist(col("a"), col("b")).as("kd"),
         expr("aggregate(zip_with(a, b, (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), 0D, (acc, v) -> acc + v)").as("sd"),
-        B.column(graft.functions.VecSub(B.expression(col("a")), B.expression(col("b")))).as("kv"),
+        vecSub(col("a"), col("b")).as("kv"),
         expr("zip_with(a, b, (x, y) -> CAST(x AS DOUBLE) - y)").as("sv"),
-        B.column(graft.functions.L2Norm(B.expression(col("a")))).as("kn"),
+        l2Norm(col("a")).as("kn"),
         sqrt(expr("aggregate(a, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")).as("sn"))
         .collect().foreach { r =>
           assert(JDouble(r.getDouble(0)) == JDouble(r.getDouble(1)), s"l2_sq_dist floatLeft=$floatLeft")
@@ -139,7 +138,7 @@ class KernelParitySpec extends AnyFunSuite {
         }
     }
     vecs.toDF("a", "b").withColumn("nrm", lit(3.7)).select(
-      B.column(graft.functions.VecDiv(B.expression(col("a")), B.expression(col("nrm")))).as("k"),
+      vecDiv(col("a"), col("nrm")).as("k"),
       expr("transform(a, x -> x / nrm)").as("s")).collect()
       .foreach(r => assert(r.getSeq[Double](0) == r.getSeq[Double](1)))
     // dense_from_map: absent buckets 0.0, present buckets verbatim
@@ -148,7 +147,7 @@ class KernelParitySpec extends AnyFunSuite {
     maps.map(_._1).toDF("entries").select(
       map_from_entries(col("entries")).as("m"))
       .select(
-        B.column(graft.functions.DenseFromMap(B.expression(col("m")), 4)).as("k"),
+        denseFromMap(col("m"), 4).as("k"),
         expr("transform(sequence(0, 3), i -> coalesce(element_at(m, i), 0D))").as("s"))
       .collect().foreach(r => assert(r.getSeq[Double](0) == r.getSeq[Double](1)))
   }
@@ -157,12 +156,12 @@ class KernelParitySpec extends AnyFunSuite {
     val fv = Seq(Seq(1.5f, -2.25f, 0.0f, 3.4e38f), Seq[Float]())
     for (s <- Seq(2.0f, 100.0f, 0.0f)) {
       fv.toDF("v").select(
-        B.column(graft.functions.VecScale(B.expression(col("v")), s)).as("k"),
+        vecScale(col("v"), s).as("k"),
         expr(s"transform(v, x -> x * CAST($s AS FLOAT))").as("sq")).collect()
         .foreach(r => assert(r.getSeq[Float](0) == r.getSeq[Float](1), s"float s=$s"))
       val dv = Seq(Seq(1.5, -2.25, 1e300))
       dv.toDF("v").select(
-        B.column(graft.functions.VecScale(B.expression(col("v")), s)).as("k"),
+        vecScale(col("v"), s).as("k"),
         expr(s"transform(v, x -> x * CAST($s AS FLOAT))").as("sq")).collect()
         .foreach(r => assert(r.getSeq[Double](0) == r.getSeq[Double](1), s"double s=$s"))
     }
@@ -175,13 +174,13 @@ class KernelParitySpec extends AnyFunSuite {
       Seq[String](), Seq("öf", "of", "AND", "and"), Seq("123", "a1", "Ω", "zZ"))
     val df = toksData.toDF("toks")
     df.select(
-      B.column(graft.functions.CountIn(B.expression(col("toks")), stops)).as("k"),
+      countIn(col("toks"), stops).as("k"),
       size(filter(col("toks"),
         t => array_contains(array(stops.map(lit): _*), t))).as("s"),
-      B.column(graft.functions.CountPresent(B.expression(col("toks")), stops)).as("kp"),
+      countPresent(col("toks"), stops).as("kp"),
       size(filter(array(stops.map(lit): _*),
         w => array_contains(col("toks"), w))).as("sp"),
-      B.column(graft.functions.CountAlphaTokens(B.expression(col("toks")))).as("ka"),
+      countAlphaTokens(col("toks")).as("ka"),
       expr("size(filter(toks, t -> t rlike '[a-zA-Z]'))").as("sa")).collect()
       .foreach { r =>
         assert(r.getInt(0) == r.getInt(1), "count_in")
@@ -209,7 +208,7 @@ class KernelParitySpec extends AnyFunSuite {
             s"ELSE transform(sequence(1, size(tk) - ${k - 1}), i -> " +
             s"${h(s"concat_ws(char(31), slice(tk, i, $k))")}) END"))
         .select(
-          B.column(WindowMins(GramHashes(B.expression(col("tk")), k, useSha), w)).as("kk"),
+          windowMins(gramHashes(col("tk"), k, useSha), w).as("kk"),
           expr(
             s"CASE WHEN size(hs) <= $w THEN array(array_min(hs)) " +
               s"ELSE transform(sequence(1, size(hs) - ${w - 1}), j -> array_min(slice(hs, j, $w))) END")

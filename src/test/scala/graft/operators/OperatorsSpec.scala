@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.{SparkEntry, Tables}
-import graft.functions.{GraftFunctions, VectorFunctions}
+import graft.functions.{cosineSim, mergePair, minhashSig, rollingFingerprint, shingleHashes,
+  shinglePairs, simhash128, simhash64}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -133,7 +134,6 @@ class OperatorsSpec extends AnyFunSuite {
     // comes from a first-match-band filter plus a cross/intra union, not
     // a distinct()
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     val vocab = (0 until 50).map(i => s"w$i")
     val originals = (0 until 12).map { i =>
@@ -152,7 +152,7 @@ class OperatorsSpec extends AnyFunSuite {
 
     // brute force: all C(n,2) sketch pairs within Hamming 3
     val sk = Dedup.shingled(corpus)
-      .withColumn("sim", expr("simhash64(toks)"))
+      .withColumn("sim", simhash64(col("toks")))
       .select(col("doc_id"), col("sim"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val expected = (for {
@@ -169,7 +169,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(found128.size == found128.distinct.size,
       "simhashPairs128 emitted a duplicate pair")
     val sk2 = Dedup.shingled(corpus)
-      .withColumn("s2", expr("simhash128(toks)"))
+      .withColumn("s2", simhash128(col("toks")))
       .select(col("doc_id"), col("s2").getItem(0), col("s2").getItem(1))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val expected128 = (for {
@@ -192,14 +192,13 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("simhash128 kernel: lo lane == simhash64, decorrelated hi, bands cover the sketch") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val docs = Seq(
       (1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "a completely different sentence with other words entirely"),
       (3L, "the quick brown fox jumps over the lazy dog"),
       (4L, "")).toDF("doc_id", "text")
     val all = docs.withColumn("toks", split(lower(col("text")), "\\s+"))
-      .select(col("doc_id"), expr("simhash128(toks)").as("s2"), expr("simhash64(toks)").as("s1"))
+      .select(col("doc_id"), simhash128(col("toks")).as("s2"), simhash64(col("toks")).as("s1"))
       .collect().map(r => (r.getLong(0), (r.getSeq[Long](1)(0), r.getSeq[Long](1)(1)), r.getLong(2)))
     all.foreach { case (id, (hi, lo), s1) =>
       // lo lane is the SAME per-bit vote as simhash64 (one shared base
@@ -299,22 +298,16 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("merge_pair kernel: greedy left-to-right, equal-symbol runs merge non-overlapping") {
     import spark.implicits._
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "test_merge_pair",
-      es => graft.functions.MergePair(es.head, "x", "x"), "built-in")
     val r = Seq(Seq("x", "x", "x"), Seq("a", "x", "x", "b"), Seq("x"), Seq("x", "x", "x", "x"))
-      .toDF("syms").selectExpr("test_merge_pair(syms) AS m")
+      .toDF("syms").select(mergePair(col("syms"), "x", "x").as("m"))
       .collect().map(_.getSeq[String](0))
     assert(r(0) == Seq("xx", "x"))   // run of 3: first two merge, third survives
     assert(r(1) == Seq("a", "xx", "b"))
     assert(r(2) == Seq("x"))
     assert(r(3) == Seq("xx", "xx"))  // run of 4: two disjoint merges
     // a merged token never re-matches as the LEFT side in the same round
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "test_merge_pair2",
-      es => graft.functions.MergePair(es.head, "xx", "x"), "built-in")
     val r2 = Seq(Seq("x", "x", "x")).toDF("syms")
-      .selectExpr("test_merge_pair2(syms) AS m").collect().map(_.getSeq[String](0))
+      .select(mergePair(col("syms"), "xx", "x").as("m")).collect().map(_.getSeq[String](0))
     assert(r2(0) == Seq("x", "x", "x")) // no literal "xx" symbol present
   }
 
@@ -339,7 +332,6 @@ class OperatorsSpec extends AnyFunSuite {
     // a corpus holding clones, near-edits, and uniques, and require
     // identical result sets.
     import spark.implicits._
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     val vocab = (0 until 40).map(i => s"w$i")
     val originals = (0 until 10).map { _ =>
@@ -369,7 +361,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rows(TextAnalysis.lmScore(corpus, perDoc)) ==
       rows(TextAnalysis.lmScore(corpus, sketch)), "lmScore modes disagree")
 
-    VectorFunctions.register(spark)
     val vecs = ((0 until 6).map { i =>
       (i.toLong, Array.fill(16)(rnd.nextFloat() * 2f - 1f))
     } ++ (0 until 3).map { i =>
@@ -718,16 +709,17 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("sketch expressions are deterministic and discriminative") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT rolling_fingerprint('the quick brown fox jumps over the lazy dog', 16) AS a, " +
-        "rolling_fingerprint('the quick brown fox jumps over the lazy dog', 16) AS b, " +
-        "rolling_fingerprint('a completely different document body here', 16) AS c, " +
-        "minhash_sig(array('x y z', 'y z w'), 8) AS s1, " +
-        "minhash_sig(array('x y z', 'y z w'), 8) AS s2, " +
-        "simhash64(array('alpha','beta','gamma')) AS h1, " +
-        "simhash64(array('alpha','beta','delta')) AS h2, " +
-        "size(shingle_hashes(array('a','b','c','d'), 3)) AS nsh").head()
+    def words(ws: String*) = array(ws.map(lit): _*)
+    val fox = lit("the quick brown fox jumps over the lazy dog")
+    val r = spark.range(1).select(
+      rollingFingerprint(fox, 16).as("a"),
+      rollingFingerprint(fox, 16).as("b"),
+      rollingFingerprint(lit("a completely different document body here"), 16).as("c"),
+      minhashSig(words("x y z", "y z w"), 8).as("s1"),
+      minhashSig(words("x y z", "y z w"), 8).as("s2"),
+      simhash64(words("alpha", "beta", "gamma")).as("h1"),
+      simhash64(words("alpha", "beta", "delta")).as("h2"),
+      size(shingleHashes(words("a", "b", "c", "d"), 3)).as("nsh")).head()
     assert(r.getLong(0) == r.getLong(1) && r.getLong(0) != r.getLong(2))
     assert(r.getSeq[Long](3) == r.getSeq[Long](4))
     assert(r.getLong(5) != r.getLong(6))
@@ -892,7 +884,6 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("semDedup prunes higher-id near-dups within a cell only") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     // cell 0: v2 is near v1 (cos .9987), v3 orthogonal, v4 a clone of v1;
     // v5 clones v1 too but sits in ANOTHER cell — pruning is cell-scoped
     val assigned = Seq(
@@ -1044,10 +1035,8 @@ class OperatorsSpec extends AnyFunSuite {
     // boundary 3-grams (epsilonX click here) differ per doc (df = 1)
     assert(got == Map("click here to" -> 10L, "here to subscribe" -> 10L), s"got $got")
     // shingle_pairs hashes agree with shingle_hashes on the same input
-    graft.functions.GraftFunctions.register(spark)
-    val both = corpus.select(
-      expr("shingle_pairs(split(lower(text), '\\\\s+'), 3)").as("p"),
-      expr("shingle_hashes(split(lower(text), '\\\\s+'), 3)").as("h"))
+    val toks = split(lower(col("text")), "\\s+")
+    val both = corpus.select(shinglePairs(toks, 3).as("p"), shingleHashes(toks, 3).as("h"))
       .collect()
     both.foreach { r =>
       val ph = r.getSeq[org.apache.spark.sql.Row](0).map(_.getLong(0))
@@ -1179,7 +1168,6 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("hashedEmbedding: unit norms, clones map identically, dense form composes with cosine") {
     import spark.implicits._
-    VectorFunctions.register(spark)
     val docs = Seq(
       (1L, "alpha beta gamma delta"),
       (2L, "alpha beta gamma delta"),   // clone — must embed identically
@@ -1199,7 +1187,7 @@ class OperatorsSpec extends AnyFunSuite {
     val cos = vecs.as("a").crossJoin(vecs.as("b"))
       .filter(col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id"), col("b.vec_id"),
-        expr("cosine_sim(a.embedding, b.embedding)").as("c"))
+        cosineSim(col("a.embedding"), col("b.embedding")).as("c"))
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(math.abs(cos((1L, 2L)) - 1.0) < 1e-9)
     assert(cos((1L, 3L)) < 0.99 && cos((2L, 3L)) < 0.99)

@@ -225,12 +225,7 @@ class PackingSpec extends AnyFunSuite {
       .eval(null).asInstanceOf[Long] == 0)
     // codegen path: expression evaluates identically inside a projection
     val viaPlan = spark.range(-10, 110).toDF("v")
-      .withColumn("b", {
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          "test_range_bucket",
-          es => graft.functions.RangeBucket(es.head, bounds), "built-in")
-        expr("test_range_bucket(v)")
-      }).collect()
+      .withColumn("b", graft.functions.rangeBucket(col("v"), bounds)).collect()
     viaPlan.foreach(r => assert(r.getLong(1) == bucket(r.getLong(0))))
   }
 

@@ -361,7 +361,6 @@ class PlanQualitySpec extends AnyFunSuite {
     // exchanges must stay 2x8-byte sketch + band scalars; text or the
     // token array on the wire would undo the whole point
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val corpus = (0 until 60).map(i => (i.toLong, s"text ${i % 9} one two three four"))
       .toDF("doc_id", "text")
     val p = graft.operators.Dedup.simhashPairs128(corpus, 3, Some(0.0))
@@ -565,28 +564,6 @@ class PlanQualitySpec extends AnyFunSuite {
       "expected the doc filter pushed into exactly one scan")
     assert(p.split("ReadSchema: struct<doc_id:bigint,text:string>").length >= 3,
       "expected a second, unfiltered corpus scan for idf")
-  }
-
-  test("IVF cell layout probes with dynamic partition pruning and matches the in-memory plan") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-layout").toString
-    IvfCellLayout.build(spark, dir, path)
-    val df = IvfCellLayout.topK(spark, path, 3, 4)
-    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    // in-memory equi-join IVF with the SAME deterministic quantizer (the
-    // driver-visible s03 emits a planted-clone verdict, not the raw top-k)
-    val base = Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
-    val queries = base.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val inMemory = graft.operators.Similarity
-      .ivfTopK(base, queries, graft.operators.Similarity.trainQuantizer(base), 3, 4)
-      .collect()
-      .map(r => (r.getLong(r.fieldIndex("query_id")), r.getLong(r.fieldIndex("vec_id")),
-        r.getInt(r.fieldIndex("rank")))).toSet
-    assert(rows == inMemory, "partitioned probe must return the in-memory IVF answer")
-    // the base scan must carry a runtime cell filter — unprobed cell
-    // directories are never read
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"), "cell join did not trigger dynamic partition pruning")
   }
 
   test("decontamination broadcasts the benchmark side — the corpus never shuffles") {

@@ -72,9 +72,8 @@ class EventStreamsSpec extends AnyFunSuite {
 
     // batch replay of the same rule: per band-0 bucket, admit in doc_id
     // order unless within Hamming 3 of an already-admitted sketch
-    graft.functions.GraftFunctions.register(spark)
     val sketched = Tables.load(spark, dir, "documents")
-      .withColumn("sim", expr("simhash64(split(lower(text), '\\\\s+'))"))
+      .withColumn("sim", graft.functions.simhash64(split(lower(col("text")), "\\s+")))
       .select(col("doc_id"), col("sim"), expr("sim & 65535").as("bucket"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val expected = sketched.groupBy(_._3).values.flatMap { group =>
