@@ -2,8 +2,6 @@ package graft
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"queries":{...},"canary":[min,max],
@@ -70,20 +68,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the generated-class cache defaults to 100 entries; 80+ interleaved
-      // queries × several codegen units each cycle it every round, so every
-      // iteration pays full Janino recompilation (~+0.2-0.4 s PER QUERY,
-      // uniformly — measured when interleaving replaced back-to-back
-      // repeats). Size it to hold the whole board.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.forMain(defaultCores = 4)
     // ERROR, not WARN: per-query Spark WARNs (e.g. WindowExec's
     // single-partition warning) flood the harness's bounded output tail
     // around the one JSON line that matters.

@@ -3,6 +3,8 @@ package graft.engine
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import graft.GraftSession.deleteRecursively
+
 /** File-backed catalog over a warehouse directory.
   *
   * Layout: `<wh>/<db>/<schema>/<table>/` holding `descriptor.json`, a
@@ -533,11 +535,5 @@ class Catalog(val warehouse: String,
     val p = tablePath(db, schema, table).resolve(s".staging-${java.util.UUID.randomUUID()}")
     Files.createDirectories(p)
     p
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      listDir(p).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftSession.withScratch
 import graft.Tables
 import graft.functions.{agreeCount, bandBits, chunkHashes, cosineSim, dropChunks, gramHashes,
   hyperplaneSig, minhashSig, shingleHashes, simhash128, simhash64, sliceXxBands, spanHashes,
@@ -1846,11 +1847,8 @@ object Dedup {
         // statement itself is spec-gated in SqlEngineSpec)
         cachedWinnowIndex(s, dir).select(col("doc_id"), col("fp"))
           .createOrReplaceTempView("graft_d22_widx_src")
-        val wh = java.nio.file.Files.createTempDirectory("graft-d22-wh-").toString
-        try {
-          val e = new graft.engine.SqlEngine(s, new graft.engine.Catalog(wh),
-            graft.engine.SqlContext("d22db", "user1"))
-          e.execute("CREATE DATABASE d22db")
+        withScratch("graft-d22-wh-") { case Seq(wh) =>
+          val e = Parity.engine(s, wh, "d22db")
           e.execute("CREATE TABLE inc (doc_id bigint PRIMARY KEY, text text)")
           e.execute("INSERT INTO inc SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0 " +
             "UNION ALL SELECT doc_id + 1000000, text FROM documents " +
@@ -1861,11 +1859,6 @@ object Dedup {
           e.execute("INSERT INTO widx SELECT doc_id, fp FROM graft_d22_widx_src")
           e.execute("SELECT doc_id FROM graft_winnow_admit(inc, widx, 4, 4, 2) ORDER BY doc_id")
             .localCheckpoint()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(wh))
-          val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-          all.foreach(java.nio.file.Files.deleteIfExists(_))
         }
       })
   )

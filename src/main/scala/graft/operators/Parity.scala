@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.nio.file.Files
+import graft.GraftSession.withScratch
 import graft.Tables
 import graft.engine.{Catalog, SqlContext, SqlEngine}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -10,16 +10,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pipeline incl. serial/constraints (A2), table scan (A1), and session
   * UDFs (A7). Each query stands up a throwaway warehouse, pushes testdata
   * through the PG statement engine, and reads it back — the DuckDB oracle
-  * sees only the equivalent relational result.
+  * sees only the equivalent relational result. The result is
+  * checkpointed before the warehouse is deleted.
   */
 object Parity {
 
-  private def engine(s: SparkSession, db: String): SqlEngine = {
-    val wh = Files.createTempDirectory("graft-parity-wh-").toString
+  /** A statement engine connected to a new database `db` in warehouse
+    * `wh` — the throwaway engine of every row that drives SQL statements. */
+  private[operators] def engine(s: SparkSession, wh: String, db: String): SqlEngine = {
     val e = new SqlEngine(s, new Catalog(wh), SqlContext(db, "user1"))
     e.execute(s"CREATE DATABASE $db")
     e
   }
+
+  /** Runs `body` on a throwaway engine (database `db`) and materializes
+    * its result before the warehouse is deleted. */
+  private def scratchEngine(s: SparkSession, db: String)(body: SqlEngine => DataFrame): DataFrame =
+    withScratch("graft-parity-wh-") { case Seq(wh) => body(engine(s, wh, db)).localCheckpoint() }
 
   val queries: Seq[NamedQuery] = Seq(
     // A1+A2+A3+A4: create table, INSERT .. SELECT from parquet, scan back.
@@ -33,18 +40,19 @@ object Parity {
           "ORDER BY orderkey, linenumber, quantity, returnflag"),
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val e = engine(s, "g1")
-        // the synthetic lineitem has duplicate (orderkey, linenumber) pairs,
-        // so the row identity is a bigserial surrogate key
-        e.execute(
-          "CREATE TABLE li (id bigserial PRIMARY KEY, orderkey bigint, linenumber int, " +
-            "quantity double precision, returnflag text)")
-        e.execute(
-          "INSERT INTO li (orderkey, linenumber, quantity, returnflag) " +
-            "SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem")
-        e.execute(
-          "SELECT orderkey, linenumber, quantity, returnflag FROM li " +
-            "ORDER BY orderkey, linenumber, quantity, returnflag")
+        scratchEngine(s, "g1") { e =>
+          // the synthetic lineitem has duplicate (orderkey, linenumber) pairs,
+          // so the row identity is a bigserial surrogate key
+          e.execute(
+            "CREATE TABLE li (id bigserial PRIMARY KEY, orderkey bigint, linenumber int, " +
+              "quantity double precision, returnflag text)")
+          e.execute(
+            "INSERT INTO li (orderkey, linenumber, quantity, returnflag) " +
+              "SELECT l_orderkey, l_linenumber, l_quantity, l_returnflag FROM lineitem")
+          e.execute(
+            "SELECT orderkey, linenumber, quantity, returnflag FROM li " +
+              "ORDER BY orderkey, linenumber, quantity, returnflag")
+        }
       }),
 
     // A2 serial prefill: ids 1..n assigned in input order over a sorted
@@ -56,10 +64,11 @@ object Parity {
           "FROM nation ORDER BY id"),
       (s, dir) => {
         Tables.registerAll(s, dir)
-        val e = engine(s, "g2")
-        e.execute("CREATE TABLE nations (id serial PRIMARY KEY, name text)")
-        e.execute("INSERT INTO nations (name) SELECT n_name FROM nation ORDER BY n_nationkey")
-        e.execute("SELECT id, name FROM nations ORDER BY id")
+        scratchEngine(s, "g2") { e =>
+          e.execute("CREATE TABLE nations (id serial PRIMARY KEY, name text)")
+          e.execute("INSERT INTO nations (name) SELECT n_name FROM nation ORDER BY n_nationkey")
+          e.execute("SELECT id, name FROM nations ORDER BY id")
+        }
       }),
 
     // A1 time travel oracle-gated (r16 VERDICT task 3 — the last
@@ -88,29 +97,30 @@ object Parity {
       (s, dir) => {
         import org.apache.spark.sql.functions.{col, lit}
         Tables.registerAll(s, dir)
-        val e = engine(s, "g4")
-        e.execute("CREATE TABLE nv (nationkey bigint PRIMARY KEY, name text)")
-        e.execute("INSERT INTO nv (nationkey, name) " +
-          "SELECT n_nationkey, n_name FROM nation WHERE n_nationkey < 8") // v1
-        e.execute("INSERT INTO nv (nationkey, name) SELECT n_nationkey, n_name " +
-          "FROM nation WHERE n_nationkey >= 8 AND n_nationkey < 16") // v2
-        e.execute("INSERT INTO nv (nationkey, name) " +
-          "SELECT n_nationkey, n_name FROM nation WHERE n_nationkey >= 16") // v3
-        def tagged(ver: Int, sql: String): DataFrame =
-          e.execute(sql).select(lit(ver).as("ver"), col("nationkey"), col("name"))
-        // snapshots v1..v3, the (1,3] change feed, and the at-time head
-        // (2100-01-01 UTC: newest version published ≤ then = v3)
-        tagged(1, "SELECT nationkey, name FROM graft_at_version(nv, 1)")
-          .unionByName(tagged(2, "SELECT nationkey, name FROM graft_at_version(nv, 2)"))
-          .unionByName(tagged(3, "SELECT nationkey, name FROM graft_at_version(nv, 3)"))
-          .unionByName(tagged(4, "SELECT nationkey, name FROM graft_changes(nv, 1, 2)"))
-          .unionByName(tagged(5, "SELECT nationkey, name FROM graft_at_time(nv, 4102444800000)"))
-          // graft_versions' deterministic projection: the version
-          // numbers (1..3 — one per INSERT commit); publish_millis and
-          // n_parts are wall-clock/layout metadata, not replayable
-          .unionByName(tagged(6,
-            "SELECT version AS nationkey, 'v' AS name FROM graft_versions(nv)"))
-          .orderBy(col("ver"), col("nationkey"))
+        scratchEngine(s, "g4") { e =>
+          e.execute("CREATE TABLE nv (nationkey bigint PRIMARY KEY, name text)")
+          e.execute("INSERT INTO nv (nationkey, name) " +
+            "SELECT n_nationkey, n_name FROM nation WHERE n_nationkey < 8") // v1
+          e.execute("INSERT INTO nv (nationkey, name) SELECT n_nationkey, n_name " +
+            "FROM nation WHERE n_nationkey >= 8 AND n_nationkey < 16") // v2
+          e.execute("INSERT INTO nv (nationkey, name) " +
+            "SELECT n_nationkey, n_name FROM nation WHERE n_nationkey >= 16") // v3
+          def tagged(ver: Int, sql: String): DataFrame =
+            e.execute(sql).select(lit(ver).as("ver"), col("nationkey"), col("name"))
+          // snapshots v1..v3, the (1,3] change feed, and the at-time head
+          // (2100-01-01 UTC: newest version published ≤ then = v3)
+          tagged(1, "SELECT nationkey, name FROM graft_at_version(nv, 1)")
+            .unionByName(tagged(2, "SELECT nationkey, name FROM graft_at_version(nv, 2)"))
+            .unionByName(tagged(3, "SELECT nationkey, name FROM graft_at_version(nv, 3)"))
+            .unionByName(tagged(4, "SELECT nationkey, name FROM graft_changes(nv, 1, 2)"))
+            .unionByName(tagged(5, "SELECT nationkey, name FROM graft_at_time(nv, 4102444800000)"))
+            // graft_versions' deterministic projection: the version
+            // numbers (1..3 — one per INSERT commit); publish_millis and
+            // n_parts are wall-clock/layout metadata, not replayable
+            .unionByName(tagged(6,
+              "SELECT version AS nationkey, 'v' AS name FROM graft_versions(nv)"))
+            .orderBy(col("ver"), col("nationkey"))
+        }
       }),
 
     // A7 session UDFs bound to connection context, including the aliases
@@ -124,11 +134,12 @@ object Parity {
           "0 AS inet_client_port, 'user1' AS current_user, 'user1' AS current_role, " +
           "'user1' AS \"user\", 'USER1' AS shouted_user"),
       (s, dir) => {
-        val e = engine(s, "g3")
-        e.execute(
-          "SELECT current_catalog, current_database() AS database, current_schema(), " +
-            "inet_client_port(), current_user, current_role, user, " +
-            "upper(session_user) AS shouted_user")
+        scratchEngine(s, "g3") { e =>
+          e.execute(
+            "SELECT current_catalog, current_database() AS database, current_schema(), " +
+              "inet_client_port(), current_user, current_role, user, " +
+              "upper(session_user) AS shouted_user")
+        }
       })
   )
 }

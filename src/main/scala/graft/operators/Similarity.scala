@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.GraftSession.withScratch
 import graft.Tables
 import graft.functions.{bandBits, cosineSim, denseFromMap, hyperplaneSig, l2Norm, l2SqDist,
   nearestCentroid, pqAdc, pqDistTable, pqEncode, vecScale, vecSub}
@@ -1850,8 +1851,7 @@ object Similarity {
         val corpus = withClones(b, q)
         val km = cachedModel(s, dir)
         val pq = cachedIvfPqModel(s, dir)
-        val path = java.nio.file.Files.createTempDirectory("graft_s17_index_").toString
-        try {
+        withScratch("graft_s17_index_") { case Seq(path) =>
           ivfPqIndex(corpus, km, pq)
             .write.mode("overwrite").partitionBy("cell").parquet(path)
           val persisted = ivfPqTopKFromIndex(s.read.parquet(path), q, km, pq, 5)
@@ -1874,11 +1874,6 @@ object Similarity {
               col("nd").isNull.cast("int").as("same_as_inline_ok"))
             .orderBy(col("query_id"))
             .localCheckpoint()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-          val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-          all.foreach(java.nio.file.Files.deleteIfExists(_))
         }
       }),
 
@@ -1909,12 +1904,8 @@ object Similarity {
         corpus.createOrReplaceTempView("graft_s18_corpus")
         q.select(col("query_id").as("vec_id"), col("q_emb").as("embedding"))
           .createOrReplaceTempView("graft_s18_queries")
-        val wh = java.nio.file.Files.createTempDirectory("graft-s18-wh-").toString
-        val path = java.nio.file.Files.createTempDirectory("graft_s18_index_").toString
-        try {
-          val e = new graft.engine.SqlEngine(s, new graft.engine.Catalog(wh),
-            graft.engine.SqlContext("s18db", "user1"))
-          e.execute("CREATE DATABASE s18db")
+        withScratch("graft-s18-wh-", "graft_s18_index_") { case Seq(wh, path) =>
+          val e = Parity.engine(s, wh, "s18db")
           // statement 1: train + encode + persist (eager artifact write)
           e.execute(s"SELECT n_vectors FROM graft_ivfpq_build(" +
             s"'graft_s18_corpus', '$path', 16, 16, 64)").collect()
@@ -1928,13 +1919,6 @@ object Similarity {
                 .as("sql_top1_ok"))
             .orderBy(col("query_id"))
             .localCheckpoint()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(path, wh).foreach { p =>
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-            val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-            all.foreach(java.nio.file.Files.deleteIfExists(_))
-          }
         }
       }),
 
@@ -1972,12 +1956,8 @@ object Similarity {
           .localCheckpoint()
         hist.createOrReplaceTempView("graft_s19_hist")
         inc.createOrReplaceTempView("graft_s19_inc")
-        val wh = java.nio.file.Files.createTempDirectory("graft-s19-wh-").toString
-        val path = java.nio.file.Files.createTempDirectory("graft_s19_index_").toString
-        try {
-          val e = new graft.engine.SqlEngine(s, new graft.engine.Catalog(wh),
-            graft.engine.SqlContext("s19db", "user1"))
-          e.execute("CREATE DATABASE s19db")
+        withScratch("graft-s19-wh-", "graft_s19_index_") { case Seq(wh, path) =>
+          val e = Parity.engine(s, wh, "s19db")
           // statement 1: build + persist the admission artifact (eager)
           e.execute(s"SELECT n_vectors FROM graft_embed_build(" +
             s"'graft_s19_hist', '$path', 8)").collect()
@@ -1985,13 +1965,6 @@ object Similarity {
           e.execute(s"SELECT vec_id, cell FROM graft_embed_admit_index(" +
             s"'$path', 'graft_s19_inc', 0.9) ORDER BY vec_id")
             .localCheckpoint() // frees the artifact files below
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(path, wh).foreach { p =>
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-            val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-            all.foreach(java.nio.file.Files.deleteIfExists(_))
-          }
         }
       }),
 
@@ -2036,12 +2009,8 @@ object Similarity {
           .createOrReplaceTempView("graft_s20_inc")
         q.select(col("query_id").as("vec_id"), col("q_emb").as("embedding"))
           .createOrReplaceTempView("graft_s20_queries")
-        val wh = java.nio.file.Files.createTempDirectory("graft-s20-wh-").toString
-        val path = java.nio.file.Files.createTempDirectory("graft_s20_index_").toString
-        try {
-          val e = new graft.engine.SqlEngine(s, new graft.engine.Catalog(wh),
-            graft.engine.SqlContext("s20db", "user1"))
-          e.execute("CREATE DATABASE s20db")
+        withScratch("graft-s20-wh-", "graft_s20_index_") { case Seq(wh, path) =>
+          val e = Parity.engine(s, wh, "s20db")
           // (8, 8, 32): the smallest model that keeps the planted-clone
           // gate deterministic (32^8 code combinations — an accidental
           // full-code tie is ~0 at gate scale) — the lifecycle row gates
@@ -2072,13 +2041,6 @@ object Similarity {
               lit(if (compactOk) 1 else 0).as("compact_ok"))
             .orderBy(col("query_id"))
             .localCheckpoint() // frees the artifact files below
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(path, wh).foreach { p =>
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-            val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-            all.foreach(java.nio.file.Files.deleteIfExists(_))
-          }
         }
       }),
 
@@ -2116,12 +2078,8 @@ object Similarity {
         hist.createOrReplaceTempView("graft_s21_hist")
         inc1.createOrReplaceTempView("graft_s21_inc1")
         inc2.createOrReplaceTempView("graft_s21_inc2")
-        val wh = java.nio.file.Files.createTempDirectory("graft-s21-wh-").toString
-        val path = java.nio.file.Files.createTempDirectory("graft_s21_index_").toString
-        try {
-          val e = new graft.engine.SqlEngine(s, new graft.engine.Catalog(wh),
-            graft.engine.SqlContext("s21db", "user1"))
-          e.execute("CREATE DATABASE s21db")
+        withScratch("graft-s21-wh-", "graft_s21_index_") { case Seq(wh, path) =>
+          val e = Parity.engine(s, wh, "s21db")
           e.execute(s"SELECT n_vectors FROM graft_embed_build(" +
             s"'graft_s21_hist', '$path', 8)").collect()
           // statement 2: admit batch 1 AND append its admissions (the
@@ -2138,13 +2096,6 @@ object Similarity {
           e.execute(s"SELECT vec_id, cell FROM graft_embed_admit_index(" +
             s"'$path', 'graft_s21_inc2', 0.9) ORDER BY vec_id")
             .localCheckpoint() // frees the artifact files below
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(path, wh).foreach { p =>
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-            val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-            all.foreach(java.nio.file.Files.deleteIfExists(_))
-          }
         }
       })
   )

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.GraftSession.{deleteRecursively, withScratch}
 import graft.functions.{shinglePairs, simhash64}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -83,12 +84,7 @@ object EventStreams {
           n.length > prefix.length + suffix.length &&
           n.substring(prefix.length, n.length - suffix.length).matches("[df]\\d+")
       }
-      .foreach { old =>
-        val links = java.nio.file.Files.list(old)
-        try links.iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-        finally links.close()
-        java.nio.file.Files.deleteIfExists(old)
-      }
+      .foreach(deleteRecursively)
     finally siblings.close()
     java.nio.file.Files.createDirectories(staged)
     // check-then-create races with a concurrent suite staging the same
@@ -724,9 +720,7 @@ object EventStreams {
           "round(sum(value),2) AS total FROM events " +
           "GROUP BY 1, 2 ORDER BY day, event_type"),
       (s, dir) => {
-        val spool = java.nio.file.Files.createTempDirectory(
-          s"graft_e01_spool_${sinkSeq.incrementAndGet()}_").toString
-        try {
+        withScratch(s"graft_e01_spool_${sinkSeq.incrementAndGet()}_") { case Seq(spool) =>
           withStatePartitions(s, 8) { sp =>
             // dropDuplicates emits rows on ARRIVAL; the automatic no-data
             // micro-batch after the watermark advances only EVICTS state
@@ -747,14 +741,6 @@ object EventStreams {
             .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
             .orderBy(col("day"), col("event_type"))
             .localCheckpoint()
-        } finally {
-          // reclaim the spool even when the stream throws (retries would
-          // otherwise accumulate micro-batch files); walk() is a Stream
-          // and must close
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(spool))
-          val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-          all.foreach(java.nio.file.Files.deleteIfExists(_))
         }
       }),
 
@@ -786,9 +772,7 @@ object EventStreams {
           "FROM g, wm WHERE end_us + 1800000000 + 1000000 <= wm_us " +
           "ORDER BY user_id, start_us"),
       (s, dir) => {
-        val spool = java.nio.file.Files.createTempDirectory(
-          s"graft_e02_spool_${sinkSeq.incrementAndGet()}_").toString
-        try {
+        withScratch(s"graft_e02_spool_${sinkSeq.incrementAndGet()}_") { case Seq(spool) =>
           withStatePartitions(s, 8) { sp =>
             val q = sessionizeClosing(readEvents(sp, dir)).toDF()
               .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
@@ -811,11 +795,6 @@ object EventStreams {
             .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
             .orderBy(col("user_id"), col("start_us"))
             .localCheckpoint()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(spool))
-          val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-          all.foreach(java.nio.file.Files.deleteIfExists(_))
         }
       }),
 
@@ -834,9 +813,7 @@ object EventStreams {
           "FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey " +
           "GROUP BY 1 ORDER BY segment NULLS FIRST"),
       (s, dir) => {
-        val spool = java.nio.file.Files.createTempDirectory(
-          s"graft_e03_spool_${sinkSeq.incrementAndGet()}_").toString
-        try {
+        withScratch(s"graft_e03_spool_${sinkSeq.incrementAndGet()}_") { case Seq(spool) =>
           withStatePartitions(s, 8) { sp =>
             val q = enriched(readEvents(sp, dir), graft.Tables.load(sp, dir, "customer"))
               .writeStream.outputMode("complete")
@@ -849,11 +826,6 @@ object EventStreams {
             .select(col("segment"), col("n"), col("total"))
             .orderBy(col("segment").asc_nulls_first)
             .localCheckpoint()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(spool))
-          val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-          all.foreach(java.nio.file.Files.deleteIfExists(_))
         }
       }),
 
@@ -876,9 +848,7 @@ object EventStreams {
           "AND epoch_us(c.ts) >= epoch_us(p.ts) - 3600000000 " +
           "ORDER BY p.event_id, click_us"),
       (s, dir) => {
-        val spool = java.nio.file.Files.createTempDirectory(
-          s"graft_e04_spool_${sinkSeq.incrementAndGet()}_").toString
-        try {
+        withScratch(s"graft_e04_spool_${sinkSeq.incrementAndGet()}_") { case Seq(spool) =>
           withStatePartitions(s, 8) { sp =>
             // INNER stream-stream joins emit on arrival; the engine's
             // automatic no-data micro-batch after the watermark advances
@@ -902,11 +872,6 @@ object EventStreams {
               col("click_value"))
             .orderBy(col("event_id"), col("click_us"))
             .localCheckpoint()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(spool))
-          val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-          all.foreach(java.nio.file.Files.deleteIfExists(_))
         }
       }),
 
@@ -936,9 +901,7 @@ object EventStreams {
           "FROM rk, mx WHERE r <= 5 AND window_start_us + 3600000000 + 1000000 <= max_us - 600000000 " +
           "ORDER BY window_start_us, phrase"),
       (s, dir) => {
-        val spool = java.nio.file.Files.createTempDirectory(
-          s"graft_e05_spool_${sinkSeq.incrementAndGet()}_").toString
-        try {
+        withScratch(s"graft_e05_spool_${sinkSeq.incrementAndGet()}_") { case Seq(spool) =>
           withStatePartitions(s, 8) { sp =>
             // +1 window of epoch offset: a row whose event time equals
             // the INITIAL watermark (epoch 0) is filtered by the stateful
@@ -965,11 +928,6 @@ object EventStreams {
             .select(col("window_start_us"), col("phrase"), col("count"), col("max_error"))
             .orderBy(col("window_start_us"), col("phrase"))
             .localCheckpoint()
-        } finally {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(spool))
-          val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-          all.foreach(java.nio.file.Files.deleteIfExists(_))
         }
       }),
 
@@ -1011,13 +969,8 @@ object EventStreams {
         val batch2 = b.filter(col("vec_id") >= 300)
           .unionByName(clone(200L, 3000000L)).unionByName(clone(100L, 4000000L))
         val tag = sinkSeq.incrementAndGet()
-        val srcDir = java.nio.file.Files
-          .createTempDirectory(s"graft_e06_src_${tag}_").toString
-        val spool = java.nio.file.Files
-          .createTempDirectory(s"graft_e06_spool_${tag}_").toString
-        val idx = java.nio.file.Files
-          .createTempDirectory(s"graft_e06_index_${tag}_").toString
-        try {
+        withScratch(s"graft_e06_src_${tag}_", s"graft_e06_spool_${tag}_",
+            s"graft_e06_index_${tag}_") { case Seq(srcDir, spool, idx) =>
           // stage probe (perf attribution only, off unless exported)
           val probe = sys.env.contains("GRAFT_E06_PROBE")
           var t0 = System.nanoTime()
@@ -1079,13 +1032,6 @@ object EventStreams {
             .select(col("batch"), col("vec_id"), col("cell"))
             .orderBy(col("batch"), col("vec_id"))
             .localCheckpoint() // frees the temp dirs below
-        } finally {
-          import scala.jdk.CollectionConverters._
-          Seq(srcDir, spool, idx).foreach { p =>
-            val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-            val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-            all.foreach(java.nio.file.Files.deleteIfExists(_))
-          }
         }
       })
   )

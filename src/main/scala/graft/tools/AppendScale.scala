@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+import graft.GraftSession.withScratch
 import graft.operators.Similarity
 
 /** Increment-scaling measurement for the index APPEND paths (r14
@@ -46,13 +48,6 @@ import graft.operators.Similarity
   */
 object AppendScale {
 
-  private def deleteRec(p: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-    val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-    all.foreach(java.nio.file.Files.deleteIfExists(_))
-  }
-
   private def timed(body: => Unit): Double = {
     val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
   }
@@ -69,14 +64,7 @@ object AppendScale {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.forMain(defaultCores = 32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = graft.Tables.load(spark, sfDir, "embeddings")
@@ -110,13 +98,11 @@ object AppendScale {
       }.reduce(_.unionByName(_)).localCheckpoint()
 
     // ---- appendIvfPqIndex (the s20 maintenance path) ----
-    def pqLeg(baseRel: DataFrame, inc: DataFrame): Double = {
-      val path = java.nio.file.Files.createTempDirectory("graft-appscale-pq-").toString
-      try {
+    def pqLeg(baseRel: DataFrame, inc: DataFrame): Double =
+      withScratch("graft-appscale-pq-") { case Seq(path) =>
         Similarity.writeIvfPqIndex(baseRel, path, cells = 16, m = 16, kps = 64)
         timed { Similarity.appendIvfPqIndex(inc, path).collect() }
-      } finally deleteRec(path)
-    }
+      }
     val pqA = pqLeg(base, cloned(1, 100000000L))
     val pqB = pqLeg(base, cloned(f, 100000000L))
     val bigBase = cloned(f, 0L)
@@ -127,13 +113,11 @@ object AppendScale {
     // tiny k would make the in-cell pair stage quadratic in |increment|
     // per cell — that is quantizer sizing, not append cost
     val k = math.max(8, math.sqrt((n * f).toDouble).toInt.min(1024))
-    def admitLeg(inc: DataFrame): Double = {
-      val path = java.nio.file.Files.createTempDirectory("graft-appscale-adm-").toString
-      try {
+    def admitLeg(inc: DataFrame): Double =
+      withScratch("graft-appscale-adm-") { case Seq(path) =>
         Similarity.writeEmbedIndex(base, path, k = k)
         timed { Similarity.embedAdmitAppend(inc, path, tau = 0.9).count() }
-      } finally deleteRec(path)
-    }
+      }
     val admA = admitLeg(rotated(1, 100000000L))
     val admB = admitLeg(rotated(f, 100000000L))
 
@@ -152,12 +136,11 @@ object AppendScale {
     val mod = nAppends * 10 // each append ≈ 0.1% of base; total ≈ +10%
     // ---- embed admission index ----
     val k = math.max(8, math.sqrt(n.toDouble).toInt.min(1024))
-    val path = java.nio.file.Files.createTempDirectory("graft-frag-adm-").toString
     val probe = rotate(base.filter(pmod(col("vec_id"), lit(53)) === 0),
       dim, dim / 2, 7000000000L).localCheckpoint()
     val (admFresh, admFrag, admComp, admFilesBefore, admFilesAfter, admitted,
         admCompFull, admCompSel, admCompNoop, admSelBefore, admSelAfter) =
-      try {
+      withScratch("graft-frag-adm-") { case Seq(path) =>
         Similarity.writeEmbedIndex(base, path, k = k)
         val fresh = timed { Similarity.embedAdmitFromIndex(probe, path, 0.9).count() }
         var nAdm = 0L
@@ -188,15 +171,14 @@ object AppendScale {
         val tCompNoop = timed { Similarity.compactEmbedIndex(spark, path).collect() }
         (fresh, frag, comp, rep.getLong(1), rep.getLong(2), nAdm,
           tCompFull, tCompSel, tCompNoop, repSel.getLong(1), repSel.getLong(2))
-      } finally deleteRec(path)
+      }
 
     // ---- IVF-PQ index ----
-    val path2 = java.nio.file.Files.createTempDirectory("graft-frag-pq-").toString
     val q = base.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       .localCheckpoint()
     val (pqFresh, pqFrag, pqComp, pqFilesBefore, pqFilesAfter) =
-      try {
+      withScratch("graft-frag-pq-") { case Seq(path2) =>
         Similarity.writeIvfPqIndex(base, path2, cells = 16, m = 16, kps = 64)
         val fresh = timed { Similarity.ivfPqQueryIndex(q, path2, 10, 4).count() }
         (1 to nAppends).foreach { i =>
@@ -209,7 +191,7 @@ object AppendScale {
         val rep = Similarity.compactIvfPqIndex(spark, path2).collect().head
         val comp = timed { Similarity.ivfPqQueryIndex(q, path2, 10, 4).count() }
         (fresh, frag, comp, rep.getLong(1), rep.getLong(2))
-      } finally deleteRec(path2)
+      }
 
     println(s"| probe | fresh (pre-append) | fragmented ($nAppends appends) | compacted | files frag->comp | frag/comp slope |")
     println("|---|---|---|---|---|---|")

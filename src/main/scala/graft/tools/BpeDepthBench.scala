@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Depth-axis bench for BPE merge training (feeds SCALE_NOTES): times
   * [[graft.operators.TextAnalysis.bpeMerges]] at increasing merge depth
   * k over the documents corpus and prints the MARGINAL per-round cost
@@ -16,15 +14,7 @@ object BpeDepthBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.forMain(defaultCores = 16)
     spark.sparkContext.setLogLevel("ERROR")
     val docs = graft.Tables.load(spark, sfDir, "documents")
     docs.count() // warm the scan

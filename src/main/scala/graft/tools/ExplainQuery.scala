@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Prints the formatted physical plan of named `SparkEntry.queries`
@@ -9,17 +8,14 @@ import org.apache.spark.sql.execution.FormattedMode
   * before deciding what to lock).
   *
   * Usage: `SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.ExplainQuery d08_incremental_dedup ..."`
-  * (no names = every query, in name order).
+  * (no names = every query, in name order). Runs on `SPARK_GRAFT_CPUS`
+  * cores (default 8); the core count sets the shuffle partitions, so
+  * compare plans at one core count.
   */
 object ExplainQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.forMain(defaultCores = 8)
     spark.sparkContext.setLogLevel("ERROR")
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>

@@ -67,13 +67,7 @@ object ScaleData {
 
   def main(args: Array[String]): Unit = {
     val Array(src, dst, factorS) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.forMain(defaultCores = 8)
     spark.sparkContext.setLogLevel("WARN")
     scale(spark, src, dst, factorS.toInt)
     spark.stop()

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.{CountDownLatch, CyclicBarrier, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Single-flight semantics of [[SessionCache]]: racing callers must share
@@ -12,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * "What's wrong" #1). */
 class SessionCacheSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   test("racing builders share one build and orphan no persistent RDD blocks") {
     val sc = spark.sparkContext

@@ -1,8 +1,8 @@
 package graft.catalog
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.TestSession
 import graft.engine.{Catalog, SqlContext, SqlEngine, SqlError}
 
 /** The DSv2 plugin resolves engine tables through plain `spark.sql` with
@@ -10,12 +10,7 @@ import graft.engine.{Catalog, SqlContext, SqlEngine, SqlError}
   * pipeline. */
 class GraftCatalogSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private lazy val wh = Files.createTempDirectory("graft-v2-wh-").toString
   private lazy val engine: SqlEngine = {

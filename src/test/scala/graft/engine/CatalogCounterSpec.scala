@@ -3,6 +3,7 @@ package graft.engine
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
+import graft.TestSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The catalog's counter files (`_ids`, `_serial/<columnId>`) are replaced
@@ -48,8 +49,7 @@ class CatalogCounterSpec extends AnyFunSuite {
     reopened.createDatabase("db2", ifNotExists = false)
     assert(reopened.listDatabases() == Seq("db", "db2"))
     // an INSERT through the engine continues the sequence
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = TestSession.spark
     val e = new SqlEngine(spark, reopened, SqlContext("db", "u"))
     e.execute("INSERT INTO t (v) VALUES ('a'), ('b')")
     assert(e.execute("SELECT id FROM t ORDER BY id").collect().map(_.getInt(0)).toSeq == Seq(9, 10))

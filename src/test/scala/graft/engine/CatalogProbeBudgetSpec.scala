@@ -1,18 +1,14 @@
 package graft.engine
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import graft.TestSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the catalog existence probes a query makes: one per distinct
   * relation name, none per column. */
 class CatalogProbeBudgetSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   test("a query probes each relation name once and no column name") {
     val probes = scala.collection.mutable.Map.empty[String, Int]

@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.nio.file.Files
+import graft.TestSession
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,11 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and a user's temp views keep their meaning. */
 class EngineIsolationSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def warehouse(): Catalog = {
     val cat = new Catalog(Files.createTempDirectory("graft-iso-").toString)

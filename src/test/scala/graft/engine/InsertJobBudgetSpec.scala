@@ -3,9 +3,9 @@ package graft.engine
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.TestSession
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the number of Spark jobs a statement runs, executed and fetched,
@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * here, not only in a benchmark. */
 class InsertJobBudgetSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private val TagKey = "graft.test.jobBudget"
 

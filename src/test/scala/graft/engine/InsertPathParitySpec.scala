@@ -2,7 +2,7 @@ package graft.engine
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import graft.TestSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver-resident INSERT path (a VALUES source) and the distributed
@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * error), the same rows and ids, and the same serial counters. */
 class InsertPathParitySpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   /** A parity case: the twin tables' column list and constraints, the
     * INSERT's target columns with the staged (source) type of each, and

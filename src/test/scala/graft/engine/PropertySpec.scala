@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.TestSession
 import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -49,8 +50,7 @@ class PropertySpec extends AnyFunSuite {
 
   /** An engine connected to a fresh warehouse's `db1`, on the shared local session. */
   private def engineIn(prefix: String): (SparkSession, SqlEngine) = {
-    val spark = SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = TestSession.spark
     val eng = new SqlEngine(
       spark, new Catalog(java.nio.file.Files.createTempDirectory(prefix).toString),
       SqlContext("db1", "u"))
@@ -208,8 +208,7 @@ class PropertySpec extends AnyFunSuite {
     // the engine's parse-tree pass must leave every other name to Spark:
     // on such a statement engine.execute and spark.sql return the same
     // schema and rows, or both fail with the same exception class
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = TestSession.spark
     val eng = new SqlEngine(
       spark, new Catalog(java.nio.file.Files.createTempDirectory("p-plan").toString),
       SqlContext("db1", "u"))
@@ -255,8 +254,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("narrowing guard: bigint into int raises exactly when the value can't round-trip") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.ui.enabled", "false").getOrCreate()
+    val spark = TestSession.spark
     val eng = new SqlEngine(
       spark, new Catalog(java.nio.file.Files.createTempDirectory("p-narrow").toString),
       SqlContext("db1", "u"))

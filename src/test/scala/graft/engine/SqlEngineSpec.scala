@@ -2,19 +2,15 @@ package graft.engine
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import graft.TestSession
+import graft.GraftSession.withScratch
 import org.scalatest.funsuite.AnyFunSuite
 
 /** F1–F3 end-to-end parity with the reference's SQL tests
   * (reference: src/sql/mod.rs:175-426, README.md:20-33). */
 class SqlEngineSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def freshEngine(db: String = "test1", user: String = "user1"): SqlEngine = {
     val wh = Files.createTempDirectory("graft-wh-").toString
@@ -1649,8 +1645,7 @@ class SqlEngineSpec extends AnyFunSuite {
     val q = Seq((10L, Array(1.0f, 0.05f))).toDF("vec_id", "embedding")
     base.createOrReplaceTempView("art_base_view")
     q.createOrReplaceTempView("art_q_view")
-    val path = Files.createTempDirectory("graft-art-idx-").toString
-    try {
+    try withScratch("graft-art-idx-") { case Seq(path) =>
       val rep = e.execute("SELECT n_vectors, cells FROM graft_ivfpq_build(" +
         s"'art_base_view', '$path', 2, 1, 2)").collect()
       assert(rep.length == 1 && rep.head.getLong(0) == 4L, s"build report: ${rep.toSeq}")
@@ -1684,9 +1679,6 @@ class SqlEngineSpec extends AnyFunSuite {
     } finally {
       spark.catalog.dropTempView("art_base_view")
       spark.catalog.dropTempView("art_q_view")
-      val walk = Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(Files.deleteIfExists(_))
     }
     // --- embed admission artifacts: build persists cells + centroids,
     // a separate statement admits with no history rescan; result equals
@@ -1700,8 +1692,7 @@ class SqlEngineSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     ehist.createOrReplaceTempView("eh_view")
     einc.createOrReplaceTempView("ei_view")
-    val epath = Files.createTempDirectory("graft-art-embed-").toString
-    try {
+    try withScratch("graft-art-embed-") { case Seq(epath) =>
       val erep = e.execute(
         s"SELECT n_vectors, cells FROM graft_embed_build('eh_view', '$epath', 3)").collect()
       assert(erep.head.getLong(0) == 3L && erep.head.getInt(1) == 3, s"${erep.toSeq}")
@@ -1733,9 +1724,6 @@ class SqlEngineSpec extends AnyFunSuite {
       spark.catalog.dropTempView("eh_view")
       spark.catalog.dropTempView("ei_view")
       spark.catalog.dropTempView("ei2_view")
-      val walk = Files.walk(java.nio.file.Paths.get(epath))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(Files.deleteIfExists(_))
     }
 
     // --- winnow: the index materializes into a managed table once; the

@@ -2,9 +2,9 @@ package graft.functions
 
 import java.nio.file.Files
 
+import graft.TestSession
 import graft.engine.{Catalog, SqlContext, SqlEngine}
 import graft.operators.{Dedup, Multimodal, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft's kernels are Columns, not session functions: running the
@@ -15,12 +15,7 @@ class KernelSessionSpec extends AnyFunSuite {
 
   // a fresh session state: its registry holds only Spark's built-ins,
   // whatever other suites did on the shared context
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-    .newSession()
+  private lazy val spark = TestSession.spark.newSession()
 
   test("operators and an engine INSERT leave the function registry and catalog unchanged") {
     import spark.implicits._

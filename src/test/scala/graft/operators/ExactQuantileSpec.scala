@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{Tables, TestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,12 +18,13 @@ object ExactQuantileSpec {
   * than one range partition per task. */
 class ExactQuantileSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "7") // odd: exercises empty/uneven range partitions
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // odd: exercises empty/uneven range partitions; set on this suite's own
+  // session so the shared one keeps its 4
+  private lazy val spark = {
+    val s = TestSession.spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "7")
+    s
+  }
 
   private def viaAggregate(df: org.apache.spark.sql.DataFrame, c: String, qs: Seq[Double]): Seq[Double] = {
     val arr = qs.map(q => s"${q}D").mkString("array(", ", ", ")")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.TestSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * contract: every operator accepts any frame with the documented columns. */
 class LibraryApiSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   import scala.jdk.CollectionConverters._
   private def corpus(): org.apache.spark.sql.DataFrame = {

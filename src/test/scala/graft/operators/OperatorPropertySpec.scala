@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import graft.TestSession
+import graft.GraftSession.withScratch
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,11 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (see ExactQuantileSpec.sweepCases). */
 class OperatorPropertySpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   import spark.implicits._
 
@@ -1137,8 +1134,7 @@ class OperatorPropertySpec extends AnyFunSuite {
         val inc1 = genBatch(100L, nInc1, hist.map(_._2)).sample.get
         val inc2 = genBatch(200L, nInc2, (hist ++ inc1).map(_._2)).sample.get
         val tau = 0.9
-        val path = java.nio.file.Files.createTempDirectory("graft-sweep-embed-").toString
-        try {
+        withScratch("graft-sweep-embed-") { case Seq(path) =>
           Similarity.writeEmbedIndex(hist.toDF("vec_id", "embedding"), path, k)
           val got1 = Similarity.embedAdmitAppend(inc1.toDF("vec_id", "embedding"), path, tau)
             .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
@@ -1158,11 +1154,6 @@ class OperatorPropertySpec extends AnyFunSuite {
             println(s"MISMATCH hist=${hist.map(_._2.toSeq)} inc1=${inc1.map(_._2.toSeq)} " +
               s"inc2=${inc2.map(_._2.toSeq)} k=$k\n got1=$got1 want1=$want1\n got2=$got2 want2=$want2")
           got1 == want1 && got2 == want2
-        } finally {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-          val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-          all.foreach(java.nio.file.Files.deleteIfExists(_))
         }
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(cases(8, 25)), prop)

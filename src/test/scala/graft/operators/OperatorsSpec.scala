@@ -1,9 +1,9 @@
 package graft.operators
 
-import graft.{SparkEntry, Tables}
+import graft.GraftSession.withScratch
+import graft.{SparkEntry, Tables, TestSession}
 import graft.functions.{cosineSim, mergePair, minhashSig, rollingFingerprint, shingleHashes,
   shinglePairs, simhash128, simhash64}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +12,7 @@ class OperatorsSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
@@ -633,8 +628,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("persisted IVF-ADC artifacts: query path equals inline path, no retraining") {
-    val path = java.nio.file.Files.createTempDirectory("graft-ivfpq-art-").toString
-    try {
+    withScratch("graft-ivfpq-art-") { case Seq(path) =>
       val report = Similarity.writeIvfPqIndex(annBase, path, cells = 4, m = 16, kps = 16)
         .head()
       assert(report.getLong(0) == annBase.count(), "every vector must be encoded")
@@ -646,11 +640,6 @@ class OperatorsSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
       assert(persisted == inline,
         s"persisted path diverged from inline: ${persisted.diff(inline)} / ${inline.diff(persisted)}")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1344,8 +1333,7 @@ class OperatorsSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val b = (100 until 112).map(i => (i.toLong, vec(i % 4, 0.9f + (i % 3) * 0.05f)))
       .toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft-append-eq-").toString
-    try {
+    withScratch("graft-append-eq-") { case Seq(path) =>
       Similarity.writeIvfPqIndex(a, path, cells = 4, m = 2, kps = 4)
       val rep = Similarity.appendIvfPqIndex(b, path).collect().head
       assert(rep.getLong(0) == 12L && rep.getLong(1) == 36L, s"report: $rep")
@@ -1378,11 +1366,6 @@ class OperatorsSpec extends AnyFunSuite {
       val idsC = Similarity.ivfPqQueryIndex(q, path, k = 36, nprobe = 4)
         .collect().map(_.getLong(1)).toSet
       assert(idsC == ids, "compaction changed retrieval")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1402,9 +1385,7 @@ class OperatorsSpec extends AnyFunSuite {
     corpus.createOrReplaceTempView("graft_s18spec_corpus")
     q.select(col("query_id").as("vec_id"), col("q_emb").as("embedding"))
       .createOrReplaceTempView("graft_s18spec_queries")
-    val wh = java.nio.file.Files.createTempDirectory("graft-s18spec-wh-").toString
-    val path = java.nio.file.Files.createTempDirectory("graft_s18spec_idx_").toString
-    try {
+    try withScratch("graft-s18spec-wh-", "graft_s18spec_idx_") { case Seq(wh, path) =>
       val e = new graft.engine.SqlEngine(spark, new graft.engine.Catalog(wh),
         graft.engine.SqlContext("s18s", "u"))
       e.execute("CREATE DATABASE s18s")
@@ -1423,12 +1404,6 @@ class OperatorsSpec extends AnyFunSuite {
     } finally {
       spark.catalog.dropTempView("graft_s18spec_corpus")
       spark.catalog.dropTempView("graft_s18spec_queries")
-      import scala.jdk.CollectionConverters._
-      Seq(path, wh).foreach { p =>
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-        all.foreach(java.nio.file.Files.deleteIfExists(_))
-      }
     }
   }
 
@@ -1440,8 +1415,7 @@ class OperatorsSpec extends AnyFunSuite {
     val diverse = Seq((8L, Array(0.0f, 1.0f)), (9L, Array(-1.0f, 0.0f)),
       (10L, Array(0.0f, -1.0f)), (11L, Array(0.7f, 0.7f)))
     val hist = (homog ++ diverse).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft-embed-seed-").toString
-    try {
+    withScratch("graft-embed-seed-") { case Seq(path) =>
       Similarity.writeEmbedIndex(hist, path, k = 4)
       // the documented key, computed independently here: top-4 history
       // rows by (sha-256 8-hex-digit fold of the vec_id string, vec_id)
@@ -1469,11 +1443,6 @@ class OperatorsSpec extends AnyFunSuite {
       val adm = Similarity.embedAdmitFromIndex(inc, path, 0.9)
         .collect().map(_.getLong(0)).toSet
       assert(adm == Set(101L), s"admitted $adm; clone 100 must be rejected")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1512,8 +1481,7 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     def vec(axis: Int): Array[Float] = Array.tabulate(4)(d => if (d == axis) 1.0f else 0.0f)
     val hist = (0 until 12).map(i => (i.toLong, vec(i % 4))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft-lock-").toString
-    try {
+    withScratch("graft-lock-") { case Seq(path) =>
       Similarity.writeEmbedIndex(hist, path, k = 4)
       val lock = java.nio.file.Paths.get(path, "_lock")
       java.nio.file.Files.createFile(lock) // a concurrent maintainer holds it
@@ -1543,11 +1511,6 @@ class OperatorsSpec extends AnyFunSuite {
       // and the maintained artifact still answers: 200's clone is rejected
       val probe = Seq((300L, Array(-0.7f, -0.7f, 0.0f, 0.0f))).toDF("vec_id", "embedding")
       assert(Similarity.embedAdmitFromIndex(probe, path, 0.9).count() == 0)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1556,21 +1519,19 @@ class OperatorsSpec extends AnyFunSuite {
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
     val hist = (0 until 12).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft-compact-").toString
-    val wh = java.nio.file.Files.createTempDirectory("graft-compact-wh-").toString
-    def cellFiles(): Map[String, Int] = {
-      import scala.jdk.CollectionConverters._
-      // resolve through the generation pointer — compaction flips dirs
-      // (the resolved string is "file:/..."-qualified once generations
-      // exist; URI.getPath normalizes both spellings)
-      val root = java.nio.file.Paths.get(new java.net.URI(
-        Similarity.currentIndexDirStr(spark, path, "cells")).getPath)
-      val walk = java.nio.file.Files.walk(root)
-      val all = try walk.iterator().asScala.toSeq finally walk.close()
-      all.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .groupBy(_.getParent.getFileName.toString).view.mapValues(_.size).toMap
-    }
-    try {
+    withScratch("graft-compact-", "graft-compact-wh-") { case Seq(path, wh) =>
+      def cellFiles(): Map[String, Int] = {
+        import scala.jdk.CollectionConverters._
+        // resolve through the generation pointer — compaction flips dirs
+        // (the resolved string is "file:/..."-qualified once generations
+        // exist; URI.getPath normalizes both spellings)
+        val root = java.nio.file.Paths.get(new java.net.URI(
+          Similarity.currentIndexDirStr(spark, path, "cells")).getPath)
+        val walk = java.nio.file.Files.walk(root)
+        val all = try walk.iterator().asScala.toSeq finally walk.close()
+        all.filter(p => p.getFileName.toString.endsWith(".parquet"))
+          .groupBy(_.getParent.getFileName.toString).view.mapValues(_.size).toMap
+      }
       Similarity.writeEmbedIndex(hist, path, k = 4)
       // three append batches of genuinely novel, mutually orthogonal
       // directions (negative axes: cosine −1 to history, 0 to each
@@ -1604,19 +1565,11 @@ class OperatorsSpec extends AnyFunSuite {
       // the maintenance lock guards compaction too
       java.nio.file.Files.createFile(java.nio.file.Paths.get(path, "_lock"))
       intercept[IllegalStateException] { Similarity.compactEmbedIndex(spark, path) }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      Seq(path, wh).foreach { p =>
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-        all.foreach(java.nio.file.Files.deleteIfExists(_))
-      }
     }
   }
 
   test("maintenance lock stamps holder pid/ts/op; a blocked maintainer sees the stamp") {
-    val path = java.nio.file.Files.createTempDirectory("graft-lockstamp-").toString
-    try {
+    withScratch("graft-lockstamp-") { case Seq(path) =>
       val lockFile = java.nio.file.Paths.get(path, "_lock")
       Similarity.withMaintenanceLock(spark, path, "spec-op") {
         val content = new String(java.nio.file.Files.readAllBytes(lockFile),
@@ -1635,11 +1588,6 @@ class OperatorsSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("pid=12345") && e.getMessage.contains("op=other-op"),
         e.getMessage)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1647,9 +1595,7 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
-    val path = java.nio.file.Files.createTempDirectory("graft-unlock-").toString
-    val wh = java.nio.file.Files.createTempDirectory("graft-unlock-wh-").toString
-    try {
+    withScratch("graft-unlock-", "graft-unlock-wh-") { case Seq(path, wh) =>
       val hist = (0 until 8).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path, k = 4)
       // a maintainer killed between acquire and the finally-release: the
@@ -1676,13 +1622,6 @@ class OperatorsSpec extends AnyFunSuite {
       val rep2 = e.execute(
         s"SELECT unlocked, holder FROM graft_maintenance_unlock('$path')").collect().head
       assert(!rep2.getBoolean(0) && rep2.getString(1).isEmpty, s"no-op unlock: $rep2")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      Seq(path, wh).foreach { p =>
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-        all.foreach(java.nio.file.Files.deleteIfExists(_))
-      }
     }
   }
 
@@ -1690,10 +1629,9 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
-    def localDir(): java.nio.file.Path = java.nio.file.Paths.get(
-      new java.net.URI(Similarity.currentIndexDirStr(spark, path2, "cells")).getPath)
-    lazy val path2 = java.nio.file.Files.createTempDirectory("graft-gen-").toString
-    try {
+    withScratch("graft-gen-") { case Seq(path2) =>
+      def localDir(): java.nio.file.Path = java.nio.file.Paths.get(
+        new java.net.URI(Similarity.currentIndexDirStr(spark, path2, "cells")).getPath)
       val hist = (0 until 12).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path2, k = 4)
       (0 until 2).foreach { b => // fragment two cells
@@ -1739,11 +1677,6 @@ class OperatorsSpec extends AnyFunSuite {
       Similarity.writeEmbedIndex(hist, path2, k = 4)
       assert(localDir() == java.nio.file.Paths.get(path2, "cells"))
       assert(spark.read.parquet(localDir().toString).count() == 12L)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path2))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1751,8 +1684,7 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
-    val path = java.nio.file.Files.createTempDirectory("graft-debris-").toString
-    try {
+    withScratch("graft-debris-") { case Seq(path) =>
       val hist = (0 until 8).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path, k = 4)
       // a crashed compaction: a high-numbered generation dir with data
@@ -1780,11 +1712,6 @@ class OperatorsSpec extends AnyFunSuite {
       assert(cur.endsWith("cells__g100"), // max existing gen (99) + 1
         s"next generation must number past the debris: $cur")
       assert(spark.read.parquet(cur).count() == 9L)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1792,21 +1719,20 @@ class OperatorsSpec extends AnyFunSuite {
     import spark.implicits._
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
-    val path = java.nio.file.Files.createTempDirectory("graft-selcomp-").toString
-    // per-cell data-file NAMES of the current generation: carried cells
-    // must keep their exact file names (a Spark rewrite mints new
-    // UUID-suffixed part files; a link/copy carry preserves them)
-    def cellFileNames(): Map[String, Set[String]] = {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(new java.net.URI(
-        Similarity.currentIndexDirStr(spark, path, "cells")).getPath)
-      val walk = java.nio.file.Files.walk(root)
-      val all = try walk.iterator().asScala.toSeq finally walk.close()
-      all.filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .groupBy(_.getParent.getFileName.toString)
-        .view.mapValues(_.map(_.getFileName.toString).toSet).toMap
-    }
-    try {
+    withScratch("graft-selcomp-") { case Seq(path) =>
+      // per-cell data-file NAMES of the current generation: carried cells
+      // must keep their exact file names (a Spark rewrite mints new
+      // UUID-suffixed part files; a link/copy carry preserves them)
+      def cellFileNames(): Map[String, Set[String]] = {
+        import scala.jdk.CollectionConverters._
+        val root = java.nio.file.Paths.get(new java.net.URI(
+          Similarity.currentIndexDirStr(spark, path, "cells")).getPath)
+        val walk = java.nio.file.Files.walk(root)
+        val all = try walk.iterator().asScala.toSeq finally walk.close()
+        all.filter(p => p.getFileName.toString.endsWith(".parquet"))
+          .groupBy(_.getParent.getFileName.toString)
+          .view.mapValues(_.map(_.getFileName.toString).toSet).toMap
+      }
       val hist = (0 until 12).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path, k = 4)
       // normalize to a known one-file-per-cell layout (the fresh build's
@@ -1853,11 +1779,6 @@ class OperatorsSpec extends AnyFunSuite {
       assert(Similarity.currentIndexDirStr(spark, path, "cells") == dirBefore,
         "no-op compaction must not flip the generation")
       assert(cellFileNames() == after, "no-op compaction must not touch files")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1874,8 +1795,7 @@ class OperatorsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(42)
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
-    val path = java.nio.file.Files.createTempDirectory("graft-fuzz-").toString
-    try {
+    withScratch("graft-fuzz-") { case Seq(path) =>
       val hist = (0 until 12).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path, k = 4)
       var expected: Set[Long] = (0L until 12L).toSet
@@ -1910,11 +1830,6 @@ class OperatorsSpec extends AnyFunSuite {
       assert(rep.getLong(1) == rep.getLong(2), s"final no-op report: $rep")
       assert(stored() == expected, "final stored set diverged")
       assert(compacts > 0, "seed must exercise at least one mid-sequence compact")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1923,19 +1838,13 @@ class OperatorsSpec extends AnyFunSuite {
     def vec(axis: Int, scale: Float) = Array.tabulate(8)(d => if (d == axis) scale else 0.01f)
     val a = (0 until 24).map(i => (i.toLong, vec(i % 4, 1.0f + (i / 4) * 0.1f)))
       .toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft-lock-pq-").toString
-    try {
+    withScratch("graft-lock-pq-") { case Seq(path) =>
       Similarity.writeIvfPqIndex(a, path, cells = 4, m = 2, kps = 4)
       java.nio.file.Files.createFile(java.nio.file.Paths.get(path, "_lock"))
       val b = Seq((100L, vec(1, 0.95f))).toDF("vec_id", "embedding")
       intercept[IllegalStateException] { Similarity.appendIvfPqIndex(b, path) }
       // untouched: the footer count is still the build's
       assert(spark.read.parquet(s"$path/codes").count() == 24L)
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 

@@ -1,7 +1,7 @@
 package graft.plans
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession.withScratch
+import graft.{SparkEntry, Tables, TestSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,12 +15,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.explainString(FormattedMode)
@@ -932,8 +927,7 @@ class PlanQualitySpec extends AnyFunSuite {
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val km = graft.operators.Similarity.trainQuantizer(b, 4)
     val pq = graft.operators.Similarity.pqTrain(b, m = 16, k = 16)
-    val path = java.nio.file.Files.createTempDirectory("graft_s17_plan_").toString
-    try {
+    withScratch("graft_s17_plan_") { case Seq(path) =>
       graft.operators.Similarity.ivfPqIndex(b, km, pq)
         .write.mode("overwrite").partitionBy("cell").parquet(path)
       val p = graft.operators.Similarity
@@ -945,11 +939,6 @@ class PlanQualitySpec extends AnyFunSuite {
       indexScans.foreach(s => assert(!s.contains("embedding"),
         s"the index scan reads float vectors:\n$s"))
       assert(p.contains("BroadcastExchange"), "probe side must broadcast")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -961,8 +950,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val b = Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = b.filter(col("vec_id") < 8)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val path = java.nio.file.Files.createTempDirectory("graft_s18_plan_").toString
-    try {
+    withScratch("graft_s18_plan_") { case Seq(path) =>
       graft.operators.Similarity.writeIvfPqIndex(b, path, cells = 4, m = 16, kps = 16)
       val p = graft.operators.Similarity.ivfPqQueryIndex(q, path, 5, nprobe = 2)
         .queryExecution.explainString(FormattedMode)
@@ -975,11 +963,6 @@ class PlanQualitySpec extends AnyFunSuite {
           s"probed cells did not become a static partition filter:\n$s")
       }
       assert(p.contains("BroadcastExchange"), "probe side must broadcast")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -996,8 +979,7 @@ class PlanQualitySpec extends AnyFunSuite {
       (5L, Array(0.9f, 0.1f)), (6L, Array(0.1f, 0.9f)),
       (7L, Array(-0.9f, -0.1f)), (8L, Array(-0.1f, -0.9f)))
       .toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft_s19_plan_").toString
-    try {
+    withScratch("graft_s19_plan_") { case Seq(path) =>
       graft.operators.Similarity.writeEmbedIndex(hist, path, k = 4)
       // the increment occupies a SINGLE direction — its cell set is a
       // strict subset, so pruning is observable in the plan
@@ -1011,11 +993,6 @@ class PlanQualitySpec extends AnyFunSuite {
       cellScans.foreach(s =>
         assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(s).isDefined,
           s"the increment's cells did not become a static partition filter:\n$s"))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1031,8 +1008,7 @@ class PlanQualitySpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val b = (100 until 108).map(i => (i.toLong, vec(i % 4, 0.95f)))
       .toDF("vec_id", "embedding")
-    val path = java.nio.file.Files.createTempDirectory("graft_s20_plan_").toString
-    try {
+    withScratch("graft_s20_plan_") { case Seq(path) =>
       graft.operators.Similarity.writeIvfPqIndex(a, path, cells = 4, m = 2, kps = 4)
       def modelBytes(): Map[String, Seq[Byte]] = {
         import scala.jdk.CollectionConverters._
@@ -1060,11 +1036,6 @@ class PlanQualitySpec extends AnyFunSuite {
         assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(s).isDefined,
           s"probed cells are not a static partition filter after append:\n$s")
       }
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1075,8 +1046,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // of the history table in the probe plan means the rebuild cost
     // silently came back (the round-12 watch item)
     import graft.engine.{Catalog, SqlContext, SqlEngine}
-    val wh = java.nio.file.Files.createTempDirectory("graft-d22-plan-wh-").toString
-    try {
+    withScratch("graft-d22-plan-wh-") { case Seq(wh) =>
       val e = new SqlEngine(spark, new Catalog(wh), SqlContext("d22p", "u"))
       e.execute("CREATE DATABASE d22p")
       e.execute("CREATE TABLE hist (doc_id bigint PRIMARY KEY, text text)")
@@ -1095,11 +1065,6 @@ class PlanQualitySpec extends AnyFunSuite {
       val textScans = scans.filter(_.contains("text"))
       assert(textScans.nonEmpty && textScans.forall(_.contains("/inc")),
         s"text must come only from the increment scan:\n${textScans.mkString("\n\n")}")
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(wh))
-      val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      all.foreach(java.nio.file.Files.deleteIfExists(_))
     }
   }
 
@@ -1115,8 +1080,8 @@ class PlanQualitySpec extends AnyFunSuite {
     // lambda forms are exempt because they are not ours to remove:
     // float-key normalization on array grouping/join keys
     // (knownfloatingpointnormalized) and array_sort's default
-    // comparator. The committed plans/r18/*_after.txt dumps are the
-    // matching evidence artifacts.
+    // comparator. `tools/ExplainQuery <name>` prints the full plans this
+    // lock reads.
     val internal = Seq("knownfloatingpointnormalized", "array_sort")
     val names = Seq(
       "d19_winnow_pairs", "d20_winnow_xxhash", "d21_winnow_admit",

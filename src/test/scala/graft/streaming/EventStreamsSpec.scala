@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{Tables, TestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,12 +12,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   test("windowed counts match the batch daily rollup") {
     val q = EventStreams.windowedCounts(EventStreams.readEvents(spark, dir))

@@ -2,8 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{Tables, TestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,12 +13,7 @@ class ScaleDataSpec extends AnyFunSuite {
 
   private val src = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = TestSession.spark
 
   private lazy val dst = {
     val d = Files.createTempDirectory("scale-spec").toString
