@@ -493,14 +493,24 @@ class Catalog(val warehouse: String,
     * cannot break an in-flight query (the same age-based retention every
     * table format's expire/vacuum applies). Unreferenced parts with no
     * graveyard record (crash leftovers from a pre-graveyard failure) are
-    * enrolled now and reclaimed once THEY age out. Returns the number of
-    * files removed. */
+    * enrolled now and reclaimed once THEY age out. Staging directories
+    * (`.staging-*`) last modified at least `retentionMs` ago are deleted
+    * too: an INSERT or compaction that crashed between staging and commit
+    * leaves one behind, while an in-flight one is seconds old (and one
+    * under the engine's table write lock cannot overlap [[vacuum]] at
+    * all). Returns the number of data files removed. */
   def vacuum(db: String, schema: String, table: String,
       retentionMs: Long = Catalog.defaultVacuumRetentionMs): Int = synchronized {
-    val dir = tablePath(db, schema, table).resolve("data")
+    val now = System.currentTimeMillis()
+    val tableDir = tablePath(db, schema, table)
+    if (Files.isDirectory(tableDir))
+      listDir(tableDir)
+        .filter(p => p.getFileName.toString.startsWith(".staging-") &&
+          now - Files.getLastModifiedTime(p).toMillis >= retentionMs)
+        .foreach(deleteRecursively)
+    val dir = tableDir.resolve("data")
     if (!Files.isDirectory(dir)) return 0
     val live = liveParts(db, schema, table).toSet
-    val now = System.currentTimeMillis()
     val recorded = readGraveyard(db, schema, table).toMap
     val dead = listDir(dir)
       .map(_.getFileName.toString)

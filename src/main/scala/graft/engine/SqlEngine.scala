@@ -1,7 +1,8 @@
 package graft.engine
 
 import java.util.Locale
-import org.apache.spark.sql.{AnalysisException, DataFrame, GraftPlanBridge, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, GraftParquetBridge, GraftPlanBridge, Row,
+  SparkSession}
 import org.apache.spark.sql.catalyst.AliasIdentifier
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute,
   UnresolvedFunction, UnresolvedRelation, UnresolvedTableValuedFunction}
@@ -930,13 +931,16 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   // (`source.select(preCols)`); no option picks it:
   //  - a LocalRelation — VALUES, and Project/Filter/Limit over it, which
   //    Spark folds — already holds its rows on the driver. Counting, the
-  //    NOT NULL and narrowing checks and in-batch uniqueness run there with
-  //    no job, and the rows are written as one part: 1 job. A UNIQUE index
-  //    not covered by fresh serials adds, on a non-empty table, one
-  //    filtered scan for the candidate keys: 2 jobs.
+  //    NOT NULL and narrowing checks and in-batch uniqueness run there, and
+  //    the rows are written as one part on the calling thread through
+  //    Spark's Parquet writer ([[GraftParquetBridge]]): 0 jobs. A one-task
+  //    write job would cost ~100 ms of driver-bound scheduling and output
+  //    committing for a few rows, and the manifest move is the commit
+  //    anyway. A UNIQUE index not covered by fresh serials adds, on a
+  //    non-empty table, one filtered scan for the candidate keys: 1 job.
   //  - any other plan (INSERT … SELECT over tables) stays distributed: a
   //    persisted candidate, one fused count/NOT NULL pass, a groupBy and a
-  //    semi-join per UNIQUE index, and a parallel write.
+  //    semi-join per UNIQUE index, and Spark's parallel write.
   // Both share the serial reservation, the error order, and the locked
   // check/stage/commit/auto-compaction window ([[publish]]).
 
@@ -1060,18 +1064,18 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     }
 
   /** The driver-resident path: every check runs over the collected rows,
-    * and the only jobs are the write and, when needed, one existing-keys
-    * scan. */
+    * the part is written on this thread, and the only job is, when
+    * needed, one existing-keys scan. */
   private def insertLocal(w: InsertWork, pre: DataFrame): Long = {
     val rows = pre.collect() // a LocalRelation: no job
     val (n, nullCounts) = SqlEngine.rowStats[Row](rows.iterator, w.checkIdx, _.isNullAt(_))
     val starts = reserveSerials(w, n)
     requireNotNull(w, nullCounts)
 
-    val fields = w.desc.columns.map { c =>
+    val outSchema = StructType(w.desc.columns.map { c =>
       if (starts.contains(c.id)) StructField(c.name, c.typeKind.sparkType, nullable = false)
       else pre.schema(c.name)
-    }
+    })
     val srcIdx = w.desc.columns.map(c => if (starts.contains(c.id)) -1 else pre.columns.indexOf(c.name))
     val out: Array[Row] = rows.zipWithIndex.map { case (r, i) =>
       Row.fromSeq(w.desc.columns.zip(srcIdx).map {
@@ -1079,14 +1083,13 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
         case (_, j) => r.get(j)
       })
     }
-    val cand = spark.createDataFrame(out.toSeq.asJava, StructType(fields))
 
-    publish(w, cand.coalesce(1)) {
+    publish(w, dir => GraftParquetBridge.writePart(spark, dir, outSchema, out.iterator)) {
       if (n > 0) {
         lazy val tableEmpty = catalog.tableIsEmpty(w.db, w.schema, w.table)
         enforceUnique(w,
           inBatchDup = (keys, nullsDistinct) => {
-            val idx = keys.map(cand.columns.indexOf(_))
+            val idx = keys.map(outSchema.fieldNames.indexOf(_))
             val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
             out.exists { r =>
               val k = SqlEngine.keyOf(r, idx)
@@ -1094,7 +1097,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
             }
           },
           existingConflict = (keys, nullsDistinct) =>
-            !tableEmpty && existingKeyHit(w, out, cand.columns, keys, nullsDistinct))
+            !tableEmpty && existingKeyHit(w, out, outSchema.fieldNames, keys, nullsDistinct))
       }
     }
     n
@@ -1167,7 +1170,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       }
       requireNotNull(w, nullCounts)
 
-      publish(w, cand) {
+      publish(w, dir => cand.write.mode("overwrite").parquet(dir)) {
         if (n > 0) {
           // fast path: a freshly-created/truncated table has nothing to
           // conflict with — skip the existing-rows join entirely (the
@@ -1198,15 +1201,19 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * check and the publish must be atomic with respect to other inserts
     * into the same table (statement atomicity; the reference gets the
     * same from its transactional commit + atomic Increment,
-    * src/sql/client.rs:276-306). */
-  private def publish(w: InsertWork, cand: DataFrame)(check: => Unit): Unit =
+    * src/sql/client.rs:276-306). `write` puts the candidate's parts into
+    * the staging directory it is given: Spark's parallel writer on the
+    * distributed path, one part written on this thread on the
+    * driver-resident one. Either way the manifest move in
+    * `commitStaged` is the commit, not the file write. */
+  private def publish(w: InsertWork, write: String => Unit)(check: => Unit): Unit =
     catalog.withTableWriteLock(w.db, w.schema, w.table) {
       check
 
       // atomic append: stage then move
       val staging = catalog.newStagingDir(w.db, w.schema, w.table)
       try {
-        cand.write.mode("overwrite").parquet(staging.toString)
+        write(staging.toString)
         catalog.commitStaged(w.db, w.schema, w.table, staging)
       } catch {
         case e: Throwable =>

@@ -1,18 +1,17 @@
 package graft.catalog
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSession
+import graft.{SuiteScratch, TestSession}
 import graft.engine.{Catalog, SqlContext, SqlEngine, SqlError}
 
 /** The DSv2 plugin resolves engine tables through plain `spark.sql` with
   * no temp views, across databases, keeping writes on the engine's INSERT
   * pipeline. */
-class GraftCatalogSpec extends AnyFunSuite {
+class GraftCatalogSpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
 
-  private lazy val wh = Files.createTempDirectory("graft-v2-wh-").toString
+  private lazy val wh = scratchDir("graft-v2-wh-")
   private lazy val engine: SqlEngine = {
     val e = new SqlEngine(spark, new Catalog(wh), SqlContext("db1", "u"))
     e.execute("CREATE DATABASE db1")

@@ -3,15 +3,15 @@ package graft.engine
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
-import graft.TestSession
+import graft.{SuiteScratch, TestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The catalog's counter files (`_ids`, `_serial/<columnId>`) are replaced
   * by an atomic move, never rewritten in place. */
-class CatalogCounterSpec extends AnyFunSuite {
+class CatalogCounterSpec extends AnyFunSuite with SuiteScratch {
 
   private def freshCatalog(): (Catalog, Path) = {
-    val wh = Files.createTempDirectory("graft-wh-")
+    val wh = java.nio.file.Paths.get(scratchDir("graft-wh-"))
     val c = new Catalog(wh.toString)
     c.createDatabase("db", ifNotExists = false)
     c.createTable("db", "public",

@@ -1,19 +1,18 @@
 package graft.engine
 
-import java.nio.file.Files
-import graft.TestSession
+import graft.{SuiteScratch, TestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the catalog existence probes a query makes: one per distinct
   * relation name, none per column. */
-class CatalogProbeBudgetSpec extends AnyFunSuite {
+class CatalogProbeBudgetSpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
 
   test("a query probes each relation name once and no column name") {
     val probes = scala.collection.mutable.Map.empty[String, Int]
     def bump(k: String): Unit = probes.synchronized { probes(k) = probes.getOrElse(k, 0) + 1 }
-    val cat = new Catalog(Files.createTempDirectory("graft-probe-").toString) {
+    val cat = new Catalog(scratchDir("graft-probe-")) {
       override def tableExists(db: String, schema: String, table: String): Boolean = {
         bump("tableExists"); super.tableExists(db, schema, table)
       }

@@ -1,19 +1,18 @@
 package graft.engine
 
-import java.nio.file.Files
-import graft.TestSession
+import graft.{SuiteScratch, TestSession}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Engines that share one SparkSession must not share names: each
   * resolves its own database's tables and binds its own session values,
   * and a user's temp views keep their meaning. */
-class EngineIsolationSpec extends AnyFunSuite {
+class EngineIsolationSpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
 
   private def warehouse(): Catalog = {
-    val cat = new Catalog(Files.createTempDirectory("graft-iso-").toString)
+    val cat = new Catalog(scratchDir("graft-iso-"))
     cat.createDatabase("db1", ifNotExists = false)
     cat.createDatabase("db2", ifNotExists = false)
     cat

@@ -1,8 +1,6 @@
 package graft.engine
 
-import java.nio.file.Files
-
-import graft.TestSession
+import graft.{SuiteScratch, TestSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver-resident INSERT path (a VALUES source) and the distributed
@@ -10,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * goes once as VALUES into one table and once through a staged table into
   * its twin, and after every batch both give the same outcome (count or
   * error), the same rows and ids, and the same serial counters. */
-class InsertPathParitySpec extends AnyFunSuite {
+class InsertPathParitySpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
 
@@ -23,7 +21,7 @@ class InsertPathParitySpec extends AnyFunSuite {
   private def parity(columnsDdl: String, target: Seq[(String, String)],
       batches: Seq[(Seq[Seq[String]], Either[SqlError.Kind, Long])],
       prepare: (SqlEngine, String) => Unit = (_, _) => ()): SqlEngine = {
-    val catalog = new Catalog(Files.createTempDirectory("graft-wh-").toString)
+    val catalog = new Catalog(scratchDir("graft-wh-"))
     val Seq(local, dist) = Seq("plocal", "pdist").map { db =>
       val e = new SqlEngine(spark, catalog, SqlContext(db, "u"))
       e.execute(s"CREATE DATABASE $db")

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.TestSession
+import graft.{SuiteScratch, TestSession}
 import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * tokenizer (SURVEY §5: property tests for the type mapping and
   * constraint surface). Run through scalacheck's own runner and asserted
   * under ScalaTest. */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends AnyFunSuite with SuiteScratch {
 
   private def check(p: Prop, name: String): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), p)
@@ -52,7 +52,7 @@ class PropertySpec extends AnyFunSuite {
   private def engineIn(prefix: String): (SparkSession, SqlEngine) = {
     val spark = TestSession.spark
     val eng = new SqlEngine(
-      spark, new Catalog(java.nio.file.Files.createTempDirectory(prefix).toString),
+      spark, new Catalog(scratchDir(prefix)),
       SqlContext("db1", "u"))
     eng.execute("CREATE DATABASE db1")
     (spark, eng)
@@ -210,7 +210,7 @@ class PropertySpec extends AnyFunSuite {
     // schema and rows, or both fail with the same exception class
     val spark = TestSession.spark
     val eng = new SqlEngine(
-      spark, new Catalog(java.nio.file.Files.createTempDirectory("p-plan").toString),
+      spark, new Catalog(scratchDir("p-plan")),
       SqlContext("db1", "u"))
     eng.execute("CREATE DATABASE db1")
     eng.execute("CREATE TABLE ztable99x (a int PRIMARY KEY)") // never generated
@@ -256,7 +256,7 @@ class PropertySpec extends AnyFunSuite {
   test("narrowing guard: bigint into int raises exactly when the value can't round-trip") {
     val spark = TestSession.spark
     val eng = new SqlEngine(
-      spark, new Catalog(java.nio.file.Files.createTempDirectory("p-narrow").toString),
+      spark, new Catalog(scratchDir("p-narrow")),
       SqlContext("db1", "u"))
     eng.execute("CREATE DATABASE db1")
     eng.execute("CREATE TABLE t (id bigserial PRIMARY KEY, v int)")
@@ -276,7 +276,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("serial counter arithmetic never exceeds the type ceiling") {
-    val wh = java.nio.file.Files.createTempDirectory("p-serial").toString
+    val wh = scratchDir("p-serial")
     val cat = new Catalog(wh)
     cat.createDatabase("d", ifNotExists = false)
     val b = new TableDescriptorBuilder("t")

@@ -2,18 +2,18 @@ package graft.engine
 
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
-import graft.TestSession
+import graft.{SuiteScratch, TestSession}
 import graft.GraftSession.withScratch
 import org.scalatest.funsuite.AnyFunSuite
 
 /** F1–F3 end-to-end parity with the reference's SQL tests
   * (reference: src/sql/mod.rs:175-426, README.md:20-33). */
-class SqlEngineSpec extends AnyFunSuite {
+class SqlEngineSpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
 
   private def freshEngine(db: String = "test1", user: String = "user1"): SqlEngine = {
-    val wh = Files.createTempDirectory("graft-wh-").toString
+    val wh = scratchDir("graft-wh-")
     new SqlEngine(spark, new Catalog(wh), SqlContext(db, user))
   }
 
@@ -177,7 +177,7 @@ class SqlEngineSpec extends AnyFunSuite {
   }
 
   test("cross-database qualified names: SELECT and INSERT-source resolve any db (src/sql/descriptor.rs:43-79)") {
-    val wh = Files.createTempDirectory("graft-wh-").toString
+    val wh = scratchDir("graft-wh-")
     val cat = new Catalog(wh)
     val e1 = new SqlEngine(spark, cat, SqlContext("db1", "user1"))
     e1.execute("CREATE DATABASE db1")
@@ -223,7 +223,7 @@ class SqlEngineSpec extends AnyFunSuite {
   }
 
   test("cross-db view names are injective: underscore-laden identifiers never collide") {
-    val wh = Files.createTempDirectory("graft-wh-").toString
+    val wh = scratchDir("graft-wh-")
     val cat = new Catalog(wh)
     val e = new SqlEngine(spark, cat, SqlContext("main", "u"))
     e.execute("CREATE DATABASE main")
@@ -241,7 +241,7 @@ class SqlEngineSpec extends AnyFunSuite {
   }
 
   test("per-statement registration touches only referenced descriptors (src/sql/mod.rs:60-75)") {
-    val wh = Files.createTempDirectory("graft-wh-").toString
+    val wh = scratchDir("graft-wh-")
     val cat = new Catalog(wh) {
       @volatile var descriptorReads = 0
       override def getTable(db: String, schema: String, table: String): TableDescriptor = {
@@ -480,6 +480,25 @@ class SqlEngineSpec extends AnyFunSuite {
     assert(e.execute("SELECT sum(v) AS s FROM t").collect()(0).getLong(0) == 36L)
   }
 
+  test("vacuum reclaims a crashed INSERT's stale staging directory and keeps a fresh one") {
+    val e = freshEngine()
+    e.execute("CREATE DATABASE test1")
+    e.execute("CREATE TABLE t (id serial PRIMARY KEY, v int)")
+    e.execute("INSERT INTO t (v) VALUES (1)")
+    def staged(): java.nio.file.Path = {
+      val p = e.catalog.newStagingDir("test1", "public", "t")
+      Files.writeString(p.resolve("part-00000.parquet"), "torn")
+      p
+    }
+    val (stale, fresh) = (staged(), staged())
+    Files.setLastModifiedTime(stale,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60L * 60 * 1000))
+    assert(e.vacuumTable("test1", "public", "t") == 0)
+    assert(!Files.exists(stale), "a staging directory older than the retention window must go")
+    assert(Files.exists(fresh.resolve("part-00000.parquet")), "a fresh staging directory may be in flight")
+    assert(e.execute("SELECT sum(v) AS s FROM t").collect()(0).getLong(0) == 1L)
+  }
+
   test("compaction racing concurrent INSERTs loses no rows (write-lock serialization)") {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
@@ -573,7 +592,7 @@ class SqlEngineSpec extends AnyFunSuite {
   }
 
   test("partial registration failure drops already-registered keyword views") {
-    val wh = Files.createTempDirectory("graft-wh-").toString
+    val wh = scratchDir("graft-wh-")
     val e = new SqlEngine(spark, new Catalog(wh), SqlContext("test1", "u"))
     e.execute("CREATE DATABASE test1")
     e.execute("CREATE TABLE first (id int PRIMARY KEY)")
@@ -601,7 +620,7 @@ class SqlEngineSpec extends AnyFunSuite {
   }
 
   test("catalog resolution is O(statement), not O(catalog): 300 tables, 2 descriptor reads") {
-    val wh = Files.createTempDirectory("graft-wh-").toString
+    val wh = scratchDir("graft-wh-")
     val reads = scala.collection.mutable.Map.empty[String, Int]
     val counting = new Catalog(wh) {
       override def getTable(db: String, schema: String, table: String): TableDescriptor = {
@@ -732,7 +751,7 @@ class SqlEngineSpec extends AnyFunSuite {
   }
 
   test("auto-compaction: many small INSERTs self-heal to a bounded file count") {
-    val e = new SqlEngine(spark, new Catalog(Files.createTempDirectory("graft-wh-").toString),
+    val e = new SqlEngine(spark, new Catalog(scratchDir("graft-wh-")),
       SqlContext("test1", "u"), autoCompactAfterParts = 8)
     e.execute("CREATE DATABASE test1")
     e.execute("CREATE TABLE t (id bigserial PRIMARY KEY, v bigint)")
@@ -745,7 +764,7 @@ class SqlEngineSpec extends AnyFunSuite {
     assert(rows.zipWithIndex.forall { case (r, i) => r.getLong(0) == i + 1 && r.getLong(1) == i + 1 })
 
     // threshold 0 disables: one part per insert accumulates
-    val e2 = new SqlEngine(spark, new Catalog(Files.createTempDirectory("graft-wh-").toString),
+    val e2 = new SqlEngine(spark, new Catalog(scratchDir("graft-wh-")),
       SqlContext("test1", "u"), autoCompactAfterParts = 0)
     e2.execute("CREATE DATABASE test1")
     e2.execute("CREATE TABLE t (id bigserial PRIMARY KEY, v bigint)")
@@ -757,7 +776,7 @@ class SqlEngineSpec extends AnyFunSuite {
     // exist, so parts-above-target never reaches the threshold — the old
     // absolute-count trigger would have rewritten the whole table on every
     // insert past the 4th (O(n^2) write amplification at scale)
-    val e3 = new SqlEngine(spark, new Catalog(Files.createTempDirectory("graft-wh-").toString),
+    val e3 = new SqlEngine(spark, new Catalog(scratchDir("graft-wh-")),
       SqlContext("test1", "u"), autoCompactAfterParts = 4, autoCompactTargetFileBytes = 1L)
     e3.execute("CREATE DATABASE test1")
     e3.execute("CREATE TABLE t (id bigserial PRIMARY KEY, v bigint)")
@@ -988,7 +1007,7 @@ class SqlEngineSpec extends AnyFunSuite {
   }
 
   test("version history cap: trimmed versions fail loudly as expired, head stays stable") {
-    val wh = Files.createTempDirectory("graft-wh-").toString
+    val wh = scratchDir("graft-wh-")
     val e = new SqlEngine(spark, new Catalog(wh, maxVersionHistory = 3), SqlContext("test1", "u"))
     e.execute("CREATE DATABASE test1")
     e.execute("CREATE TABLE t (id bigint PRIMARY KEY)")
@@ -1863,7 +1882,7 @@ class SqlEngineSpec extends AnyFunSuite {
     // the consumer's fromV simply aged out of the capped version history.
     // Both causes raise SqlError.Unexpected and both must recover through
     // snapshot ⊖ consumed (the fallback is cause-agnostic by design).
-    val wh = Files.createTempDirectory("graft-wh-").toString
+    val wh = scratchDir("graft-wh-")
     val e = new SqlEngine(spark, new Catalog(wh, maxVersionHistory = 3),
       SqlContext("test1", "user1"))
     e.execute("CREATE DATABASE test1")

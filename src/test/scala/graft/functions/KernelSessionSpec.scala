@@ -1,8 +1,6 @@
 package graft.functions
 
-import java.nio.file.Files
-
-import graft.TestSession
+import graft.{SuiteScratch, TestSession}
 import graft.engine.{Catalog, SqlContext, SqlEngine}
 import graft.operators.{Dedup, Multimodal, Similarity}
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * operators and an engine INSERT leaves a session's function registry
   * and catalog as they were, and engine SQL cannot call a kernel by name
   * whether or not an operator has run. */
-class KernelSessionSpec extends AnyFunSuite {
+class KernelSessionSpec extends AnyFunSuite with SuiteScratch {
 
   // a fresh session state: its registry holds only Spark's built-ins,
   // whatever other suites did on the shared context
@@ -20,7 +18,7 @@ class KernelSessionSpec extends AnyFunSuite {
   test("operators and an engine INSERT leave the function registry and catalog unchanged") {
     import spark.implicits._
     val engine = new SqlEngine(spark,
-      new Catalog(Files.createTempDirectory("graft-kernels-").toString), SqlContext("k", "u"))
+      new Catalog(scratchDir("graft-kernels-")), SqlContext("k", "u"))
     engine.execute("CREATE DATABASE k")
     engine.execute("CREATE TABLE src (id serial PRIMARY KEY, v int)")
     engine.execute("INSERT INTO src (v) VALUES (10), (20), (30)")

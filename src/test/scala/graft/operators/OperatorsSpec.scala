@@ -1,14 +1,14 @@
 package graft.operators
 
 import graft.GraftSession.withScratch
-import graft.{SparkEntry, Tables, TestSession}
+import graft.{SparkEntry, SuiteScratch, Tables, TestSession}
 import graft.functions.{cosineSim, mergePair, minhashSig, rollingFingerprint, shingleHashes,
   shinglePairs, simhash128, simhash64}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Correctness properties of the pipeline operators on sf0.001. */
-class OperatorsSpec extends AnyFunSuite {
+class OperatorsSpec extends AnyFunSuite with SuiteScratch {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -48,7 +48,7 @@ class OperatorsSpec extends AnyFunSuite {
     // engine appends per increment; PRIMARY KEY on digest makes the
     // engine itself enforce that an admission bug (re-admitting a known
     // digest) cannot corrupt the index
-    val wh = java.nio.file.Files.createTempDirectory("graft-dix-").toString
+    val wh = scratchDir("graft-dix-")
     val e = new SqlEngine(spark, new Catalog(wh), SqlContext("dix", "u"))
     e.execute("CREATE DATABASE dix")
     e.execute("CREATE TABLE digest_index (digest text PRIMARY KEY)")

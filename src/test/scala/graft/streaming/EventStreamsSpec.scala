@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Tables, TestSession}
+import graft.{SuiteScratch, Tables, TestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * data — the file source replays the events table in one trigger, so the
   * incremental plans are checked against the batch plans exactly.
   */
-class EventStreamsSpec extends AnyFunSuite {
+class EventStreamsSpec extends AnyFunSuite with SuiteScratch {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -179,7 +179,7 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("streaming ingest lands in the engine through the full INSERT pipeline") {
     import graft.engine.{Catalog, SqlContext, SqlEngine}
-    val wh = java.nio.file.Files.createTempDirectory("graft-stream-wh-").toString
+    val wh = scratchDir("graft-stream-wh-")
     val e = new SqlEngine(spark, new Catalog(wh), SqlContext("ing", "u"))
     e.execute("CREATE DATABASE ing")
     e.execute("CREATE TABLE landed (id bigserial PRIMARY KEY, doc_id bigint, digest text)")
@@ -198,7 +198,7 @@ class EventStreamsSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import graft.engine.{Catalog, SqlContext, SqlEngine}
-    val wh = java.nio.file.Files.createTempDirectory("graft-ddix-wh-").toString
+    val wh = scratchDir("graft-ddix-wh-")
     val e = new SqlEngine(spark, new Catalog(wh), SqlContext("ddx", "u"))
     e.execute("CREATE DATABASE ddx")
     e.execute("CREATE TABLE docs (doc_id bigint PRIMARY KEY, text text)")
@@ -235,7 +235,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("deduped ingest replays are exactly-once across every crash window") {
     import spark.implicits._
     import graft.engine.{Catalog, SqlContext, SqlEngine}
-    val wh = java.nio.file.Files.createTempDirectory("graft-ddcrash-wh-").toString
+    val wh = scratchDir("graft-ddcrash-wh-")
     val e = new SqlEngine(spark, new Catalog(wh), SqlContext("ddc", "u"))
     e.execute("CREATE DATABASE ddc")
     e.execute("CREATE TABLE docs (doc_id bigint PRIMARY KEY, text text)")
@@ -288,9 +288,9 @@ class EventStreamsSpec extends AnyFunSuite {
     // id is checkpoint-stable, so the provenance protocol keys match.
     import spark.implicits._
     import graft.engine.{Catalog, SqlContext, SqlEngine}
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-ckpt-src-").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt-").toString
-    val wh = java.nio.file.Files.createTempDirectory("graft-ckpt-wh-").toString
+    val srcDir = scratchDir("graft-ckpt-src-")
+    val ckpt = scratchDir("graft-ckpt-")
+    val wh = scratchDir("graft-ckpt-wh-")
     val e = new SqlEngine(spark, new Catalog(wh), SqlContext("ckx", "u"))
     e.execute("CREATE DATABASE ckx")
     e.execute("CREATE TABLE docs (doc_id bigint PRIMARY KEY, text text)")
@@ -336,7 +336,7 @@ class EventStreamsSpec extends AnyFunSuite {
   test("near-dedup ingest: band index is the durable state, exactly-once under replay") {
     import spark.implicits._
     import graft.engine.{Catalog, SqlContext, SqlEngine}
-    val wh = java.nio.file.Files.createTempDirectory("graft-ndcrash-wh-").toString
+    val wh = scratchDir("graft-ndcrash-wh-")
     val e = new SqlEngine(spark, new Catalog(wh), SqlContext("ndc", "u"))
     e.execute("CREATE DATABASE ndc")
     e.execute("CREATE TABLE docs (doc_id bigint PRIMARY KEY, text text)")

@@ -1,22 +1,20 @@
 package graft.tools
 
-import java.nio.file.Files
-
-import graft.{Tables, TestSession}
+import graft.{SuiteScratch, Tables, TestSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ScaleData must multiply row counts while preserving the join
   * structure — every scaled fact key must still resolve to its parent,
   * or the scale benchmarks measure a different query than sf0.1 does. */
-class ScaleDataSpec extends AnyFunSuite {
+class ScaleDataSpec extends AnyFunSuite with SuiteScratch {
 
   private val src = "/root/testdata/sf0.001"
 
   private lazy val spark = TestSession.spark
 
   private lazy val dst = {
-    val d = Files.createTempDirectory("scale-spec").toString
+    val d = scratchDir("scale-spec")
     ScaleData.scale(spark, src, d, 3)
     d
   }
