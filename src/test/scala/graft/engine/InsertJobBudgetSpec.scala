@@ -55,7 +55,7 @@ class InsertJobBudgetSpec extends AnyFunSuite with SuiteScratch {
 
   private def parts(e: SqlEngine, table: String): Int = e.catalog.liveParts("budget", "public", table).size
 
-  test("VALUES into a table with no UNIQUE index runs 0 jobs and writes 1 part") {
+  test("VALUES into a table with no UNIQUE index runs 0 jobs") {
     val e = freshEngine()
     run(e, "INSERT INTO events (account_id, amount) VALUES (1, 10)")
     val (rows, n) = run(e, "INSERT INTO events (account_id, amount) VALUES (1, 10), (2, 20), (3, 30), (4, 40), (5, 50)")
@@ -98,7 +98,7 @@ class InsertJobBudgetSpec extends AnyFunSuite with SuiteScratch {
     assert(n2 == 0, s"jobs: $n2")
   }
 
-  test("an auto-compaction into one file: 2 jobs, no shuffle, sorted by key") {
+  test("an auto-compaction into one file runs 2 jobs, sorted by key") {
     val e = new SqlEngine(spark, new Catalog(scratchDir("graft-wh-")),
       SqlContext("budget", "u"), autoCompactAfterParts = 3)
     e.execute("CREATE DATABASE budget")
