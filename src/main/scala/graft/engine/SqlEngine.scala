@@ -794,9 +794,9 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       // graft_embed_compact('path') compacts the admission index's cells/
       // to one file per cell (each admit-append lands one file per
       // touched cell). Compaction is SELECTIVE: only fragmented cells are
-      // rewritten, single-file cells byte-carry into the new generation,
-      // and an unfragmented index no-ops. One prior generation is
-      // retained: maintenance cadence must exceed query lifetime
+      // rewritten, single-file cells keep their manifest entries, and an
+      // unfragmented index no-ops. Replaced parts stay readable until a
+      // vacuum outlives the catalog's retention window
       "graft_embed_compact" -> (a => Similarity.compactEmbedIndex(spark, a.str(0))),
       // the codes-side twin: graft_ivfpq_append fragments codes/ the same way
       "graft_ivfpq_compact" -> (a => Similarity.compactIvfPqIndex(spark, a.str(0))),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Deterministic 64-bit hashing shared by the sketch expressions. */
 object Hashing {
@@ -486,15 +487,12 @@ object HashOps {
 
   /** Count of tokens that are members of `words` — value-identical to
     * `size(filter(toks, t -> array_contains(array(words...), t)))`
-    * (UTF8String equality both ways). */
-  def countIn(arr: ArrayData, words: Array[UTF8String]): Int = {
-    val set = new java.util.HashSet[UTF8String](words.length * 2)
-    var j = 0
-    while (j < words.length) { set.add(words(j)); j += 1 }
+    * (UTF8String equality both ways). The caller builds `words` once. */
+  def countIn(arr: ArrayData, words: java.util.Set[UTF8String]): Int = {
     var c = 0
     var i = 0
     while (i < arr.numElements()) {
-      if (!arr.isNullAt(i) && set.contains(arr.getUTF8String(i))) c += 1
+      if (!arr.isNullAt(i) && words.contains(arr.getUTF8String(i))) c += 1
       i += 1
     }
     c
@@ -803,6 +801,8 @@ case class DropChunks(left: Expression, right: Expression, w: Int) extends Binar
   * the banding Generate inside whole-stage codegen where the
   * CodegenFallback transform/shiftright spelling exiled it. */
 case class BandBits(child: Expression, bands: Int, width: Int) extends UnaryExpression {
+  // past 64 bits the shift wraps mod 64 and band keys silently repeat
+  require(bands * width <= 64, s"band_bits: $bands bands x $width bits exceed a 64-bit signature")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullSafeEval(input: Any): Any =
     HashOps.bandBits(input.asInstanceOf[Long], bands, width)
@@ -896,12 +896,13 @@ case class AgreeCount(left: Expression, right: Expression) extends BinaryExpress
   * must stay data), the MergeAll convention. */
 case class CountIn(child: Expression, words: Seq[String]) extends UnaryExpression {
   override def dataType: DataType = IntegerType
-  @transient private lazy val ws = words.map(UTF8String.fromString).toArray
+  // built once per expression instance, not per row
+  @transient private lazy val ws: java.util.Set[UTF8String] =
+    new java.util.HashSet[UTF8String](words.map(UTF8String.fromString).asJava)
   override def nullSafeEval(input: Any): Any =
     HashOps.countIn(input.asInstanceOf[ArrayData], ws)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val r = ctx.addReferenceObj("countInWords", ws,
-      "org.apache.spark.unsafe.types.UTF8String[]")
+    val r = ctx.addReferenceObj("countInWords", ws, "java.util.Set")
     defineCodeGen(ctx, ev, c => s"graft.functions.HashOps.countIn($c, $r)")
   }
   override protected def withNewChildInternal(c: Expression): CountIn = copy(child = c)

@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.{GraftColumnBridge => B}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
@@ -204,11 +206,20 @@ case class L2Norm(child: Expression) extends UnaryExpression {
   override def prettyName: String = "l2_norm"
 }
 
+/** Kernels that read vector elements through `getFloat`/`getDouble`
+  * accept only these inputs: any other type must fail analysis instead of
+  * returning garbage. */
+private object InputTypes {
+  val realArray: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(DoubleType))
+}
+
 /** l2_sq_dist(a array<float|double>, b array<float|double>) → double:
   * squared euclidean distance (NO sqrt — the IVF probe-ranking measure),
   * one static call inside whole-stage codegen where the
   * aggregate(zip_with(...)) spelling evaluated interpreted per element. */
 case class L2SqDist(left: Expression, right: Expression) extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    B.checkInputTypes(Seq(left, right), Seq(InputTypes.realArray, InputTypes.realArray))
   override def dataType: DataType = DoubleType
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -226,6 +237,8 @@ case class L2SqDist(left: Expression, right: Expression) extends BinaryExpressio
 /** vec_sub(a array<float|double>, b array<float|double>) → array<double>:
   * the IVF-ADC residual (elementwise difference), codegen'd. */
 case class VecSub(left: Expression, right: Expression) extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    B.checkInputTypes(Seq(left, right), Seq(InputTypes.realArray, InputTypes.realArray))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   private def isFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -243,6 +256,8 @@ case class VecSub(left: Expression, right: Expression) extends BinaryExpression 
 /** vec_div(v array<float|double>, s double) → array<double>: elementwise
   * scalar division (the unit-normalize step), codegen'd. */
 case class VecDiv(left: Expression, right: Expression) extends BinaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    B.checkInputTypes(Seq(left, right), Seq(InputTypes.realArray, Seq(DoubleType)))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   private lazy val floats =
     left.dataType.asInstanceOf[ArrayType].elementType == FloatType
@@ -259,6 +274,8 @@ case class VecDiv(left: Expression, right: Expression) extends BinaryExpression 
   * from a sparse bucket→weight map, zeros filled in — codegen'd
   * replacement for the transform(sequence)/element_at spelling. */
 case class DenseFromMap(child: Expression, dim: Int) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    B.checkInputTypes(Seq(child), Seq(Seq(MapType(IntegerType, DoubleType))))
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullSafeEval(m: Any): Any =
     VectorOps.denseFromMap(m.asInstanceOf[MapData], dim)
@@ -273,6 +290,8 @@ case class DenseFromMap(child: Expression, dim: Int) extends UnaryExpression {
   * `transform(v, x -> x * CAST(s AS FLOAT))` lambda would (float inputs
   * stay float and multiply in float precision). */
 case class VecScale(child: Expression, factor: Float) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult =
+    B.checkInputTypes(Seq(child), Seq(InputTypes.realArray))
   private lazy val floats =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   override def dataType: DataType =

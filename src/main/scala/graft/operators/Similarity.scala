@@ -2,10 +2,11 @@ package graft.operators
 
 import graft.GraftSession.withScratch
 import graft.Tables
+import graft.engine.{Catalog, PartSet}
 import graft.functions.{bandBits, cosineSim, denseFromMap, hyperplaneSig, l2Norm, l2SqDist,
   nearestCentroid, pqAdc, pqDistTable, pqEncode, vecScale, vecSub}
 import org.apache.spark.ml.clustering.KMeansModel
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftParquetBridge, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -445,19 +446,16 @@ object Similarity {
       m: Int = 16, kps: Int = 64): DataFrame = {
     val s = base.sparkSession
     val (km, pq) = ivfPqTrain(base, cells, m, kps) // trains off-path, unlocked
-    // the REBUILD is index maintenance too: unlocked, a rebuild racing a
-    // locked compaction lets the compaction commit a generation built
-    // from pre-rebuild data that silently shadows the fresh bare build
+    // the REBUILD is index maintenance too: unlocked, a compaction racing
+    // it would publish its rewrite of pre-rebuild cells into the rebuilt set
     withMaintenanceLock(s, path, "ivfpq-build") {
-      resetGenerations(s, path, "codes") // a rebuild clears compacted gens
-      ivfPqIndex(base, km, pq)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
+      rebuild(indexParts(path, "codes"), ivfPqIndex(base, km, pq))
       centroidTable(s, km)
         .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
       s.createDataFrame(Seq((pq.m, pq.k, pq.sub, pq.cents.toSeq)))
         .toDF("m", "k", "sub", "cents")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/pq")
-      val n = s.read.parquet(s"$path/codes").count() // parquet-footer count
+      val n = readIndex(s, path, "codes").count() // parquet-footer count
       s.createDataFrame(Seq((n, cells, m, kps)))
         .toDF("n_vectors", "cells", "m", "k_per_subspace")
     }
@@ -469,8 +467,7 @@ object Similarity {
     val r = s.read.parquet(s"$path/pq").head()
     val pq = PqModel(r.getAs[Int]("m"), r.getAs[Int]("k"), r.getAs[Int]("sub"),
       r.getSeq[Double](r.fieldIndex("cents")).toArray)
-    (s.read.parquet(currentIndexDirStr(s, path, "codes")),
-      s.read.parquet(s"$path/centroids"), pq)
+    (readIndex(s, path, "codes"), s.read.parquet(s"$path/centroids"), pq)
   }
 
   /** Appends an increment to a PERSISTED IVF-ADC index with NO
@@ -615,11 +612,9 @@ object Similarity {
       .select(col("cell"), col("vec_id"), pqEncode(col("resid"), pq.cents, pq.m, pq.k, pq.sub).as("codes"))
       .localCheckpoint(false) // lazy: the count below materializes it
     val nAppended = encoded.count()
-    // appends land in the CURRENT generation (post-compaction layouts
-    // included): resolved once, used for both the write and the report
-    val codesDir = currentIndexDirStr(s, path, "codes")
-    encoded.write.mode("append").partitionBy("cell").parquet(codesDir)
-    val after = s.read.parquet(codesDir).count()
+    val codes = indexParts(path, "codes")
+    stageCells(codes, encoded)(codes.commitStaged)
+    val after = readIndex(s, path, "codes").count()
     s.createDataFrame(Seq((nAppended, after))).toDF("n_appended", "n_total")
   }
 
@@ -878,29 +873,21 @@ object Similarity {
       .select(col("embedding").cast("array<double>"))
       .collect().map(_.getSeq[Double](0).toArray)
     require(seeds.nonEmpty, "writeEmbedIndex: empty history relation")
-    // the REBUILD is index maintenance too (see writeIvfPqIndex): an
-    // unlocked rebuild racing a locked compaction would let a stale
-    // generation commit over the fresh bare build
+    // the REBUILD is index maintenance too (see writeIvfPqIndex)
     withMaintenanceLock(s, path, "embed-build") {
-      resetGenerations(s, path, "cells") // a rebuild clears compacted gens
-      cellIndex(hist, seeds)
-        .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
+      rebuild(indexParts(path, "cells"), cellIndex(hist, seeds))
       s.createDataFrame(seeds.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) })
         .toDF("cell", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     }
     // LAZY report: the index WRITES above are eager (the artifact
     // exists when this returns); the (n_vectors, cells) report is a
-    // plan over the written files, so a caller that discards the report
-    // (e06's stream setup) never schedules its count job, while report
-    // consumers (s19/s21 statement 1) pay it on collect.
-    // CONSUME-PROMPTLY contract (r16 ADVICE): the plan binds the bare
-    // build-time cells/ path — valid now (the build just reset the
-    // generation chain) but deleted after TWO later compaction cycles.
-    // Collect the report within the build's maintenance window, i.e.
-    // before compactions run; a deferred consumer must count through
-    // currentIndexDirStr instead
-    s.read.parquet(s"$path/cells")
+    // plan over the build's manifest snapshot, so a caller that discards
+    // the report (e06's stream setup) never schedules its count job,
+    // while report consumers (s19/s21 statement 1) pay it on collect. The
+    // snapshot keeps answering across later compactions until vacuum
+    // reclaims its parts
+    readIndex(s, path, "cells")
       .agg(count(lit(1)).as("n_vectors"))
       .withColumn("cells", lit(seeds.length))
   }
@@ -923,7 +910,7 @@ object Similarity {
     // materializes it — one scheduled job instead of two
     val inc = cellIndex(increment, seeds).localCheckpoint(false)
     val incCells = inc.select(col("cell")).distinct().collect().map(_.get(0))
-    val idx = s.read.parquet(currentIndexDirStr(s, path, "cells"))
+    val idx = readIndex(s, path, "cells")
       .filter(col("cell").isin(incCells.toIndexedSeq: _*))
     admitAssigned(inc, idx, tau)
   }
@@ -942,10 +929,8 @@ object Similarity {
       tau: Double = 0.9): DataFrame =
     withMaintenanceLock(increment.sparkSession, path, "embed-admit-append") {
       val s = increment.sparkSession
-      // resolved once; the probe read and the write-back hit the SAME
-      // generation (the lock excludes a concurrent compaction flip)
-      val cellsDir = currentIndexDirStr(s, path, "cells")
-      val stored = s.read.parquet(cellsDir)
+      val cells = indexParts(path, "cells")
+      val stored = readIndex(s, path, "cells")
       val seeds = s.read.parquet(s"$path/centroids").orderBy(col("cell"))
         .collect().map(_.getSeq[Double](1).toArray)
       // one assignment pass pinned for the cell filter, the admit probe,
@@ -956,10 +941,7 @@ object Similarity {
       val idx = stored.filter(col("cell").isin(incCells.toIndexedSeq: _*))
       // lazy: the write-back below materializes the admit DAG once and
       // the caller reads the checkpoint — the eager spelling executed
-      // the whole DAG a first time just to pin it. Safe against the
-      // append-reads-what-it-writes hazard: `stored`'s parquet file
-      // listing is snapshotted when the DataFrame is created, before
-      // any new file lands
+      // the whole DAG a first time just to pin it
       val admitted = admitAssigned(inc, idx, tau, pinSurvivors = true)
         .localCheckpoint(false)
       // write back the admitted representatives WITH their embeddings,
@@ -970,68 +952,47 @@ object Similarity {
       // the pinned increment (only the increment shuffles; the admitted
       // id set is a subset of it)
       val storedEmbType = stored.schema("embedding").dataType
-      inc.join(admitted.select(col("vec_id")), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"), col("embedding").cast(storedEmbType).as("embedding"),
-          col("cell"))
-        .write.mode("append").partitionBy("cell").parquet(cellsDir)
+      stageCells(cells,
+        inc.join(admitted.select(col("vec_id")), Seq("vec_id"), "left_semi")
+          .select(col("vec_id"), col("embedding").cast(storedEmbType).as("embedding"),
+            col("cell")))(cells.commitStaged)
       admitted
     }
 
-  /** Resolve the CURRENT data directory of a persisted index subtree —
-    * the read/write indirection that makes compaction invisible to
-    * readers (r15 VERDICT task 6). Compaction is GENERATIONAL: the
-    * compacted copy lands in `sub__g<N+1>` and Spark's `_SUCCESS`
-    * marker is the atomic commit point — the highest generation WITH a
-    * marker is current (a crashed compaction leaves an uncommitted
-    * directory readers ignore and the next compaction garbage-
-    * collects); with no committed generation the initial build's legacy
-    * bare `sub` layout is current. The previous generation is retained
-    * one compaction cycle, so a reader that snapshotted its file
-    * listing before the flip still resolves every file after it —
-    * there is no window where the live data is missing (the r15
-    * delete-then-rename swap had both a reader-visible gap and a
-    * crash window with NO live directory). */
-  private[graft] def currentIndexDir(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, sub: String): org.apache.hadoop.fs.Path = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val committed = generationDirs(fs, root, sub).filter { case (_, p) =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
-    }
-    if (committed.nonEmpty) committed.maxBy(_._1)._2
-    else new org.apache.hadoop.fs.Path(root, sub)
+  // ---------- persisted index part sets ----------
+  // `codes/` (IVF-ADC) and `cells/` (admission) under an index path are
+  // [[PartSet]]s of `partitionBy("cell")` parts (`data/cell=<n>/…`), the
+  // commit format managed tables use: a build stages the whole set and
+  // replaces it, an append stages and commits, a compaction replaces only
+  // the fragmented cells' parts. Writers hold the maintenance lock; readers
+  // resolve the manifest snapshot and never list the directory.
+
+  private def indexParts(path: String, sub: String): PartSet =
+    new PartSet(java.nio.file.Paths.get(path, sub), s"index $path/$sub")
+
+  /** Stages a `partitionBy("cell")` write of `cells` into `set` and
+    * publishes it with `commit`. */
+  private def stageCells[T](set: PartSet, cells: DataFrame)(commit: java.nio.file.Path => T): T =
+    set.stage(dir => cells.write.mode("append").partitionBy("cell").parquet(dir.toString))(commit)
+
+  /** A build: `cells` replaces every live part, and parts superseded
+    * longer than the vacuum window ago are reclaimed. */
+  private def rebuild(set: PartSet, cells: DataFrame): Unit = {
+    stageCells(set, cells)(set.replace(_, set.liveParts))
+    set.vacuum(Catalog.defaultVacuumRetentionMs)
   }
 
-  private[graft] def currentIndexDirStr(s: SparkSession, path: String,
-      sub: String): String = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    currentIndexDir(fs, path, sub).toString
+  /** The live rows of index part set `sub` (`codes` or `cells`) under
+    * `path`, with `cell` as a partition column. The manifest snapshot is
+    * resolved now: the relation keeps answering across later appends and
+    * compactions until a vacuum reclaims its parts. */
+  private[graft] def readIndex(s: SparkSession, path: String, sub: String): DataFrame = {
+    val set = indexParts(path, sub)
+    readParts(s, set, set.liveParts)
   }
 
-  /** All `sub__g<N>` generation directories under `path`, committed or
-    * not, as (generation, path) pairs. */
-  private def generationDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      sub: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val re = (java.util.regex.Pattern.quote(sub) + "__g(\\d+)").r
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toIndexedSeq.flatMap { st =>
-      st.getPath.getName match {
-        case re(n) => Some((n.toLong, st.getPath))
-        case _ => None
-      }
-    }
-  }
-
-  /** A REBUILD over a previously-compacted path must clear the
-    * generation chain first: the fresh build writes the legacy bare
-    * layout, which a surviving higher-numbered generation would
-    * silently shadow at resolution time. */
-  private def resetGenerations(s: SparkSession, path: String, sub: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    generationDirs(fs, root, sub).foreach { case (_, p) => fs.delete(p, true) }
-  }
+  private def readParts(s: SparkSession, set: PartSet, parts: Seq[String]): DataFrame =
+    GraftParquetBridge.readParts(s, set.dataDir.toString, set.absolute(parts))
 
   /** COMPACTION for the admission index — the maintenance op the append
     * loop eventually needs: every [[embedAdmitAppend]] batch lands one
@@ -1039,18 +1000,12 @@ object Similarity {
     * footer enumeration linear in the append COUNT on every probe and
     * report (AppendScale measured the 100×-files base leg at 1.48× for
     * identical data volume). Compacts the cell data to ONE file per
-    * cell — data identical, layout minimal, SELECTIVE (fragmented
-    * cells rewrite, single-file cells byte-carry, an unfragmented
-    * index no-ops; see [[compactCellDir]]) — under the same
-    * create-exclusive `_lock` as the appenders, into a NEW generation
-    * directory committed by its `_SUCCESS` marker (see
-    * [[currentIndexDir]]): readers racing the compaction resolve either
-    * the old or the new generation, never a missing path, and the old
-    * generation survives one further cycle for readers that already
-    * snapshotted it. Single-MAINTAINER posture unchanged (the lock).
-    * Returns a one-row (n_vectors, files_before, files_after) report. */
+    * cell — data identical, layout minimal, SELECTIVE (see
+    * [[compactCells]]) — under the same create-exclusive `_lock` as the
+    * appenders. Returns a one-row (n_vectors, files_before, files_after)
+    * report. */
   def compactEmbedIndex(spark: SparkSession, path: String): DataFrame =
-    compactCellDir(spark, path, "cells", "n_vectors")
+    compactCells(spark, path, "cells", "n_vectors")
 
   /** [[compactEmbedIndex]]'s twin for the IVF-ADC index:
     * [[appendIvfPqIndex]] fragments `codes/` one file per append per
@@ -1058,136 +1013,41 @@ object Similarity {
     * shared maintenance lock. Centroid/PQ artifacts are single-file
     * model metadata and never fragment. */
   def compactIvfPqIndex(spark: SparkSession, path: String): DataFrame =
-    compactCellDir(spark, path, "codes", "n_codes")
+    compactCells(spark, path, "codes", "n_codes")
 
-  /** SELECTIVE compaction (r16 VERDICT task 2): only cells holding >1
-    * data file are rewritten through Spark (decode → one-task shuffle →
-    * re-encode); already-minimal single-file cells are CARRIED into the
-    * new generation by a raw filesystem byte copy — no decode, no
-    * shuffle, no parquet re-encode — so at a steady ingest cadence the
-    * expensive rewrite is fragmentation-linear (the cells the appends
-    * touched since the last compact), not corpus-linear. When NO cell is
-    * fragmented the call is a NO-OP: no generation flip, no writes, just
-    * the (count, files, files) report — a maintenance cron firing
-    * between ingest batches costs a directory listing, not an index
-    * rewrite. Commit ordering makes the partial rewrite reader-safe:
-    * carried files land in the UNCOMMITTED target first (readers ignore
-    * a generation without `_SUCCESS`), and the Spark write of the
-    * fragmented cells commits the `_SUCCESS` marker last — a racing
-    * reader resolves either the complete old generation or the complete
-    * new one.
+  /** SELECTIVE compaction: the per-cell census comes from the manifest,
+    * with no listing. Only cells holding more than one part are rewritten
+    * through Spark (decode → one task per cell → re-encode) into staging,
+    * and [[PartSet.replace]] swaps exactly those cells' parts for the
+    * rewrite; single-file cells keep their manifest entries, so at a
+    * steady ingest cadence the rewrite is fragmentation-linear (the cells
+    * the appends touched since the last compact), not corpus-linear. When
+    * NO cell is fragmented the call is a NO-OP: nothing is written or
+    * published, just the (count, files, files) report.
     *
-    * RETENTION CONTRACT: exactly ONE prior generation is retained (one
-    * cycle of grace), so a reader's snapshotted file listing stays
-    * resolvable across the compaction that raced it but NOT across two
-    * — maintenance cadence must exceed query lifetime. A query that can
-    * outlive two compaction cycles must re-resolve through
-    * [[currentIndexDir]] (every shipped read path does). Pinned by the
-    * two-cycle spec in OperatorsSpec. */
-  private def compactCellDir(spark: SparkSession, path: String, sub: String,
+    * Readers keep the table contract: a relation planned before the swap
+    * reads its own manifest snapshot, and the replaced parts stay on disk
+    * until a vacuum finds them superseded for longer than
+    * [[Catalog.defaultVacuumRetentionMs]]. That vacuum runs after every
+    * compaction that publishes, so index disk stays bounded. */
+  private def compactCells(spark: SparkSession, path: String, sub: String,
       countCol: String): DataFrame =
     withMaintenanceLock(spark, path, s"compact-$sub") {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val conf = spark.sparkContext.hadoopConfiguration
-      val fs = root.getFileSystem(conf)
-      val cur = currentIndexDir(fs, path, sub)
-      // per-cell data-file census of the current generation (cell=<v>
-      // partition dirs — the only layout the appenders write), from ONE
-      // recursive listing: a per-cell listStatus loop costs O(cells)
-      // sequential namenode/store round-trips (minutes at 1e5 cells),
-      // while the recursive iterator streams the same census in batched
-      // pages — the same metadata, one call
-      val census: Seq[(org.apache.hadoop.fs.Path, Seq[org.apache.hadoop.fs.Path])] = {
-        val byCell = scala.collection.mutable.LinkedHashMap
-          .empty[org.apache.hadoop.fs.Path, scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.Path]]
-        val it = fs.listFiles(cur, true)
-        while (it.hasNext) {
-          val f = it.next().getPath
-          val parent = f.getParent
-          if (!f.getName.startsWith("_") && !f.getName.startsWith(".") &&
-            parent.getName.startsWith("cell="))
-            byCell.getOrElseUpdate(parent,
-              scala.collection.mutable.ArrayBuffer.empty) += f
-        }
-        byCell.toSeq.map { case (d, fsq) => d -> fsq.toSeq }
+      val set = indexParts(path, sub)
+      val before = set.liveParts
+      // a part is "cell=<n>/<file>": its directory is its cell
+      val frag = before.groupBy(p => p.take(p.indexOf('/'))).values
+        .filter(_.size > 1).flatten.toSeq
+      if (frag.nonEmpty) {
+        // repartition ON the partition column routes each cell's rows to
+        // one task, whose partitionBy write emits exactly one file per cell
+        stageCells(set, readParts(spark, set, frag).repartition(col("cell")))(
+          set.replace(_, frag))
+        set.vacuum(Catalog.defaultVacuumRetentionMs)
       }
-      val before = census.map(_._2.size.toLong).sum
-      val frag = census.filter(_._2.size > 1)
-      if (frag.isEmpty) {
-        // layout already minimal — parquet-footer count only, no rewrite
-        val n = spark.read.parquet(cur.toString).count()
-        spark.createDataFrame(Seq((n, before, before)))
-          .toDF(countCol, "files_before", "files_after")
-      } else {
-        val nextGen = (generationDirs(fs, root, sub).map(_._1) :+ 0L).max + 1
-        val target = new org.apache.hadoop.fs.Path(root, s"${sub}__g$nextGen")
-        // 1) carry single-file cells into the uncommitted target (no
-        //    _SUCCESS yet — invisible to currentIndexDir). On a local
-        //    filesystem the carry is a HARD LINK — O(metadata), no byte
-        //    traffic, and the old generation's later GC only drops a
-        //    link count — so a selective compact moves fragmented-cell
-        //    bytes ONLY. Filesystems without hard links (HDFS exposes
-        //    none publicly; object stores neither) fall back to a raw
-        //    byte copy — still no decode/shuffle/re-encode; at that
-        //    scale a manifest-of-files generation layout would replace
-        //    physical carries entirely (documented trade, not built:
-        //    the resolver's directory contract keeps readers trivial)
-        val isLocal = "file".equalsIgnoreCase(
-          Option(fs.getUri.getScheme).getOrElse(""))
-        def carry(src: org.apache.hadoop.fs.Path,
-            dst: org.apache.hadoop.fs.Path): Unit = {
-          val linked = isLocal && {
-            try {
-              java.nio.file.Files.createLink(
-                java.nio.file.Paths.get(dst.toUri.getPath),
-                java.nio.file.Paths.get(src.toUri.getPath))
-              true
-            } catch { case _: Exception => false }
-          }
-          if (!linked)
-            org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
-        }
-        census.filter(_._2.size == 1).foreach { case (cellDir, files) =>
-          val dst = new org.apache.hadoop.fs.Path(target, cellDir.getName)
-          fs.mkdirs(dst)
-          files.foreach(f => carry(f, new org.apache.hadoop.fs.Path(dst, f.getName)))
-        }
-        // 2) rewrite ONLY the fragmented cells to one file each:
-        //    repartition ON the partition column routes each cell's rows
-        //    to one task, whose partitionBy write emits exactly one file
-        //    into that cell's directory. The partition filter prunes the
-        //    scan to the fragmented cells' files. The write's job-commit
-        //    `_SUCCESS` marker is the COMMIT — new readers resolve this
-        //    generation from that moment (currentIndexDir)
-        val fragCells = frag.map(_._1.getName.stripPrefix("cell=").toInt)
-        spark.read.parquet(cur.toString)
-          .filter(col("cell").isin(fragCells: _*))
-          .repartition(col("cell"))
-          .write.mode("append").partitionBy("cell").parquet(target.toString)
-        // retention: keep cur (one cycle of grace for readers holding a
-        // pre-flip file listing) and target; delete older generations,
-        // uncommitted crash debris, and — once cur is itself a
-        // generation — the legacy bare dir from the cycle before
-        generationDirs(fs, root, sub).foreach { case (_, p) =>
-          if (p.getName != cur.getName && p.getName != target.getName)
-            fs.delete(p, true)
-        }
-        val legacy = new org.apache.hadoop.fs.Path(root, sub)
-        if (cur.getName != sub && fs.exists(legacy)) fs.delete(legacy, true)
-        val n = spark.read.parquet(target.toString).count()
-        val after = {
-          val it = fs.listFiles(target, true)
-          var m = 0L
-          while (it.hasNext) {
-            val f = it.next()
-            val name = f.getPath.getName
-            if (!name.startsWith("_") && !name.startsWith(".")) m += 1
-          }
-          m
-        }
-        spark.createDataFrame(Seq((n, before, after)))
-          .toDF(countCol, "files_before", "files_after")
-      }
+      val n = readIndex(spark, path, sub).count() // parquet-footer count
+      spark.createDataFrame(Seq((n, before.size.toLong, set.liveParts.size.toLong)))
+        .toDF(countCol, "files_before", "files_after")
     }
 
   /** Cell assignment of a base relation under explicit centroids — builds
@@ -1981,7 +1841,7 @@ object Similarity {
     // query MUST be a vector that entered through the APPEND statement
     // AND survived the compaction rewrite — retrieval proves the
     // appended codes landed in the right cells under the original
-    // centroids and that the compacted generation serves them. The
+    // centroids and that the compacted part set serves them. The
     // append report is checked against the build report (n_appended = 8
     // clones, n_total = n_vectors + 8); the compact report must keep
     // every code (n_codes = n_total) and land one file per non-empty
@@ -2023,7 +1883,7 @@ object Similarity {
             s"'graft_s20_inc', '$path')").collect().head
           val reportOk = rep.getLong(0) == 8L && rep.getLong(1) == nBase + 8L
           // statement 3: compact the appended codes (one file per cell);
-          // the query below then answers from the COMPACTED generation —
+          // the query below then answers from the COMPACTED parts —
           // a lost or duplicated code fails appended_top1_ok/compact_ok
           val crep = e.execute(s"SELECT n_codes, files_before, files_after " +
             s"FROM graft_ivfpq_compact('$path')").collect().head
@@ -2048,7 +1908,7 @@ object Similarity {
     // admit-and-write-back → COMPACT → admit: batch 1 admits against
     // the built index and graft_embed_admit_append APPENDS its
     // admissions to the stored cells, graft_embed_compact rewrites the
-    // fragmented cells into a fresh generation, and batch 2 then probes
+    // fragmented cells' parts, and batch 2 then probes
     // history ∪ batch-1 admissions from the COMPACTED artifact with no
     // rebuild. Traps: batch 2 carries a clone of a BATCH-1
     // ADMISSION (+3e6 of 350 — rejectable ONLY through the write-back;
@@ -2088,7 +1948,7 @@ object Similarity {
             s"'$path', 'graft_s21_inc1', 0.9)")
           // statement 3: COMPACT the fragmented cells (r15 VERDICT task
           // 3 — the embed compaction's oracle gate): batch 2 below
-          // probes the COMPACTED generation, so a compaction that loses
+          // probes the COMPACTED parts, so a compaction that loses
           // or duplicates a history OR batch-1-admitted vector changes
           // batch 2's admissions and fails the full-value hash
           e.execute(s"SELECT n_vectors FROM graft_embed_compact('$path')")

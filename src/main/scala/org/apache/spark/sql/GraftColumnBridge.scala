@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * plan-building on one SparkSession race-free: each expression closes
   * over ITS model's state. Lives in the spark.sql package only to reach
   * the package-private [[org.apache.spark.sql.classic.ExpressionUtils]]
-  * converters.
+  * converters and `TypeCollection`.
   */
 object GraftColumnBridge {
   /** Wrap a Catalyst expression as a Column. */
@@ -18,6 +18,14 @@ object GraftColumnBridge {
   /** Unwrap a Column to its Catalyst expression (attribute references
     * convert statically; no session interaction). */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Spark's own analysis-time input check, failing with
+    * DATATYPE_MISMATCH.UNEXPECTED_INPUT_TYPE: each of `inputs` must have
+    * one of its `accepted` types (nullability aside). */
+  def checkInputTypes(inputs: Seq[Expression],
+      accepted: Seq[Seq[types.DataType]]): catalyst.analysis.TypeCheckResult =
+    catalyst.expressions.ExpectsInputTypes.checkInputDataTypes(
+      inputs, accepted.map(ts => types.TypeCollection(ts: _*)))
 }
 
 /** The engine's bridge from SQL text to a DataFrame: `spark.sql(text)`

@@ -1321,6 +1321,16 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
     assert(ids == toks.map(lookup), s"ids $ids vs tokens $toks")
   }
 
+  /** Live part file names per cell directory of index part set `sub`
+    * under `path`, as the index reader resolves them. */
+  private def indexCellFiles(path: String, sub: String): Map[String, Set[String]] =
+    Similarity.readIndex(spark, path, sub).inputFiles.toSeq
+      .map(f => new org.apache.hadoop.fs.Path(f))
+      .groupBy(_.getParent.getName).view.mapValues(_.map(_.getName).toSet).toMap
+
+  private def indexParts(path: String, sub: String) =
+    new graft.engine.PartSet(java.nio.file.Paths.get(path, sub), s"index $path/$sub")
+
   test("appendIvfPqIndex: append(B) to index(A) equals encoding A∪B under A's model") {
     import spark.implicits._
     // well-separated clusters as defense in depth: build and append now
@@ -1343,7 +1353,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       val (km, pq) = Similarity.ivfPqTrain(a, cells = 4, m = 2, k = 4)
       val want = Similarity.ivfPqIndex(a.unionByName(b), km, pq)
         .collect().map(r => (r.getLong(1), r.getInt(0), r.getSeq[Int](2).toSeq)).toSet
-      val got = spark.read.parquet(s"$path/codes")
+      val got = Similarity.readIndex(spark, path, "codes")
         .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"),
           r.getSeq[Int](r.fieldIndex("codes")).toSeq)).toSet
       assert(got == want, s"appended codes diverge from the one-shot encoding")
@@ -1358,8 +1368,8 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       val rep2 = Similarity.compactIvfPqIndex(spark, path).collect().head
       assert(rep2.getLong(0) == 36L && rep2.getLong(1) > rep2.getLong(2),
         s"compact report: $rep2")
-      // compaction flips the current generation dir (reader-safe swap)
-      val gotC = spark.read.parquet(Similarity.currentIndexDirStr(spark, path, "codes"))
+      // the compacted manifest serves the same codes
+      val gotC = Similarity.readIndex(spark, path, "codes")
         .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"),
           r.getSeq[Int](r.fieldIndex("codes")).toSeq)).toSet
       assert(gotC == want, "compaction changed the stored codes")
@@ -1504,7 +1514,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       val incD = Seq((200L, Array(-0.7d, -0.7d, 0.0d, 0.0d))).toDF("vec_id", "embedding")
       assert(Similarity.embedAdmitAppend(incD, path, 0.9)
         .collect().map(_.getLong(0)).toSet == Set(200L))
-      val elem = spark.read.parquet(s"$path/cells").schema("embedding").dataType
+      val elem = Similarity.readIndex(spark, path, "cells").schema("embedding").dataType
         .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType
       assert(elem == org.apache.spark.sql.types.FloatType,
         s"cells went mixed-schema: element type $elem")
@@ -1520,18 +1530,8 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
     val hist = (0 until 12).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
     withScratch("graft-compact-", "graft-compact-wh-") { case Seq(path, wh) =>
-      def cellFiles(): Map[String, Int] = {
-        import scala.jdk.CollectionConverters._
-        // resolve through the generation pointer — compaction flips dirs
-        // (the resolved string is "file:/..."-qualified once generations
-        // exist; URI.getPath normalizes both spellings)
-        val root = java.nio.file.Paths.get(new java.net.URI(
-          Similarity.currentIndexDirStr(spark, path, "cells")).getPath)
-        val walk = java.nio.file.Files.walk(root)
-        val all = try walk.iterator().asScala.toSeq finally walk.close()
-        all.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .groupBy(_.getParent.getFileName.toString).view.mapValues(_.size).toMap
-      }
+      def cellFiles(): Map[String, Int] =
+        indexCellFiles(path, "cells").view.mapValues(_.size).toMap
       Similarity.writeEmbedIndex(hist, path, k = 4)
       // three append batches of genuinely novel, mutually orthogonal
       // directions (negative axes: cosine −1 to history, 0 to each
@@ -1625,114 +1625,89 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
     }
   }
 
-  test("compaction is invisible to readers: pre-flip snapshot answers; one-cycle retention") {
+  test("index readers keep their snapshot across compactions until vacuum") {
     import spark.implicits._
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
-    withScratch("graft-gen-") { case Seq(path2) =>
-      def localDir(): java.nio.file.Path = java.nio.file.Paths.get(
-        new java.net.URI(Similarity.currentIndexDirStr(spark, path2, "cells")).getPath)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Int)] =
+      df.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"))).toSet
+    withScratch("graft-snap-") { case Seq(path2) =>
       val hist = (0 until 12).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path2, k = 4)
       (0 until 2).foreach { b => // fragment two cells
         val inc = Seq((100L + b, vec(b, -1.0f))).toDF("vec_id", "embedding")
         assert(Similarity.embedAdmitAppend(inc, path2, 0.9).count() == 1)
       }
-      val dirBefore = localDir()
-      // a reader whose file listing was snapshotted BEFORE the flip
-      val snap = spark.read.parquet(dirBefore.toString)
-      val want = snap.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"))).toSet
+      // a reader planned BEFORE any compaction
+      val snap = Similarity.readIndex(spark, path2, "cells")
+      val want = rows(snap)
       Similarity.compactEmbedIndex(spark, path2).collect()
-      val dirAfter = localDir()
-      assert(dirAfter != dirBefore, "compaction must flip the generation dir")
-      assert(java.nio.file.Files.exists(dirBefore), "previous generation retained one cycle")
-      // the pre-flip snapshot still answers — no missing-path window
-      val still = snap.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"))).toSet
-      assert(still == want)
-      // a post-flip reader resolves the compacted generation, same data
-      val fresh = spark.read.parquet(dirAfter.toString)
-        .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"))).toSet
-      assert(fresh == want)
-      // a second compaction retires the generation BEFORE the previous.
-      // Compaction is SELECTIVE since r17 — an unfragmented index
-      // no-ops without a flip — so fragment a cell again first
+      // compaction is SELECTIVE — an unfragmented index no-ops — so
+      // fragment a cell again before the second cycle
       assert(Similarity.embedAdmitAppend(
         Seq((200L, Array(0.5f, -0.5f, 0.5f, -0.5f))).toDF("vec_id", "embedding"),
         path2, 0.9).count() == 1)
       Similarity.compactEmbedIndex(spark, path2).collect()
-      assert(!java.nio.file.Files.exists(dirBefore), "gen older than previous is GC'd")
-      assert(java.nio.file.Files.exists(dirAfter), "previous generation retained")
-      assert(localDir() != dirAfter)
-      // the TWO-cycle boundary of the retention contract, pinned
-      // explicitly (r16 VERDICT task 6): a reader whose file listing
-      // has now survived TWO compaction cycles resolves deleted files
-      // and FAILS — the documented contract is maintenance cadence >
-      // query lifetime (see compactCellDir's scaladoc), not unbounded
-      // snapshot isolation
-      val twoCycles = intercept[Exception] { snap.collect() }
-      assert(twoCycles.getMessage != null, s"expected a read failure: $twoCycles")
-      // a REBUILD over a compacted path clears the generation chain —
-      // otherwise the surviving higher generation would shadow the
-      // fresh legacy-layout build at resolution time
+      // two compactions later the old snapshot still answers: the parts
+      // it planned are superseded but inside the vacuum window
+      assert(rows(snap) == want)
+      val fresh = rows(Similarity.readIndex(spark, path2, "cells"))
+      assert(fresh.map(_._1) == want.map(_._1) + 200L)
+      // once vacuum reclaims superseded parts, the stale plan fails loudly
+      indexParts(path2, "cells").vacuum(0L)
+      val vacuumed = intercept[Exception] { snap.collect() }
+      assert(vacuumed.getMessage != null, s"expected a read failure: $vacuumed")
+      assert(rows(Similarity.readIndex(spark, path2, "cells")) == fresh)
+      // a REBUILD over the compacted path serves only the rebuilt rows
       Similarity.writeEmbedIndex(hist, path2, k = 4)
-      assert(localDir() == java.nio.file.Paths.get(path2, "cells"))
-      assert(spark.read.parquet(localDir().toString).count() == 12L)
+      assert(Similarity.readIndex(spark, path2, "cells").select(col("vec_id"))
+        .collect().map(_.getLong(0)).toSet == (0L until 12L).toSet)
     }
   }
 
-  test("generation resolver ignores uncommitted crash debris; compaction GCs it") {
+  test("index crash debris is invisible to readers and vacuum reclaims it") {
     import spark.implicits._
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
     withScratch("graft-debris-") { case Seq(path) =>
       val hist = (0 until 8).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path, k = 4)
-      // a crashed compaction: a high-numbered generation dir with data
-      // files but NO _SUCCESS marker — readers must keep resolving the
-      // committed layout, not the torn one
-      val debris = java.nio.file.Paths.get(path, "cells__g99")
-      java.nio.file.Files.createDirectories(debris)
-      java.nio.file.Files.write(debris.resolve("part-torn.parquet"),
-        Array[Byte](1, 2, 3))
-      assert(Similarity.currentIndexDirStr(spark, path, "cells").endsWith("/cells"),
-        "uncommitted generation must not shadow the committed layout")
-      // probes keep answering from the committed layout
+      val cells = indexParts(path, "cells")
+      // a crashed append: a staging directory holding a torn part
+      val staging = cells.dir.resolve(".staging-crashed").resolve("cell=0")
+      java.nio.file.Files.createDirectories(staging)
+      java.nio.file.Files.write(staging.resolve("part-torn.parquet"), Array[Byte](1, 2, 3))
+      // a crash between moving a part into data/ and publishing it
+      val orphan = cells.dataDir.resolve("cell=0").resolve("part-orphan.parquet")
+      java.nio.file.Files.createDirectories(orphan.getParent)
+      java.nio.file.Files.write(orphan, Array[Byte](1, 2, 3))
+      // readers resolve the manifest: neither torn file is read
+      assert(Similarity.readIndex(spark, path, "cells").count() == 8L)
       val probe = Seq((500L, vec(0, 1.0f))).toDF("vec_id", "embedding")
       assert(Similarity.embedAdmitFromIndex(probe, path, 0.9).count() == 0)
-      // fragment a cell so the next compaction REWRITES (selective
-      // compaction no-ops on an unfragmented index and would leave the
-      // debris for the next real cycle)
+      // nor does a real append/compaction cycle pick them up
       assert(Similarity.embedAdmitAppend(
         Seq((100L, vec(0, -1.0f))).toDF("vec_id", "embedding"), path, 0.9).count() == 1)
-      // the next compaction numbers PAST the debris and removes it
       val rep = Similarity.compactEmbedIndex(spark, path).collect().head
       assert(rep.getLong(0) == 9L, s"compaction must keep all rows: $rep")
-      assert(!java.nio.file.Files.exists(debris), "crash debris must be GC'd")
-      val cur = Similarity.currentIndexDirStr(spark, path, "cells")
-      assert(cur.endsWith("cells__g100"), // max existing gen (99) + 1
-        s"next generation must number past the debris: $cur")
-      assert(spark.read.parquet(cur).count() == 9L)
+      // the compaction's own vacuum keeps fresh debris (retention window);
+      // a vacuum past it reclaims both
+      assert(java.nio.file.Files.exists(orphan))
+      cells.vacuum(0L)
+      assert(!java.nio.file.Files.exists(orphan), "an unlisted part must be reclaimed")
+      assert(!java.nio.file.Files.exists(staging.getParent), "crash staging must be reclaimed")
+      assert(Similarity.readIndex(spark, path, "cells").count() == 9L)
     }
   }
 
-  test("selective compaction: single-file cells carried without rewrite; unfragmented no-ops") {
+  test("selective compaction: single-file cells kept, no-op publishes none") {
     import spark.implicits._
     def vec(axis: Int, s: Float): Array[Float] =
       Array.tabulate(4)(d => if (d == axis) s else 0.0f)
     withScratch("graft-selcomp-") { case Seq(path) =>
-      // per-cell data-file NAMES of the current generation: carried cells
-      // must keep their exact file names (a Spark rewrite mints new
-      // UUID-suffixed part files; a link/copy carry preserves them)
-      def cellFileNames(): Map[String, Set[String]] = {
-        import scala.jdk.CollectionConverters._
-        val root = java.nio.file.Paths.get(new java.net.URI(
-          Similarity.currentIndexDirStr(spark, path, "cells")).getPath)
-        val walk = java.nio.file.Files.walk(root)
-        val all = try walk.iterator().asScala.toSeq finally walk.close()
-        all.filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .groupBy(_.getParent.getFileName.toString)
-          .view.mapValues(_.map(_.getFileName.toString).toSet).toMap
-      }
+      // per-cell part NAMES: kept cells must keep their exact part names
+      // (a Spark rewrite mints new ones)
+      def cellFileNames(): Map[String, Set[String]] = indexCellFiles(path, "cells")
       val hist = (0 until 12).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path, k = 4)
       // normalize to a known one-file-per-cell layout (the fresh build's
@@ -1751,33 +1726,21 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       assert(rep.getLong(0) == 13L && rep.getLong(1) == nCells + 1 &&
         rep.getLong(2) == nCells, s"selective report: $rep (cells=$nCells)")
       val after = cellFileNames()
-      // untouched single-file cells: same file names (carried, not rewritten)
+      // untouched single-file cells: same part names (kept, not rewritten)
       fragged.filter(_._2.size == 1).foreach { case (c, names) =>
-        assert(after(c) == names, s"carried cell $c rewritten: ${after(c)} vs $names")
+        assert(after(c) == names, s"kept cell $c rewritten: ${after(c)} vs $names")
       }
       // the fragmented cell collapsed to one freshly-written file
       val t = touched.head
       assert(after(t).size == 1 && !fragged(t).contains(after(t).head),
         s"touched cell $t not rewritten: ${after(t)} vs ${fragged(t)}")
-      // the local-FS carry is a HARD LINK (O(metadata), no byte
-      // traffic): a carried file shares its inode with the previous
-      // generation's copy — link count ≥ 2 while both generations live
-      val genDir = java.nio.file.Paths.get(new java.net.URI(
-        Similarity.currentIndexDirStr(spark, path, "cells")).getPath)
-      fragged.collect { case (c, names) if names.size == 1 => c }.headOption
-        .foreach { c =>
-          val carriedFile = genDir.resolve(c).resolve(after(c).head)
-          assert(java.nio.file.Files.getAttribute(carriedFile, "unix:nlink")
-            .asInstanceOf[Number].intValue >= 2,
-            s"carried file $carriedFile should be hard-linked, not copied")
-        }
-      // NO-OP on the now-minimal layout: same report counts, no flip
-      val dirBefore = Similarity.currentIndexDirStr(spark, path, "cells")
+      // NO-OP on the now-minimal layout: same report counts, no publish
+      val versionBefore = indexParts(path, "cells").currentVersion
       val rep2 = Similarity.compactEmbedIndex(spark, path).collect().head
       assert(rep2.getLong(0) == 13L && rep2.getLong(1) == nCells &&
         rep2.getLong(2) == nCells, s"no-op report: $rep2")
-      assert(Similarity.currentIndexDirStr(spark, path, "cells") == dirBefore,
-        "no-op compaction must not flip the generation")
+      assert(indexParts(path, "cells").currentVersion == versionBefore,
+        "no-op compaction must not publish a version")
       assert(cellFileNames() == after, "no-op compaction must not touch files")
     }
   }
@@ -1789,7 +1752,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
     // them, so the expected set accumulates what the operator RETURNS)
     // and selective compactions (fragmented, minimal, or no-op,
     // depending on where the appends landed). Invariant after EVERY
-    // op: the resolved current generation holds exactly history ∪
+    // op: the live manifest snapshot holds exactly history ∪
     // admitted-so-far — no loss, no duplication, across any
     // append/compact interleaving the sequence produces.
     val rnd = new scala.util.Random(42)
@@ -1802,7 +1765,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       var nextId = 1000L
       var compacts = 0
       def stored(): Set[Long] =
-        spark.read.parquet(Similarity.currentIndexDirStr(spark, path, "cells"))
+        Similarity.readIndex(spark, path, "cells")
           .select(col("vec_id")).collect().map(_.getLong(0)).toSet
       (1 to 12).foreach { step =>
         if (rnd.nextBoolean()) {
@@ -1844,7 +1807,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       val b = Seq((100L, vec(1, 0.95f))).toDF("vec_id", "embedding")
       intercept[IllegalStateException] { Similarity.appendIvfPqIndex(b, path) }
       // untouched: the footer count is still the build's
-      assert(spark.read.parquet(s"$path/codes").count() == 24L)
+      assert(Similarity.readIndex(spark, path, "codes").count() == 24L)
     }
   }
 
