@@ -967,7 +967,7 @@ object Similarity {
   // the fragmented cells' parts. Writers hold the maintenance lock; readers
   // resolve the manifest snapshot and never list the directory.
 
-  private def indexParts(path: String, sub: String): PartSet =
+  private[graft] def indexParts(path: String, sub: String): PartSet =
     new PartSet(java.nio.file.Paths.get(path, sub), s"index $path/$sub")
 
   /** Stages a `partitionBy("cell")` write of `cells` into `set` and

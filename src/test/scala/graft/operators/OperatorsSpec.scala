@@ -1328,9 +1328,6 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       .map(f => new org.apache.hadoop.fs.Path(f))
       .groupBy(_.getParent.getName).view.mapValues(_.map(_.getName).toSet).toMap
 
-  private def indexParts(path: String, sub: String) =
-    new graft.engine.PartSet(java.nio.file.Paths.get(path, sub), s"index $path/$sub")
-
   test("appendIvfPqIndex: append(B) to index(A) equals encoding A∪B under A's model") {
     import spark.implicits._
     // well-separated clusters as defense in depth: build and append now
@@ -1654,7 +1651,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       val fresh = rows(Similarity.readIndex(spark, path2, "cells"))
       assert(fresh.map(_._1) == want.map(_._1) + 200L)
       // once vacuum reclaims superseded parts, the stale plan fails loudly
-      indexParts(path2, "cells").vacuum(0L)
+      Similarity.indexParts(path2, "cells").vacuum(0L)
       val vacuumed = intercept[Exception] { snap.collect() }
       assert(vacuumed.getMessage != null, s"expected a read failure: $vacuumed")
       assert(rows(Similarity.readIndex(spark, path2, "cells")) == fresh)
@@ -1672,7 +1669,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
     withScratch("graft-debris-") { case Seq(path) =>
       val hist = (0 until 8).map(i => (i.toLong, vec(i % 4, 1.0f))).toDF("vec_id", "embedding")
       Similarity.writeEmbedIndex(hist, path, k = 4)
-      val cells = indexParts(path, "cells")
+      val cells = Similarity.indexParts(path, "cells")
       // a crashed append: a staging directory holding a torn part
       val staging = cells.dir.resolve(".staging-crashed").resolve("cell=0")
       java.nio.file.Files.createDirectories(staging)
@@ -1735,11 +1732,11 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       assert(after(t).size == 1 && !fragged(t).contains(after(t).head),
         s"touched cell $t not rewritten: ${after(t)} vs ${fragged(t)}")
       // NO-OP on the now-minimal layout: same report counts, no publish
-      val versionBefore = indexParts(path, "cells").currentVersion
+      val versionBefore = Similarity.indexParts(path, "cells").currentVersion
       val rep2 = Similarity.compactEmbedIndex(spark, path).collect().head
       assert(rep2.getLong(0) == 13L && rep2.getLong(1) == nCells &&
         rep2.getLong(2) == nCells, s"no-op report: $rep2")
-      assert(indexParts(path, "cells").currentVersion == versionBefore,
+      assert(Similarity.indexParts(path, "cells").currentVersion == versionBefore,
         "no-op compaction must not publish a version")
       assert(cellFileNames() == after, "no-op compaction must not touch files")
     }
