@@ -2,13 +2,13 @@ package graft.catalog
 
 import java.util
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftParquetBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.engine.{Catalog => EngineCatalog, ColumnTypeKind, SqlError, TableDescriptor, TableDescriptorBuilder}
@@ -18,11 +18,11 @@ import graft.engine.{Catalog => EngineCatalog, ColumnTypeKind, SqlError, TableDe
   * `spark.sql.catalog.graft = graft.catalog.GraftCatalog` (+
   * `spark.sql.catalog.graft.warehouse = <dir>`) and plain `spark.sql`
   * resolves `graft.<db>.<table>` / `graft.<db>.<schema>.<table>` with no
-  * temp views, across ALL databases at once. Reads ride Spark's own V2
-  * parquet source (the descriptor supplies the schema, so filter pushdown,
-  * column pruning, and empty tables all behave), which is the plugin
-  * analogue of the reference's `TableProvider` handing DataFusion an
-  * Arrow-typed scan (src/sql/plan/table.rs:160-266).
+  * temp views, across ALL databases at once, on the engine's own
+  * `Catalog.open(warehouse)`. Reads are Spark's `ParquetScanBuilder` over
+  * the manifest's `GraftParquetBridge.fileIndex` and the descriptor's
+  * schema, the plugin analogue of the reference's `TableProvider` handing
+  * DataFusion an Arrow-typed scan (src/sql/plan/table.rs:160-266).
   *
   * The plugin surface is READ + DDL only: `GraftTable` deliberately does
   * not implement `SupportsWrite`, because a plain parquet append would
@@ -40,7 +40,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     catalogName = name
     val wh = options.get("warehouse")
     require(wh != null, s"spark.sql.catalog.$name.warehouse must be set")
-    engineCatalog = new EngineCatalog(wh)
+    engineCatalog = EngineCatalog.open(wh)
   }
 
   override def name(): String = catalogName
@@ -78,18 +78,11 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val (db, schema, table) = resolve(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val desc = engineCatalog.getTable(db, schema, table)
-    val spark = SparkSession.active
     // scan the MANIFEST snapshot, not the directory — after a compaction
     // the directory holds vacuum-pending parts a listing would double-read
-    val paths = engineCatalog.livePartPaths(db, schema, table) match {
-      case Seq() => Seq(engineCatalog.dataDir(db, schema, table)) // empty table: schema-only scan
-      case ps => ps
-    }
-    val delegate = ParquetTable(
-      s"$catalogName.$db.$schema.$table", spark,
-      CaseInsensitiveStringMap.empty(),
-      paths, Some(desc.toStructType), classOf[ParquetFileFormat])
-    new GraftTable(s"$catalogName.$db.$schema.$table", desc, delegate)
+    val spark = SparkSession.active
+    new GraftTable(s"$catalogName.$db.$schema.$table", desc, spark,
+      GraftParquetBridge.fileIndex(spark, engineCatalog.livePartPaths(db, schema, table), None))
   }
 
   override def createTable(
@@ -188,19 +181,21 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     throw SqlError.unsupported("DROP DATABASE ..")
 }
 
-/** Read-only V2 table: schema from the engine descriptor, scans delegated
-  * to Spark's V2 parquet table (predicate pushdown + column pruning
-  * included). No `SupportsWrite` — see [[GraftCatalog]]. */
+/** Read-only V2 table: schema from the engine descriptor, scans from
+  * Spark's V2 parquet scan builder over the snapshot's file index. No
+  * `SupportsWrite` — see [[GraftCatalog]]. */
 private[catalog] final class GraftTable(
-    fullName: String, desc: TableDescriptor, delegate: ParquetTable)
+    fullName: String, desc: TableDescriptor, spark: SparkSession, index: PartitioningAwareFileIndex)
   extends Table with SupportsRead {
   override def name(): String = fullName
   override def schema(): StructType = desc.toStructType
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
-  override def partitioning(): Array[Transform] = delegate.partitioning()
   override def properties(): util.Map[String, String] =
     Map("primary_key" -> desc.primaryIndex.columnIds.map(desc.column(_).name).mkString(",")).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    delegate.newScanBuilder(options)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    // nullable, as Spark's own file tables pass their schema
+    val nullable = StructType(desc.toStructType.map(_.copy(nullable = true)))
+    ParquetScanBuilder(spark, index, nullable, nullable, options)
+  }
 }

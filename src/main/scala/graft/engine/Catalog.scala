@@ -32,6 +32,16 @@ object Catalog {
     * orders of magnitude). Versions older than the cap fail loudly as
     * expired when time-traveled to. */
   val maxVersionHistory: Int = 4096
+
+  private val opened = new java.util.concurrent.ConcurrentHashMap[String, Catalog]()
+
+  /** The catalog of `warehouse` (created if missing), one per real path for
+    * the life of the JVM: every mutation synchronizes on the instance, so
+    * two on one warehouse would allocate ids under different monitors. */
+  def open(warehouse: String): Catalog = {
+    val root = Files.createDirectories(Paths.get(warehouse)).toRealPath().toString
+    opened.computeIfAbsent(root, new Catalog(_))
+  }
 }
 
 class Catalog(val warehouse: String,

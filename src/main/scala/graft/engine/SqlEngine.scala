@@ -144,15 +144,13 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   def readTable(db: String, schema: String, table: String): DataFrame =
     scanParts(db, schema, table)(catalog.livePartPaths(db, schema, table))
 
-  /** The table's rows in the given part files; no parts is an empty
-    * relation of the table's schema. `paths` is read after the
-    * descriptor, so a missing table raises TableNotExists. */
+  /** The table's rows in the given part files, under the descriptor's
+    * schema; no parts is an empty relation of that schema. `paths` is read
+    * after the descriptor, so a missing table raises TableNotExists. */
   private def scanParts(db: String, schema: String, table: String)(
       paths: => Seq[String]): DataFrame = {
     val st = catalog.getTable(db, schema, table).toStructType
-    val p = paths
-    if (p.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
-    else spark.read.schema(st).parquet(p: _*)
+    GraftParquetBridge.readParts(spark, paths, st)
   }
 
   /** TIME TRAVEL: the table as of snapshot `version` (0 = empty at

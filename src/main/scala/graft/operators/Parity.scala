@@ -18,7 +18,7 @@ object Parity {
   /** A statement engine connected to a new database `db` in warehouse
     * `wh` — the throwaway engine of every row that drives SQL statements. */
   private[operators] def engine(s: SparkSession, wh: String, db: String): SqlEngine = {
-    val e = new SqlEngine(s, new Catalog(wh), SqlContext(db, "user1"))
+    val e = new SqlEngine(s, Catalog.open(wh), SqlContext(db, "user1"))
     e.execute(s"CREATE DATABASE $db")
     e
   }

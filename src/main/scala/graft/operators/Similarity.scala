@@ -991,8 +991,12 @@ object Similarity {
     readParts(s, set, set.liveParts)
   }
 
-  private def readParts(s: SparkSession, set: PartSet, parts: Seq[String]): DataFrame =
-    GraftParquetBridge.readParts(s, set.dataDir.toString, set.absolute(parts))
+  private def readParts(s: SparkSession, set: PartSet, parts: Seq[String]): DataFrame = {
+    val files = set.absolute(parts)
+    require(files.nonEmpty, s"no Parquet parts to read under ${set.dataDir}")
+    GraftParquetBridge.readParts(s, files, GraftParquetBridge.footerSchema(s, files.head),
+      Some(set.dataDir.toString))
+  }
 
   /** COMPACTION for the admission index — the maintenance op the append
     * loop eventually needs: every [[embedAdmitAppend]] batch lands one

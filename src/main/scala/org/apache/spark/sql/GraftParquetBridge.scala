@@ -3,9 +3,12 @@ package org.apache.spark.sql
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Writes rows that are already on the driver as one Parquet part, on the
@@ -16,9 +19,11 @@ import org.apache.spark.sql.types.StructType
   * and the output committer: for a 1-row part, 151 ms through a one-task
   * write job against 11.5 ms here (`local[4]` on a 4-core host, medians
   * of 100 after 20 warm-up writes). The caller commits the part (the
-  * catalog's manifest move). [[readParts]] is the read side for a
-  * manifest's file list. Lives in the spark.sql package only to reach the
-  * classic session's state.
+  * catalog's manifest move). The read side is the only code that turns a
+  * manifest's part list into a relation ([[readParts]], or [[fileIndex]]
+  * under the plugin's scan), over a schema the caller supplies: the file
+  * list comes from the manifest and is never listed again. Lives in the
+  * spark.sql package only to reach the classic session's state.
   */
 object GraftParquetBridge {
 
@@ -39,15 +44,21 @@ object GraftParquetBridge {
     finally writer.close()
   }
 
-  /** The local Parquet `files` under `basePath` as one relation, partition
-    * columns discovered from their `k=v/` directories below `basePath`.
-    * The file index is handed the files' statuses, so Spark lists
-    * nothing: `spark.read.parquet` over an explicit file list schedules a
-    * distributed listing job once it passes 32 paths (100 files of a
-    * 50-partition directory, `local[2]`, warm: 1.0-1.7 s that way against
-    * 0.08-0.13 s here). Schema inference reads one footer, as
-    * `spark.read.parquet` does. `files` must not be empty. */
-  def readParts(spark: SparkSession, basePath: String, files: Seq[String]): DataFrame = {
+  /** The Parquet `files` as one relation of `dataSchema` (made nullable,
+    * as `spark.read` does) plus the partition columns of their `k=v/`
+    * directories below `partitionRoot`; no files is an empty relation. */
+  def readParts(spark: SparkSession, files: Seq[String], dataSchema: StructType,
+      partitionRoot: Option[String] = None): DataFrame = {
+    val session = classic.ClassicConversions.castToImpl(spark)
+    val index = fileIndex(spark, files, partitionRoot)
+    session.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(session))
+  }
+
+  /** An index of exactly the local `files`, handed their statuses so it
+    * lists nothing: `spark.read.parquet` lists a file list in a Spark job
+    * once it passes 32 paths. */
+  def fileIndex(spark: SparkSession, files: Seq[String], partitionRoot: Option[String]): InMemoryFileIndex = {
     val session = classic.ClassicConversions.castToImpl(spark)
     val fs = FileSystem.getLocal(session.sessionState.newHadoopConf())
     val statuses = files.map(f => fs.getFileStatus(new Path(f)))
@@ -57,12 +68,17 @@ object GraftParquetBridge {
       override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
       override def invalidateAll(): Unit = ()
     }
-    val options = Map("basePath" -> fs.makeQualified(new Path(basePath)).toString)
-    val index = new InMemoryFileIndex(session, statuses.map(_.getPath), options, None, listed)
-    val format = new ParquetFileFormat
-    val dataSchema = format.inferSchema(session, options, index.allFiles()).getOrElse(
-      throw new IllegalArgumentException(s"no Parquet parts to read under $basePath"))
-    session.baseRelationToDataFrame(
-      HadoopFsRelation(index, index.partitionSchema, dataSchema, None, format, options)(session))
+    val options = partitionRoot.map(r => "basePath" -> fs.makeQualified(new Path(r)).toString).toMap
+    new InMemoryFileIndex(session, statuses.map(_.getPath), options, None, listed)
+  }
+
+  /** `file`'s footer schema, read on the calling thread (Spark's schema
+    * inference reads it in a one-task job). */
+  def footerSchema(spark: SparkSession, file: String): StructType = {
+    val state = classic.ClassicConversions.castToImpl(spark).sessionState
+    val path = new Path(file)
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(path, state.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer), new ParquetToSparkSchemaConverter(state.conf))
   }
 }

@@ -5,10 +5,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** No source file may hold a raw control byte (0x00–0x08, 0x0B, 0x0C,
-  * 0x0E–0x1F): grep and ripgrep treat such a file as binary and silently
-  * leave it out of every text search. Spell the character as a unicode
-  * escape instead. Runs from the repository root, where sbt forks tests. */
+/** Source rules no compiler checks. Runs from the repository root, where
+  * sbt forks tests. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private def isControl(b: Int): Boolean =
@@ -19,6 +17,13 @@ class SourceHygieneSpec extends AnyFunSuite {
     try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally walk.close()
   }
 
+  private def mainSources(under: String*): Seq[(Path, String)] =
+    files(Paths.get("src", "main", "scala").resolve(Paths.get("", under: _*)))
+      .filter(_.toString.endsWith(".scala")).map(f => f -> Files.readString(f))
+
+  /** No raw control byte (0x00–0x08, 0x0B, 0x0C, 0x0E–0x1F): grep and
+    * ripgrep treat such a file as binary and silently leave it out of
+    * every text search. Spell the character as a unicode escape instead. */
   test("no raw control bytes under src/ or perfbench/src/") {
     val roots = Seq(Paths.get("src"), Paths.get("perfbench", "src"))
     roots.foreach(r => assert(Files.isDirectory(r), s"$r not found from ${Paths.get("").toAbsolutePath}"))
@@ -28,5 +33,28 @@ class SourceHygieneSpec extends AnyFunSuite {
         .map(i => f"$f at byte $i (0x${bytes(i) & 0xff}%02x)")
     }
     assert(offenders.isEmpty, offenders.mkString("raw control bytes in: ", "; ", ""))
+  }
+
+  /** Two `Catalog`s on one warehouse allocate ids and take write locks
+    * under different monitors; `Catalog.open` keeps one per warehouse. */
+  test("src/main constructs a Catalog only inside Catalog.open") {
+    val construct = """new\s+(Engine)?Catalog\s*\(""".r
+    val offenders = mainSources().flatMap { case (f, text) =>
+      val outsideOpen =
+        if (f.getFileName.toString != "Catalog.scala") text
+        else """(?s)  def open\(.*?\n  \}\n""".r.replaceFirstIn(text, "")
+      construct.findFirstIn(outsideOpen).map(_ => f.toString)
+    }
+    assert(offenders.isEmpty, offenders.mkString("Catalog constructed outside Catalog.open in: ", ", ", ""))
+  }
+
+  /** A part list becomes a relation only through `GraftParquetBridge`:
+    * `spark.read.parquet` over a list of paths lists them in a Spark job
+    * once it passes 32. */
+  test("graft.engine and graft.catalog read no files through spark.read") {
+    val offenders = mainSources("graft", "engine").concat(mainSources("graft", "catalog")).collect {
+      case (f, text) if """(?m)^(?!import ).*\.read\s*\.""".r.findFirstIn(text).nonEmpty => f.toString
+    }
+    assert(offenders.isEmpty, offenders.mkString("spark.read in: ", ", ", ""))
   }
 }

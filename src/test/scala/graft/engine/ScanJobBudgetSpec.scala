@@ -1,0 +1,110 @@
+package graft.engine
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import graft.{SuiteScratch, TestSession}
+import graft.catalog.GraftCatalog
+import graft.operators.Similarity
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Pins the Spark jobs it takes to plan a read of a manifest snapshot of
+  * 40 parts: past 32 paths `spark.read.parquet` lists them in a
+  * distributed job, and schema inference reads a footer in another. Every
+  * reader plans through one listing-free file index, so planning runs no
+  * job and a point read runs exactly the one that answers it. */
+class ScanJobBudgetSpec extends AnyFunSuite with SuiteScratch {
+
+  private lazy val spark = TestSession.spark
+
+  private val TagKey = "graft.test.scanBudget"
+
+  /** Runs `body` and counts the jobs it submits: those carrying this
+    * thread's tag, which AQE stage jobs inherit from the submitting
+    * thread. */
+  private def jobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => p.getProperty(TagKey) == tag)) n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(TagKey, tag)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (r, n.get)
+    } finally {
+      sc.setLocalProperty(TagKey, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val Parts = 40
+
+  /** A table of `Parts` one-row parts (row i has id i, v 10 * i), no
+    * auto-compaction; serial ids need no existing-key scan, so the set-up
+    * runs no job. */
+  private lazy val (wh, engine) = {
+    val wh = scratchDir("graft-scan-wh-")
+    val e = new SqlEngine(spark, Catalog.open(wh), SqlContext("scan", "u"), autoCompactAfterParts = 0)
+    e.execute("CREATE DATABASE scan")
+    e.execute("CREATE TABLE t (id serial PRIMARY KEY, v int)")
+    (1 to Parts).foreach(i => e.execute(s"INSERT INTO t (v) VALUES (${10 * i})"))
+    assert(e.catalog.liveParts("scan", "public", "t").size == Parts)
+    (wh, e)
+  }
+
+  /** Builds `df` and its physical plan; returns it and the jobs that took. */
+  private def planJobs(df: => DataFrame): (DataFrame, Int) =
+    jobs { val d = df; d.queryExecution.executedPlan; d }
+
+  test("readTable, readTableAt and readTableChanges plan 40 parts with 0 jobs") {
+    val e = engine
+    val (all, n1) = planJobs(e.readTable("scan", "public", "t"))
+    assert(n1 == 0, s"readTable jobs: $n1")
+    assert(all.count() == Parts)
+    val v = e.catalog.currentVersion("scan", "public", "t")
+    val (at, n2) = planJobs(e.readTableAt("scan", "public", "t", v - 5))
+    assert(n2 == 0, s"readTableAt jobs: $n2")
+    assert(at.count() == Parts - 5)
+    val (changes, n3) = planJobs(e.readTableChanges("scan", "public", "t", 0L, v))
+    assert(n3 == 0, s"readTableChanges jobs: $n3")
+    assert(changes.count() == Parts)
+  }
+
+  test("spark.table through the plugin plans 40 parts with 0 jobs") {
+    val e = engine
+    val s = spark.newSession()
+    s.conf.set("spark.sql.catalog.scanwh", classOf[GraftCatalog].getName)
+    s.conf.set("spark.sql.catalog.scanwh.warehouse", wh)
+    val (df, n) = planJobs(s.table("scanwh.scan.t"))
+    assert(n == 0, s"jobs: $n")
+    assert(df.count() == Parts)
+  }
+
+  test("a point read over 40 parts runs 1 job") {
+    val (rows, n) = jobs(engine.execute("SELECT id, v FROM t WHERE id = 17").collect().toSeq)
+    assert(rows == Seq(Row(17, 170)))
+    assert(n == 1, s"jobs: $n")
+  }
+
+  test("Similarity.readIndex plans a 40-part index with 0 jobs") {
+    val path = scratchDir("graft-scan-index-")
+    val cells = Similarity.indexParts(path, "cells")
+    cells.create()
+    val rows = spark.range(Parts).select(col("id"), (col("id") * 2).as("v"), col("id").cast("int").as("cell"))
+    cells.stage(dir => rows.coalesce(1).write.mode("append").partitionBy("cell").parquet(dir.toString))(
+      cells.commitStaged)
+    assert(cells.liveParts.size == Parts)
+    val (idx, n) = planJobs(Similarity.readIndex(spark, path, "cells"))
+    assert(n == 0, s"jobs: $n")
+    assert(idx.columns.toSeq == Seq("id", "v", "cell"))
+    assert(idx.where("cell = 7").collect().toSeq == Seq(Row(7L, 14L, 7)))
+  }
+}
