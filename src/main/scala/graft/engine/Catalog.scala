@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.GraftSession.deleteRecursively
+import org.apache.spark.sql.GraftParquetBridge
 
 /** File-backed catalog over a warehouse directory.
   *
@@ -160,6 +161,7 @@ class Catalog(val warehouse: String,
       throw SqlError.tableNotExists(table)
     }
     deleteRecursively(p)
+    GraftParquetBridge.forgetFooters(p.toString)
   }
 
   // ---------- data (one PartSet per table) ----------

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import graft.GraftSession.deleteRecursively
+import org.apache.spark.sql.GraftParquetBridge
 
 /** A manifest-listed set of parquet parts under one directory — the one
   * commit format of the warehouse. Managed tables (through [[Catalog]])
@@ -295,7 +296,10 @@ final class PartSet(val dir: Path, label: String,
     val recorded = readGraveyard().toMap
     val deadAt = parquetUnder(dataDir).filterNot(live).map(n => n -> recorded.getOrElse(n, now))
     val (expired, retained) = deadAt.partition { case (_, t) => now - t >= retentionMs }
-    expired.foreach { case (n, _) => Files.deleteIfExists(dataDir.resolve(n)) }
+    expired.foreach { case (n, _) =>
+      Files.deleteIfExists(dataDir.resolve(n))
+      GraftParquetBridge.forgetFooters(dataDir.resolve(n).toString)
+    }
     writeGraveyard(retained)
     // time-travel history entries are NOT pruned here: [[partsAt]] detects
     // a reclaimed part by its absence and reports "vacuumed" — rewriting

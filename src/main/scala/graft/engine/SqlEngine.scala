@@ -201,10 +201,13 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   // ---------- query path ----------
 
   /** Plans relational text — a query, or an INSERT's source — as
-    * `spark.sql` does (Spark's parser, then `Dataset.ofRows`, so commands
-    * and eager analysis behave the same), with one [[Binder]] pass over
-    * the parse tree in between. The reference binds on its AST the same
-    * way: it collects the relations a statement names (`visit_relations`,
+    * `spark.sql` does (Spark's parser, then the `QueryExecution` that
+    * `Dataset.ofRows` builds, so commands and eager analysis behave the
+    * same), with one [[Binder]] pass over the parse tree in between; the
+    * code generated for the statement's filters reads their literals as
+    * parameters, so one statement shape compiles once (`GraftPlanBridge`).
+    * The reference binds on its AST the same way: it collects the
+    * relations a statement names (`visit_relations`,
     * src/sql/traits.rs:68-78) and fetches only their descriptors
     * (src/sql/mod.rs:60-75), so a query costs what its own tables cost,
     * not the catalog. Nothing is registered in the shared SparkSession:
@@ -860,10 +863,12 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * key-ordered by construction (tablet files hold sorted key ranges, so
     * its compaction preserves key order for free), and the parquet
     * equivalent is disjoint per-file key ranges with ordered row groups —
-    * point/range predicates on the key then prune at row-group level via
-    * parquet min/max stats, the 100 TB analogue of the reference's
-    * primary-index seek. Costs one range shuffle instead of coalesce's
-    * shuffle-free merge; key-less tables keep the coalesce path. */
+    * point/range predicates on the key then skip whole parts at planning
+    * (their footer statistics, `GraftParquetBridge.fileIndex`) and row
+    * groups within the parts they read, the 100 TB analogue of the
+    * reference's primary-index seek. Clustering into several parts costs
+    * one range shuffle; into one part it is `coalesce(1)` and a sort
+    * within it, with no shuffle. Key-less tables keep the coalesce path. */
   def compactTable(db: String, schema: String, table: String, targetFileBytes: Long = 128L << 20): (Int, Int) =
     catalog.withTableWriteLock(db, schema, table) {
       val (nFiles, bytes) = catalog.dataFileStats(db, schema, table)

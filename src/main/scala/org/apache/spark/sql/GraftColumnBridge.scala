@@ -27,22 +27,3 @@ object GraftColumnBridge {
     catalyst.expressions.ExpectsInputTypes.checkInputDataTypes(
       inputs, accepted.map(ts => types.TypeCollection(ts: _*)))
 }
-
-/** The engine's bridge from SQL text to a DataFrame: `spark.sql(text)`
-  * with a rewrite of the unresolved parse tree before analysis. Like
-  * `spark.sql` it parses with the session's parser and builds the
-  * DataFrame with `Dataset.ofRows`, with the session active, so commands
-  * execute and analysis runs eagerly exactly as they do there. Lives in
-  * the spark.sql package only to reach the package-private factory.
-  */
-object GraftPlanBridge {
-  def sql(spark: SparkSession, text: String)(
-      rewrite: catalyst.plans.logical.LogicalPlan => catalyst.plans.logical.LogicalPlan): DataFrame = {
-    val session = classic.ClassicConversions.castToImpl(spark)
-    session.withActive(classic.Dataset.ofRows(session, rewrite(parse(spark, text))))
-  }
-
-  /** The unresolved parse tree the session's parser gives for `text`. */
-  def parse(spark: SparkSession, text: String): catalyst.plans.logical.LogicalPlan =
-    classic.ClassicConversions.castToImpl(spark).sessionState.sqlParser.parsePlan(text)
-}

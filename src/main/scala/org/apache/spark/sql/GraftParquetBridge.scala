@@ -1,14 +1,24 @@
 package org.apache.spark.sql
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils, FileStatusCache,
+  HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Writes rows that are already on the driver as one Parquet part, on the
@@ -57,7 +67,11 @@ object GraftParquetBridge {
 
   /** An index of exactly the local `files`, handed their statuses so it
     * lists nothing: `spark.read.parquet` lists a file list in a Spark job
-    * once it passes 32 paths. */
+    * once it passes 32 paths. Listing for a scan drops each part whose
+    * footer statistics rule out every row group under the scan's data
+    * filters ([[mayMatch]]): each task already applies that exact test to
+    * its row groups, so the rows do not change, but a part it rules out
+    * never becomes a task. */
   def fileIndex(spark: SparkSession, files: Seq[String], partitionRoot: Option[String]): InMemoryFileIndex = {
     val session = classic.ClassicConversions.castToImpl(spark)
     val fs = FileSystem.getLocal(session.sessionState.newHadoopConf())
@@ -69,8 +83,68 @@ object GraftParquetBridge {
       override def invalidateAll(): Unit = ()
     }
     val options = partitionRoot.map(r => "basePath" -> fs.makeQualified(new Path(r)).toString).toMap
-    new InMemoryFileIndex(session, statuses.map(_.getPath), options, None, listed)
+    new InMemoryFileIndex(session, statuses.map(_.getPath), options, None, listed) {
+      override def listFiles(partitionFilters: Seq[Expression],
+          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+        val dirs = super.listFiles(partitionFilters, dataFilters)
+        val conf = session.sessionState.conf
+        val filters =
+          if (!conf.parquetFilterPushDown) Nil
+          else dataFilters.flatMap(DataSourceStrategy.translateFilter(_, supportNestedPredicatePushdown = true))
+        if (filters.isEmpty) dirs
+        else {
+          val hadoopConf = session.sessionState.newHadoopConf()
+          dirs.map(d => d.copy(files = d.files.filter(f => mayMatch(f.fileStatus, filters, conf, hadoopConf))))
+        }
+      }
+    }
   }
+
+  /** Footers read for part skipping, by part path, with the length and
+    * modification time they were read at. A part's entry lives until
+    * [[forgetFooters]] reclaims its path. */
+  private val footers = new ConcurrentHashMap[String, (Long, Long, ParquetMetadata)]
+
+  private def footer(status: FileStatus, hadoopConf: Configuration): ParquetMetadata = {
+    val key = status.getPath.toUri.getPath
+    val cached = footers.get(key)
+    if (cached != null && cached._1 == status.getLen && cached._2 == status.getModificationTime) cached._3
+    else {
+      val read = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(status, hadoopConf),
+        ParquetMetadataConverter.NO_FILTER)
+      footers.put(key, (status.getLen, status.getModificationTime, read))
+      read
+    }
+  }
+
+  /** Whether a row group of the part may hold a row passing `filters`,
+    * judged as a task's Parquet reader judges it at the statistics level:
+    * the same predicate `ParquetFileFormat` builds (the session's pushdown
+    * settings, the part's own schema and datetime rebase mode), through
+    * `RowGroupFilter.filterRowGroups`. */
+  private def mayMatch(status: FileStatus, filters: Seq[sources.Filter], conf: SQLConf,
+      hadoopConf: Configuration): Boolean = {
+    val meta = footer(status, hadoopConf)
+    val file = meta.getFileMetaData
+    val rebase = DataSourceUtils.datetimeRebaseSpec(file.getKeyValueMetaData.get,
+      conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString)
+    val parquet = new ParquetFilters(file.getSchema, conf.parquetFilterPushDownDate,
+      conf.parquetFilterPushDownTimestamp, conf.parquetFilterPushDownDecimal,
+      conf.parquetFilterPushDownStringPredicate, conf.parquetFilterPushDownInFilterThreshold,
+      conf.caseSensitiveAnalysis, rebase)
+    filters.flatMap(parquet.createFilter).reduceOption(FilterApi.and).forall(p =>
+      !RowGroupFilter.filterRowGroups(FilterCompat.get(p), meta.getBlocks, file.getSchema).isEmpty)
+  }
+
+  /** Drops the footers held for the part `path`, or for every part under
+    * it when it is a directory: its caller has deleted them. */
+  def forgetFooters(path: String): Unit = {
+    val p = new Path(path).toUri.getPath
+    footers.keySet.removeIf(k => k == p || k.startsWith(p + "/"))
+  }
+
+  /** Whether a footer is held for the part `path`. */
+  def holdsFooter(path: String): Boolean = footers.containsKey(new Path(path).toUri.getPath)
 
   /** `file`'s footer schema, read on the calling thread (Spark's schema
     * inference reads it in a one-task job). */

@@ -57,4 +57,25 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, offenders.mkString("spark.read in: ", ", ", ""))
   }
+
+  /** The `src/main` sources other than `file` that match `code`. */
+  private def outside(file: String, code: String): Seq[String] =
+    mainSources().collect {
+      case (f, text) if f.getFileName.toString != file && code.r.findFirstIn(text).nonEmpty => f.toString
+    }
+
+  /** An engine statement's plan carries no literal in its generated code
+    * because `GraftPlanBridge` builds its `QueryExecution`; a DataFrame
+    * built another way in `src/main` would get around that. */
+  test("src/main builds a QueryExecution only in GraftPlanBridge") {
+    val offenders = outside("GraftPlanBridge.scala", """Dataset\.ofRows\s*\(|new\s+QueryExecution\s*\(""")
+    assert(offenders.isEmpty, offenders.mkString("Dataset.ofRows or new QueryExecution in: ", ", ", ""))
+  }
+
+  /** Part skipping holds each footer it reads until the part is
+    * reclaimed; a footer read elsewhere is read twice. */
+  test("src/main reads Parquet footers only in GraftParquetBridge") {
+    val offenders = outside("GraftParquetBridge.scala", """readFooter|ParquetFileReader|ParquetFooterReader""")
+    assert(offenders.isEmpty, offenders.mkString("Parquet footer read in: ", ", ", ""))
+  }
 }

@@ -1,10 +1,7 @@
 package graft.engine
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.{SuiteScratch, TestSession}
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.TaggedWork
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the number of Spark jobs a statement runs, executed and fetched,
@@ -14,29 +11,10 @@ class InsertJobBudgetSpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
 
-  private val TagKey = "graft.test.jobBudget"
-
-  /** Runs `body` and counts the jobs it submits: those carrying this
-    * thread's tag, which AQE stage jobs inherit from the submitting
-    * thread. */
+  /** Runs `body` and counts the jobs it submits (see [[TaggedWork]]). */
   private def jobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty(TagKey) == tag)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(TagKey, tag)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, n.get)
-    } finally {
-      sc.setLocalProperty(TagKey, null)
-      sc.removeSparkListener(listener)
-    }
+    val (r, work) = TaggedWork(spark.sparkContext)(body)
+    (r, work.jobs)
   }
 
   /** Executes and fetches one statement; returns its rows and job count. */

@@ -1,12 +1,9 @@
 package graft.engine
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.{SuiteScratch, TestSession}
 import graft.catalog.GraftCatalog
 import graft.operators.Similarity
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.{TaggedWork, Work}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,34 +12,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * 40 parts: past 32 paths `spark.read.parquet` lists them in a
   * distributed job, and schema inference reads a footer in another. Every
   * reader plans through one listing-free file index, so planning runs no
-  * job and a point read runs exactly the one that answers it. */
+  * job, and a point read runs exactly the one that answers it, over the
+  * one part whose footer statistics can match its filter. */
 class ScanJobBudgetSpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
 
-  private val TagKey = "graft.test.scanBudget"
-
-  /** Runs `body` and counts the jobs it submits: those carrying this
-    * thread's tag, which AQE stage jobs inherit from the submitting
-    * thread. */
+  /** Runs `body` and counts the jobs it submits (see [[TaggedWork]]). */
   private def jobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty(TagKey) == tag)) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(TagKey, tag)
-    try {
-      val r = body
-      ListenerBusDrain(sc)
-      (r, n.get)
-    } finally {
-      sc.setLocalProperty(TagKey, null)
-      sc.removeSparkListener(listener)
-    }
+    val (r, work) = TaggedWork(spark.sparkContext)(body)
+    (r, work.jobs)
   }
 
   private val Parts = 40
@@ -89,9 +68,11 @@ class ScanJobBudgetSpec extends AnyFunSuite with SuiteScratch {
   }
 
   test("a point read over 40 parts runs 1 job") {
-    val (rows, n) = jobs(engine.execute("SELECT id, v FROM t WHERE id = 17").collect().toSeq)
+    // and 1 task: the other 39 parts' footer statistics rule the filter out at planning
+    val (rows, work) = TaggedWork(spark.sparkContext)(
+      engine.execute("SELECT id, v FROM t WHERE id = 17").collect().toSeq)
     assert(rows == Seq(Row(17, 170)))
-    assert(n == 1, s"jobs: $n")
+    assert(work == Work(1, 1), s"work: $work")
   }
 
   test("Similarity.readIndex plans a 40-part index with 0 jobs") {
