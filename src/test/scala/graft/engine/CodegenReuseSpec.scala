@@ -2,7 +2,7 @@ package graft.engine
 
 import graft.{SuiteScratch, TestSession}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** An engine read compiles once per statement shape: the literals of its
