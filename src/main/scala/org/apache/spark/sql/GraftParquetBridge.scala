@@ -100,8 +100,8 @@ object GraftParquetBridge {
     }
   }
 
-  /** Footers read for part skipping, by part path, with the length and
-    * modification time they were read at. A part's entry lives until
+  /** Footers read for part skipping and [[footerSchema]], by part path,
+    * with the length and modification time they were read at. A part's entry lives until
     * [[forgetFooters]] reclaims its path. */
   private val footers = new ConcurrentHashMap[String, (Long, Long, ParquetMetadata)]
 
@@ -146,13 +146,14 @@ object GraftParquetBridge {
   /** Whether a footer is held for the part `path`. */
   def holdsFooter(path: String): Boolean = footers.containsKey(new Path(path).toUri.getPath)
 
-  /** `file`'s footer schema, read on the calling thread (Spark's schema
-    * inference reads it in a one-task job). */
+  /** The local part `file`'s footer schema, from its held footer or read
+    * on the calling thread (Spark's schema inference reads it in a
+    * one-task job). */
   def footerSchema(spark: SparkSession, file: String): StructType = {
     val state = classic.ClassicConversions.castToImpl(spark).sessionState
-    val path = new Path(file)
-    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromPath(path, state.newHadoopConf()),
-      ParquetMetadataConverter.SKIP_ROW_GROUPS)
-    ParquetFileFormat.readSchemaFromFooter(new Footer(path, footer), new ParquetToSparkSchemaConverter(state.conf))
+    val hadoopConf = state.newHadoopConf()
+    val status = FileSystem.getLocal(hadoopConf).getFileStatus(new Path(file))
+    ParquetFileFormat.readSchemaFromFooter(new Footer(status.getPath, footer(status, hadoopConf)),
+      new ParquetToSparkSchemaConverter(state.conf))
   }
 }
