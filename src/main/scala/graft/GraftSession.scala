@@ -4,7 +4,7 @@ import java.nio.file.{Files, LinkOption, Path}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftParquetBridge, SparkSession}
 
 /** The one place a graft SparkSession is built, and the one scratch-
   * directory helper. Every main and every spec gets its session here, so
@@ -46,12 +46,14 @@ object GraftSession {
     } finally dirs.foreach(deleteRecursively)
   }
 
-  /** Deletes `p` and everything under it; symlinks are removed, never
-    * followed. A missing `p` is a no-op. */
+  /** Deletes `p` and everything under it, and drops the Parquet footers
+    * held for the parts it held; symlinks are removed, never followed. A
+    * missing `p` is a no-op. */
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p, LinkOption.NOFOLLOW_LINKS)) {
       val walk = Files.walk(p)
       val all = try walk.iterator().asScala.toSeq.reverse finally walk.close()
       all.foreach(Files.deleteIfExists(_))
+      GraftParquetBridge.forgetFooters(p.toString)
     }
 }

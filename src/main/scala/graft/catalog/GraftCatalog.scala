@@ -20,7 +20,7 @@ import graft.engine.{Catalog => EngineCatalog, ColumnTypeKind, SqlError, TableDe
   * resolves `graft.<db>.<table>` / `graft.<db>.<schema>.<table>` with no
   * temp views, across ALL databases at once, on the engine's own
   * `Catalog.open(warehouse)`. Reads are Spark's `ParquetScanBuilder` over
-  * the manifest's `GraftParquetBridge.fileIndex` and the descriptor's
+  * the live version's `GraftParquetBridge.fileIndex` and the descriptor's
   * schema, the plugin analogue of the reference's `TableProvider` handing
   * DataFusion an Arrow-typed scan (src/sql/plan/table.rs:160-266).
   *

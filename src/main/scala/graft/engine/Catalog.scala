@@ -1,10 +1,8 @@
 package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 import graft.GraftSession.deleteRecursively
-import org.apache.spark.sql.GraftParquetBridge
 
 /** File-backed catalog over a warehouse directory.
   *
@@ -16,9 +14,12 @@ import org.apache.spark.sql.GraftParquetBridge
   * create/drop/list with IF [NOT] EXISTS tolerance, and a global id
   * allocator standing in for the KV `Increment`-driven serial id column.
   *
-  * Single-driver engine: all mutations synchronize on this object, which is
-  * faithful to the reference's per-statement transactional writes at the
-  * observable level (its own tests are single-node, single-client).
+  * A table's data is a [[PartSet]], one version file per commit. In one
+  * JVM, mutations synchronize on this object and per-table write locks.
+  * Two instances on one warehouse (two processes) never overwrite each
+  * other's commit: the later of two on one version fails with
+  * [[SqlError.conflict]]. The `_ids` and `_serial/<columnId>` counters have
+  * no such guard; [[Catalog.open]] keeps one instance per warehouse.
   */
 object Catalog {
   /** Default [[Catalog.vacuum]] grace window: parts superseded more
@@ -27,10 +28,9 @@ object Catalog {
     * default — immediate reclamation (0) must be an explicit opt-in. */
   val defaultVacuumRetentionMs: Long = 10L * 60 * 1000
 
-  /** Cap on retained `_versions` entries per table: bounds the metadata
-    * rewrite cost of high-frequency INSERT workloads (the entries are a
-    * few hundred bytes each; 4096 outlives any vacuum retention window by
-    * orders of magnitude). Versions older than the cap fail loudly as
+  /** Cap on retained version files per table: the commit of version `v`
+    * deletes version `v − cap` (4096 outlives any vacuum retention window
+    * by orders of magnitude). Versions older than the cap fail loudly as
     * expired when time-traveled to. */
   val maxVersionHistory: Int = 4096
 
@@ -60,7 +60,7 @@ class Catalog(val warehouse: String,
   }
 
   // Counter files (`_ids`, `_serial/<columnId>`) are replaced, never
-  // rewritten in place ([[PartSet.replaceFile]], as the manifest is). A
+  // rewritten in place ([[PartSet.replaceFile]]). A
   // crash mid-write leaves only a stray temp file — the counter keeps its
   // last committed value instead of reading back empty (which would fail
   // every later INSERT) or losing its value (which would reissue keys).
@@ -68,13 +68,6 @@ class Catalog(val warehouse: String,
     if (Files.exists(f)) Files.readString(f).trim.toLong else 0L
 
   private def writeCounter(f: Path, value: Long): Unit = PartSet.replaceFile(f, value.toString)
-
-  /** `Files.list` streams hold a directory fd until closed; every listing
-    * goes through this helper so a long-lived engine can't leak fds. */
-  private def listDir(p: Path): Seq[Path] = {
-    val s = Files.list(p)
-    try s.iterator().asScala.toSeq finally s.close()
-  }
 
   private def dbPath(db: String): Path = root.resolve(db)
   private def schemaPath(db: String, schema: String): Path = dbPath(db).resolve(schema)
@@ -100,13 +93,13 @@ class Catalog(val warehouse: String,
 
   def listDatabases(): Seq[String] =
     if (!Files.isDirectory(root)) Seq.empty
-    else listDir(root)
+    else PartSet.list(root)
       .filter(Files.isDirectory(_)).map(_.getFileName.toString)
       .filterNot(_.startsWith("_")).sorted
 
   def listSchemas(db: String): Seq[String] = {
     requireDatabase(db)
-    listDir(dbPath(db))
+    PartSet.list(dbPath(db))
       .filter(Files.isDirectory(_)).map(_.getFileName.toString).sorted
   }
 
@@ -147,7 +140,7 @@ class Catalog(val warehouse: String,
 
   def listTables(db: String, schema: String): Seq[String] = {
     requireSchema(db, schema)
-    listDir(schemaPath(db, schema))
+    PartSet.list(schemaPath(db, schema))
       .filter(p => Files.exists(p.resolve("descriptor.json")))
       .map(_.getFileName.toString).sorted
   }
@@ -161,12 +154,11 @@ class Catalog(val warehouse: String,
       throw SqlError.tableNotExists(table)
     }
     deleteRecursively(p)
-    GraftParquetBridge.forgetFooters(p.toString)
   }
 
   // ---------- data (one PartSet per table) ----------
-  // A table's data is a [[PartSet]] under its directory: the manifest,
-  // `_versions`, `_dead`, `data/` and `.staging-*`. Each method below is
+  // A table's data is a [[PartSet]] under its directory: `_versions/`,
+  // `data/` and `.staging-*`. Each method below is
   // the set's method of the same name under this catalog's monitor; part
   // names are relative to `data/`, the `*Paths` forms absolute.
 
@@ -249,10 +241,14 @@ class Catalog(val warehouse: String,
   /** (count, bytes) of the live parts — compaction planning. */
   def dataFileStats(db: String, schema: String, table: String): (Int, Long) =
     synchronized { parts(db, schema, table).stats }
-  /** A compaction's publish: the staged parts replace every live part.
-    * Caller must hold the table write lock. */
+  /** A compaction's publish: the staged parts replace the parts of the
+    * staging's base version, which the compaction read. Caller must hold
+    * the table write lock. */
   def replaceData(db: String, schema: String, table: String, stagingDir: Path): Unit =
-    synchronized { val set = parts(db, schema, table); set.replace(stagingDir, set.liveParts) }
+    synchronized {
+      val set = parts(db, schema, table)
+      set.replace(stagingDir, set.partsAt(PartSet.baseOf(stagingDir)))
+    }
   /** Reclaims parts superseded, and staging directories left, at least
     * `retentionMs` ago; returns the number of data files removed. */
   def vacuum(db: String, schema: String, table: String,
@@ -263,7 +259,8 @@ class Catalog(val warehouse: String,
   // commit must be atomic WITH RESPECT TO EACH OTHER — two concurrent
   // inserts could otherwise both pass the check and both publish
   // (check-then-write race). The reference gets this from its
-  // transactional commit; a single-driver engine gets it from a lock.
+  // transactional commit; in one JVM this lock gives it, across instances
+  // the put-if-absent version file.
   // Catalog methods stay individually synchronized; this lock spans the
   // whole check+write window and is striped per table so unrelated
   // tables never serialize.

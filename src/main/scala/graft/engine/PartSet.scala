@@ -1,159 +1,142 @@
 package graft.engine
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, StandardCopyOption}
+import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import graft.GraftSession.deleteRecursively
-import org.apache.spark.sql.GraftParquetBridge
 
-/** A manifest-listed set of parquet parts under one directory — the one
-  * commit format of the warehouse. Managed tables (through [[Catalog]])
-  * and the persisted ANN/admission indexes (`codes/`, `cells/` under an
-  * index path) are both part sets. Layout under `dir`:
-  *   - `manifest`: the LIVE part names, one per line, relative to `data/`;
-  *   - `_versions`: one line per publish (time travel);
-  *   - `_dead`: when each superseded part was superseded (vacuum retention);
-  *   - `data/`: the part files — flat for tables, `cell=<n>/…` for a
-  *     `partitionBy("cell")` write;
-  *   - `.staging-*`: writes not yet committed.
+/** A set of parquet parts under one directory, one write-once file per
+  * version — the one commit format of the warehouse, for managed tables
+  * ([[Catalog]]) and the persisted indexes (`codes/`, `cells/`). Under `dir`:
+  *   - `_versions/<v>` (20-digit zero-padded): version `v`'s publish millis,
+  *     then its live part names relative to `data/`, one per line. Never
+  *     rewritten; committing `v` deletes `v − maxVersionHistory`. Version
+  *     0, the empty set, has no file;
+  *   - `_versions/_head`: a hint replaced after each commit; it may lag
+  *     the newest version, never lead it;
+  *   - `data/`: the parts — flat for tables, `cell=<n>/…` for indexes;
+  *   - `.staging-<base>-<uuid>`: a write opened at version `base`.
   *
-  * A reader resolves the manifest at planning time and keeps a consistent
-  * snapshot even if a later publish replaces parts mid-query (SURVEY §1.5 —
-  * the observable analogue of the reference's snapshot reads; same reason
-  * Iceberg/Delta list files through metadata, never the directory). Every
-  * metadata file is replaced by write-temp + ATOMIC_MOVE, so readers see
-  * the old or the new file set, never a mix. Writers must be serialized by
-  * the caller (the catalog's monitors, the index maintenance lock).
-  *
-  * `label` names the set in error messages ("table t").
+  * A reader reads the hint, probes `v+1`, `v+2`, … until one is absent and
+  * reads that version's file, listing no directory; it keeps its snapshot
+  * across later publishes (SURVEY §1.5; the reference recovers a tablet
+  * by replaying its manifest log, src/tablet/loader.rs). A commit
+  * hard-links a dot-temp file to the version's name, and link(2) fails
+  * when the name exists: of two writers on one version, in one process or
+  * two, one fails with [[SqlError.conflict]] instead of overwriting the
+  * other (Delta Lake's put-if-absent log, Armbrust et al., VLDB 2020). A
+  * crash leaves the old or the new version whole; [[vacuum]] reclaims
+  * parts no version lists. `label` names the set in errors ("table t").
   */
 final class PartSet(val dir: Path, label: String,
     maxVersionHistory: Int = Catalog.maxVersionHistory) {
-  import PartSet.replaceFile
+  import PartSet.Version
 
   val dataDir: Path = dir.resolve("data")
-  private def manifestFile = dir.resolve("manifest")
-  private def versionsFile = dir.resolve("_versions")
-  private def graveyardFile = dir.resolve("_dead")
+  private val versionsDir = dir.resolve("_versions")
+  private def versionFile(v: Long): Path = versionsDir.resolve(f"$v%020d")
+  private def headHint: Path = versionsDir.resolve("_head")
 
-  /** An empty set: `data/` and an empty manifest. */
-  def create(): Unit = {
-    Files.createDirectories(dataDir)
-    Files.writeString(manifestFile, "")
-  }
-
-  /** Live part names (relative to `data/`), manifest order; a set that was
-    * never published is empty. */
-  def liveParts: Seq[String] =
-    if (Files.exists(manifestFile)) lines(manifestFile) else Seq.empty
+  /** An empty set: version 0. */
+  def create(): Unit = Files.createDirectories(dataDir)
 
   def absolute(parts: Seq[String]): Seq[String] = parts.map(p => dataDir.resolve(p).toString)
 
-  private def lines(f: Path): Seq[String] =
-    Files.readString(f).split("\n").toSeq.filter(_.nonEmpty)
+  // ---------- versions (time travel) ----------
+  // Every publish (INSERT commit, compaction swap) is one version: the
+  // analogue of the reference's MVCC version chains, where a read "as of"
+  // resolves the newest version ≤ the requested point
+  // (src/tablet/memory.rs:73-81; src/sql/mod.rs:65). A version stays
+  // readable until [[vacuum]] reclaims its superseded files or it ages out
+  // of the newest `maxVersionHistory`; then it fails loudly, never serves
+  // the wrong rows.
 
-  private def publish(parts: Seq[String]): Unit = {
-    replaceFile(manifestFile, parts.mkString("\n"))
-    // every manifest publish is a retained SNAPSHOT VERSION (time travel)
-    val entries = readVersions()
-    val next = entries.lastOption.map(_.version).getOrElse(0L) + 1L
-    writeVersions((entries :+ VersionEntry(next, System.currentTimeMillis(), parts))
-      .takeRight(maxVersionHistory))
-  }
+  private def read(v: Long): Option[Version] =
+    if (v == 0L) Some(Version(0L, Seq.empty))
+    else try {
+      val lines = Files.readString(versionFile(v)).split("\n")
+      Some(Version(lines.head.toLong, lines.toSeq.tail.filter(_.nonEmpty)))
+    } catch { case _: NoSuchFileException => None }
 
-  // ---------- version history (time travel) ----------
-  // Every manifest publish (INSERT commit, compaction swap) appends one
-  // line "<version>\t<millis>\t<comma-joined parts>" to `_versions`;
-  // version 0 is the empty set at creation. This is the observable
-  // analogue of the reference's MVCC version chains: a read "as of"
-  // resolves the newest version ≤ the requested point (reference: reads
-  // return the newest version ≤ ts, src/tablet/memory.rs:73-81; planning
-  // reads run at Snapshot semantics, src/sql/mod.rs:65). Old versions
-  // stay readable until [[vacuum]] reclaims their superseded files — the
-  // same retention contract as a table format's snapshot expiry. Ordinals
-  // are EXPLICIT in the file so the history can be capped
-  // ([[Catalog.maxVersionHistory]]) without renumbering: a trimmed or
-  // vacuumed version fails loudly, never silently serves the wrong rows.
+  private def oldestRetained(head: Long): Long = math.max(1L, head - maxVersionHistory + 1)
 
-  private final case class VersionEntry(version: Long, millis: Long, parts: Seq[String])
-
-  private def readVersions(): Seq[VersionEntry] =
-    if (!Files.exists(versionsFile)) Seq.empty
-    else lines(versionsFile).flatMap { line =>
-      line.split("\t", 3) match {
-        case Array(v, ts, parts) =>
-          for (vn <- v.toLongOption; t <- ts.toLongOption)
-            yield VersionEntry(vn, t, parts.split(",").toSeq.filter(_.nonEmpty))
-        case _ => None
-      }
-    }
-
-  private def writeVersions(entries: Seq[VersionEntry]): Unit =
-    replaceFile(versionsFile,
-      entries.map(e => s"${e.version}\t${e.millis}\t${e.parts.mkString(",")}").mkString("\n"))
+  /** Version `v` when `head` is the newest; throws if it aged out. */
+  private def entry(v: Long, head: Long): Version =
+    (if (v > 0L && v < oldestRetained(head)) None else read(v)).getOrElse(
+      throw SqlError.unexpected(s"version $v of $label has expired from the version history"))
 
   /** Latest snapshot version (0 = empty, no publishes yet). */
-  def currentVersion: Long = readVersions().lastOption.map(_.version).getOrElse(0L)
+  def currentVersion: Long = {
+    var v = try Files.readString(headHint).trim.toLong catch { case _: NoSuchFileException => 0L }
+    while (Files.exists(versionFile(v + 1))) v += 1
+    v
+  }
+
+  /** Live part names (relative to `data/`) of the newest version. */
+  def liveParts: Seq[String] = { val head = currentVersion; entry(head, head).parts }
 
   /** Part names of snapshot `version` (0 = the empty creation snapshot).
     * Throws if the version never existed, aged out of the capped history,
     * or its files were reclaimed by [[vacuum]]. */
   def partsAt(version: Long): Seq[String] = {
     if (version == 0L) return Seq.empty
-    val versions = readVersions()
-    val head = versions.lastOption.map(_.version).getOrElse(0L)
+    val head = currentVersion
     if (version < 0L || version > head)
       throw SqlError.unexpected(s"$label has no version $version (current: $head)")
-    val entry = versions.find(_.version == version).getOrElse(
-      throw SqlError.unexpected(
-        s"version $version of $label has expired from the version history"))
-    entry.parts.find(p => !Files.exists(dataDir.resolve(p))).foreach { gone =>
-      throw SqlError.unexpected(s"version $version of $label has been vacuumed (missing: $gone)")
-    }
-    entry.parts
+    present(entry(version, head).parts, s"version $version of $label has")
   }
 
-  /** Newest version whose publish time ≤ `millis` (the reference's
-    * "newest version ≤ ts" MVCC read rule, src/tablet/memory.rs:73-81);
-    * 0 when `millis` predates every publish of a COMPLETE history. When
-    * the capped history has been trimmed, a `millis` older than the
-    * oldest RETAINED publish must fail loudly like any expired-version
-    * read — the true as-of snapshot existed but was dropped; silently
-    * resolving it to the empty version-0 set would serve wrong rows. */
-  def versionAsOf(millis: Long): Long = {
-    val versions = readVersions()
-    versions.filter(_.millis <= millis).lastOption.map(_.version).getOrElse {
-      if (versions.headOption.exists(_.version > 1L))
-        throw SqlError.unexpected(
-          s"as-of time $millis predates $label's retained version history " +
-            s"(oldest retained: version ${versions.head.version})")
-      0L
+  /** `parts`, or an error that `what` been vacuumed if one is gone. */
+  private def present(parts: Seq[String], what: String): Seq[String] = {
+    parts.find(p => !Files.exists(dataDir.resolve(p))).foreach { gone =>
+      throw SqlError.unexpected(s"$what been vacuumed (missing: $gone)")
     }
+    parts
   }
+
+  /** Newest version whose publish time ≤ `millis` (the reference's MVCC
+    * read rule, src/tablet/memory.rs:73-81); 0 when `millis` predates a
+    * COMPLETE history. Older than the oldest RETAINED publish of a trimmed
+    * history it fails loudly: the empty version 0 would be wrong rows.
+    * Publish times never decrease, so this bisects the versions. */
+  def versionAsOf(millis: Long): Long = {
+    val head = currentVersion
+    var (lo, hi) = (oldestRetained(head), head)
+    if (head == 0L || entry(lo, head).millis > millis) {
+      if (lo == 1L) return 0L
+      throw SqlError.unexpected(s"as-of time $millis predates $label's retained version " +
+        s"history (oldest retained: version $lo)")
+    }
+    while (lo < hi) {
+      val mid = (lo + hi + 1) / 2
+      if (entry(mid, head).millis <= millis) lo = mid else hi = mid - 1
+    }
+    lo
+  }
+
+  /** The retained versions, oldest first. */
+  private def history(head: Long): Seq[(Long, Version)] =
+    (oldestRetained(head) to head).flatMap(v => read(v).map(v -> _))
 
   /** Version history as (version, publishMillis, partCount). */
   def versionHistory: Seq[(Long, Long, Int)] =
-    readVersions().map(e => (e.version, e.millis, e.parts.size))
+    history(currentVersion).map { case (v, e) => (v, e.millis, e.parts.size) }
 
   /** Part names ADDED in the version interval (`fromV`, `toV`] — the
-    * CHANGE FEED of an append-only interval: commits strictly append to
-    * the manifest, so the interval's row delta IS the file delta. A
-    * replace publish rewrites the file set instead; row-level changes
-    * across it are not derivable from files, so that interval raises (the
-    * consumer restarts from a full snapshot — the same contract as a table
+    * CHANGE FEED: commits append to the live list, so an append-only
+    * interval's row delta IS its file delta. An interval across a replace
+    * raises, and the consumer restarts from a full snapshot (a table
     * format's incremental read across a rewrite). */
   def partsAddedBetween(fromV: Long, toV: Long): Seq[String] = {
-    val versions = readVersions()
-    val head = versions.lastOption.map(_.version).getOrElse(0L)
+    val head = currentVersion
     if (fromV < 0L || toV > head || fromV > toV)
       throw SqlError.unexpected(
         s"invalid version interval ($fromV, $toV] for $label (current: $head)")
-    def entryAt(v: Long): VersionEntry = versions.find(_.version == v).getOrElse(
-      throw SqlError.unexpected(s"version $v of $label has expired from the version history"))
-    var prev = if (fromV == 0L) Seq.empty[String] else entryAt(fromV).parts
+    var prev = entry(fromV, head).parts
     val added = Seq.newBuilder[String]
     ((fromV + 1) to toV).foreach { v =>
-      val cur = entryAt(v).parts
+      val cur = entry(v, head).parts
       if (!cur.startsWith(prev))
         throw SqlError.unexpected(
           s"version interval ($fromV, $toV] of $label contains a compaction publish; " +
@@ -161,12 +144,7 @@ final class PartSet(val dir: Path, label: String,
       added ++= cur.drop(prev.size)
       prev = cur
     }
-    val parts = added.result()
-    parts.find(p => !Files.exists(dataDir.resolve(p))).foreach { gone =>
-      throw SqlError.unexpected(
-        s"changes ($fromV, $toV] of $label have been vacuumed (missing: $gone)")
-    }
-    parts
+    present(added.result(), s"changes ($fromV, $toV] of $label have")
   }
 
   /** Number + total bytes of the LIVE parts — vacuum-pending garbage is
@@ -178,11 +156,10 @@ final class PartSet(val dir: Path, label: String,
 
   // ---------- staging and publish ----------
 
-  def newStagingDir(): Path = {
-    val p = dir.resolve(s".staging-${java.util.UUID.randomUUID()}")
-    Files.createDirectories(p)
-    p
-  }
+  /** A fresh staging directory; its name records the newest version now,
+    * the base its commit builds on. */
+  def newStagingDir(): Path =
+    Files.createDirectories(dir.resolve(s".staging-$currentVersion-${UUID.randomUUID()}"))
 
   /** Moves every parquet part under `staging` into `data/` under a fresh
     * unique name that keeps its directory relative to `staging` (the
@@ -190,7 +167,7 @@ final class PartSet(val dir: Path, label: String,
   private def moveIn(staging: Path, prefix: String): Seq[String] =
     parquetUnder(staging).map { rel =>
       val name = rel.take(rel.lastIndexOf('/') + 1) +
-        s"$prefix-${System.currentTimeMillis()}-${java.util.UUID.randomUUID()}.parquet"
+        s"$prefix-${System.currentTimeMillis()}-${UUID.randomUUID()}.parquet"
       val target = dataDir.resolve(name)
       Files.createDirectories(target.getParent)
       Files.move(staging.resolve(rel), target, StandardCopyOption.ATOMIC_MOVE)
@@ -208,33 +185,56 @@ final class PartSet(val dir: Path, label: String,
     finally walk.close()
   }
 
-  /** APPENDS the staged parts to the manifest — the visible commit of an
-    * INSERT or an index append (observable parity with the reference's
-    * transactional commit: src/sql/client.rs:67-80). A reader only sees
-    * the new rows once the manifest move lands. Lists only `staging`,
-    * never `data/`. Returns the number of parts committed. */
+  private def conflict(v: Long): SqlError =
+    SqlError.conflict(s"version $v of $label was committed by another writer")
+
+  /** Creates version `v` listing `parts` put-if-absent. When another
+    * writer created it first, deletes the `fresh` parts just moved in and
+    * raises [[SqlError.conflict]]. Publish times never decrease, so
+    * [[versionAsOf]] can bisect. */
+  private def publish(v: Long, prior: Version, parts: Seq[String], fresh: Seq[String]): Unit = {
+    Files.createDirectories(versionsDir)
+    val tmp = versionsDir.resolve(s".$v-${UUID.randomUUID()}")
+    Files.writeString(tmp, (math.max(System.currentTimeMillis(), prior.millis) +: parts).mkString("\n"))
+    try Files.createLink(versionFile(v), tmp)
+    catch {
+      case _: FileAlreadyExistsException =>
+        fresh.foreach(p => Files.deleteIfExists(dataDir.resolve(p)))
+        throw conflict(v)
+    } finally Files.delete(tmp)
+    Files.deleteIfExists(versionFile(v - maxVersionHistory))
+    PartSet.replaceFile(headHint, v.toString)
+  }
+
+  /** APPENDS the staged parts to the staging's base version as version
+    * base+1 — the commit of an INSERT or an index append (the reference's
+    * transactional commit, src/sql/client.rs:67-80). If another writer
+    * committed since the base, raises [[SqlError.conflict]] and publishes
+    * nothing, so a UNIQUE check run at the base still holds. Lists only
+    * `staging`, never `data/`. Returns the number of parts committed. */
   def commitStaged(staging: Path): Long = {
-    val prior = liveParts
+    val base = PartSet.baseOf(staging)
+    if (Files.exists(versionFile(base + 1))) throw conflict(base + 1)
+    val prior = entry(base, base)
     val fresh = moveIn(staging, "part")
-    publish(prior ++ fresh)
+    publish(base + 1, prior, prior.parts ++ fresh, fresh)
     deleteRecursively(staging)
     fresh.size
   }
 
-  /** Publishes `live − drop ++ staged` — the swap of a compaction or a
-    * rebuild (the reference's memtable→file compaction swap,
-    * src/tablet/service.rs:242-294). The dropped parts are NOT deleted: a
-    * reader that resolved the old manifest keeps a consistent snapshot;
-    * they are recorded in the graveyard with their supersede TIME, and
-    * reclaiming them is [[vacuum]]'s job once they age past its retention
-    * window. */
+  /** Publishes `live − drop ++ staged` over the newest version — the swap
+    * of a compaction or a rebuild (the reference's memtable→file swap,
+    * src/tablet/service.rs:242-294). It rebases over commits made since
+    * the staging opened while every dropped part is still live, else
+    * raises [[SqlError.conflict]]. Dropped parts stay on disk for readers
+    * of older versions until [[vacuum]] reclaims them. */
   def replace(staging: Path, drop: Seq[String]): Unit = {
-    val prior = liveParts
-    val fresh = moveIn(staging, "compact")
+    val head = currentVersion
+    val prior = entry(head, head)
     val gone = drop.toSet
-    publish(prior.filterNot(gone) ++ fresh)
-    val now = System.currentTimeMillis()
-    writeGraveyard(readGraveyard() ++ prior.filter(gone).map(_ -> now))
+    if (!gone.subsetOf(prior.parts.toSet)) throw conflict(head)
+    val fresh = moveIn(staging, "compact")
+    publish(head + 1, prior, prior.parts.filterNot(gone) ++ fresh, fresh)
     deleteRecursively(staging)
   }
 
@@ -250,71 +250,61 @@ final class PartSet(val dir: Path, label: String,
     }
   }
 
-  // ---------- graveyard (vacuum retention) ----------
-  // `_dead` records WHEN each part was superseded ("<millis>\t<name>" per
-  // line) — a part's file mtime is its WRITE time (possibly long before
-  // the compaction that killed it), so age-based retention must track the
-  // supersede event itself, exactly like a table format's snapshot-expiry
-  // metadata.
+  // ---------- vacuum ----------
 
-  private def readGraveyard(): Seq[(String, Long)] =
-    if (!Files.exists(graveyardFile)) Seq.empty
-    else lines(graveyardFile).flatMap { line =>
-      line.split("\t", 2) match {
-        case Array(ts, name) => ts.toLongOption.map(name -> _)
-        case _ => None
-      }
-    }
-
-  private def writeGraveyard(entries: Seq[(String, Long)]): Unit =
-    replaceFile(graveyardFile, entries.map { case (n, t) => s"$t\t$n" }.mkString("\n"))
-
-  /** Deletes parts no longer referenced by the manifest (parts superseded
-    * by a replace) — but ONLY those dead for at least `retentionMs`: a
-    * reader that planned against an older manifest keeps its files for the
-    * grace window, so replace-then-vacuum cannot break an in-flight query
-    * (the same age-based retention every table format's expire/vacuum
-    * applies). Unreferenced parts with no graveyard record (a commit that
-    * crashed between moving its parts and publishing) are enrolled now and
-    * reclaimed once THEY age out. Staging directories (`.staging-*`) last
-    * modified at least `retentionMs` ago are deleted too: a write that
-    * crashed between staging and commit leaves one behind, while an
-    * in-flight one is seconds old (and one under the writer's lock cannot
-    * overlap [[vacuum]] at all). Returns the number of parts removed. */
+  /** Deletes the parts the newest version does not list that have been
+    * dead for at least `retentionMs`, so a reader of an older version keeps
+    * its files for the grace window (a table format's age-based expiry). A
+    * part is dead since the publish of the first retained version without
+    * it; one no retained version lists (crash debris, a losing writer's
+    * part) since the oldest retained publish, and not before its mtime
+    * passes the window either. Staging directories, dot-temps and aged-out
+    * version files last modified `retentionMs` ago go too. Writes no
+    * metadata; returns the number of parts removed. */
   def vacuum(retentionMs: Long): Int = {
     val now = System.currentTimeMillis()
-    if (Files.isDirectory(dir)) {
-      val s = Files.list(dir)
-      try s.iterator().asScala.toSeq
-        .filter(p => p.getFileName.toString.startsWith(".staging-") &&
-          now - Files.getLastModifiedTime(p).toMillis >= retentionMs)
-        .foreach(deleteRecursively)
-      finally s.close()
-    }
+    def aged(p: Path, since: Long) =
+      now - since >= retentionMs && now - Files.getLastModifiedTime(p).toMillis >= retentionMs
+    val head = currentVersion
+    (PartSet.list(dir).filter(_.getFileName.toString.startsWith(".staging-")) ++
+      PartSet.list(versionsDir).filter { p =>
+        val name = p.getFileName.toString
+        name.startsWith(".") || name.toLongOption.exists(_ < oldestRetained(head))
+      }).filter(aged(_, 0L)).foreach(deleteRecursively)
     if (!Files.isDirectory(dataDir)) return 0
-    val live = liveParts.toSet
-    val recorded = readGraveyard().toMap
-    val deadAt = parquetUnder(dataDir).filterNot(live).map(n => n -> recorded.getOrElse(n, now))
-    val (expired, retained) = deadAt.partition { case (_, t) => now - t >= retentionMs }
-    expired.foreach { case (n, _) =>
-      Files.deleteIfExists(dataDir.resolve(n))
-      GraftParquetBridge.forgetFooters(dataDir.resolve(n).toString)
+    val versions = history(head).map(_._2)
+    val deadSince = versions.zip(versions.drop(1)).flatMap { case (a, b) =>
+      a.parts.filterNot(b.parts.toSet).map(_ -> b.millis)
+    }.toMap
+    val live = versions.lastOption.fold(Set.empty[String])(_.parts.toSet)
+    val expired = parquetUnder(dataDir).filterNot(live).filter { n =>
+      aged(dataDir.resolve(n), deadSince.getOrElse(n, versions.headOption.fold(0L)(_.millis)))
     }
-    writeGraveyard(retained)
-    // time-travel history entries are NOT pruned here: [[partsAt]] detects
-    // a reclaimed part by its absence and reports "vacuumed" — rewriting
-    // the entry would turn a reclaimed snapshot into a silently-empty one
+    // also drops the held footers; a read of a reclaimed version reports "vacuumed"
+    expired.foreach(n => deleteRecursively(dataDir.resolve(n)))
     expired.size
   }
 }
 
 object PartSet {
+  private final case class Version(millis: Long, parts: Seq[String])
+
   /** Replaces `f` with `content` atomically: a dot-prefixed sibling temp
     * file ATOMIC_MOVEd over it. A crash mid-write leaves only a stray temp
-    * file; `f` keeps its last committed content. */
+    * file; `f` keeps its last committed content. For hints and counters;
+    * a part list is never replaced. */
   private[engine] def replaceFile(f: Path, content: String): Unit = {
-    val tmp = f.resolveSibling(s".${f.getFileName}-${java.util.UUID.randomUUID()}")
+    val tmp = f.resolveSibling(s".${f.getFileName}-${UUID.randomUUID()}")
     Files.writeString(tmp, content)
     Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
+
+  /** The version a [[PartSet.newStagingDir]] directory was opened at. */
+  def baseOf(staging: Path): Long =
+    staging.getFileName.toString.stripPrefix(".staging-").takeWhile(_ != '-').toLong
+
+  /** The entries of `p`; none when it is not a directory. */
+  private[engine] def list(p: Path): Seq[Path] =
+    if (!Files.isDirectory(p)) Seq.empty
+    else { val s = Files.list(p); try s.iterator().asScala.toSeq finally s.close() }
 }

@@ -795,7 +795,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       // graft_embed_compact('path') compacts the admission index's cells/
       // to one file per cell (each admit-append lands one file per
       // touched cell). Compaction is SELECTIVE: only fragmented cells are
-      // rewritten, single-file cells keep their manifest entries, and an
+      // rewritten, single-file cells keep their parts, and an
       // unfragmented index no-ops. Replaced parts stay readable until a
       // vacuum outlives the catalog's retention window
       "graft_embed_compact" -> (a => Similarity.compactEmbedIndex(spark, a.str(0))),
@@ -852,11 +852,11 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * statement) into ≈128 MB files — the small-files maintenance every
     * parquet store needs at scale, and the analogue of the reference's
     * memtable→file compaction (src/tablet/service.rs:242-294). Runs under
-    * the table write lock, so it serializes with INSERTs; the publish is
-    * an atomic manifest replace — readers that planned against the old
-    * manifest keep their snapshot (old parts stay on disk until
-    * [[vacuumTable]]). Row content, schema, and serial counters are
-    * untouched. Returns (filesBefore, filesAfter).
+    * the table write lock, so it serializes with INSERTs; it rewrites its
+    * staging's base version and publishes one new version — readers that
+    * planned against an older one keep their snapshot (old parts stay on
+    * disk until [[vacuumTable]]). Row content, schema, and serial counters
+    * are untouched. Returns (filesBefore, filesAfter).
     *
     * Tables with a PRIMARY KEY are CLUSTERED on it while compacting
     * (range-partition + sort within parts): the reference's tables are
@@ -878,7 +878,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       val staging = catalog.newStagingDir(db, schema, table)
       try {
         val desc = catalog.getTable(db, schema, table)
-        val data = readTable(db, schema, table)
+        val data = readTableAt(db, schema, table, PartSet.baseOf(staging))
         val pk: Seq[org.apache.spark.sql.Column] = desc.indices.find(_.isPrimary)
           .map(_.columnIds.map(id => col(desc.column(id).name))).getOrElse(Seq.empty)
         // merging down needs no shuffle, nor does clustering into ONE file:
@@ -900,7 +900,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
 
   /** Reclaims parts superseded by compaction once they have been dead for
     * `retentionMs`. The default grace window keeps a part on disk long
-    * enough for queries planned against the pre-compaction manifest to
+    * enough for queries planned against the pre-compaction version to
     * drain — compact-then-vacuum in quick succession cannot break an
     * in-flight reader. Pass 0 to force immediate reclamation (tests,
     * decommissioning). */
@@ -938,7 +938,7 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   //    the rows are written as one part on the calling thread through
   //    Spark's Parquet writer ([[GraftParquetBridge]]): 0 jobs. A one-task
   //    write job would cost ~100 ms of driver-bound scheduling and output
-  //    committing for a few rows, and the manifest move is the commit
+  //    committing for a few rows, and the version file is the commit
   //    anyway. A UNIQUE index not covered by fresh serials adds, on a
   //    non-empty table, one filtered scan for the candidate keys: 1 job.
   //  - any other plan (INSERT … SELECT over tables) stays distributed: a
@@ -1207,15 +1207,16 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * src/sql/client.rs:276-306). `write` puts the candidate's parts into
     * the staging directory it is given: Spark's parallel writer on the
     * distributed path, one part written on this thread on the
-    * driver-resident one. Either way the manifest move in
-    * `commitStaged` is the commit, not the file write. */
+    * driver-resident one. Either way the version file `commitStaged`
+    * links is the commit. The staging opens before `check`, so the check
+    * reads a snapshot no older than the commit's base, which another
+    * instance's commit turns into [[SqlError.conflict]]. */
   private def publish(w: InsertWork, write: String => Unit)(check: => Unit): Unit =
     catalog.withTableWriteLock(w.db, w.schema, w.table) {
-      check
-
-      // atomic append: stage then move
+      // atomic append: stage then link a version
       val staging = catalog.newStagingDir(w.db, w.schema, w.table)
       try {
+        check
         write(staging.toString)
         catalog.commitStaged(w.db, w.schema, w.table, staging)
       } catch {
@@ -1232,8 +1233,9 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       // thread inside the SAME write window (the table monitor is
       // reentrant), so it serializes with concurrent inserts exactly
       // like the insert itself; readers keep their planned snapshots
-      // (compaction republishes the manifest, old parts stay until
-      // vacuum). Amortized cost: every ~Nth INSERT pays one rewrite.
+      // (compaction publishes a new version, old parts stay until
+      // vacuum). Amortized cost: every ~Nth INSERT pays one rewrite. One
+      // that loses to another instance is left to a later INSERT.
       //
       // The trigger counts parts ABOVE the table's compacted target
       // (ceil(bytes / 128MB)), not absolute parts: a table whose
@@ -1245,7 +1247,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
         val compactedTarget =
           math.max(1, math.ceil(bytes.toDouble / autoCompactTargetFileBytes).toInt)
         if (nFiles - compactedTarget >= autoCompactAfterParts)
-          compactTable(w.db, w.schema, w.table, autoCompactTargetFileBytes)
+          try compactTable(w.db, w.schema, w.table, autoCompactTargetFileBytes)
+          catch { case e: SqlError if e.kind == SqlError.Conflict => }
       }
     }
 

@@ -23,6 +23,7 @@ object SqlError {
   case object NotNullableColumn extends Kind
   case object MismatchColumnType extends Kind
   case object UniqueKeyAlreadyExists extends Kind
+  case object Conflict extends Kind
 
   def invalid(msg: String): SqlError = SqlError(Invalid, s"invalid: $msg")
   def unsupported(msg: String): SqlError = SqlError(Unsupported, s"unsupported: $msg")
@@ -49,4 +50,8 @@ object SqlError {
       s"column $column of table $table expects type $expect, but got $actual")
   def uniqueKeyAlreadyExists(table: String, index: String): SqlError =
     SqlError(UniqueKeyAlreadyExists, s"unique key already exists in index $index of table $table")
+  /** Another writer committed first; the statement published nothing and
+    * can be retried as it is. */
+  def conflict(what: String): SqlError =
+    SqlError(Conflict, s"commit conflict: $what; retry the statement")
 }

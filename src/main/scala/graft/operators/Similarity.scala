@@ -882,7 +882,7 @@ object Similarity {
     }
     // LAZY report: the index WRITES above are eager (the artifact
     // exists when this returns); the (n_vectors, cells) report is a
-    // plan over the build's manifest snapshot, so a caller that discards
+    // plan over the build's version snapshot, so a caller that discards
     // the report (e06's stream setup) never schedules its count job,
     // while report consumers (s19/s21 statement 1) pay it on collect. The
     // snapshot keeps answering across later compactions until vacuum
@@ -965,7 +965,7 @@ object Similarity {
   // commit format managed tables use: a build stages the whole set and
   // replaces it, an append stages and commits, a compaction replaces only
   // the fragmented cells' parts. Writers hold the maintenance lock; readers
-  // resolve the manifest snapshot and never list the directory.
+  // resolve a version snapshot and never list the directory.
 
   private[graft] def indexParts(path: String, sub: String): PartSet =
     new PartSet(java.nio.file.Paths.get(path, sub), s"index $path/$sub")
@@ -983,7 +983,7 @@ object Similarity {
   }
 
   /** The live rows of index part set `sub` (`codes` or `cells`) under
-    * `path`, with `cell` as a partition column. The manifest snapshot is
+    * `path`, with `cell` as a partition column. The version snapshot is
     * resolved now: the relation keeps answering across later appends and
     * compactions until a vacuum reclaims its parts. */
   private[graft] def readIndex(s: SparkSession, path: String, sub: String): DataFrame = {
@@ -1019,18 +1019,18 @@ object Similarity {
   def compactIvfPqIndex(spark: SparkSession, path: String): DataFrame =
     compactCells(spark, path, "codes", "n_codes")
 
-  /** SELECTIVE compaction: the per-cell census comes from the manifest,
+  /** SELECTIVE compaction: the per-cell census comes from the live version,
     * with no listing. Only cells holding more than one part are rewritten
     * through Spark (decode → one task per cell → re-encode) into staging,
     * and [[PartSet.replace]] swaps exactly those cells' parts for the
-    * rewrite; single-file cells keep their manifest entries, so at a
+    * rewrite; single-file cells keep their parts listed, so at a
     * steady ingest cadence the rewrite is fragmentation-linear (the cells
     * the appends touched since the last compact), not corpus-linear. When
     * NO cell is fragmented the call is a NO-OP: nothing is written or
     * published, just the (count, files, files) report.
     *
     * Readers keep the table contract: a relation planned before the swap
-    * reads its own manifest snapshot, and the replaced parts stay on disk
+    * reads its own version snapshot, and the replaced parts stay on disk
     * until a vacuum finds them superseded for longer than
     * [[Catalog.defaultVacuumRetentionMs]]. That vacuum runs after every
     * compaction that publishes, so index disk stays bounded. */

@@ -468,7 +468,7 @@ object EventStreams {
         s"WHERE query_id IS DISTINCT FROM '$qid' OR batch_id IS DISTINCT FROM $batchId")
     // materialized: both INSERTs below evaluate this plan, and the second
     // runs AFTER the index insert — localCheckpoint pins the admission
-    // decision instead of leaning on the engine's planning-time manifest
+    // decision instead of leaning on the engine's planning-time version
     // snapshot to keep the evaluations equal
     val admitted = admit(batch, index).localCheckpoint()
     val idx = indexRows(admitted)

@@ -29,10 +29,10 @@ import org.apache.spark.sql.types.StructType
   * and the output committer: for a 1-row part, 151 ms through a one-task
   * write job against 11.5 ms here (`local[4]` on a 4-core host, medians
   * of 100 after 20 warm-up writes). The caller commits the part (the
-  * catalog's manifest move). The read side is the only code that turns a
-  * manifest's part list into a relation ([[readParts]], or [[fileIndex]]
+  * version file its `PartSet` links). The read side is the only code that turns a
+  * version's part list into a relation ([[readParts]], or [[fileIndex]]
   * under the plugin's scan), over a schema the caller supplies: the file
-  * list comes from the manifest and is never listed again. Lives in the
+  * list comes from the version file and is never listed again. Lives in the
   * spark.sql package only to reach the classic session's state.
   */
 object GraftParquetBridge {

@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{GraftParquetBridge, Row}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession.withScratch
@@ -42,5 +45,20 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(e.getMessage == "body failed")
     assert(dirs.size == 2 && dirs.distinct.size == 2)
     dirs.foreach(d => assert(!Files.exists(Paths.get(d)), s"$d survived"))
+  }
+
+  test("a part read inside withScratch holds no footer after it returns") {
+    val schema = StructType(Seq(StructField("id", IntegerType)))
+    val part = withScratch("graft-footer-") { case Seq(dir) =>
+      GraftParquetBridge.writePart(spark, dir, schema, Iterator(Row(1)))
+      val s = Files.list(Paths.get(dir))
+      val part = try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq.head
+      finally s.close()
+      assert(GraftParquetBridge.footerSchema(spark, part).fieldNames.toSeq == Seq("id"))
+      assert(GraftParquetBridge.holdsFooter(part))
+      part
+    }
+    assert(!Files.exists(Paths.get(part)))
+    assert(!GraftParquetBridge.holdsFooter(part), s"the footer of deleted $part is still held")
   }
 }

@@ -78,4 +78,11 @@ class SourceHygieneSpec extends AnyFunSuite {
     val offenders = outside("GraftParquetBridge.scala", """readFooter|ParquetFileReader|ParquetFooterReader""")
     assert(offenders.isEmpty, offenders.mkString("Parquet footer read in: ", ", ", ""))
   }
+
+  /** The commit protocol — parts moved into `data/`, version files linked
+    * put-if-absent, hints replaced by an atomic move — lives in one module. */
+  test("src/main moves and links files only in PartSet") {
+    val offenders = outside("PartSet.scala", """Files\.(move|createLink)\s*\(""")
+    assert(offenders.isEmpty, offenders.mkString("Files.move or Files.createLink in: ", ", ", ""))
+  }
 }

@@ -733,21 +733,30 @@ class SqlEngineSpec extends AnyFunSuite with SuiteScratch {
     val r = e.execute("SELECT count(*) AS n, sum(v) AS s FROM t").collect()(0)
     assert(r.getLong(0) == 14L && r.getLong(1) == (21L + (101 to 108).sum),
       s"data loss under concurrent compact+vacuum: $r")
-    // disk audit: every live part exists; every superseded .parquet is
-    // still on disk AND recorded in the graveyard (no lost entries)
+    // disk audit: every live part exists; every superseded .parquet still
+    // on disk is listed by a retained version file (its supersede time is
+    // the publish time of the version that dropped it) or is younger than
+    // the retention window (debris vacuum dates by its mtime)
     val tableDir = java.nio.file.Paths.get(e.catalog.warehouse, "test1", "public", "t")
+    def list(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.toSeq finally s.close()
+    }
     val live = e.catalog.liveParts("test1", "public", "t").toSet
     live.foreach(p => assert(Files.exists(tableDir.resolve("data").resolve(p)),
       s"live part $p missing from disk"))
-    val onDisk = {
-      val s = Files.list(tableDir.resolve("data"))
-      try s.iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
-      finally s.close()
+    val dead = list(tableDir.resolve("data")).map(_.getFileName.toString)
+      .filter(_.endsWith(".parquet")).toSet -- live
+    val listed = list(tableDir.resolve("_versions"))
+      .filter(_.getFileName.toString.forall(_.isDigit))
+      .flatMap(f => Files.readAllLines(f).asScala.drop(1)).toSet
+    val now = System.currentTimeMillis()
+    val unaccounted = dead.filterNot(listed).filter { p =>
+      now - Files.getLastModifiedTime(tableDir.resolve("data").resolve(p)).toMillis >=
+        SqlEngine.defaultVacuumRetentionMs
     }
-    val deadRecorded = Files.readString(tableDir.resolve("_dead")).split("\n")
-      .filter(_.nonEmpty).map(_.split("\t", 2)(1)).toSet
-    assert(onDisk -- live == deadRecorded,
-      s"graveyard lost entries: on-disk dead ${(onDisk -- live).size}, recorded ${deadRecorded.size}")
+    assert(dead.nonEmpty, "the compactions superseded no part")
+    assert(unaccounted.isEmpty, s"dead parts no version lists: $unaccounted")
   }
 
   test("auto-compaction: many small INSERTs self-heal to a bounded file count") {
