@@ -13,8 +13,8 @@ import graft.GraftSession.deleteRecursively
   *     then its live part names relative to `data/`, one per line. Never
   *     rewritten; committing `v` deletes `v − maxVersionHistory`. Version
   *     0, the empty set, has no file;
-  *   - `_versions/_head`: a hint replaced after each commit; it may lag
-  *     the newest version, never lead it;
+  *   - `_head`: a hint replaced after each commit; it may lag the newest
+  *     version, never lead it;
   *   - `data/`: the parts — flat for tables, `cell=<n>/…` for indexes;
   *   - `.staging-<base>-<uuid>`: a write opened at version `base`.
   *
@@ -36,7 +36,7 @@ final class PartSet(val dir: Path, label: String,
   val dataDir: Path = dir.resolve("data")
   private val versionsDir = dir.resolve("_versions")
   private def versionFile(v: Long): Path = versionsDir.resolve(f"$v%020d")
-  private def headHint: Path = versionsDir.resolve("_head")
+  private def headHint: Path = dir.resolve("_head")
 
   /** An empty set: version 0. */
   def create(): Unit = Files.createDirectories(dataDir)
@@ -263,22 +263,21 @@ final class PartSet(val dir: Path, label: String,
     * metadata; returns the number of parts removed. */
   def vacuum(retentionMs: Long): Int = {
     val now = System.currentTimeMillis()
-    def aged(p: Path, since: Long) =
-      now - since >= retentionMs && now - Files.getLastModifiedTime(p).toMillis >= retentionMs
+    def old(p: Path) = now - Files.getLastModifiedTime(p).toMillis >= retentionMs
     val head = currentVersion
-    (PartSet.list(dir).filter(_.getFileName.toString.startsWith(".staging-")) ++
-      PartSet.list(versionsDir).filter { p =>
-        val name = p.getFileName.toString
-        name.startsWith(".") || name.toLongOption.exists(_ < oldestRetained(head))
-      }).filter(aged(_, 0L)).foreach(deleteRecursively)
+    (PartSet.list(dir) ++ PartSet.list(versionsDir)).filter { p =>
+      val name = p.getFileName.toString
+      name.startsWith(".") || name.toLongOption.exists(_ < oldestRetained(head))
+    }.filter(old).foreach(deleteRecursively)
     if (!Files.isDirectory(dataDir)) return 0
     val versions = history(head).map(_._2)
     val deadSince = versions.zip(versions.drop(1)).flatMap { case (a, b) =>
       a.parts.filterNot(b.parts.toSet).map(_ -> b.millis)
     }.toMap
+    val unlistedSince = versions.headOption.fold(0L)(_.millis)
     val live = versions.lastOption.fold(Set.empty[String])(_.parts.toSet)
     val expired = parquetUnder(dataDir).filterNot(live).filter { n =>
-      aged(dataDir.resolve(n), deadSince.getOrElse(n, versions.headOption.fold(0L)(_.millis)))
+      now - deadSince.getOrElse(n, unlistedSince) >= retentionMs && old(dataDir.resolve(n))
     }
     // also drops the held footers; a read of a reclaimed version reports "vacuumed"
     expired.foreach(n => deleteRecursively(dataDir.resolve(n)))
@@ -303,7 +302,8 @@ object PartSet {
   def baseOf(staging: Path): Long =
     staging.getFileName.toString.stripPrefix(".staging-").takeWhile(_ != '-').toLong
 
-  /** The entries of `p`; none when it is not a directory. */
+  /** The entries of `p` (none when it is not a directory), with the
+    * listing's directory fd closed. */
   private[engine] def list(p: Path): Seq[Path] =
     if (!Files.isDirectory(p)) Seq.empty
     else { val s = Files.list(p); try s.iterator().asScala.toSeq finally s.close() }

@@ -1209,8 +1209,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     * distributed path, one part written on this thread on the
     * driver-resident one. Either way the version file `commitStaged`
     * links is the commit. The staging opens before `check`, so the check
-    * reads a snapshot no older than the commit's base, which another
-    * instance's commit turns into [[SqlError.conflict]]. */
+    * reads a snapshot no older than the commit's base; a commit another
+    * instance makes in between fails this one with [[SqlError.conflict]]. */
   private def publish(w: InsertWork, write: String => Unit)(check: => Unit): Unit =
     catalog.withTableWriteLock(w.db, w.schema, w.table) {
       // atomic append: stage then link a version

@@ -30,6 +30,11 @@ class CommitCrashSpec extends AnyFunSuite with SuiteScratch {
     e.execute("CREATE TABLE t (id int PRIMARY KEY, v int)")
     before.toSeq.sorted.foreach { case (id, v) => e.execute(s"INSERT INTO t VALUES ($id, $v)") }
     assert(e.catalog.currentVersion("db", "public", "t") == 4L)
+    // one write-once file per version; no manifest, no graveyard
+    assert(list(tableDir(wh).resolve("_versions")).map(_.getFileName.toString) ==
+      (1 to 4).map(v => f"$v%020d"))
+    assert(list(tableDir(wh)).map(_.getFileName.toString) ==
+      Seq("_head", "_serial", "_versions", "data", "descriptor.json"))
     (wh, e)
   }
 
@@ -109,9 +114,11 @@ class CommitCrashSpec extends AnyFunSuite with SuiteScratch {
   test("an INSERT killed after linking its version, before the head hint, reads the new version") {
     val (wh, e) = warehouse()
     e.execute("INSERT INTO t VALUES (5, 50)")
-    val hint = tableDir(wh).resolve("_versions").resolve("_head")
+    val hint = tableDir(wh).resolve("_head")
     assert(Files.readString(hint).trim == "5")
     Files.writeString(hint, "4")
+    // and a hint replace killed after writing its temp file
+    Files.writeString(tableDir(wh).resolve(s"._head-${UUID.randomUUID()}"), "6")
     recovers(wh, before + (5 -> 50))
     // no hint at all: the probe starts at version 0
     Files.delete(hint)

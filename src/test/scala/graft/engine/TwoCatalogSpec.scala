@@ -90,9 +90,10 @@ class TwoCatalogSpec extends AnyFunSuite with SuiteScratch {
       Future {
         val e = new SqlEngine(spark, c, SqlContext("db", "u"), autoCompactAfterParts = 4)
         start.await(1, TimeUnit.MINUTES)
+        val v = name.head.toInt
         keys.map { j =>
-          val stmt = Seq(j -> name.head.toInt, (j + 100) -> name.head.toInt)
-          try { e.execute(s"INSERT INTO t VALUES ($j, ${name.head.toInt}), (${j + 100}, ${name.head.toInt})"); stmt -> None }
+          val stmt = Seq(j -> v, (j + 100) -> v)
+          try { e.execute(s"INSERT INTO t VALUES ($j, $v), (${j + 100}, $v)"); stmt -> None }
           catch { case err: SqlError => stmt -> Some(err) }
         }
       }
