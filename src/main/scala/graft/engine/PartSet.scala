@@ -263,7 +263,9 @@ final class PartSet(val dir: Path, label: String,
     * metadata; returns the number of parts removed. */
   def vacuum(retentionMs: Long): Int = {
     val now = System.currentTimeMillis()
-    def old(p: Path) = now - Files.getLastModifiedTime(p).toMillis >= retentionMs
+    // another process may rename its temp or delete its losing parts meanwhile
+    def old(p: Path) = try now - Files.getLastModifiedTime(p).toMillis >= retentionMs
+      catch { case _: NoSuchFileException => false }
     val head = currentVersion
     (PartSet.list(dir) ++ PartSet.list(versionsDir)).filter { p =>
       val name = p.getFileName.toString

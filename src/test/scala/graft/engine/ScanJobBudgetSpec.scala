@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the Spark jobs it takes to plan a read of a manifest snapshot of
+/** Pins the Spark jobs it takes to plan a read of a version snapshot of
   * 40 parts: past 32 paths `spark.read.parquet` lists them in a
   * distributed job, and schema inference reads a footer in another. Every
   * reader plans through one listing-free file index, so planning runs no

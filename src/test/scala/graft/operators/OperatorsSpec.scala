@@ -1365,7 +1365,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       val rep2 = Similarity.compactIvfPqIndex(spark, path).collect().head
       assert(rep2.getLong(0) == 36L && rep2.getLong(1) > rep2.getLong(2),
         s"compact report: $rep2")
-      // the compacted manifest serves the same codes
+      // the compacted version serves the same codes
       val gotC = Similarity.readIndex(spark, path, "codes")
         .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell"),
           r.getSeq[Int](r.fieldIndex("codes")).toSeq)).toSet
@@ -1678,7 +1678,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
       val orphan = cells.dataDir.resolve("cell=0").resolve("part-orphan.parquet")
       java.nio.file.Files.createDirectories(orphan.getParent)
       java.nio.file.Files.write(orphan, Array[Byte](1, 2, 3))
-      // readers resolve the manifest: neither torn file is read
+      // readers resolve the live version: neither torn file is read
       assert(Similarity.readIndex(spark, path, "cells").count() == 8L)
       val probe = Seq((500L, vec(0, 1.0f))).toDF("vec_id", "embedding")
       assert(Similarity.embedAdmitFromIndex(probe, path, 0.9).count() == 0)
@@ -1749,7 +1749,7 @@ class OperatorsSpec extends AnyFunSuite with SuiteScratch {
     // them, so the expected set accumulates what the operator RETURNS)
     // and selective compactions (fragmented, minimal, or no-op,
     // depending on where the appends landed). Invariant after EVERY
-    // op: the live manifest snapshot holds exactly history ∪
+    // op: the live version snapshot holds exactly history ∪
     // admitted-so-far — no loss, no duplication, across any
     // append/compact interleaving the sequence produces.
     val rnd = new scala.util.Random(42)
