@@ -102,18 +102,28 @@ final class PartSet(val dir: Path, label: String,
     * Publish times never decrease, so this bisects the versions. */
   def versionAsOf(millis: Long): Long = {
     val head = currentVersion
-    var (lo, hi) = (oldestRetained(head), head)
+    val lo = oldestRetained(head)
     if (head == 0L || entry(lo, head).millis > millis) {
       if (lo == 1L) return 0L
       throw SqlError.unexpected(s"as-of time $millis predates $label's retained version " +
         s"history (oldest retained: version $lo)")
     }
-    while (lo < hi) {
-      val mid = (lo + hi + 1) / 2
-      if (entry(mid, head).millis <= millis) lo = mid else hi = mid - 1
-    }
-    lo
+    newestBy(millis, lo, head)
   }
+
+  /** Newest version in [`lo`, `head`] published at or before `millis`,
+    * given that `lo` was: publish times never decrease, so it bisects. A
+    * version another writer's commit trimmed meanwhile counts as older. */
+  private def newestBy(millis: Long, lo: Long, head: Long): Long = {
+    var (l, h) = (lo, head)
+    while (l < h) {
+      val mid = (l + h + 1) / 2
+      if (publishedAt(mid) <= millis) l = mid else h = mid - 1
+    }
+    l
+  }
+
+  private def publishedAt(v: Long): Long = read(v).fold(Long.MinValue)(_.millis)
 
   /** The retained versions, oldest first. */
   private def history(head: Long): Seq[(Long, Version)] =
@@ -258,29 +268,28 @@ final class PartSet(val dir: Path, label: String,
     * part is dead since the publish of the first retained version without
     * it; one no retained version lists (crash debris, a losing writer's
     * part) since the oldest retained publish, and not before its mtime
-    * passes the window either. Staging directories, dot-temps and aged-out
-    * version files last modified `retentionMs` ago go too. Writes no
-    * metadata; returns the number of parts removed. */
+    * passes the window either. Publish times never decrease, so this reads
+    * only the newest version published by `now − retentionMs` and the ones
+    * after it: a part none of them lists died by then. Staging directories,
+    * dot-temps and aged-out version files last modified `retentionMs` ago
+    * go too. Writes no metadata; returns the number of parts removed. */
   def vacuum(retentionMs: Long): Int = {
     val now = System.currentTimeMillis()
     // another process may rename its temp or delete its losing parts meanwhile
     def old(p: Path) = try now - Files.getLastModifiedTime(p).toMillis >= retentionMs
       catch { case _: NoSuchFileException => false }
     val head = currentVersion
+    val lo = oldestRetained(head)
     (PartSet.list(dir) ++ PartSet.list(versionsDir)).filter { p =>
       val name = p.getFileName.toString
-      name.startsWith(".") || name.toLongOption.exists(_ < oldestRetained(head))
+      name.startsWith(".") || name.toLongOption.exists(_ < lo)
     }.filter(old).foreach(deleteRecursively)
     if (!Files.isDirectory(dataDir)) return 0
-    val versions = history(head).map(_._2)
-    val deadSince = versions.zip(versions.drop(1)).flatMap { case (a, b) =>
-      a.parts.filterNot(b.parts.toSet).map(_ -> b.millis)
-    }.toMap
-    val unlistedSince = versions.headOption.fold(0L)(_.millis)
-    val live = versions.lastOption.fold(Set.empty[String])(_.parts.toSet)
-    val expired = parquetUnder(dataDir).filterNot(live).filter { n =>
-      now - deadSince.getOrElse(n, unlistedSince) >= retentionMs && old(dataDir.resolve(n))
-    }
+    val cutoff = now - retentionMs
+    // no retained version is that old: every part died inside the window
+    if (publishedAt(lo) > cutoff) return 0
+    val listed = (newestBy(cutoff, lo, head) to head).flatMap(read).flatMap(_.parts).toSet
+    val expired = parquetUnder(dataDir).filterNot(listed).filter(n => old(dataDir.resolve(n)))
     // also drops the held footers; a read of a reclaimed version reports "vacuumed"
     expired.foreach(n => deleteRecursively(dataDir.resolve(n)))
     expired.size

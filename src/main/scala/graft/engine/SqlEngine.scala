@@ -138,9 +138,12 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     case _ => throw SqlError.invalid(s"table name ${name.mkString(".")}")
   }
 
-  /** Scans the table's MANIFEST snapshot: the file list is resolved here,
+  /** Scans the table's current version: the file list is resolved here,
     * at planning time, so the plan stays consistent even if a compaction
-    * republishes the table before the query runs (SURVEY §1.5). */
+    * republishes the table before the query runs (SURVEY §1.5). The
+    * relation is a plain file scan, run as Spark jobs; only a statement
+    * planned through `GraftPlanBridge` reads a small part list on the
+    * calling thread instead. */
   def readTable(db: String, schema: String, table: String): DataFrame =
     scanParts(db, schema, table)(catalog.livePartPaths(db, schema, table))
 
@@ -933,17 +936,21 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   // Where the checks run follows the shape of the optimized candidate
   // (`source.select(preCols)`); no option picks it:
   //  - a LocalRelation — VALUES, and Project/Filter/Limit over it, which
-  //    Spark folds — already holds its rows on the driver. Counting, the
-  //    NOT NULL and narrowing checks and in-batch uniqueness run there, and
-  //    the rows are written as one part on the calling thread through
-  //    Spark's Parquet writer ([[GraftParquetBridge]]): 0 jobs. A one-task
-  //    write job would cost ~100 ms of driver-bound scheduling and output
-  //    committing for a few rows, and the version file is the commit
-  //    anyway. A UNIQUE index not covered by fresh serials adds, on a
-  //    non-empty table, one filtered scan for the candidate keys: 1 job.
-  //  - any other plan (INSERT … SELECT over tables) stays distributed: a
-  //    persisted candidate, one fused count/NOT NULL pass, a groupBy and a
-  //    semi-join per UNIQUE index, and Spark's parallel write.
+  //    Spark folds, or over a table small enough that the planner reads it
+  //    on the calling thread (`GraftPlanBridge`) — already holds its rows
+  //    on the driver. Counting, the NOT NULL and narrowing checks and
+  //    in-batch uniqueness run there, and the rows are written as one part
+  //    on the calling thread through Spark's Parquet writer
+  //    ([[GraftParquetBridge]]): 0 jobs. A one-task write job would cost
+  //    ~100 ms of driver-bound scheduling and output committing for a few
+  //    rows, and the version file is the commit anyway. A UNIQUE index not
+  //    covered by fresh serials adds, on a non-empty table, one filtered
+  //    read of the candidate keys: no job while the parts it keeps are
+  //    small, else 1.
+  //  - any other plan (INSERT … SELECT over tables above that size, or
+  //    with a sort, join or aggregate) stays distributed: a persisted
+  //    candidate, one fused count/NOT NULL pass, a groupBy and a semi-join
+  //    per UNIQUE index, and Spark's parallel write.
   // Both share the serial reservation, the error order, and the locked
   // check/stage/commit/auto-compaction window ([[publish]]).
 
@@ -1067,8 +1074,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     }
 
   /** The driver-resident path: every check runs over the collected rows,
-    * the part is written on this thread, and the only job is, when
-    * needed, one existing-keys scan. */
+    * the part is written on this thread, and the only job is, when needed
+    * and the table is large, one existing-keys scan. */
   private def insertLocal(w: InsertWork, pre: DataFrame): Long = {
     val rows = pre.collect() // a LocalRelation: no job
     val (n, nullCounts) = SqlEngine.rowStats[Row](rows.iterator, w.checkIdx, _.isNullAt(_))
@@ -1106,12 +1113,15 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
     n
   }
 
-  /** One job: scan the table for the candidate keys — `isin` per column
-    * (an equality disjunction for floating columns, where SQL equality
-    * folds -0.0/0.0 and NaN but a value set would not) — and match the few
-    * rows that come back exactly on the driver. Not `limit(1)`/`isEmpty`:
-    * `executeTake` scales up and runs several jobs on a miss, and a miss
-    * is the common case. */
+  /** Reads the table for the candidate keys — `isin` per column (an
+    * equality disjunction for floating columns, where SQL equality folds
+    * -0.0/0.0 and NaN but a value set would not) — and matches the few
+    * rows that come back exactly on the driver. The probe is planned like
+    * an engine statement (`GraftPlanBridge.frame`): footer statistics skip
+    * parts, and when the parts left are small they are read on the calling
+    * thread, with no job; otherwise it is one `collect` job. Not
+    * `limit(1)`/`isEmpty`: `executeTake` scales up and runs several jobs on
+    * a miss, and a miss is the common case. */
   private def existingKeyHit(w: InsertWork, out: Array[Row], columns: Array[String],
       keys: Seq[String], nullsDistinct: Boolean): Boolean = {
     val idx = keys.map(columns.indexOf(_))
@@ -1130,7 +1140,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
       if (!nullsDistinct && cands.exists(_.isNullAt(i))) in || c.isNull else in
     }
     val wanted = cands.iterator.map(SqlEngine.keyOf(_, idx)).toSet
-    existing.filter(member.reduce(_ && _)).select(keys.map(existing(_)): _*).collect()
+    val probe = existing.filter(member.reduce(_ && _)).select(keys.map(existing(_)): _*)
+    GraftPlanBridge.frame(spark, probe.queryExecution.analyzed).collect()
       .exists(h => wanted.contains(SqlEngine.keyOf(h, keys.indices)))
   }
 

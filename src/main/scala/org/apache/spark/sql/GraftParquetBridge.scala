@@ -1,23 +1,27 @@
 package org.apache.spark.sql
 
 import java.util.concurrent.ConcurrentHashMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
-import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+import org.apache.parquet.hadoop.{Footer, ParquetInputFormat}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, DataSourceUtils, FileStatusCache,
   HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader,
-  ParquetToSparkSchemaConverter}
+  ParquetReadSupport, ParquetToSparkSchemaConverter, ParquetUtils, ParquetWriteSupport, VectorizedParquetRecordReader}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -32,8 +36,12 @@ import org.apache.spark.sql.types.StructType
   * version file its `PartSet` links). The read side is the only code that turns a
   * version's part list into a relation ([[readParts]], or [[fileIndex]]
   * under the plugin's scan), over a schema the caller supplies: the file
-  * list comes from the version file and is never listed again. Lives in the
-  * spark.sql package only to reach the classic session's state.
+  * list comes from the version file and is never listed again. It is also
+  * the only code that reads Parquet rows on the driver ([[localRows]]): a
+  * small part list an engine statement keeps is read on the calling thread
+  * by the reader a task opens, without the job (about 40 of a 50 ms point
+  * read, `local[3]` on a 4-core host). Lives in the spark.sql package only
+  * to reach the classic session's state.
   */
 object GraftParquetBridge {
 
@@ -76,28 +84,117 @@ object GraftParquetBridge {
     val session = classic.ClassicConversions.castToImpl(spark)
     val fs = FileSystem.getLocal(session.sessionState.newHadoopConf())
     val statuses = files.map(f => fs.getFileStatus(new Path(f)))
-    val byPath = statuses.map(st => st.getPath -> Array(st)).toMap
-    val listed = new FileStatusCache {
-      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
-      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
-      override def invalidateAll(): Unit = ()
-    }
     val options = partitionRoot.map(r => "basePath" -> fs.makeQualified(new Path(r)).toString).toMap
-    new InMemoryFileIndex(session, statuses.map(_.getPath), options, None, listed) {
-      override def listFiles(partitionFilters: Seq[Expression],
-          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-        val dirs = super.listFiles(partitionFilters, dataFilters)
-        val conf = session.sessionState.conf
-        val filters =
-          if (!conf.parquetFilterPushDown) Nil
-          else dataFilters.flatMap(DataSourceStrategy.translateFilter(_, supportNestedPredicatePushdown = true))
-        if (filters.isEmpty) dirs
-        else {
-          val hadoopConf = session.sessionState.newHadoopConf()
-          dirs.map(d => d.copy(files = d.files.filter(f => mayMatch(f.fileStatus, filters, conf, hadoopConf))))
-        }
+    new PartIndex(session, statuses, options)
+  }
+
+  /** The index [[fileIndex]] builds. */
+  private final class PartIndex(session: classic.SparkSession, statuses: Seq[FileStatus],
+      options: Map[String, String]) extends InMemoryFileIndex(session, statuses.map(_.getPath), options, None,
+      new FileStatusCache {
+        private val byPath = statuses.map(st => st.getPath -> Array(st)).toMap
+        override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byPath.get(path)
+        override def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }) {
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val dirs = super.listFiles(partitionFilters, dataFilters)
+      val conf = session.sessionState.conf
+      val filters = pushed(conf, dataFilters)
+      if (filters.isEmpty) dirs
+      else {
+        val hadoopConf = session.sessionState.newHadoopConf()
+        dirs.map(d => d.copy(files = d.files.filter { f =>
+          val meta = footer(f.fileStatus, hadoopConf)
+          predicate(meta, filters, conf).forall(mayMatch(meta, _))
+        }))
       }
     }
+  }
+
+  /** The data filters a scan hands its Parquet reader: none with pushdown off. */
+  private def pushed(conf: SQLConf, dataFilters: Seq[Expression]): Seq[sources.Filter] =
+    if (!conf.parquetFilterPushDown) Nil
+    else dataFilters.flatMap(DataSourceStrategy.translateFilter(_, supportNestedPredicatePushdown = true))
+
+  /** Uncompressed row-group bytes, summed over the parts a statement keeps,
+    * up to which [[localRows]] reads them on the calling thread. */
+  private val LocalReadCap = 8L << 20
+
+  /** Whether `relation` is a part list of [[readParts]] without partition
+    * columns, which [[localRows]] can read. */
+  private[sql] def isPartList(relation: sources.BaseRelation): Boolean = relation match {
+    case fs: HadoopFsRelation => fs.location.isInstanceOf[PartIndex] && fs.partitionSchema.isEmpty
+    case _ => false
+  }
+
+  /** The rows a scan of `relation` (see [[isPartList]]) under `dataFilters`
+    * would hand up, read on the calling thread; None when the parts kept at
+    * listing hold more than [[LocalReadCap]] uncompressed row-group bytes,
+    * or the vectorized reader cannot read the schema. The parts are the ones
+    * listing keeps, read in list order, each by the reader a task opens
+    * (`VectorizedParquetRecordReader`, row groups skipped under the same
+    * pushed predicate), over the session's Hadoop conf: nothing is
+    * broadcast and no job runs. The rows are not filtered beyond what
+    * row-group skipping drops, so the plan's Filter still decides them. */
+  private[sql] def localRows(session: classic.SparkSession, relation: HadoopFsRelation,
+      dataFilters: Seq[Expression]): Option[Seq[InternalRow]] = {
+    val conf = session.sessionState.conf
+    val schema = relation.dataSchema
+    if (!ParquetUtils.isBatchReadSupportedForSchema(conf, schema)) return None
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val kept = mutable.ArrayBuffer.empty[(FileStatus, ParquetMetadata)]
+    var bytes = 0L
+    val parts = relation.location.listFiles(Nil, dataFilters).iterator.flatMap(_.files).map(_.fileStatus)
+    while (bytes <= LocalReadCap && parts.hasNext) {
+      val status = parts.next()
+      val meta = footer(status, hadoopConf)
+      bytes += meta.getBlocks.asScala.map(_.getTotalByteSize).sum
+      kept += status -> meta
+    }
+    if (bytes > LocalReadCap) return None
+    // what ParquetFileFormat sets up for its tasks' readers
+    hadoopConf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schema.json)
+    hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, schema.json)
+    hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, conf.sessionLocalTimeZone)
+    hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key, conf.nestedSchemaPruningEnabled)
+    hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key, conf.caseSensitiveAnalysis)
+    hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, conf.isParquetBinaryAsString)
+    hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, conf.isParquetINT96AsTimestamp)
+    hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, conf.parquetInferTimestampNTZEnabled)
+    hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, conf.legacyParquetNanosAsLong)
+    hadoopConf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+      conf.parquetReaderRespectUnknownTypeAnnotation)
+    val filters = pushed(conf, dataFilters)
+    Some(kept.toSeq.flatMap { case (status, meta) => readPart(status, meta, filters, conf, hadoopConf) })
+  }
+
+  /** The rows of one part, read as [[localRows]] describes. */
+  private def readPart(status: FileStatus, meta: ParquetMetadata, filters: Seq[sources.Filter], conf: SQLConf,
+      hadoopConf: Configuration): Seq[InternalRow] = {
+    val file = meta.getFileMetaData
+    val datetimeRebase = rebaseSpec(meta, conf)
+    val int96Rebase = DataSourceUtils.int96RebaseSpec(file.getKeyValueMetaData.get,
+      conf.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString)
+    val convertTz =
+      if (conf.isParquetINT96TimestampConversion && !file.getCreatedBy.startsWith("parquet-mr"))
+        DateTimeUtils.getZoneId(conf.sessionLocalTimeZone)
+      else null
+    hadoopConf.unset(ParquetInputFormat.FILTER_PREDICATE)
+    predicate(meta, filters, conf).foreach(ParquetInputFormat.setFilterPredicate(hadoopConf, _))
+    val reader = new VectorizedParquetRecordReader(convertTz, datetimeRebase.mode.toString,
+      datetimeRebase.timeZone, int96Rebase.mode.toString, int96Rebase.timeZone, false,
+      conf.parquetVectorizedReaderBatchSize)
+    try {
+      reader.initialize(new FileSplit(status.getPath, 0, status.getLen, Array.empty[String]),
+        new TaskAttemptContextImpl(hadoopConf, new TaskAttemptID()), None, None, Some(meta))
+      reader.initBatch(new StructType(), InternalRow.empty)
+      val rows = mutable.ArrayBuffer.empty[InternalRow]
+      while (reader.nextKeyValue()) rows += reader.getCurrentValue.asInstanceOf[InternalRow].copy()
+      rows.toSeq
+    } finally reader.close()
   }
 
   /** Footers read for part skipping and [[footerSchema]], by part path,
@@ -117,24 +214,27 @@ object GraftParquetBridge {
     }
   }
 
-  /** Whether a row group of the part may hold a row passing `filters`,
-    * judged as a task's Parquet reader judges it at the statistics level:
-    * the same predicate `ParquetFileFormat` builds (the session's pushdown
-    * settings, the part's own schema and datetime rebase mode), through
-    * `RowGroupFilter.filterRowGroups`. */
-  private def mayMatch(status: FileStatus, filters: Seq[sources.Filter], conf: SQLConf,
-      hadoopConf: Configuration): Boolean = {
-    val meta = footer(status, hadoopConf)
-    val file = meta.getFileMetaData
-    val rebase = DataSourceUtils.datetimeRebaseSpec(file.getKeyValueMetaData.get,
-      conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString)
-    val parquet = new ParquetFilters(file.getSchema, conf.parquetFilterPushDownDate,
+  /** The Parquet predicate a task's reader builds for the part from
+    * `filters`: the session's pushdown settings, the part's own schema and
+    * datetime rebase mode. */
+  private def predicate(meta: ParquetMetadata, filters: Seq[sources.Filter], conf: SQLConf): Option[FilterPredicate] = {
+    val parquet = new ParquetFilters(meta.getFileMetaData.getSchema, conf.parquetFilterPushDownDate,
       conf.parquetFilterPushDownTimestamp, conf.parquetFilterPushDownDecimal,
       conf.parquetFilterPushDownStringPredicate, conf.parquetFilterPushDownInFilterThreshold,
-      conf.caseSensitiveAnalysis, rebase)
-    filters.flatMap(parquet.createFilter).reduceOption(FilterApi.and).forall(p =>
-      !RowGroupFilter.filterRowGroups(FilterCompat.get(p), meta.getBlocks, file.getSchema).isEmpty)
+      conf.caseSensitiveAnalysis, rebaseSpec(meta, conf))
+    filters.flatMap(parquet.createFilter).reduceOption(FilterApi.and)
   }
+
+  private def rebaseSpec(meta: ParquetMetadata, conf: SQLConf) =
+    DataSourceUtils.datetimeRebaseSpec(meta.getFileMetaData.getKeyValueMetaData.get,
+      conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString)
+
+  /** Whether a row group of the part may pass `predicate`, judged as a
+    * task's Parquet reader judges it at the statistics level, through
+    * `RowGroupFilter.filterRowGroups`. */
+  private def mayMatch(meta: ParquetMetadata, predicate: FilterPredicate): Boolean =
+    !RowGroupFilter.filterRowGroups(FilterCompat.get(predicate), meta.getBlocks,
+      meta.getFileMetaData.getSchema).isEmpty
 
   /** Drops the footers held for the part `path`, or for every part under
     * it when it is a directory: its caller has deleted them. */

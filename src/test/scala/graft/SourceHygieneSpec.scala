@@ -79,6 +79,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("Parquet footer read in: ", ", ", ""))
   }
 
+  /** A statement reads a small part list on the calling thread through one
+    * reader, sized against the footers the bridge holds; rows read on the
+    * driver anywhere else would get around the size cap. */
+  test("src/main reads Parquet rows on the driver only in GraftParquetBridge") {
+    val offenders = outside("GraftParquetBridge.scala",
+      """ParquetRecordReader|ParquetReadSupport|ParquetReader\b|buildReader""")
+    assert(offenders.isEmpty, offenders.mkString("Parquet row reader in: ", ", ", ""))
+  }
+
   /** The commit protocol — parts moved into `data/`, version files linked
     * put-if-absent, hints replaced by an atomic move — lives in one module. */
   test("src/main moves and links files only in PartSet") {

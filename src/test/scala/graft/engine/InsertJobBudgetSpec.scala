@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the number of Spark jobs a statement runs, executed and fetched,
   * on a tiny warehouse: an extra eager action on the statement path fails
-  * here, not only in a benchmark. */
+  * here, not only in a benchmark. Reads of small tables run on the calling
+  * thread, so only a source above the size cap keeps the distributed
+  * INSERT path. */
 class InsertJobBudgetSpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
@@ -42,17 +44,17 @@ class InsertJobBudgetSpec extends AnyFunSuite with SuiteScratch {
     assert(parts(e, "events") == 2)
   }
 
-  test("VALUES into a non-empty table with UNIQUE (email) runs 1 job") {
+  test("VALUES into a non-empty table with UNIQUE (email) runs 0 jobs") {
     val e = freshEngine()
-    // into the empty table: nothing to scan
     assert(run(e, "INSERT INTO accounts (email, region) VALUES ('a@x', 1)")._2 == 0)
+    // the existing-key probe reads the table's small parts on the calling thread
     val (rows, n) = run(e, "INSERT INTO accounts (email, region) VALUES ('b@x', 2), ('c@x', 3)")
     assert(rows.map(_.getLong(0)) == Seq(2L))
-    assert(n == 1, s"jobs: $n")
-    // a key that exists is found by the same single scan, and nothing is written
+    assert(n == 0, s"jobs: $n")
+    // a key that exists is found by the same probe, and nothing is written
     val (err, rejected) = jobs(intercept[SqlError](e.execute("INSERT INTO accounts (email, region) VALUES ('a@x', 9)")))
     assert(err.kind == SqlError.UniqueKeyAlreadyExists)
-    assert(rejected == 1, s"jobs: $rejected")
+    assert(rejected == 0, s"jobs: $rejected")
     assert(parts(e, "accounts") == 2)
   }
 
@@ -76,30 +78,51 @@ class InsertJobBudgetSpec extends AnyFunSuite with SuiteScratch {
     assert(n2 == 0, s"jobs: $n2")
   }
 
-  test("an auto-compaction into one file runs 2 jobs, sorted by key") {
+  test("an auto-compaction into one file runs 1 job, sorted by key") {
     val e = new SqlEngine(spark, new Catalog(scratchDir("graft-wh-")),
       SqlContext("budget", "u"), autoCompactAfterParts = 3)
     e.execute("CREATE DATABASE budget")
     e.execute("CREATE TABLE t (pk bigint PRIMARY KEY, v int)")
     Seq(40, 30, 20).foreach(k => run(e, s"INSERT INTO t VALUES ($k, $k)"))
-    // the existing-key scan and the compaction's rewrite; the part itself
-    // is written on the driver
+    // the compaction's rewrite; the existing-key probe and the part itself
+    // run on the driver
     val (_, n) = run(e, "INSERT INTO t VALUES (10, 10)")
-    assert(n == 2, s"jobs: $n")
+    assert(n == 1, s"jobs: $n")
     val Seq(part) = e.catalog.livePartPaths("budget", "public", "t")
     assert(spark.read.parquet(part).collect().map(_.getLong(0)).toSeq == Seq(10L, 20L, 30L, 40L))
+  }
+
+  test("INSERT … SELECT from a small table takes the driver-resident path: 0 jobs") {
+    val e = freshEngine()
+    run(e, "INSERT INTO accounts (email, region) VALUES ('a@x', 1), ('b@x', 2)")
+    e.execute("CREATE TABLE staged (k int PRIMARY KEY, email text, region int)")
+    run(e, "INSERT INTO staged VALUES (1, 'c@x', 3), (2, 'd@x', 4)")
+    // the source's parts are read on the calling thread, so it folds to a
+    // LocalRelation like VALUES
+    val (rows, n) = run(e, "INSERT INTO accounts (email, region) SELECT email, region FROM staged")
+    assert(rows.map(_.getLong(0)) == Seq(2L))
+    assert(n == 0, s"jobs: $n")
+    val (err, rejected) = jobs(intercept[SqlError](
+      e.execute("INSERT INTO accounts (email, region) SELECT email, region FROM staged WHERE k = 1")))
+    assert(err.kind == SqlError.UniqueKeyAlreadyExists)
+    assert(rejected == 0, s"jobs: $rejected")
   }
 
   test("INSERT … SELECT from a table keeps the distributed path: 6 jobs") {
     val e = freshEngine()
     run(e, "INSERT INTO accounts (email, region) VALUES ('a@x', 1), ('b@x', 2)")
+    // a source above the size cap (some 12 MB of uncompressed row groups),
+    // compacted into one part, so the scan is one task
     e.execute("CREATE TABLE staged (k int PRIMARY KEY, email text, region int)")
-    run(e, "INSERT INTO staged VALUES (1, 'c@x', 3), (2, 'd@x', 4)")
+    e.execute("INSERT INTO staged SELECT CAST(id AS int), concat('u', id, '@', repeat('x', 200)), 3 " +
+      "FROM range(0, 60000)").collect()
+    e.compactTable("budget", "public", "staged")
+    assert(parts(e, "staged") == 1)
     // the fused count/NOT NULL pass, the in-batch groupBy (AQE: shuffle
     // stage + result), the semi-join against the table (AQE: broadcast
     // stage + result) and the write; fetching the count runs none
     val (rows, n) = run(e, "INSERT INTO accounts (email, region) SELECT email, region FROM staged")
-    assert(rows.map(_.getLong(0)) == Seq(2L))
+    assert(rows.map(_.getLong(0)) == Seq(60000L))
     assert(n == 6, s"jobs: $n")
   }
 }

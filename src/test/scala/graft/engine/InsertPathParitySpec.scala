@@ -1,6 +1,7 @@
 package graft.engine
 
 import graft.{SuiteScratch, TestSession}
+import org.apache.spark.TaggedWork
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver-resident INSERT path (a VALUES source) and the distributed
@@ -45,7 +46,11 @@ class InsertPathParitySpec extends AnyFunSuite with SuiteScratch {
       val staged = rows.map { r => k += 1; (Seq(k.toString, b.toString) ++ r).mkString("(", ", ", ")") }
       dist.execute(s"INSERT INTO staged VALUES ${staged.mkString(", ")}")
       val viaValues = attempt(local, s"INSERT INTO t ($cols) VALUES ${rows.map(_.mkString("(", ", ", ")")).mkString(", ")}")
-      val viaSelect = attempt(dist, s"INSERT INTO t ($cols) SELECT $cols FROM staged WHERE batch = $b ORDER BY k")
+      // ORDER BY keeps the source off the driver-resident path, which reads
+      // a small source's parts on the calling thread: it must run jobs
+      val (viaSelect, work) = TaggedWork(spark.sparkContext)(
+        attempt(dist, s"INSERT INTO t ($cols) SELECT $cols FROM staged WHERE batch = $b ORDER BY k"))
+      assert(work.jobs > 0, s"batch $b: INSERT … SELECT took the driver-resident path")
       assert(viaValues == viaSelect, s"batch $b: outcomes differ")
       assert(viaValues.left.map(_.kind) == expect, s"batch $b")
       assert(snapshot(local) == snapshot(dist), s"batch $b: rows or counters differ")

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * 40 parts: past 32 paths `spark.read.parquet` lists them in a
   * distributed job, and schema inference reads a footer in another. Every
   * reader plans through one listing-free file index, so planning runs no
-  * job, and a point read runs exactly the one that answers it, over the
-  * one part whose footer statistics can match its filter. */
+  * job. A point read keeps the one part whose footer statistics can match
+  * its filter and reads it on the calling thread: no job. An aggregate,
+  * or a read of more bytes than the size cap, runs as Spark jobs. */
 class ScanJobBudgetSpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
@@ -67,12 +68,49 @@ class ScanJobBudgetSpec extends AnyFunSuite with SuiteScratch {
     assert(df.count() == Parts)
   }
 
-  test("a point read over 40 parts runs 1 job") {
-    // and 1 task: the other 39 parts' footer statistics rule the filter out at planning
+  test("a point read over 40 parts runs no job") {
+    // the other 39 parts' footer statistics rule the filter out at
+    // planning, and the one left is read on the calling thread
     val (rows, work) = TaggedWork(spark.sparkContext)(
       engine.execute("SELECT id, v FROM t WHERE id = 17").collect().toSeq)
     assert(rows == Seq(Row(17, 170)))
-    assert(work == Work(1, 1), s"work: $work")
+    assert(work == Work(0, 0), s"work: $work")
+  }
+
+  test("an aggregate under the same filter scans one part in one task") {
+    // an aggregate stays on the job path: AQE's shuffle stage, whose scan
+    // part skipping leaves 1 task of 40, and the final aggregate's 1 task
+    val (rows, work) = TaggedWork(spark.sparkContext)(
+      engine.execute("SELECT count(*), sum(v) FROM t WHERE id = 17").collect().toSeq)
+    assert(rows == Seq(Row(1L, 170L)))
+    assert(work == Work(2, 2), s"work: $work")
+  }
+
+  test("EXPLAIN of a point read names the LocalTableScan it runs") {
+    val explained = engine.execute("EXPLAIN SELECT id, v FROM t WHERE id = 17").collect().map(_.getString(0)).mkString
+    assert(explained.contains("LocalTableScan") && !explained.contains("FileScan"), explained)
+  }
+
+  /** `big`: 60,000 rows of about 210 bytes in 4 parts, some 12 MB of
+    * uncompressed row groups, above what a statement reads on the calling
+    * thread. */
+  private lazy val big = {
+    val e = engine
+    e.execute("CREATE TABLE big (id int PRIMARY KEY, s text)")
+    e.execute("INSERT INTO big SELECT CAST(id AS int), concat('u', id, repeat('x', 200)) FROM range(0, 60000)")
+      .collect()
+    e
+  }
+
+  test("a Project/Filter read above the size cap still runs as a Spark job") {
+    val e = big
+    val q = "SELECT id, length(s) FROM big WHERE id % 1000 = 7"
+    val (rows, work) = TaggedWork(spark.sparkContext)(e.execute(q).collect().toSeq)
+    assert(rows.map(_.getInt(0)).sorted == (0 until 60).map(_ * 1000 + 7))
+    assert(rows.forall(r => r.getInt(1) == 201 + r.getInt(0).toString.length))
+    assert(work.jobs == 1, s"work: $work")
+    val explained = e.execute(s"EXPLAIN $q").collect().map(_.getString(0)).mkString
+    assert(explained.contains("FileScan") && !explained.contains("LocalTableScan"), explained)
   }
 
   test("Similarity.readIndex plans a 40-part index with 0 jobs") {
