@@ -249,6 +249,11 @@ class Catalog(val warehouse: String,
       val set = parts(db, schema, table)
       set.replace(stagingDir, set.partsAt(PartSet.baseOf(stagingDir)))
     }
+  /** A tail merge's publish: the staged parts replace the parts named
+    * `drop` (relative to `data/`), which the merge read, in the newest
+    * version. Caller must hold the table write lock. */
+  def replaceParts(db: String, schema: String, table: String, stagingDir: Path, drop: Seq[String]): Unit =
+    synchronized { parts(db, schema, table).replace(stagingDir, drop) }
   /** Reclaims parts superseded, and staging directories left, at least
     * `retentionMs` ago; returns the number of data files removed. */
   def vacuum(db: String, schema: String, table: String,

@@ -1,5 +1,7 @@
 package org.apache.spark.sql
 
+import java.nio.file.Paths
+import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -7,14 +9,16 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.hadoop.mapred.FileSplit
-import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{Footer, ParquetInputFormat}
+import org.apache.parquet.hadoop.{Footer, ParquetInputFormat, ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -26,22 +30,26 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Writes rows that are already on the driver as one Parquet part, on the
-  * calling thread, through the writer `df.write.parquet` runs in its task:
-  * `ParquetFileFormat.prepareWrite` over the session's Hadoop conf, then
-  * one `OutputWriter`. The part therefore carries the same footer schema,
-  * Spark row metadata and compression codec, without the scheduled job
-  * and the output committer: for a 1-row part, 151 ms through a one-task
-  * write job against 11.5 ms here (`local[4]` on a 4-core host, medians
-  * of 100 after 20 warm-up writes). The caller commits the part (the
-  * version file its `PartSet` links). The read side is the only code that turns a
-  * version's part list into a relation ([[readParts]], or [[fileIndex]]
-  * under the plugin's scan), over a schema the caller supplies: the file
-  * list comes from the version file and is never listed again. It is also
-  * the only code that reads Parquet rows on the driver ([[localRows]]): a
-  * small part list an engine statement keeps is read on the calling thread
-  * by the reader a task opens, without the job (about 40 of a 50 ms point
-  * read, `local[3]` on a 4-core host). Lives in the spark.sql package only
-  * to reach the classic session's state.
+  * calling thread, with the writer `df.write.parquet` runs in its task:
+  * Spark's `ParquetWriteSupport` over the job conf that
+  * `ParquetFileFormat.prepareWrite` fills in, so the part carries the same
+  * footer schema, Spark row metadata, created-by, codec and encodings. The
+  * file is written through java.nio (Parquet's `LocalOutputFile`), not
+  * Hadoop's `LocalFileSystem`: without native IO, Hadoop forks `chmod` on
+  * every local create, once for the part and once for its `.crc`. For a
+  * 1-row part, a one-task write job took 101 ms, the task's writer on the
+  * calling thread 13.7 ms and this writer 3.1 ms (`local[4]` on a 4-core
+  * host; medians of 100 after 20 warm-up writes, of 30 for the job). The caller commits
+  * the part (the version file its `PartSet` links). The read side is the
+  * only code that turns a version's part list into a relation
+  * ([[readParts]], or [[fileIndex]] under the plugin's scan), over a schema
+  * the caller supplies: the file list comes from the version file and is
+  * never listed again. It is also the only code that reads Parquet rows on
+  * the driver ([[localRows]]): a small part list an engine statement keeps,
+  * or a compaction merges, is read on the calling thread by the reader a
+  * task opens, without the job (about 40 of a 50 ms point read, `local[3]`
+  * on a 4-core host). Lives in the spark.sql package only to reach the
+  * classic session's state.
   */
 object GraftParquetBridge {
 
@@ -49,17 +57,38 @@ object GraftParquetBridge {
     * under the existing directory `dir`. Zero rows still write one part
     * that holds the schema, as Spark's writer does for an empty write. */
   def writePart(spark: SparkSession, dir: String, schema: StructType, rows: Iterator[Row]): Unit = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    writeRows(spark, dir, schema, rows.map(r => toCatalyst(r).asInstanceOf[InternalRow]))
+  }
+
+  /** [[writePart]] for rows already in Catalyst's internal form. */
+  def writeRows(spark: SparkSession, dir: String, schema: StructType, rows: Iterator[InternalRow]): Unit = {
     val session = classic.ClassicConversions.castToImpl(spark)
     val job = Job.getInstance(session.sessionState.newHadoopConf())
-    val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema)
-    val attempt = new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
-    val context = new TaskAttemptContextImpl(job.getConfiguration, attempt)
-    val path = new Path(dir,
-      s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(context)}").toString
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-    val writer = factory.newInstance(path, schema, context)
-    try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
-    finally writer.close()
+    new ParquetFileFormat().prepareWrite(session, job, Map.empty, schema)
+    val conf = job.getConfiguration
+    // the settings ParquetOutputFormat.getRecordWriter reads from the same conf
+    val codec = ParquetOutputFormat.getCompression(conf)
+    val file = Paths.get(dir, s"part-00000-${UUID.randomUUID()}-c000${codec.getExtension}.parquet")
+    val writer = new PartWriter(new LocalOutputFile(file)).withConf(conf).withCompressionCodec(codec)
+      .withRowGroupSize(ParquetOutputFormat.getLongBlockSize(conf))
+      .withPageSize(ParquetOutputFormat.getPageSize(conf))
+      .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(conf))
+      .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(conf))
+      .withWriterVersion(ParquetOutputFormat.getWriterVersion(conf))
+      .withValidation(ParquetOutputFormat.getValidation(conf))
+      .withPageWriteChecksumEnabled(ParquetOutputFormat.getPageWriteChecksumEnabled(conf))
+      .build()
+    try rows.foreach(writer.write) finally writer.close()
+  }
+
+  /** A Parquet writer of Spark rows: Spark's write support, configured by
+    * the conf the builder is handed. */
+  private final class PartWriter(file: LocalOutputFile)
+      extends ParquetWriter.Builder[InternalRow, PartWriter](file) {
+    override protected def self(): PartWriter = this
+    override protected def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] =
+      new ParquetWriteSupport
   }
 
   /** The Parquet `files` as one relation of `dataSchema` (made nullable,
@@ -68,10 +97,33 @@ object GraftParquetBridge {
   def readParts(spark: SparkSession, files: Seq[String], dataSchema: StructType,
       partitionRoot: Option[String] = None): DataFrame = {
     val session = classic.ClassicConversions.castToImpl(spark)
-    val index = fileIndex(spark, files, partitionRoot)
-    session.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(session))
+    session.baseRelationToDataFrame(relation(session, files, dataSchema, partitionRoot))
   }
+
+  private def relation(session: classic.SparkSession, files: Seq[String], dataSchema: StructType,
+      partitionRoot: Option[String]): HadoopFsRelation = {
+    val index = fileIndex(session, files, partitionRoot)
+    HadoopFsRelation(index, index.partitionSchema, dataSchema.asNullable, None, new ParquetFileFormat,
+      Map.empty)(session)
+  }
+
+  /** Every row of the local parts `files`, under `dataSchema` made
+    * nullable, in list order, read on the calling thread as [[localRows]]
+    * reads a statement's parts; None above [[LocalReadCap]]. */
+  def localRows(spark: SparkSession, files: Seq[String], dataSchema: StructType): Option[Seq[InternalRow]] = {
+    val session = classic.ClassicConversions.castToImpl(spark)
+    localRows(session, relation(session, files, dataSchema, None), Nil)
+  }
+
+  /** Uncompressed row-group bytes of each local part in `files`, from its
+    * held footer: the measure [[LocalReadCap]] caps. */
+  def rowGroupBytes(spark: SparkSession, files: Seq[String]): Seq[Long] = {
+    val hadoopConf = classic.ClassicConversions.castToImpl(spark).sessionState.newHadoopConf()
+    val fs = FileSystem.getLocal(hadoopConf)
+    files.map(f => bytesOf(footer(fs.getFileStatus(new Path(f)), hadoopConf)))
+  }
+
+  private def bytesOf(meta: ParquetMetadata): Long = meta.getBlocks.asScala.map(_.getTotalByteSize).sum
 
   /** An index of exactly the local `files`, handed their statuses so it
     * lists nothing: `spark.read.parquet` lists a file list in a Spark job
@@ -150,7 +202,7 @@ object GraftParquetBridge {
     while (bytes <= LocalReadCap && parts.hasNext) {
       val status = parts.next()
       val meta = footer(status, hadoopConf)
-      bytes += meta.getBlocks.asScala.map(_.getTotalByteSize).sum
+      bytes += bytesOf(meta)
       kept += status -> meta
     }
     if (bytes > LocalReadCap) return None

@@ -94,4 +94,23 @@ class SourceHygieneSpec extends AnyFunSuite {
     val offenders = outside("PartSet.scala", """Files\.(move|createLink)\s*\(""")
     assert(offenders.isEmpty, offenders.mkString("Files.move or Files.createLink in: ", ", ", ""))
   }
+
+  /** Without native IO, Hadoop's local file system forks `chmod` on every
+    * create (twice for a Parquet part, with its `.crc`): a driver-side
+    * Parquet file is written through java.nio (`LocalOutputFile`) in one
+    * module, and nothing creates a file through a Hadoop `FileSystem`. */
+  test("src/main writes driver-side Parquet files only through LocalOutputFile") {
+    val writers = outside("GraftParquetBridge.scala",
+      """LocalOutputFile|ParquetWriter\b|ParquetFileWriter|ParquetOutputFormat|OutputWriterFactory""")
+    assert(writers.isEmpty, writers.mkString("Parquet writer outside GraftParquetBridge in: ", ", ", ""))
+    val bridge = mainSources().collect { case (f, text) if f.getFileName.toString == "GraftParquetBridge.scala" => text }
+    assert(bridge.size == 1 && bridge.forall(_.contains("new LocalOutputFile(")))
+    assert(bridge.forall(t => """HadoopOutputFile|OutputWriterFactory|\.newInstance\s*\(""".r.findFirstIn(t).isEmpty),
+      "GraftParquetBridge writes a part through Hadoop's output path")
+    val creates = mainSources().collect {
+      case (f, text) if """getFileSystem|FileSystem\.get""".r.findFirstIn(text).nonEmpty &&
+          """\.(create|createNewFile|append)\s*\(""".r.findFirstIn(text).nonEmpty => f.toString
+    }
+    assert(creates.isEmpty, creates.mkString("Hadoop FileSystem create in: ", ", ", ""))
+  }
 }

@@ -8,7 +8,7 @@ import graft.{SuiteScratch, TestSession}
 import org.apache.spark.sql.{GraftParquetBridge, Row}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Kill points of the INSERT, compaction and vacuum sequences, each built
+/** Kill points of the INSERT, compaction, tail merge and vacuum sequences, each built
   * on disk by hand as the state a crash after that step leaves. A fresh
   * [[Catalog]] over the warehouse must read the old or the new version
   * whole, commit its next INSERT as the version after the newest, and,
@@ -134,5 +134,59 @@ class CommitCrashSpec extends AnyFunSuite with SuiteScratch {
     val err = intercept[SqlError](engine(wh).readTableAt("db", "public", "t", 4L).collect())
     assert(err.getMessage.contains("vacuumed"))
     recovers(wh, before)
+  }
+
+  /** Rows 1000..1999 in one compacted part (the base), then one INSERT per
+    * row of `tail`: the table a tail merge folds the tail of. */
+  private val tail = Set(2000 -> 1, 2001 -> 2, 2002 -> 3)
+
+  private def tailed(): (String, SqlEngine, Set[(Int, Int)]) = {
+    val wh = scratchDir("graft-crash-tail-")
+    val e = engine(wh)
+    e.execute("CREATE DATABASE db")
+    e.execute("CREATE TABLE t (id int PRIMARY KEY, v int)")
+    e.execute("INSERT INTO t SELECT CAST(id AS INT), CAST(id * 3 AS INT) FROM range(1000, 2000)").collect()
+    e.compactTable("db", "public", "t")
+    e.vacuumTable("db", "public", "t", retentionMs = 0L)
+    tail.toSeq.sorted.foreach { case (id, v) => e.execute(s"INSERT INTO t VALUES ($id, $v)") }
+    assert(e.catalog.liveParts("db", "public", "t").size == 1 + tail.size)
+    (wh, e, (1000 until 2000).map(i => i -> i * 3).toSet ++ tail)
+  }
+
+  test("a tail merge killed after opening its staging directory leaves the old version") {
+    val (wh, e, rows) = tailed()
+    e.catalog.newStagingDir("db", "public", "t")
+    recovers(wh, rows)
+  }
+
+  test("a tail merge killed after writing its merged part leaves the old version") {
+    val (wh, e, rows) = tailed()
+    writePart(e, e.catalog.newStagingDir("db", "public", "t"), tail)
+    recovers(wh, rows)
+  }
+
+  test("a tail merge killed in its subset replace leaves the old version") {
+    val (wh, e, rows) = tailed()
+    val live = e.catalog.liveParts("db", "public", "t")
+    val merged = movedIn(e, wh, "compact", tail)
+    // killed after writing the version's temp file, before the link
+    val v = e.catalog.currentVersion("db", "public", "t") + 1
+    Files.writeString(tableDir(wh).resolve("_versions").resolve(s".$v-${UUID.randomUUID()}"),
+      (System.currentTimeMillis() +: live.take(1) :+ merged).mkString("\n"))
+    recovers(wh, rows)
+  }
+
+  test("a tail merge killed after linking its version, before the head hint, reads the new version") {
+    val (wh, e, rows) = tailed()
+    val base = e.catalog.liveParts("db", "public", "t").head
+    val head = e.catalog.currentVersion("db", "public", "t")
+    // a fourth tail part fires the merge
+    val merging = new SqlEngine(spark, e.catalog, SqlContext("db", "u"), autoCompactAfterParts = 4)
+    merging.execute("INSERT INTO t VALUES (2003, 4)")
+    val Seq(kept, merged) = e.catalog.liveParts("db", "public", "t")
+    assert(kept == base && merged.startsWith("compact-"))
+    assert(e.catalog.currentVersion("db", "public", "t") == head + 2)
+    Files.writeString(tableDir(wh).resolve("_head"), (head + 1).toString)
+    recovers(wh, rows + (2003 -> 4))
   }
 }

@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** A driver-resident INSERT writes its part on the driver
   * ([[GraftParquetBridge]]) instead of through a one-task Spark write job.
   * The part must be the one Spark's writer gives for the same rows and
-  * schema: the same Parquet footer schema, Spark row metadata and
-  * compression codec, and the same rows read back. */
+  * schema: the same Parquet footer schema, key-value metadata (Spark row
+  * metadata and version), created-by, and codec and encodings per column,
+  * and the same rows read back. */
 class DriverWriteParitySpec extends AnyFunSuite with SuiteScratch {
 
   private lazy val spark = TestSession.spark
@@ -32,7 +33,9 @@ class DriverWriteParitySpec extends AnyFunSuite with SuiteScratch {
     e
   }
 
-  private case class Footer(schema: String, rowMetadata: String, codecs: Set[String], rows: Long)
+  /** `columns`: each column chunk's path, codec and encodings. */
+  private case class Footer(schema: String, rowMetadata: String, codecs: Set[String], rows: Long,
+      keyValue: Map[String, String], createdBy: String, columns: Seq[(String, String, Set[String])])
 
   private def footer(part: String): Footer = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -40,10 +43,14 @@ class DriverWriteParitySpec extends AnyFunSuite with SuiteScratch {
     try {
       val f = reader.getFooter
       val blocks = f.getBlocks.asScala
+      val chunks = blocks.flatMap(_.getColumns.asScala).toSeq
       Footer(f.getFileMetaData.getSchema.toString,
         f.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey),
-        blocks.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet,
-        blocks.map(_.getRowCount).sum)
+        chunks.map(_.getCodec.name).toSet,
+        blocks.map(_.getRowCount).sum,
+        f.getFileMetaData.getKeyValueMetaData.asScala.toMap,
+        f.getFileMetaData.getCreatedBy,
+        chunks.map(c => (c.getPath.toDotString, c.getCodec.name, c.getEncodings.asScala.map(_.name).toSet)))
     } finally reader.close()
   }
 
@@ -148,5 +155,36 @@ class DriverWriteParitySpec extends AnyFunSuite with SuiteScratch {
     commitSparkWritten(e, "twin", schema, Seq.empty)
     assert(written == footer(onlyPart(e, "twin")))
     assert(read(e, "t") == Seq("1|null|null|null|1|null|null|null|null"))
+  }
+
+  test("writePart over every column kind matches df.write.parquet and leaves one file") {
+    val schema = StructType(Seq(
+      StructField("i", IntegerType, nullable = false), StructField("l", LongType), StructField("d", DoubleType),
+      StructField("dec", DecimalType(20, 3)), StructField("s", StringType), StructField("y", BinaryType),
+      StructField("b", BooleanType), StructField("dt", DateType), StructField("ts", TimestampType)))
+    val rows = Seq(
+      Row(1, 10L, 2.5, BigDecimal("12345678901234567.125").bigDecimal, "abc", Array[Byte](1, 2), true,
+        java.sql.Date.valueOf("2024-02-29"), java.sql.Timestamp.valueOf("2024-02-29 12:34:56.789")),
+      Row(2, Long.MinValue, Double.NaN, BigDecimal("-0.001").bigDecimal, "", Array.emptyByteArray, false,
+        java.sql.Date.valueOf("1900-01-01"), java.sql.Timestamp.valueOf("1900-01-01 00:00:00")),
+      Row(3, Long.MaxValue, -0.0, BigDecimal("0.000").bigDecimal, "é日本 🙂", Array[Byte](-1, 0, 127), true,
+        java.sql.Date.valueOf("9999-12-31"), java.sql.Timestamp.valueOf("2262-04-11 23:47:16.854775")),
+      Row(4, null, null, null, null, null, null, null, null))
+    val (driverDir, sparkDir) = (scratchDir("graft-writer-"), scratchDir("graft-writer-") + "/out")
+    GraftParquetBridge.writePart(spark, driverDir, schema, rows.iterator)
+    spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(sparkDir)
+
+    def parts(dir: String): Seq[String] = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      try s.iterator().asScala.map(_.toString).toSeq finally s.close()
+    }
+    val Seq(part) = parts(driverDir) // no .crc, no marker
+    val Seq(viaSpark) = parts(sparkDir).filter(p => p.endsWith(".parquet") && !p.split('/').last.startsWith("."))
+    val written = footer(part)
+    assert(written == footer(viaSpark))
+    assert(written.rows == rows.size && written.columns.size == schema.size)
+    assert(written.keyValue.contains("org.apache.spark.version"))
+    assert(render(spark.read.parquet(part).collect().toSeq) == render(spark.read.parquet(viaSpark).collect().toSeq))
+    assert(render(spark.read.parquet(part).collect().toSeq) == render(rows))
   }
 }

@@ -78,16 +78,16 @@ class InsertJobBudgetSpec extends AnyFunSuite with SuiteScratch {
     assert(n2 == 0, s"jobs: $n2")
   }
 
-  test("an auto-compaction into one file runs 1 job, sorted by key") {
+  test("an auto-compaction into one file runs 0 jobs, sorted by key") {
     val e = new SqlEngine(spark, new Catalog(scratchDir("graft-wh-")),
       SqlContext("budget", "u"), autoCompactAfterParts = 3)
     e.execute("CREATE DATABASE budget")
     e.execute("CREATE TABLE t (pk bigint PRIMARY KEY, v int)")
     Seq(40, 30, 20).foreach(k => run(e, s"INSERT INTO t VALUES ($k, $k)"))
-    // the compaction's rewrite; the existing-key probe and the part itself
-    // run on the driver
+    // the existing-key probe, the part and the compaction's small merge
+    // all run on the calling thread
     val (_, n) = run(e, "INSERT INTO t VALUES (10, 10)")
-    assert(n == 1, s"jobs: $n")
+    assert(n == 0, s"jobs: $n")
     val Seq(part) = e.catalog.livePartPaths("budget", "public", "t")
     assert(spark.read.parquet(part).collect().map(_.getLong(0)).toSeq == Seq(10L, 20L, 30L, 40L))
   }
@@ -108,14 +108,31 @@ class InsertJobBudgetSpec extends AnyFunSuite with SuiteScratch {
     assert(rejected == 0, s"jobs: $rejected")
   }
 
-  test("INSERT … SELECT from a table keeps the distributed path: 6 jobs") {
-    val e = freshEngine()
-    run(e, "INSERT INTO accounts (email, region) VALUES ('a@x', 1), ('b@x', 2)")
-    // a source above the size cap (some 12 MB of uncompressed row groups),
-    // compacted into one part, so the scan is one task
+  /** A table `staged` above the local read cap: some 12 MB of
+    * uncompressed row groups, in the parts a distributed INSERT writes. */
+  private def largeStaged(e: SqlEngine): Unit = {
     e.execute("CREATE TABLE staged (k int PRIMARY KEY, email text, region int)")
     e.execute("INSERT INTO staged SELECT CAST(id AS int), concat('u', id, '@', repeat('x', 200)), 3 " +
       "FROM range(0, 60000)").collect()
+  }
+
+  test("a compaction whose input is above the cap still runs its one job") {
+    val e = freshEngine()
+    largeStaged(e)
+    assert(parts(e, "staged") > 1)
+    val ((before, after), n) = jobs(e.compactTable("budget", "public", "staged"))
+    assert(after == 1 && before > 1)
+    assert(n == 1, s"jobs: $n")
+    val Seq(part) = e.catalog.livePartPaths("budget", "public", "staged")
+    val keys = spark.read.parquet(part).select("k").collect().map(_.getInt(0)).toSeq
+    assert(keys == (0 until 60000))
+  }
+
+  test("INSERT … SELECT from a table keeps the distributed path: 6 jobs") {
+    val e = freshEngine()
+    run(e, "INSERT INTO accounts (email, region) VALUES ('a@x', 1), ('b@x', 2)")
+    // compacted into one part, so the scan is one task
+    largeStaged(e)
     e.compactTable("budget", "public", "staged")
     assert(parts(e, "staged") == 1)
     // the fused count/NOT NULL pass, the in-batch groupBy (AQE: shuffle

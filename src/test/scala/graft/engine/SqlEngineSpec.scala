@@ -330,6 +330,26 @@ class SqlEngineSpec extends AnyFunSuite with SuiteScratch {
     assert(e.execute("SELECT a FROM t").collect()(0).getInt(0) == 7)
   }
 
+  test("INSERT … SELECT binds source columns by position, as PG does") {
+    val e = freshEngine()
+    e.execute("CREATE DATABASE test1")
+    e.execute("CREATE TABLE events (id serial PRIMARY KEY, account_id int, seq int, kind int, amount bigint)")
+    // CAST(id AS INT) is auto-named `id`, as is the last column
+    assert(e.execute("INSERT INTO events (account_id, seq, kind, amount) SELECT CAST(id % 2000 + 1 AS INT), " +
+      "CAST(id AS INT), CAST(id % 4 AS INT), id FROM range(0, 20000)").collect()(0).getLong(0) == 20000L)
+    val rows = e.execute("SELECT account_id, seq, kind, amount FROM events WHERE seq IN (0, 1999, 19999) " +
+      "ORDER BY seq").collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
+    assert(rows == Seq((1, 0, 0, 0L), (2000, 1999, 3, 1999L), (2000, 19999, 3, 19999L)))
+    // the checks bind by position too: a fractional source and an
+    // out-of-range one, each named like another column, still raise
+    assert(intercept[SqlError](e.execute("INSERT INTO events (account_id, seq, kind, amount) " +
+      "SELECT CAST(id AS INT), CAST(id AS INT), 1.5 AS id, id FROM range(0, 3)")).kind == SqlError.MismatchColumnType)
+    val narrow = intercept[SqlError](e.execute("INSERT INTO events (account_id, seq, kind, amount) " +
+      "SELECT id, id + 4294967296 AS id, CAST(1 AS INT), id FROM range(0, 3)"))
+    assert(narrow.kind == SqlError.MismatchColumnType && narrow.getMessage.contains("seq"), narrow.getMessage)
+    assert(e.execute("SELECT count(*) FROM events").collect()(0).getLong(0) == 20000L)
+  }
+
   test("information_schema.tables and .columns reflect the catalog (reference src/sql/mod.rs:82)") {
     val e = freshEngine()
     e.execute("CREATE DATABASE test1")
