@@ -1006,10 +1006,11 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   //    on the calling thread (`GraftPlanBridge`) — already holds its rows
   //    on the driver. Counting, the NOT NULL and narrowing checks and
   //    in-batch uniqueness run there, and the rows are written as one part
-  //    on the calling thread through Spark's Parquet writer
-  //    ([[GraftParquetBridge]]): 0 jobs. A one-task write job would cost
-  //    ~100 ms of driver-bound scheduling and output committing for a few
-  //    rows, and the version file is the commit anyway. A UNIQUE index not
+  //    on the calling thread through Spark's Parquet write support and
+  //    java.nio ([[GraftParquetBridge]]): 0 jobs and no forked process. A
+  //    one-task write job would cost ~100 ms of driver-bound scheduling and
+  //    output committing for a few rows, and the version file is the
+  //    commit anyway. A UNIQUE index not
   //    covered by fresh serials adds, on a non-empty table, one filtered
   //    read of the candidate keys: no job while the parts it keeps are
   //    small, else 1.
@@ -1018,7 +1019,8 @@ final class SqlEngine(val spark: SparkSession, val catalog: Catalog, val ctx: Sq
   //    candidate, one fused count/NOT NULL pass, a groupBy and a semi-join
   //    per UNIQUE index, and Spark's parallel write.
   // Both share the serial reservation, the error order, and the locked
-  // check/stage/commit/auto-compaction window ([[publish]]).
+  // check/stage/commit/auto-compaction window ([[publish]]), whose tiered
+  // merge of a small table also runs on the calling thread.
 
   private def insert(ins: Insert): DataFrame = {
     val (db, schema, table) = resolve(ins.table)

@@ -39,17 +39,17 @@ import org.apache.spark.sql.types.StructType
   * every local create, once for the part and once for its `.crc`. For a
   * 1-row part, a one-task write job took 101 ms, the task's writer on the
   * calling thread 13.7 ms and this writer 3.1 ms (`local[4]` on a 4-core
-  * host; medians of 100 after 20 warm-up writes, of 30 for the job). The caller commits
-  * the part (the version file its `PartSet` links). The read side is the
-  * only code that turns a version's part list into a relation
-  * ([[readParts]], or [[fileIndex]] under the plugin's scan), over a schema
-  * the caller supplies: the file list comes from the version file and is
-  * never listed again. It is also the only code that reads Parquet rows on
-  * the driver ([[localRows]]): a small part list an engine statement keeps,
-  * or a compaction merges, is read on the calling thread by the reader a
-  * task opens, without the job (about 40 of a 50 ms point read, `local[3]`
-  * on a 4-core host). Lives in the spark.sql package only to reach the
-  * classic session's state.
+  * host; medians of 100 after 20 warm-up writes, of 30 for the job). The
+  * caller commits the part (the version file its `PartSet` links). The
+  * read side is the only code that turns a version's part list into a
+  * relation ([[readParts]], or [[fileIndex]] under the plugin's scan),
+  * over a schema the caller supplies: the file list comes from the version
+  * file and is never listed again. It is also the only code that reads
+  * Parquet rows on the driver ([[localRows]]): a small part list an engine
+  * statement keeps, or a compaction merges, is read on the calling thread
+  * by the reader a task opens, without the job (about 40 of a 50 ms point
+  * read, `local[3]` on a 4-core host). Lives in the spark.sql package only
+  * to reach the classic session's state.
   */
 object GraftParquetBridge {
 
@@ -83,7 +83,7 @@ object GraftParquetBridge {
   }
 
   /** A Parquet writer of Spark rows: Spark's write support, configured by
-    * the conf the builder is handed. */
+    * the conf passed to `withConf`. */
   private final class PartWriter(file: LocalOutputFile)
       extends ParquetWriter.Builder[InternalRow, PartWriter](file) {
     override protected def self(): PartWriter = this
